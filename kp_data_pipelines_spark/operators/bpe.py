@@ -18,7 +18,7 @@ sequential, but 12x fewer jobs, and each job stays vocabulary-bounded
 (never corpus-bounded: the (word, freq) table is the working set, the
 Heaps-law-sublinear vocabulary of q291's argument).
 
-Batch-application semantics (the SPEC all three implementations pin):
+Batch-application semantics (the SPEC both implementations pin):
 a single greedy left fold over each word's symbols; at each element,
 if the accumulator's last symbol is some selected pair's left symbol
 ``a_i`` and the element equals its ``b_i``, they fuse into ``a_i+b_i``.
@@ -29,15 +29,26 @@ equal another selected pair's left symbol (e.g. batch {("th","e"),
 within-pass chaining is allowed and deterministic, and the DuckDB twin
 replays the identical fold.
 
-Three pinned implementations of the fold:
-- ``bpe_apply_merges_kernel`` — Arrow-batched per-word Python fold
-  (dict lookups; exact string ops, no float anywhere), the hot path;
+Two pinned implementations of the fold:
 - ``bpe_apply_merges_expr`` — the interpreted JVM ``aggregate`` fold
-  with literal lookup maps, the zero-Python reference
-  (test_bpe_apply_kernel_matches_expr pins kernel == expr);
+  with literal lookup maps; the training loop (``_merge_rounds``)
+  applies every batch with it;
 - the DuckDB oracle's ``list_reduce`` fold with ``list_position``
   lookups over the per-round selection arrays
   (``oracles.bpe_batched_trainer_sql``).
+ENCODE (``bpe_encode_all_kernel``) runs the same fold for every trained
+round in one Arrow pass; test_bpe_apply_kernel_matches_expr pins it to
+the JVM fold, so holdout encoding tokenizes exactly as training did.
+
+Why the JVM fold trains: no Python worker and no Arrow serialization,
+and the vocabulary tables the catalog trains on are small (31 words,
+about 27k chunk rows at sf0.1), so a round is bound by fixed overhead.
+At sf0.1 on ``local[4]`` it beat an Arrow-batched Python fold on every
+catalog BPE query, about 2x on the multi-round ones (SCALE.md §23). The
+trade-off: the fold is interpreted per element, so one 12-pair batch
+over 1M distinct 12-char words takes 3.45 s against 1.69 s for the
+Arrow fold (``tools/stress.py``'s ``bpe_apply_round`` shape); the
+crossover lies between 100k and 300k distinct units.
 
 Reference basis: the reference has no tokenizer; its closest gesture is
 whitespace token counting (`LLM Testing.ipynb` prompt-size guard).
@@ -45,6 +56,9 @@ This is north-star surface (train-a-tokenizer-on-the-corpus at 100 TB).
 """
 
 from __future__ import annotations
+
+from functools import partial
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -97,8 +111,7 @@ BPE_CHUNK_WORDS = 3
 
 # The (word|chunk, freq) working set is Heaps-law small; the round loop
 # multiplies per-task overhead by rounds x stages, so every trainer pins
-# the vocab frame to this partition count (SCALE.md §19) and the
-# per-round touched/untouched union coalesces back to it.
+# the vocab frame to this partition count (SCALE.md §19).
 BPE_VOCAB_PARTITIONS = 8
 
 
@@ -158,44 +171,6 @@ def select_merge_batch_adaptive(
     return batch
 
 
-def bpe_apply_merges_kernel(merges: list[tuple[str, str]]):
-    """Arrow-batched fold applying one disjoint merge batch to an
-    ``array<string>`` symbol column — exact string operations, pinned
-    bit-identical to ``bpe_apply_merges_expr`` (the JVM fold) and the
-    oracle's ``list_reduce`` twin."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import ArrayType, StringType
-
-    by_left = {a: (b, a + b) for a, b in merges}
-    lefts = set(by_left)
-
-    @pandas_udf(ArrayType(StringType()))
-    def _apply(batch: pd.Series) -> pd.Series:
-        def fold(syms):
-            if syms is None:
-                return None
-            # Fast path: a row containing NO left symbol of this batch
-            # cannot change — skip the per-element fold (C-speed set
-            # probe vs the Python loop; identical output by definition,
-            # and the late adaptive rounds target rare pairs, where
-            # most rows take this path).
-            if lefts.isdisjoint(syms):
-                return syms
-            acc: list[str] = []
-            for x in syms:
-                if acc:
-                    t = by_left.get(acc[-1])
-                    if t is not None and x == t[0]:
-                        acc[-1] = t[1]
-                        continue
-                acc.append(x)
-            return acc
-
-        return batch.map(fold)
-
-    return _apply
-
-
 def bpe_apply_merges_expr(syms, merges: list[tuple[str, str]]):
     """The interpreted JVM expression twin of the merge-batch fold:
     ``aggregate`` over the symbol array with literal lookup maps
@@ -224,97 +199,59 @@ def bpe_apply_merges_expr(syms, merges: list[tuple[str, str]]):
     )
 
 
-def _word_freqs(docs: DataFrame, text_col: str) -> DataFrame:
-    """(word, freq) over the normalized corpus — the Heaps-sublinear
-    working set every BPE stage runs on."""
-    from kp_data_pipelines_spark.operators.similarity import (
-        ensure_parallelism,
-    )
-    from kp_data_pipelines_spark.operators.textops import normalize_ws
-
-    return (
-        ensure_parallelism(docs.select(text_col))
-        .select(
-            F.explode(F.split(normalize_ws(text_col), " ")).alias("word")
-        )
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
-    )
-
-
 _CHAR_SYMS = (
-    "transform(sequence(1, length(word)), i -> substring(word, i, 1))"
+    "transform(sequence(1, length(unit)), i -> substring(unit, i, 1))"
 )
 
-# W-word chunking over a split `parts` array — shared by every
-# chunk-unit stage (trainer, tokenizer); the DuckDB twins mirror it as
-# list_transform(range(...)) + array_to_string(slice).
+# W-word chunking over a split `parts` array — the DuckDB twins mirror
+# it as list_transform(range(...)) + array_to_string(slice).
 _CHUNK_EXPR_TMPL = (
     "transform(sequence(0, cast(ceil(size(parts) / {w}.0) as int) - 1), "
     "g -> array_join(slice(parts, g * {w} + 1, {w}), ' '))"
 )
 
 
-def _vocab_syms(docs: DataFrame, text_col: str) -> DataFrame:
-    """(freq, syms) vocabulary frame — one-symbol-per-char start state,
-    pinned to 8 partitions (the vocab is Heaps-law small, and the round
-    loop multiplies per-task overhead by rounds x stages; see SCALE.md
-    §19), lazily checkpointed (materialized by the first action that
-    reads it)."""
-    return (
-        _word_freqs(docs, text_col)
-        .repartition(BPE_VOCAB_PARTITIONS)
-        .select("freq", F.expr(_CHAR_SYMS).alias("syms"))
-        .localCheckpoint(eager=False)
-    )
-
-
-def _chunk_freqs(
-    docs: DataFrame, text_col: str, w: int = BPE_CHUNK_WORDS
+def _unit_rows(
+    docs: DataFrame, text_col: str, chunk_words: int, *keep: str
 ) -> DataFrame:
-    """(chunk, freq) over W-word chunks of the normalized corpus — the
-    working set for CHUNK-UNIT BPE (space as an ordinary symbol). Each
-    document's word list splits into consecutive ``w``-word groups
-    re-joined with single spaces; the trailing group may be shorter.
-    The chunk strings are engine-portable by construction (identical
-    split + slice + join on DuckDB's side). The per-chunk
-    ``slice``/``array_join`` lambdas are interpreted HOFs — fine at the
-    one-pass chunking stage (each element touched once); at 100 TB this
-    projection is the natural candidate for an Arrow kernel, but it is
-    NOT per-round work (rounds run on the distinct-chunk table)."""
+    """One ``(*keep, unit)`` row per BPE unit occurrence in the
+    normalized corpus. ``chunk_words == 1`` gives whitespace words; a
+    larger W gives consecutive W-word CHUNKS re-joined with single
+    spaces (space is then an ordinary symbol; the trailing chunk may be
+    shorter). Chunk strings are engine-portable by construction
+    (identical split + slice + join on DuckDB's side). The chunking
+    lambdas are interpreted HOFs, but this is a one-pass stage (each
+    element touched once); rounds run on the distinct-unit table."""
     from kp_data_pipelines_spark.operators.similarity import (
         ensure_parallelism,
     )
     from kp_data_pipelines_spark.operators.textops import normalize_ws
 
-    return (
-        ensure_parallelism(docs.select(text_col))
-        .select(normalize_ws(text_col).alias("norm"))
-        .filter(F.length("norm") > 0)
-        .select(F.split("norm", " ").alias("parts"))
-        .select(
-            F.explode(F.expr(_CHUNK_EXPR_TMPL.format(w=w))).alias("chunk")
-        )
-        .filter(F.col("chunk") != "")
-        .groupBy("chunk")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
+    rows = ensure_parallelism(docs.select(*keep, text_col))
+    units = F.split(normalize_ws(text_col), " ")
+    if chunk_words > 1:
+        rows = rows.select(*keep, units.alias("parts"))
+        units = F.expr(_CHUNK_EXPR_TMPL.format(w=chunk_words))
+    # explode an expression, never a bare column: Spark infers
+    # `size(col) > 0` for an exploded column and pushes it below the
+    # repartition, re-running the normalization on the one-task scan
+    return rows.select(*keep, F.explode(units).alias("unit")).filter(
+        F.col("unit") != ""
     )
 
 
-def _chunk_syms(
-    docs: DataFrame, text_col: str, w: int = BPE_CHUNK_WORDS
-) -> DataFrame:
-    """(freq, syms) chunk-unit frame — one-symbol-per-char start state
-    (spaces included), same 8-partition pin + lazy checkpoint rationale
-    as ``_vocab_syms``."""
+def _unit_syms(units: DataFrame, *keep: str) -> DataFrame:
+    """``(*keep, freq, syms)`` over the distinct units — the
+    Heaps-sublinear working set every round runs on — at the
+    one-symbol-per-char start state (spaces included). Pinned to
+    ``BPE_VOCAB_PARTITIONS`` and lazily checkpointed (materialized by
+    the first action that reads it). Pass ``"unit"`` as ``keep`` to
+    carry the unit through the rounds."""
     return (
-        _chunk_freqs(docs, text_col, w)
+        units.groupBy("unit")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
         .repartition(BPE_VOCAB_PARTITIONS)
-        .select(
-            "freq",
-            F.expr(_CHAR_SYMS.replace("word", "chunk")).alias("syms"),
-        )
+        .select(*keep, "freq", F.expr(_CHAR_SYMS).alias("syms"))
         .localCheckpoint(eager=False)
     )
 
@@ -342,15 +279,14 @@ def _ranked_frame(syms: DataFrame, topk: int) -> DataFrame:
         syms.filter(F.size("syms") >= 2)
         .select(
             "freq",
-            F.explode(
+            F.inline(
                 F.expr(
                     "transform(sequence(1, size(syms) - 1), "
                     "i -> named_struct('a', element_at(syms, i), "
                     "'b', element_at(syms, i + 1)))"
                 )
-            ).alias("pr"),
+            ),
         )
-        .select("freq", "pr.a", "pr.b")
         .groupingSets([["a", "b"], []], "a", "b")
         .agg(
             F.sum("freq").cast("bigint").alias("cnt"),
@@ -361,84 +297,49 @@ def _ranked_frame(syms: DataFrame, topk: int) -> DataFrame:
     )
 
 
-def _ranked_pairs(syms: DataFrame, topk: int) -> tuple[list, int]:
-    """Collect one round's ranked pool; see ``_ranked_frame``. Returns
-    (pair rows ranked by count DESC / a / b — exactly the old
-    limit(topk) pool — and the round's total pair mass from the
-    grand-total grouping-set row)."""
-    rows = _ranked_frame(syms, topk).collect()
-    total = 0
-    ranked = []
-    for r in rows:
-        if r["gid"]:
-            total = int(r["cnt"]) if r["cnt"] is not None else 0
-        else:
-            ranked.append(r)
-    return ranked, total
-
-
-def _apply_batch_prefiltered(syms: DataFrame, batch: list) -> DataFrame:
-    """Apply one disjoint merge batch, shipping ONLY the rows that can
-    change across the Arrow boundary (guide §4: pass the Python worker
-    less). A row can change iff its symbol array contains some selected
-    pair's LEFT symbol — exactly the complement of the kernel's
-    ``isdisjoint`` fast path (the first fusion needs an input symbol in
-    ``lefts``; without one the fold returns its input). The JVM-side
-    ``arrays_overlap`` predicate splits the frame, the kernel runs on
-    the touched slice only, and the untouched remainder unions back
-    verbatim — the same row multiset as kernel-over-everything, by the
-    fast path's own definition. Late adaptive rounds target rare pairs,
-    so the per-round Arrow volume shrinks toward the touched rows
-    instead of re-serializing the whole vocabulary every round.
-
-    ``coalesce`` (narrow, no shuffle) pins the union back to the
-    vocab-table partition count so 100+ training rounds don't double
-    partitions per round. The lazy checkpoint is safe from the
-    two-consumer cache race (SCALE.md round-11 CC lesson): the dual
-    consumption here reads the PREVIOUS round's checkpoint, which the
-    ranked job that selected this batch has already materialized."""
-    kernel = bpe_apply_merges_kernel([(a, b) for a, b, _ in batch])
-    lefts = F.array(*[F.lit(a) for a, _, _ in batch])
-    touched = F.coalesce(F.arrays_overlap("syms", lefts), F.lit(False))
-    return (
-        syms.filter(touched)
-        .withColumn("syms", kernel(F.col("syms")))
-        .union(syms.filter(~touched))
-        .coalesce(BPE_VOCAB_PARTITIONS)
-        .localCheckpoint(eager=False)
-    )
-
-
 def _merge_rounds(
-    syms: DataFrame,
-    rounds: int,
-    batch_cap: int,
-    topk: int,
-    select_fn=None,
-) -> tuple[DataFrame, list]:
-    """Run ``rounds`` batched merge rounds over a (…, freq, syms) frame
-    (extra columns ride through untouched). Per round: ONE ranked-pool
-    job (which also materializes the previous round's lazy-checkpointed
-    Arrow re-symbolization), driver-side greedy disjoint selection.
-    Returns (final syms, info) where ``info`` has one (batch,
-    total_pairs_at_round_start) entry per ranked job that ran — an
-    empty batch ends the loop but still records its total (it carries
-    the PREVIOUS round's post-merge symbol mass)."""
-    if select_fn is None:
-        select_fn = lambda ranked: select_merge_batch(  # noqa: E731
-            ranked, batch_cap
-        )
-    info: list[tuple[list, int]] = []
+    syms: DataFrame, rounds: int, topk: int, select_fn
+) -> Iterator[tuple[list, int, DataFrame]]:
+    """THE batched merge loop: up to ``rounds`` rounds over a (…, freq,
+    syms) frame (extra columns ride through untouched). Yields ``(batch,
+    total, syms)`` once per ranked job — the selected batch, the round's
+    total pair mass at round START (the PREVIOUS round's post-merge
+    mass), and the frame with the batch applied. Per round: ONE
+    ranked-pool job (which also materializes the previous round's lazy
+    checkpoint), driver-side ``select_fn`` over the ranked (a, b, count)
+    rows, then the JVM fold (``bpe_apply_merges_expr``) under a lazy
+    checkpoint. An empty batch is yielded with the frame unchanged and
+    ends the loop; a caller may also stop consuming early.
+
+    The lazy checkpoint is read by exactly one path of the next ranked
+    job, so the two-consumer cache race (SCALE.md round-11 CC lesson)
+    cannot arise."""
     for _ in range(rounds):
-        ranked, total = _ranked_pairs(syms, topk)
-        batch = select_fn(
-            [(row["a"], row["b"], row["cnt"]) for row in ranked]
-        )
-        info.append((batch, total))
+        total = 0
+        ranked = []
+        for r in _ranked_frame(syms, topk).collect():
+            if r["gid"]:
+                total = int(r["cnt"]) if r["cnt"] is not None else 0
+            else:
+                ranked.append((r["a"], r["b"], r["cnt"]))
+        batch = select_fn(ranked)
+        if batch:
+            merges = [(a, b) for a, b, _ in batch]
+            syms = syms.withColumn(
+                "syms", bpe_apply_merges_expr(F.col("syms"), merges)
+            ).localCheckpoint(eager=False)
+        yield batch, total, syms
         if not batch:
-            break
-        syms = _apply_batch_prefiltered(syms, batch)
-    return syms, info
+            return
+
+
+def _final_syms(
+    syms: DataFrame, rounds: int, topk: int, select_fn
+) -> DataFrame:
+    """The frame after every round of ``_merge_rounds``."""
+    for _, _, syms in _merge_rounds(syms, rounds, topk, select_fn):
+        pass
+    return syms
 
 
 def train_bpe_batched(
@@ -457,12 +358,16 @@ def train_bpe_batched(
     Per round: ONE keyed aggregate over exploded adjacent symbol pairs
     (vocabulary-bounded), one bounded ``limit(topk)`` collect of the
     ranked candidate pool, driver-side greedy disjoint selection
-    (``select_merge_batch``), one Arrow-kernel re-symbolization pass,
-    one scalar aggregate. Driver traffic is <= topk + 1 rows per round.
+    (``select_merge_batch``), one JVM-fold re-symbolization. Driver
+    traffic is <= topk + 1 rows per round. ``batch_cap=1, topk=1`` is
+    the classic one-merge-per-round trainer (q304).
     """
     return _train_table(
-        spark, _vocab_syms(docs, text_col), rounds, topk,
-        select_fn=None, batch_cap=batch_cap,
+        spark,
+        _unit_syms(_unit_rows(docs, text_col, 1)),
+        rounds,
+        topk,
+        partial(select_merge_batch, batch_cap=batch_cap),
     )
 
 
@@ -480,20 +385,17 @@ def train_bpe_adaptive(
     the constant derivations above and SCALE.md §20 for the 32k-merge
     round model). Identical per-round job shape to
     ``train_bpe_batched`` (one ranked job per round, bounded
-    ``limit(topk)`` collect, Arrow re-symbolization); only the units
+    ``limit(topk)`` collect, JVM-fold re-symbolization); only the units
     (chunks instead of words) and the selection rule (count-band
     ``select_merge_batch_adaptive`` instead of a fixed cap) differ.
     Output columns match ``train_bpe_batched``; ``fertility`` reads as
     symbols-per-CHUNK."""
     return _train_table(
         spark,
-        _chunk_syms(docs, text_col, chunk_words),
+        _unit_syms(_unit_rows(docs, text_col, chunk_words)),
         rounds,
         topk,
-        select_fn=lambda ranked: select_merge_batch_adaptive(
-            ranked, alpha_den
-        ),
-        batch_cap=0,
+        partial(select_merge_batch_adaptive, alpha_den=alpha_den),
     )
 
 
@@ -503,7 +405,6 @@ def _train_table(
     rounds: int,
     topk: int,
     select_fn,
-    batch_cap: int,
 ) -> DataFrame:
     """Shared trainer body: run the merge rounds over a prepared
     (freq, syms) frame and assemble the merge table (see
@@ -532,7 +433,10 @@ def _train_table(
     # pays a trailing scalar aggregate. (The earlier shape spent a third
     # job per round on this scalar — pure round-count tax at the
     # ~0.25s/job scheduler floor, SCALE.md §19.)
-    fin, info = _merge_rounds(syms, rounds, batch_cap, topk, select_fn)
+    info: list[tuple[list, int]] = []
+    fin = syms
+    for batch, total, fin in _merge_rounds(syms, rounds, topk, select_fn):
+        info.append((batch, total))
     for i, (batch, _total) in enumerate(info):
         if not batch:
             break
@@ -569,9 +473,13 @@ def train_merge_batches(
     artifact an encoder ships with) without materializing per-round
     totals — R ranked-pool jobs, R-1 materialized applies (the last
     round's apply is never needed once its batch is selected)."""
-    syms = _vocab_syms(docs, text_col)
-    _, info = _merge_rounds(syms, rounds, batch_cap, topk)
-    return [batch for batch, _ in info if batch]
+    syms = _unit_syms(_unit_rows(docs, text_col, 1))
+    select_fn = partial(select_merge_batch, batch_cap=batch_cap)
+    return [
+        batch
+        for batch, _, _ in _merge_rounds(syms, rounds, topk, select_fn)
+        if batch
+    ]
 
 
 def save_merge_table(
@@ -629,7 +537,7 @@ def bpe_encode_all_kernel(batches: list[list[tuple[str, str, int]]]):
     """Arrow kernel applying EVERY trained round's merge batch to each
     word in ONE pass: the per-round folds run sequentially per word
     inside the kernel (identical fold sequence to R chained
-    ``bpe_apply_merges_kernel`` columns — pinned by
+    ``bpe_apply_merges_expr`` columns — pinned by
     test_bpe_encode_all_matches_per_round), so encoding costs one
     Python/Arrow round trip instead of R. Training can't fuse like this
     (it re-counts pairs between rounds); ENCODE has the whole merge
@@ -682,6 +590,50 @@ def encode_with_batches(
     )
 
 
+def _tokenize_ledger(
+    docs: DataFrame,
+    text_col: str,
+    group_col: str,
+    chunk_words: int,
+    resymbolize,
+    n_units_col: str,
+    per_unit_col: str,
+) -> DataFrame:
+    """The per-group tokenization ledger every tokenize/encode entry
+    shares: ``resymbolize`` maps the distinct-unit start state (unit,
+    freq, syms) to its final symbols (the training rounds, or an encode
+    with trained batches); final per-unit symbol counts join back to
+    per-(group, unit) frequencies for units / tokens / tokens-per-unit
+    / chars-per-token. Tokenizing 100 TB stays DISTINCT-UNIT work: the
+    corpus pays two keyed unit aggregates and one unit equi-join."""
+    units = _unit_rows(docs, text_col, chunk_words, group_col)
+    ws = units.groupBy(group_col, "unit").agg(
+        F.count(F.lit(1)).cast("bigint").alias("freq_s")
+    )
+    fin = resymbolize(_unit_syms(units, "unit")).select(
+        "unit",
+        F.size("syms").cast("bigint").alias("n_syms"),
+        F.length("unit").cast("bigint").alias("n_chars"),
+    )
+    n_tokens = F.sum(F.col("freq_s") * F.col("n_syms"))
+    return (
+        ws.join(fin, "unit")
+        .groupBy(group_col)
+        .agg(
+            F.sum("freq_s").cast("bigint").alias(n_units_col),
+            n_tokens.cast("bigint").alias("n_tokens"),
+            (
+                n_tokens.cast("double") / F.sum("freq_s").cast("double")
+            ).alias(per_unit_col),
+            (
+                F.sum(F.col("freq_s") * F.col("n_chars")).cast("double")
+                / n_tokens.cast("double")
+            ).alias("chars_per_token"),
+        )
+        .orderBy(group_col)
+    )
+
+
 def tokenize_corpus_adaptive(
     spark: SparkSession,
     docs: DataFrame,
@@ -696,70 +648,18 @@ def tokenize_corpus_adaptive(
     q318's ledger under q321's tokenizer: re-run the identical adaptive
     rounds over the global distinct-CHUNK vocabulary (identical
     frequencies -> identical ranked pools -> identical count-band
-    batches), keep the chunk through each Arrow re-symbolization, then
-    join final per-chunk symbol counts back to per-(group, chunk)
-    frequencies. Tokenizing 100 TB stays DISTINCT-CHUNK work — the
-    corpus pays two keyed chunk aggregates and one chunk equi-join;
-    rounds cost one ranked job each (the q318 shape, units swapped)."""
-    from kp_data_pipelines_spark.operators.similarity import (
-        ensure_parallelism,
-    )
-    from kp_data_pipelines_spark.operators.textops import normalize_ws
-
-    chunk_expr = _CHUNK_EXPR_TMPL.format(w=chunk_words)
-    chunks = (
-        ensure_parallelism(docs.select(group_col, text_col))
-        .select(group_col, normalize_ws(text_col).alias("norm"))
-        .filter(F.length("norm") > 0)
-        .select(group_col, F.split("norm", " ").alias("parts"))
-        .select(group_col, F.explode(F.expr(chunk_expr)).alias("chunk"))
-        .filter(F.col("chunk") != "")
-    )
-    ws = chunks.groupBy(group_col, "chunk").agg(
-        F.count(F.lit(1)).cast("bigint").alias("freq_s")
-    )
-    syms = (
-        chunks.groupBy("chunk")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
-        .repartition(BPE_VOCAB_PARTITIONS)
-        .select(
-            "chunk",
-            "freq",
-            F.expr(_CHAR_SYMS.replace("word", "chunk")).alias("syms"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    fin = _merge_rounds(
-        syms,
-        rounds,
-        0,
-        topk,
-        select_fn=lambda ranked: select_merge_batch_adaptive(
-            ranked, alpha_den
-        ),
-    )[0].select(
-        "chunk",
-        F.size("syms").cast("bigint").alias("n_syms"),
-        F.length("chunk").cast("bigint").alias("n_chars"),
-    )
-    return (
-        ws.join(fin, "chunk")
-        .groupBy(group_col)
-        .agg(
-            F.sum("freq_s").cast("bigint").alias("n_chunks"),
-            F.sum(F.col("freq_s") * F.col("n_syms"))
-            .cast("bigint")
-            .alias("n_tokens"),
-            (
-                F.sum(F.col("freq_s") * F.col("n_syms")).cast("double")
-                / F.sum("freq_s").cast("double")
-            ).alias("tokens_per_chunk"),
-            (
-                F.sum(F.col("freq_s") * F.col("n_chars")).cast("double")
-                / F.sum(F.col("freq_s") * F.col("n_syms")).cast("double")
-            ).alias("chars_per_token"),
-        )
-        .orderBy(group_col)
+    batches) with the chunk carried through, then emit the per-group
+    ledger (n_chunks / n_tokens / tokens_per_chunk / chars_per_token).
+    Rounds cost one ranked job each."""
+    select_fn = partial(select_merge_batch_adaptive, alpha_den=alpha_den)
+    return _tokenize_ledger(
+        docs,
+        text_col,
+        group_col,
+        chunk_words,
+        lambda syms: _final_syms(syms, rounds, topk, select_fn),
+        "n_chunks",
+        "tokens_per_chunk",
     )
 
 
@@ -772,61 +672,22 @@ def tokenize_corpus_batched(
     batch_cap: int = BPE_BATCH_CAP,
     topk: int = BPE_TOPK,
 ) -> DataFrame:
-    """The batched trainer's merges APPLIED at corpus scale — the q311
-    ledger under ~80 merges instead of 6: re-run the identical batched
-    rounds over the global distinct-word vocab (identical frequencies
-    -> identical ranked pools -> identical disjoint batches), keep the
-    word through each re-symbolization, then join final per-word symbol
-    counts back to per-(group, word) frequencies for the per-group
-    tokenization ledger (words, tokens, fertility, chars/token).
-    Tokenizing 100 TB stays VOCABULARY work; the corpus pays two keyed
-    word aggregates and one word equi-join. Without per-round totals a
-    round costs ONE job (the ranked pool — the lazy checkpoint
-    materializes under the next round's job)."""
-    from kp_data_pipelines_spark.operators.similarity import (
-        ensure_parallelism,
-    )
-    from kp_data_pipelines_spark.operators.textops import normalize_ws
-
-    words = (
-        ensure_parallelism(docs.select(group_col, text_col))
-        .select(
-            group_col,
-            F.explode(F.split(normalize_ws(text_col), " ")).alias("word"),
-        )
-        .filter(F.col("word") != "")
-    )
-    ws = words.groupBy(group_col, "word").agg(
-        F.count(F.lit(1)).cast("bigint").alias("freq_s")
-    )
-    syms = (
-        words.groupBy("word")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("freq"))
-        .repartition(BPE_VOCAB_PARTITIONS)
-        .select("word", "freq", F.expr(_CHAR_SYMS).alias("syms"))
-        .localCheckpoint(eager=False)
-    )
-    fin = _merge_rounds(syms, rounds, batch_cap, topk)[0].select(
-        "word",
-        F.size("syms").cast("bigint").alias("n_syms"),
-        F.length("word").cast("bigint").alias("n_chars"),
-    )
-    return (
-        ws.join(fin, "word")
-        .groupBy(group_col)
-        .agg(
-            F.sum("freq_s").cast("bigint").alias("n_words"),
-            F.sum(F.col("freq_s") * F.col("n_syms"))
-            .cast("bigint")
-            .alias("n_tokens"),
-            (
-                F.sum(F.col("freq_s") * F.col("n_syms")).cast("double")
-                / F.sum("freq_s").cast("double")
-            ).alias("fertility"),
-            (
-                F.sum(F.col("freq_s") * F.col("n_chars")).cast("double")
-                / F.sum(F.col("freq_s") * F.col("n_syms")).cast("double")
-            ).alias("chars_per_token"),
-        )
-        .orderBy(group_col)
+    """The batched trainer's merges APPLIED at corpus scale: re-run the
+    identical batched rounds over the global distinct-word vocab
+    (identical frequencies -> identical ranked pools -> identical
+    disjoint batches) with the word carried through, then emit the
+    per-group ledger (n_words / n_tokens / fertility /
+    chars_per_token). Without per-round totals a round costs ONE job
+    (the ranked pool — the lazy checkpoint materializes under the next
+    round's job). ``batch_cap=1, topk=1`` is q311's one-merge-per-round
+    tokenizer."""
+    select_fn = partial(select_merge_batch, batch_cap=batch_cap)
+    return _tokenize_ledger(
+        docs,
+        text_col,
+        group_col,
+        1,
+        lambda syms: _final_syms(syms, rounds, topk, select_fn),
+        "n_words",
+        "fertility",
     )

@@ -4043,7 +4043,7 @@ def bpe_batched_trainer_sql(
     returns 0 on absence in DuckDB), then apply the whole batch in ONE
     ``list_reduce`` fold: the per-round selection's (a, b, merged)
     arrays ride in via a cross join and each element probes them with
-    ``list_position`` — the exact fold of ``bpe_apply_merges_kernel``
+    ``list_position`` — the exact fold of ``bpe_apply_merges_expr``
     including within-pass chain merges. Defaults come from
     ``operators.bpe`` so the two engines can never drift."""
     from kp_data_pipelines_spark.operators.bpe import (

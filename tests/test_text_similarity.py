@@ -860,16 +860,18 @@ def test_cdc_chunks_are_edit_local(spark):
 
 
 def test_bpe_apply_kernel_matches_expr(spark):
-    """The Arrow merge-batch fold (bpe_apply_merges_kernel) and the
-    interpreted JVM aggregate fold (bpe_apply_merges_expr) must produce
-    IDENTICAL symbol arrays — including the within-pass chain-merge
-    case (a merged output symbol equal to another selected pair's left
-    symbol) and repeated-symbol runs."""
+    """The Arrow encode kernel over one batch (bpe_encode_all_kernel)
+    and the interpreted JVM aggregate fold the trainer applies
+    (bpe_apply_merges_expr) must produce IDENTICAL symbol arrays —
+    including the within-pass chain-merge case (a merged output symbol
+    equal to another selected pair's left symbol) and repeated-symbol
+    runs. Holdout encoding (q319/q327) relies on this pin to tokenize
+    exactly as training did."""
     from pyspark.sql import functions as F
 
     from kp_data_pipelines_spark.operators.bpe import (
         bpe_apply_merges_expr,
-        bpe_apply_merges_kernel,
+        bpe_encode_all_kernel,
     )
 
     rows = [
@@ -891,7 +893,7 @@ def test_bpe_apply_kernel_matches_expr(spark):
         kern = {
             r["id"]: r["s"]
             for r in df.select(
-                "id", bpe_apply_merges_kernel(merges)(F.col("syms")).alias("s")
+                "id", bpe_encode_all_kernel([merges])(F.col("syms")).alias("s")
             ).collect()
         }
         expr = {
@@ -953,11 +955,12 @@ def test_bpe_batched_trainer_reaches_64_merges(spark):
 
 def test_bpe_encode_all_matches_per_round(spark):
     """The fused one-pass encode kernel must equal R chained per-round
-    kernels — same fold sequence per word, one Arrow round trip."""
+    JVM folds (the trainer's apply step) — same fold sequence per word,
+    one Arrow round trip."""
     from pyspark.sql import functions as F
 
     from kp_data_pipelines_spark.operators.bpe import (
-        bpe_apply_merges_kernel,
+        bpe_apply_merges_expr,
         bpe_encode_all_kernel,
     )
 
@@ -977,8 +980,10 @@ def test_bpe_encode_all_matches_per_round(spark):
     df = spark.createDataFrame(rows, "id long, syms array<string>")
     chained = df
     for batch in batches:
-        k = bpe_apply_merges_kernel([(a, b) for a, b, _ in batch])
-        chained = chained.withColumn("syms", k(F.col("syms")))
+        merges = [(a, b) for a, b, _ in batch]
+        chained = chained.withColumn(
+            "syms", bpe_apply_merges_expr(F.col("syms"), merges)
+        )
     want = {r["id"]: r["syms"] for r in chained.collect()}
     got = {
         r["id"]: r["s"]
@@ -987,42 +992,6 @@ def test_bpe_encode_all_matches_per_round(spark):
         ).collect()
     }
     assert got == want
-
-
-def test_bpe_apply_batch_prefiltered_matches_full_kernel(spark):
-    """The arrays_overlap pre-filter (ship only rows containing a batch
-    LEFT symbol across the Arrow boundary, union the untouched
-    remainder back) must produce the SAME row multiset as running the
-    merge kernel over every row — including rows with no overlap, rows
-    overlapping only on a RIGHT symbol (unchanged but shipped), empty
-    arrays, and extra ride-through columns."""
-    from pyspark.sql import functions as F
-
-    from kp_data_pipelines_spark.operators.bpe import (
-        _apply_batch_prefiltered,
-        bpe_apply_merges_kernel,
-    )
-
-    rows = [
-        (1, 3, list("the quick")),   # touched: contains "t" and "e"
-        (2, 1, list("zzz")),         # untouched: no batch symbol at all
-        (3, 2, ["h", "h", "r"]),     # right symbols only -> untouched
-        (4, 5, ["th", "e", "t", "h"]),  # chain-merge territory
-        (5, 1, []),                  # empty array -> untouched
-        (6, 4, list("tttthhhh")),    # touched, repeated runs
-    ]
-    df = spark.createDataFrame(rows, "id long, freq long, syms array<string>")
-    batch = [("t", "h", 9), ("e", "r", 7)]
-    kern = bpe_apply_merges_kernel([(a, b) for a, b, _ in batch])
-    want = {
-        r["id"]: (r["freq"], r["syms"])
-        for r in df.withColumn("syms", kern(F.col("syms"))).collect()
-    }
-    out = _apply_batch_prefiltered(df, batch)
-    got = {r["id"]: (r["freq"], r["syms"]) for r in out.collect()}
-    assert got == want
-    # no row lost or duplicated by the filter/union split
-    assert out.count() == len(rows)
 
 
 def test_bpe_select_merge_batch_adaptive_band():

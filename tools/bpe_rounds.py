@@ -8,7 +8,10 @@ distinct chunks — a symbol inventory deep enough for thousands of
 merges, with Zipf-ish chunk counts from the generator's skewed word
 draws. Per-round cost is vocabulary-bounded (rounds run on the
 distinct-chunk table, never the corpus), so the probe's wall time is
-dominated by round COUNT — exactly the quantity under test.
+dominated by round COUNT — exactly the quantity under test. The probe
+drives the production loop (``bpe._merge_rounds``) and stops consuming
+it at the target merge count; a round's seconds cover its ranked job,
+which also materializes the previous round's fold.
 
 Usage: python tools/bpe_rounds.py [target_merges] [n_partitions rows_per_partition]
 Prints one ledger row per round (batch size, band max/min count,
@@ -22,17 +25,16 @@ import json
 import math
 import sys
 import time
+from functools import partial
 
 sys.path.insert(0, ".")
-
-from pyspark.sql import functions as F  # noqa: E402
 
 from kp_data_pipelines_spark.operators.bpe import (  # noqa: E402
     BPE_ADAPTIVE_ALPHA_DEN,
     BPE_ADAPTIVE_TOPK,
-    _chunk_syms,
-    _ranked_pairs,
-    bpe_apply_merges_kernel,
+    _merge_rounds,
+    _unit_rows,
+    _unit_syms,
     select_merge_batch_adaptive,
 )
 from kp_data_pipelines_spark.session import get_spark  # noqa: E402
@@ -58,7 +60,7 @@ def main() -> int:
     )
 
     t0 = time.time()
-    syms = _chunk_syms(docs, "text", 3)
+    syms = _unit_syms(_unit_rows(docs, "text", 3))
     n_chunks = syms.count()  # materializes the corpus-side chunk agg
     prep_s = time.time() - t0
     print(
@@ -71,12 +73,16 @@ def main() -> int:
     rounds = 0
     ledger: list[dict] = []
     c0 = None
-    while merges < target:
-        t = time.time()
-        ranked, total = _ranked_pairs(syms, topk)
-        batch = select_merge_batch_adaptive(
-            [(r["a"], r["b"], r["cnt"]) for r in ranked], alpha_den
-        )
+    # the production loop; every non-empty round adds >= 1 merge, so
+    # `target` rounds always reach the target merge count
+    loop = _merge_rounds(
+        syms,
+        target,
+        topk,
+        partial(select_merge_batch_adaptive, alpha_den=alpha_den),
+    )
+    t = time.time()
+    for batch, _total, _syms in loop:
         dt = time.time() - t
         if not batch:
             print(f"round {rounds + 1}: pool dry after {merges} merges")
@@ -100,10 +106,9 @@ def main() -> int:
             f"band [{batch[-1][2]}, {batch[0][2]}]  "
             f"merges {merges:6d}  {dt:.2f}s"
         )
-        kernel = bpe_apply_merges_kernel([(a, b) for a, b, _ in batch])
-        syms = syms.withColumn(
-            "syms", kernel(F.col("syms"))
-        ).localCheckpoint(eager=False)
+        if merges >= target:
+            break
+        t = time.time()
 
     total_s = time.time() - t0
     c_floor = ledger[-1]["c_min"] if ledger else 0

@@ -220,11 +220,11 @@ def main() -> int:
 
     # Round-9 probes: the dense (content-defined) peak kernel behind
     # q317's alignment-robust landmarks, and one batched-BPE merge
-    # application (the per-round Arrow fold of q315/q318/q319) over the
-    # 1M-doc corpus's DISTINCT words — the vocabulary-bounded unit the
+    # application (the training loop's JVM fold, bpe_apply_merges_expr)
+    # over a 1M-DISTINCT-word vocab — the vocabulary-bounded unit the
     # round-count model multiplies.
     from kp_data_pipelines_spark.operators.bpe import (
-        bpe_apply_merges_kernel,
+        bpe_apply_merges_expr,
     )
     from kp_data_pipelines_spark.operators.multimodal import (
         dense_landmarks,
@@ -258,16 +258,16 @@ def main() -> int:
     n_vocab = vocab.count()
     # pairwise-DISJOINT 12-pair batch (24 distinct letters): the
     # trainer's greedy disjoint selection only ever emits batches where
-    # no symbol repeats, and bpe_apply_merges_kernel's contract assumes
-    # it — a repeating-symbol list would probe fold states production
-    # never produces (round-9 ADVICE)
+    # no symbol repeats, and the fold's lookup maps assume it — a
+    # repeating-symbol list would probe fold states production never
+    # produces (round-9 ADVICE)
     merges = [("a", "b"), ("c", "d"), ("e", "f"), ("g", "h"), ("i", "j"),
               ("k", "l"), ("m", "n"), ("o", "p"), ("q", "r"), ("s", "t"),
               ("u", "v"), ("w", "x")]
     t = time.time()
     n_syms = (
         vocab.select(
-            bpe_apply_merges_kernel(merges)(F.col("syms")).alias("s")
+            bpe_apply_merges_expr(F.col("syms"), merges).alias("s")
         )
         .agg(F.sum(F.size("s")))
         .first()[0]
