@@ -27,7 +27,16 @@ q288 (8.3 s vs 1.79 s idle, pure driver-session tail noise) that needed
 a SCALE.md adjudication note to interpret; the retry makes the
 committed artifact self-correcting instead. Retried queries are
 recorded under "retimed" (first vs final) so a genuine regression —
-one that SURVIVES the retry — is still visible, never masked.
+one that SURVIVES the retry — is still visible, never masked. The prior
+is only read when its "sf" and "cpus" equal this run's: a BENCH.json
+from another core count or scale factor says nothing about outliers.
+
+The full map also records "codegen_compiles": {name: [n, ...]}, the
+number of classes Janino compiled in each of a query's timed runs (the
+JVM's CodegenMetrics counter, read outside the timed region). The first
+run compiles the query's new classes; later runs should compile none,
+so a count that stays up on later runs is a thrashing generated-class
+cache (SCALE.md §24).
 """
 
 from __future__ import annotations
@@ -79,17 +88,23 @@ def main() -> None:
     # plans, not session startup.
     next(iter(QUERIES.values()))(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
+    jvm_codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = jvm_codegen.METRIC_COMPILATION_TIME()
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     timings: dict[str, float] = {}
+    codegen_compiles: dict[str, list[int]] = {}
     items = [
         (n, f) for n, f in QUERIES.items() if only is None or n in only
     ]
     for i, (name, fn) in enumerate(items):
         best = float("inf")
+        codegen_compiles[name] = []
         for _ in range(runs):
+            c0 = compiles.getCount()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
+            codegen_compiles[name].append(compiles.getCount() - c0)
         timings[name] = round(best, 4)
         # Session hygiene at the query boundary: release eager
         # localCheckpoint blocks (outside the timed region) so storage
@@ -105,7 +120,7 @@ def main() -> None:
                 spark.sparkContext._jvm.System.gc()
 
     # Outlier re-time pass: compare against the previous committed
-    # BENCH.json (same sf, full-catalog runs only) and give any query
+    # BENCH.json (same sf and cpus, full-catalog runs only) and give any query
     # that blew past 2x its prior value ONE more timing pass now that
     # the sweep — and usually the ambient spike that inflated it — is
     # over. Bounded at 20 retries so a genuinely-regressed catalog
@@ -117,9 +132,11 @@ def main() -> None:
     if sf == 0.1 and only is None and os.path.isfile(bench_path):
         try:
             with open(bench_path) as f:
-                prior = json.load(f).get("queries", {})
+                prior_doc = json.load(f)
         except (json.JSONDecodeError, OSError):
-            prior = {}
+            prior_doc = {}
+        same_run = prior_doc.get("sf") == sf and prior_doc.get("cpus") == cpus
+        prior = prior_doc.get("queries", {}) if same_run else {}
         fns = dict(items)
         # Two triggers: the 2x ratio catches sub-second phantoms, and a
         # 1.4x-with->=0.75s-absolute-delta catches second-scale drift the
@@ -164,6 +181,7 @@ def main() -> None:
         "master": master,
         "cpus": cpus,
         "sf_dir": sf_dir,
+        "codegen_compiles": codegen_compiles,
     }
     if retimed:
         full["retimed"] = retimed

@@ -28,13 +28,6 @@ def _dot(a, b):
 
 
 _PARTITION_PROBE_CACHE: dict[tuple, int] = {}
-# Strong refs to every session that has probe-cache entries: id() of a
-# garbage-collected session object could be reused by a NEW session and
-# alias its stale partition counts into the fresh session's cache slots;
-# keeping the wrapper object alive pins its id for the process lifetime
-# (a handful of sessions per process — main + the vanilla parity twin —
-# and a stopped session's JVM resources are released by stop(), not GC).
-_PROBE_CACHE_SESSIONS: dict[int, object] = {}
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int = 8) -> DataFrame:
@@ -58,15 +51,14 @@ def ensure_parallelism(df: DataFrame, min_partitions: int = 8) -> DataFrame:
         # key includes the session: scan split sizing depends on session
         # parallelism, so the same plan can partition differently across
         # sessions (e.g. the vanilla parity session in one process).
-        # The strong ref in _PROBE_CACHE_SESSIONS keeps the id stable
-        # (see above). Split-sizing confs are assumed fixed within a
-        # session's lifetime — true for every session this package
-        # builds; a caller mutating spark.sql.files.* mid-session would
-        # at worst skip a result-neutral repartition.
-        sess = df.sparkSession
-        _PROBE_CACHE_SESSIONS.setdefault(id(sess), sess)
+        # The JVM session's UUID is never reused, so the cache holds no
+        # reference to the session and cannot alias a later one.
+        # Split-sizing confs are assumed fixed within a session's
+        # lifetime — true for every session this package builds; a
+        # caller mutating spark.sql.files.* mid-session would at worst
+        # skip a result-neutral repartition.
         key = (
-            id(sess),
+            df.sparkSession._jsparkSession.sessionUUID(),
             df._jdf.queryExecution().analyzed().semanticHash(),
         )
     except Exception:

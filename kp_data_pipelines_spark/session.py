@@ -9,7 +9,9 @@ pipelines survive a 1000-executor / 100 TB deployment:
 - Arrow-backed pandas conversion for the few report-layer collects,
 - UTC session timezone so timestamp semantics are deployment-independent,
 - shuffle partitions sized by env (32 locally; a cluster deployment
-  overrides via ``spark.sql.shuffle.partitions`` — AQE coalesces down).
+  overrides via ``spark.sql.shuffle.partitions`` — AQE coalesces down),
+- a generated-class cache large enough that recurring queries reuse
+  their compiled code instead of recompiling it every run.
 """
 
 from __future__ import annotations
@@ -37,6 +39,14 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.enableVectorizedReader": "true",
     "spark.sql.shuffle.partitions": "32",
+    # Generated-class cache. Spark's default of 100 entries (4 LRU
+    # segments) is smaller than one pass of a recurring workload, so every
+    # pass recompiled every class with Janino (perfbench etl_sweep: ~113
+    # per warm pass, ~130 with warm-up; stream_ingest 75, ~105). The whole
+    # catalog generates ~4,440 distinct classes per sf0.001 sweep; 8192
+    # holds that across the segment split (SCALE.md §24). Static conf:
+    # only effective when this factory starts the session.
+    "spark.sql.codegen.cache.maxEntries": "8192",
 }
 
 
