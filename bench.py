@@ -16,20 +16,9 @@ Each query is timed SPARK_GRAFT_BENCH_RUNS times (default 2) and the BEST
 run is reported: first executions pay one-off costs (file listing,
 broadcast build, codegen compilation) that at sub-2-second plan durations
 read as 0.5-1 s round-over-round wobble, not plan changes. Min-of-2 is
-the steady-state number a warm cluster would see.
-
-Ambient-load outliers are RE-TIMED at the end of the run: any query
-whose best time exceeds 2x its value in the PREVIOUS committed
-BENCH.json gets one extra timing pass after the sweep (when a transient
-load spike has usually passed), and the final number is the min across
-all passes. The round-9 committed artifact carried a 4.6x phantom on
-q288 (8.3 s vs 1.79 s idle, pure driver-session tail noise) that needed
-a SCALE.md adjudication note to interpret; the retry makes the
-committed artifact self-correcting instead. Retried queries are
-recorded under "retimed" (first vs final) so a genuine regression —
-one that SURVIVES the retry — is still visible, never masked. The prior
-is only read when its "sf" and "cpus" equal this run's: a BENCH.json
-from another core count or scale factor says nothing about outliers.
+the steady-state number a warm cluster would see. The full map records
+every run's time under "run_times": {name: [sec, ...]}, so noise is read
+from the run itself; no earlier BENCH.json is consulted.
 
 The full map also records "codegen_compiles": {name: [n, ...]}, the
 number of classes Janino compiled in each of a query's timed runs (the
@@ -69,12 +58,10 @@ def main() -> None:
     master = spark.sparkContext.master
     cpus = spark.sparkContext.defaultParallelism
 
-    # Bisect knobs (round-6 drift attribution, normally unset):
-    #   SPARK_GRAFT_NO_HYGIENE=1      skip release_pinned_rdds/System.gc
+    # Bisect knob (normally unset):
     #   SPARK_GRAFT_BENCH_ONLY=<path> JSON list (or comma list) of query
     #                                 names to run; result goes to
     #                                 BENCH_probe.json, never BENCH.json
-    no_hygiene = os.environ.get("SPARK_GRAFT_NO_HYGIENE") == "1"
     only_spec = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
     only: set[str] | None = None
     if only_spec:
@@ -92,20 +79,21 @@ def main() -> None:
     compiles = jvm_codegen.METRIC_COMPILATION_TIME()
     runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2")))
     timings: dict[str, float] = {}
+    run_times: dict[str, list[float]] = {}
     codegen_compiles: dict[str, list[int]] = {}
     items = [
         (n, f) for n, f in QUERIES.items() if only is None or n in only
     ]
     for i, (name, fn) in enumerate(items):
-        best = float("inf")
+        run_times[name] = []
         codegen_compiles[name] = []
         for _ in range(runs):
             c0 = compiles.getCount()
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+            run_times[name].append(round(time.perf_counter() - t0, 4))
             codegen_compiles[name].append(compiles.getCount() - c0)
-        timings[name] = round(best, 4)
+        timings[name] = min(run_times[name])
         # Session hygiene at the query boundary: release eager
         # localCheckpoint blocks (outside the timed region) so storage
         # doesn't accumulate across the 250x2-run session — the round-4
@@ -114,59 +102,9 @@ def main() -> None:
         # blocking=True: async unpersist (the default) would overlap the
         # NEXT query's timed region and inflate it — measured +7% across
         # the shared-250 subset (round-6 bisect, SCALE.md §15).
-        if not no_hygiene:
-            release_pinned_rdds(spark, blocking=True)
-            if (i + 1) % 50 == 0:
-                spark.sparkContext._jvm.System.gc()
-
-    # Outlier re-time pass: compare against the previous committed
-    # BENCH.json (same sf and cpus, full-catalog runs only) and give any query
-    # that blew past 2x its prior value ONE more timing pass now that
-    # the sweep — and usually the ambient spike that inflated it — is
-    # over. Bounded at 20 retries so a genuinely-regressed catalog
-    # can't double the bench; min across passes is reported either way.
-    retimed: dict[str, dict[str, float]] = {}
-    bench_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH.json"
-    )
-    if sf == 0.1 and only is None and os.path.isfile(bench_path):
-        try:
-            with open(bench_path) as f:
-                prior_doc = json.load(f)
-        except (json.JSONDecodeError, OSError):
-            prior_doc = {}
-        same_run = prior_doc.get("sf") == sf and prior_doc.get("cpus") == cpus
-        prior = prior_doc.get("queries", {}) if same_run else {}
-        fns = dict(items)
-        # Two triggers: the 2x ratio catches sub-second phantoms, and a
-        # 1.4x-with->=0.75s-absolute-delta catches second-scale drift the
-        # ratio alone misses — round 10 recorded q87 at 3.24s vs a 2.09s
-        # prior (1.55x, +1.15s) that an isolated re-time put back at
-        # 1.7s; it sat under the 2x trigger for two rounds.
-        outliers = sorted(
-            (
-                n
-                for n, t in timings.items()
-                if n in prior
-                and prior[n] > 0
-                and (
-                    t > 2 * prior[n]
-                    or (t > 1.4 * prior[n] and t - prior[n] > 0.75)
-                )
-            ),
-            key=lambda n: -timings[n],
-        )[:20]
-        for name in outliers:
-            first = timings[name]
-            t0 = time.perf_counter()
-            fns[name](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(first, time.perf_counter() - t0)
-            if not no_hygiene:
-                release_pinned_rdds(spark, blocking=True)
-            timings[name] = round(best, 4)
-            retimed[name] = {"first": first, "final": timings[name]}
+        release_pinned_rdds(spark, blocking=True)
+        if (i + 1) % 50 == 0:
+            spark.sparkContext._jvm.System.gc()
 
     total = round(sum(timings.values()), 4)
     ordered = sorted(timings.values())
@@ -181,10 +119,9 @@ def main() -> None:
         "master": master,
         "cpus": cpus,
         "sf_dir": sf_dir,
+        "run_times": run_times,
         "codegen_compiles": codegen_compiles,
     }
-    if retimed:
-        full["retimed"] = retimed
     # BENCH.json is the headline sf0.1 artifact; probes at other scale
     # factors write BENCH_probe.json so a fast sf0.001 run (e.g. inside
     # tools/verify_all.sh) can't clobber the round's benchmark record.

@@ -57,7 +57,7 @@ from kp_data_pipelines_spark.operators.textops import (
     regex_token_count,
     whitespace_token_count,
 )
-from kp_data_pipelines_spark.sources.readers import read_table
+from kp_data_pipelines_spark.sources.readers import read_table, read_table_stream
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -1307,32 +1307,9 @@ def q47_streaming_window_events(spark: SparkSession, sf: str) -> DataFrame:
     aggregation in batch SQL. Complete output mode so every window is
     emitted (append would hold back windows newer than the watermark).
     Proves the streaming and batch engines agree on event-time semantics."""
-    from kp_data_pipelines_spark.sources.readers import _nanos_timestamp_cols
     from kp_data_pipelines_spark.streaming.events import run_available_now
 
-    path = f"{sf}/events.parquet"
-    # mirror read_table's conf handling: without it, micros-NTZ variants of
-    # the events table would infer TIMESTAMP_NTZ here (watermarks reject it)
-    # whenever this query runs FIRST on a fresh session — no silent
-    # dependence on an earlier query having set the conf (CLAUDE.md rule)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    # the streaming file source wants a directory: watch the sf dir with a
-    # glob filter selecting just the events table
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    for c in ns_cols:
-        # integer division — double division of ~1.7e18 nanos rounds past
-        # 2^53 and lands ~12% of stamps 1us off (see readers.read_table)
-        stream = stream.withColumn(
-            c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-        )
+    stream = read_table_stream(spark, sf, "events")
     agg = (
         stream.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -4744,28 +4721,9 @@ def q121_streaming_sessions(spark: SparkSession, sf: str) -> DataFrame:
     session-merge operator agrees with batch SQL to the microsecond.
     Complete mode emits all sessions at end-of-backlog; state is per
     (user, open session) and bounded by the watermark in production."""
-    from kp_data_pipelines_spark.sources.readers import _nanos_timestamp_cols
     from kp_data_pipelines_spark.streaming.events import run_available_now
 
-    path = f"{sf}/events.parquet"
-    # mirror read_table's conf handling: without it, micros-NTZ variants of
-    # the events table would infer TIMESTAMP_NTZ here (watermarks reject it)
-    # whenever this query runs FIRST on a fresh session — no silent
-    # dependence on an earlier query having set the conf (CLAUDE.md rule)
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    for c in ns_cols:
-        stream = stream.withColumn(
-            c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-        )
+    stream = read_table_stream(spark, sf, "events")
     agg = (
         stream.withWatermark("ts", "1 hour")
         .groupBy("user_id", F.session_window("ts", "10 minutes"))
@@ -6175,13 +6133,8 @@ def q150_streaming_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
         run_available_now_foreach_batch,
     )
 
-    docs_path = f"{sf}/documents.parquet"
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-        .filter(F.col("source") == "src19")
+    stream = read_table_stream(spark, sf, "documents").filter(
+        F.col("source") == "src19"
     )
     corpus = read_table(spark, sf, "documents").filter(
         F.col("source") != "src19"
@@ -7167,24 +7120,9 @@ def q169_streaming_asof(spark: SparkSession, sf: str) -> DataFrame:
         run_available_now_foreach_batch,
     )
 
-    path = f"{sf}/events.parquet"
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    from kp_data_pipelines_spark.sources.readers import _nanos_timestamp_cols
-
-    ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
+    purchases = read_table_stream(spark, sf, "events").filter(
+        F.col("event_type") == "purchase"
     )
-    for c in ns_cols:
-        stream = stream.withColumn(
-            c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-        )
-    purchases = stream.filter(F.col("event_type") == "purchase")
     clicks = read_table(spark, sf, "events").filter(
         F.col("event_type") == "click"
     )
@@ -10053,26 +9991,11 @@ def q205_streaming_drift_monitor(spark: SparkSession, sf: str) -> DataFrame:
     twin, and streaming vs batch must agree bit-for-bit. At 100 TB the
     monitor ships a few-KB partial per trigger instead of re-scanning
     history — the canonical streaming-quality-monitor shape."""
-    from kp_data_pipelines_spark.sources.readers import _nanos_timestamp_cols
     from kp_data_pipelines_spark.streaming.events import (
         run_available_now_foreach_batch,
     )
 
-    path = f"{sf}/events.parquet"
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-    )
-    for c in ns_cols:
-        stream = stream.withColumn(
-            c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-        )
+    stream = read_table_stream(spark, sf, "events")
 
     def partials(batch: DataFrame) -> DataFrame:
         return (
@@ -14564,15 +14487,9 @@ def q251_streaming_training_build(spark: SparkSession, sf: str) -> DataFrame:
         training_build_stream,
     )
 
-    docs_path = f"{sf}/documents.parquet"
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
     return training_build_stream(
-        stream, state_dir=_ephemeral_dir("kp_training_state_")
+        read_table_stream(spark, sf, "documents"),
+        state_dir=_ephemeral_dir("kp_training_state_"),
     )
 
 
@@ -15356,14 +15273,7 @@ def q261_streaming_length_drift(spark: SparkSession, sf: str) -> DataFrame:
     buckets x 2 halves of longs."""
     from kp_data_pipelines_spark.streaming.drift import length_drift_stream
 
-    docs_path = f"{sf}/documents.parquet"
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-    )
-    return length_drift_stream(stream)
+    return length_drift_stream(read_table_stream(spark, sf, "documents"))
 
 
 @register("q262_quality_gate_agreement", oracles.gate_agreement_sql())
@@ -17541,8 +17451,6 @@ def q286_streaming_cdc_ingest(spark: SparkSession, sf: str) -> DataFrame:
         run_available_now_foreach_batch,
     )
 
-    docs_path = f"{sf}/documents.parquet"
-    schema = spark.read.parquet(docs_path).schema
     store = (
         with_cdc_chunks(
             ensure_parallelism(
@@ -17556,11 +17464,8 @@ def q286_streaming_cdc_ingest(spark: SparkSession, sf: str) -> DataFrame:
         .select("packed")
         .distinct()
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-        .filter(F.col("source") == "src19")
+    stream = read_table_stream(spark, sf, "documents").filter(
+        F.col("source") == "src19"
     )
 
     def ingest(batch: DataFrame) -> DataFrame:
@@ -17708,13 +17613,8 @@ def q288_growing_store_cdc_ingest(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.streaming.cdc import cdc_ingest_stream
     from kp_data_pipelines_spark.streaming.events import _ephemeral_dir
 
-    docs_path = f"{sf}/documents.parquet"
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-        .select("doc_id", "source", "text")
+    stream = read_table_stream(spark, sf, "documents").select(
+        "doc_id", "source", "text"
     )
     return cdc_ingest_stream(
         stream, state_dir=_ephemeral_dir("kp_cdc_store_")
@@ -18080,12 +17980,8 @@ def q294_streaming_ivf_cell_stats(spark: SparkSession, sf: str) -> DataFrame:
         emb.filter(F.pmod("vec_id", F.lit(2)) == 0), "embedding",
         n_centroids, id_col="vec_id",
     )
-    schema = spark.read.parquet(f"{sf}/embeddings.parquet").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf)
-        .select("vec_id", "embedding")
+    stream = read_table_stream(spark, sf, "embeddings").select(
+        "vec_id", "embedding"
     )
     return ivf_cell_stats_stream(stream, cents)
 
@@ -18264,15 +18160,9 @@ def q297_streaming_vocab_growth(spark: SparkSession, sf: str) -> DataFrame:
     stream==batch pinned by test."""
     from kp_data_pipelines_spark.streaming.drift import vocab_growth_stream
 
-    docs_path = f"{sf}/documents.parquet"
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-        .select("doc_id", "text")
+    return vocab_growth_stream(
+        read_table_stream(spark, sf, "documents").select("doc_id", "text")
     )
-    return vocab_growth_stream(stream)
 
 
 @register(
@@ -19085,13 +18975,8 @@ def q310_streaming_media_ingest(spark: SparkSession, sf: str) -> DataFrame:
         media_ingest_stream,
     )
 
-    docs_path = f"{sf}/documents.parquet"
-    schema = spark.read.parquet(docs_path).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf)
-        .select("doc_id", "source", "text")
+    stream = read_table_stream(spark, sf, "documents").select(
+        "doc_id", "source", "text"
     )
     return media_ingest_stream(
         stream, state_dir=_ephemeral_dir("kp_media_fp_store_")

@@ -6,6 +6,7 @@ from kp_data_pipelines_spark.sources.readers import (
     read_ndjson,
     read_parquet,
     read_table,
+    read_table_stream,
 )
 from kp_data_pipelines_spark.sources.registry import SchemaRegistry
 from kp_data_pipelines_spark.sources.resolver import latest_snapshot
@@ -17,6 +18,7 @@ __all__ = [
     "read_ndjson",
     "read_parquet",
     "read_table",
+    "read_table_stream",
     "SchemaRegistry",
     "latest_snapshot",
     "write_table",

@@ -78,8 +78,11 @@ def _nanos_timestamp_cols(path: str, token=None) -> list[str]:
 _TABLE_SCHEMA_CACHE: dict[tuple, StructType] = {}
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Testdata convention: ``{sf_dir}/{name}.parquet``."""
+def _read_table(
+    spark: SparkSession, sf_dir: str, name: str, stream: bool
+) -> DataFrame:
+    """The one timestamp and schema policy behind ``read_table`` and
+    ``read_table_stream``."""
     from pyspark.sql import functions as F
 
     path = f"{sf_dir}/{name}.parquet"
@@ -97,18 +100,29 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Schema METADATA cache (same class as _NANOS_COLS_CACHE above): the
-    # first read of a path pays Spark's footer schema inference; repeats
-    # pass the identical inferred schema explicitly, which skips the
-    # inference pass (~100 ms/call on the driver — a fixed per-query tax
-    # when a catalog sweep calls read_table hundreds of times). Pure
-    # driver-side metadata, session-independent, never touches data; the
-    # cache key is (path, freshness token), and the nanos conf above is
-    # set per-path BEFORE the first read so the cached schema always
+    # first read of a path pays Spark's footer schema inference (one Spark
+    # job); repeats pass the identical inferred schema explicitly, which
+    # skips the inference pass (~100 ms/call on the driver — a fixed
+    # per-query tax when a catalog sweep reads tables hundreds of times).
+    # Pure driver-side metadata, session-independent, never touches data;
+    # the cache key is (path, freshness token), and the nanos conf above
+    # is set per-path BEFORE the first read so the cached schema always
     # matches what inference would produce.
-    schema = _TABLE_SCHEMA_CACHE.get((path, token))
-    if schema is None:
+    key = (path, token)
+    schema = _TABLE_SCHEMA_CACHE.get(key)
+    if stream:
+        if schema is None:
+            schema = _TABLE_SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+        # the streaming file source wants a directory: watch sf_dir with
+        # a glob filter selecting just this table
+        df = (
+            spark.readStream.schema(schema)
+            .option("pathGlobFilter", f"{name}.parquet")
+            .parquet(sf_dir)
+        )
+    elif schema is None:
         df = spark.read.parquet(path)
-        _TABLE_SCHEMA_CACHE[(path, token)] = df.schema
+        _TABLE_SCHEMA_CACHE[key] = df.schema
     else:
         df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:
@@ -117,6 +131,19 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # nano-precision stamps would come back 1us off
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     return df
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Testdata convention: ``{sf_dir}/{name}.parquet``."""
+    return _read_table(spark, sf_dir, name, stream=False)
+
+
+def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``read_table``'s streaming twin: a file-source stream over
+    ``{sf_dir}/{name}.parquet`` with the same cached explicit schema and
+    the same nanos/NTZ timestamp handling, so streaming queries run on
+    foreign sessions too."""
+    return _read_table(spark, sf_dir, name, stream=True)
 
 
 TESTDATA_TABLES = (

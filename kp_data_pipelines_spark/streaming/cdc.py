@@ -51,9 +51,6 @@ ships only its genuinely-new bytes.
 
 from __future__ import annotations
 
-import hashlib
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -250,32 +247,15 @@ def cdc_ingest_stream(
     from kp_data_pipelines_spark.streaming.events import (
         run_available_now_foreach_batch,
     )
-
-    # run token: stable across restarts of the SAME checkpoint (replayed
-    # batch ids land on their original store partitions), fresh for a new
-    # ingest wave; random is safe for ephemeral checkpoints (no replay
-    # outlives the query)
-    run_token = (
-        hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:16]
-        if checkpoint_dir
-        else uuid.uuid4().hex[:16]
-    )
     from kp_data_pipelines_spark.streaming.state_io import AscendingIdGuard
 
-    guard = AscendingIdGuard(
-        None, f"{state_dir}__order", run_token, "cdc_ingest_stream"
-    )
+    guard = AscendingIdGuard(state_dir, checkpoint_dir, "cdc_ingest_stream")
 
     def ingest(batch: DataFrame, batch_id: int) -> DataFrame:
         if validate_order:
-            mm = batch.agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-            ).first()
-            guard.check_and_record(
-                batch.sparkSession, batch_id, mm["lo"], mm["hi"]
-            )
+            guard.check_batch(batch, batch_id)
         return _cdc_ingest_partial(
-            batch, state_dir, w, mask, run_token, batch_id
+            batch, state_dir, w, mask, guard.run_token, batch_id
         )
 
     if runner is None:

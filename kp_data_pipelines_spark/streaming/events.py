@@ -120,6 +120,32 @@ def run_available_now(
     return stream_df.sparkSession.table(name)
 
 
+def _batch_writer(out_dir: str, batch_fn, with_batch_id: bool):
+    """The foreachBatch result sink shared by both runners: each batch's
+    output is written to ``{out_dir}/batch={id}`` with overwrite, so a
+    replayed batch id replaces its own earlier attempt."""
+
+    def write(batch_df: DataFrame, batch_id: int) -> None:
+        out = (
+            batch_fn(batch_df, batch_id) if with_batch_id
+            else batch_fn(batch_df)
+        )
+        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+
+    return write
+
+
+def _read_batches(spark: SparkSession, out_dir: str, result_schema) -> DataFrame:
+    """Read every ``batch=N`` result dir back as one batch DataFrame."""
+    cols = spark.createDataFrame([], result_schema).columns
+    return (
+        spark.read.schema(result_schema)
+        .option("recursiveFileLookup", "true")  # flatten batch=N subdirs
+        .parquet(out_dir)
+        .select(*cols)
+    )
+
+
 def run_available_now_foreach_batch(
     stream_df: DataFrame,
     batch_fn,
@@ -151,16 +177,10 @@ def run_available_now_foreach_batch(
     if own_ckpt:
         checkpoint_dir = _ephemeral_dir("kp_stream_ckpt_")
     out_dir = _ephemeral_dir("kp_stream_out_")
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        out = (
-            batch_fn(batch_df, batch_id) if with_batch_id
-            else batch_fn(batch_df)
-        )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
-
     q = (
-        stream_df.writeStream.foreachBatch(handle)
+        stream_df.writeStream.foreachBatch(
+            _batch_writer(out_dir, batch_fn, with_batch_id)
+        )
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
@@ -169,14 +189,7 @@ def run_available_now_foreach_batch(
     q.awaitTermination()
     if own_ckpt:
         shutil.rmtree(checkpoint_dir, ignore_errors=True)
-    spark = stream_df.sparkSession
-    cols = spark.createDataFrame([], result_schema).columns
-    return (
-        spark.read.schema(result_schema)
-        .option("recursiveFileLookup", "true")  # flatten batch=N subdirs
-        .parquet(out_dir)
-        .select(*cols)
-    )
+    return _read_batches(stream_df.sparkSession, out_dir, result_schema)
 
 
 def rate_mapped_doc_stream(
@@ -266,6 +279,7 @@ def run_bounded_foreach_batch(
     if own_ckpt:
         checkpoint_dir = _ephemeral_dir("kp_stream_ckpt_")
     out_dir = _ephemeral_dir("kp_stream_out_")
+    write = _batch_writer(out_dir, batch_fn, with_batch_id)
     state = {"rows": 0, "idle": 0}
     done = threading.Event()
 
@@ -273,11 +287,7 @@ def run_bounded_foreach_batch(
         if done.is_set():
             return  # drained past the stop condition; don't re-ingest
         n = batch_df.count()
-        out = (
-            batch_fn(batch_df, batch_id) if with_batch_id
-            else batch_fn(batch_df)
-        )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
+        write(batch_df, batch_id)
         state["rows"] += n
         state["idle"] = state["idle"] + 1 if n == 0 else 0
         if state["rows"] >= total_rows or state["idle"] >= idle_batches:
@@ -318,14 +328,7 @@ def run_bounded_foreach_batch(
         raise
     if own_ckpt:
         shutil.rmtree(checkpoint_dir, ignore_errors=True)
-    spark = stream_df.sparkSession
-    cols = spark.createDataFrame([], result_schema).columns
-    return (
-        spark.read.schema(result_schema)
-        .option("recursiveFileLookup", "true")
-        .parquet(out_dir)
-        .select(*cols)
-    )
+    return _read_batches(stream_df.sparkSession, out_dir, result_schema)
 
 
 def ingest_snapshot_folder(

@@ -51,9 +51,6 @@ probe per new payload instead.
 
 from __future__ import annotations
 
-import hashlib
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -258,32 +255,19 @@ def media_ingest_stream(
     from kp_data_pipelines_spark.streaming.events import (
         run_available_now_foreach_batch,
     )
-
-    run_token = (
-        hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:16]
-        if checkpoint_dir
-        else uuid.uuid4().hex[:16]
-    )
     from kp_data_pipelines_spark.streaming.state_io import AscendingIdGuard
 
-    guard = AscendingIdGuard(
-        None, f"{state_dir}__order", run_token, "media_ingest_stream"
-    )
+    guard = AscendingIdGuard(state_dir, checkpoint_dir, "media_ingest_stream")
 
     def ingest(batch: DataFrame, batch_id: int) -> DataFrame:
         if validate_order:
-            mm = batch.agg(
-                F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-            ).first()
-            guard.check_and_record(
-                batch.sparkSession, batch_id, mm["lo"], mm["hi"]
-            )
+            guard.check_batch(batch, batch_id)
         return _media_ingest_partial(
             batch,
             state_dir,
             max_hamming,
             agree_blocks,
-            run_token,
+            guard.run_token,
             batch_id,
         )
 

@@ -138,7 +138,7 @@ class AscendingIdGuard:
     watermark and a violation raises loudly instead of producing a
     wrong ledger.
 
-    Watermarks persist as marker files (``<order_dir>/<run>_<batch>``,
+    Watermarks persist as marker files (``<state_dir>__order/<run>_<batch>``,
     atomic temp+rename, no Spark job) and reload on the guard's first
     check, so the guard survives restarts. Two scopes with different
     semantics:
@@ -152,12 +152,28 @@ class AscendingIdGuard:
       batch id would let batch 0 skip validation entirely (and let a
       lower max overwrite a prior run's higher one) — the round-9
       review finding this class exists to fix.
+
+    The guard also owns the stream's RUN TOKEN (``run_token``), which
+    keys both its own markers and the store's per-(run, batch)
+    partitions: derived from ``checkpoint_dir`` it is stable across
+    restarts of the SAME checkpoint (replayed batch ids land on their
+    original store partitions) and fresh for a new ingest wave; with no
+    checkpoint it is random, which is safe because no replay outlives
+    an ephemeral checkpoint.
     """
 
-    def __init__(self, spark_unused, order_dir: str, run_token: str,
-                 what: str) -> None:
-        self.order_dir = order_dir
-        self.run_token = run_token
+    def __init__(
+        self, state_dir: str, checkpoint_dir: str | None, what: str
+    ) -> None:
+        import hashlib
+        import uuid
+
+        self.order_dir = f"{state_dir}__order"
+        self.run_token = (
+            hashlib.sha256(checkpoint_dir.encode()).hexdigest()[:16]
+            if checkpoint_dir
+            else uuid.uuid4().hex[:16]
+        )
         self.what = what
         self.batch_hi: dict[int, int] = {}  # THIS run's batches
         self.floor_hi: int | None = None  # max over all OTHER runs
@@ -185,6 +201,15 @@ class AscendingIdGuard:
                     hi if self.floor_hi is None else max(self.floor_hi, hi)
                 )
         self._loaded = True
+
+    def check_batch(self, batch: DataFrame, batch_id: int) -> None:
+        """Check one trigger's doc_id range (one agg job) and record it."""
+        from pyspark.sql import functions as F
+
+        mm = batch.agg(
+            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        ).first()
+        self.check_and_record(batch.sparkSession, batch_id, mm["lo"], mm["hi"])
 
     def check_and_record(
         self, spark: SparkSession, batch_id: int, lo, hi

@@ -110,17 +110,6 @@ def doc_flags(docs: DataFrame, seed: int = 67) -> DataFrame:
     )
 
 
-def read_state_parquet(spark, state_dir: str, schema: str) -> DataFrame:
-    """Shared persistent-state read — see ``state_io.read_state_parquet``
-    (missing path = first batch; existing-path errors raise loudly;
-    missing-path detection via the Hadoop FileSystem probe)."""
-    from kp_data_pipelines_spark.streaming.state_io import (
-        read_state_parquet as _read,
-    )
-
-    return _read(spark, state_dir, schema)
-
-
 def _ledger_partial(
     flags: DataFrame, state_dir: str
 ) -> DataFrame:
@@ -128,6 +117,8 @@ def _ledger_partial(
     fingerprint table at ``state_dir`` (plus within-batch min-doc_id
     keeper), append the batch's NEW fingerprints, and aggregate the
     mergeable per-(lang, split) counters."""
+    from kp_data_pipelines_spark.streaming.state_io import read_state_parquet
+
     spark = flags.sparkSession
     flags = flags.localCheckpoint(eager=True)  # two consumers below
     seen = read_state_parquet(spark, state_dir, "f string").select(

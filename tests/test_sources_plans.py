@@ -16,16 +16,59 @@ from pyspark.sql.types import (
 )
 
 from kp_data_pipelines_spark.plans import Pipeline
-from kp_data_pipelines_spark.sources import SchemaRegistry, latest_snapshot, read_table
+from kp_data_pipelines_spark.sources import (
+    SchemaRegistry,
+    latest_snapshot,
+    read_table,
+    read_table_stream,
+)
 from kp_data_pipelines_spark.sources.registry import SchemaDriftError
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_read_table_nanos_timestamps(spark):
+def test_read_table_nanos_timestamps(spark, tmp_path):
     ev = read_table(spark, SF_DIR, "events")
     assert dict(ev.dtypes)["ts"] == "timestamp"
     assert ev.count() > 0
+
+    # The testdata tables are microsecond precision, so write a
+    # nanosecond one. 2024-era nanos lie past double's 2^53 exact range;
+    # the sub-microsecond digits must truncate, in batch and in stream.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from kp_data_pipelines_spark.streaming.events import run_available_now
+
+    nanos = [
+        1_704_067_200_123_456_789,
+        1_717_200_000_000_000_999,
+        1_720_000_000_999_999_001,
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2, 3], pa.int64()),
+                "ts": pa.array(nanos, pa.timestamp("ns")),
+            }
+        ),
+        tmp_path / "events.parquet",
+    )
+    assert str(pq.read_schema(tmp_path / "events.parquet").field("ts").type) == (
+        "timestamp[ns]"
+    )
+    want = [(i + 1, n // 1000) for i, n in enumerate(nanos)]
+    try:
+        batch = read_table(spark, str(tmp_path), "events")
+        stream = run_available_now(
+            read_table_stream(spark, str(tmp_path), "events")
+        )
+        for df in (batch, stream):
+            assert dict(df.dtypes)["ts"] == "timestamp"
+            got = df.select("event_id", F.unix_micros("ts").alias("us"))
+            assert sorted(tuple(r) for r in got.collect()) == want
+    finally:
+        spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
 
 
 def test_registry_conform_and_drift(spark):
