@@ -30,6 +30,12 @@ from kp_data_pipelines_spark.operators.aggregates import (
     exact_sum,
     pivot_sum,
 )
+from kp_data_pipelines_spark.operators.bpe import (
+    BPE_ADAPTIVE_ALPHA_DEN,
+    BPE_ADAPTIVE_ROUNDS,
+    BPE_ADAPTIVE_TOPK,
+    BPE_CHUNK_WORDS,
+)
 from kp_data_pipelines_spark.operators.dedup import (
     dedup_keep_first,
     duplicate_rows,
@@ -6341,25 +6347,17 @@ def q157_portable_hll(spark: SparkSession, sf: str) -> DataFrame:
     reproduces registers AND estimate bit-for-bit. true_distinct sits
     alongside for the accuracy story (raw HLL, no small-range
     correction: ln() is libm-dependent)."""
-    from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
+    from kp_data_pipelines_spark.operators import sketches
 
-    (a1, b1), (a2, b2) = _hash_params(2, 23)
     ev = read_table(spark, sf, "events")
     week = F.date_format(F.date_trunc("week", F.col("ts")), "yyyy-MM-dd")
-    uid_m = F.pmod(F.col("user_id"), F.lit(_MERSENNE))
-    hv = (
-        (F.lit(a1) * uid_m + F.lit(b1)) % _MERSENNE
-    ) * F.lit(1 << 31) + ((F.lit(a2) * uid_m + F.lit(b2)) % _MERSENNE)
-    rest = F.shiftrightunsigned(hv, 6)
-    rank = F.when(rest > 0, F.lit(57) - F.length(F.bin(rest))).otherwise(
-        F.lit(57)
-    )
+    hv = sketches.hll_hash62(F.col("user_id"), seed=23)
     pow_tbl = F.array(*[F.lit(2.0 ** -i) for i in range(58)])
     regs = (
         ev.select(
             week.alias("week"),
-            hv.bitwiseAND(F.lit(63)).alias("reg"),
-            rank.alias("rank"),
+            sketches.hll_reg(hv, 64).alias("reg"),
+            sketches.hll_rank(hv, 64).alias("rank"),
         )
         .groupBy("week", "reg")
         .agg(F.max("rank").alias("mr"))
@@ -10828,24 +10826,16 @@ def q214_hll_incremental_merge(spark: SparkSession, sf: str) -> DataFrame:
     column are oracle-hashed; the same MAX-merge shape maintains the
     KMV (q181: bottom-k of pooled bottom-ks) and Count-Min (q160:
     cellwise SUM) states."""
-    from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
+    from kp_data_pipelines_spark.operators import sketches
 
-    (a1, b1), (a2, b2) = _hash_params(2, 23)
     ev = read_table(spark, sf, "events")
-    uid_m = F.pmod(F.col("user_id"), F.lit(_MERSENNE))
-    hv = (
-        (F.lit(a1) * uid_m + F.lit(b1)) % _MERSENNE
-    ) * F.lit(1 << 31) + ((F.lit(a2) * uid_m + F.lit(b2)) % _MERSENNE)
-    rest = F.shiftrightunsigned(hv, 6)
-    rank = F.when(rest > 0, F.lit(57) - F.length(F.bin(rest))).otherwise(
-        F.lit(57)
-    )
+    hv = sketches.hll_hash62(F.col("user_id"), seed=23)
     r = ev.select(
         F.when(F.expr("unix_micros(ts) div 86400000000") < 19738, 0)
         .otherwise(1)
         .alias("part"),
-        hv.bitwiseAND(F.lit(63)).alias("reg"),
-        rank.alias("rank"),
+        sketches.hll_reg(hv, 64).alias("reg"),
+        sketches.hll_rank(hv, 64).alias("rank"),
     )
     partials = r.groupBy("part", "reg").agg(
         F.max("rank").cast("bigint").alias("mr")
@@ -11094,23 +11084,15 @@ def q217_sliding_distinct_hll(spark: SparkSession, sf: str) -> DataFrame:
     mergeable-sketch win. Registers, counts, and the folded estimate
     all oracle-hash (q157 machinery); window ends before the 7th day
     are dropped (partial windows would not be comparable)."""
-    from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
+    from kp_data_pipelines_spark.operators import sketches
 
     win = 7
-    (a1, b1), (a2, b2) = _hash_params(2, 23)
     ev = read_table(spark, sf, "events")
-    uid_m = F.pmod(F.col("user_id"), F.lit(_MERSENNE))
-    hv = (
-        (F.lit(a1) * uid_m + F.lit(b1)) % _MERSENNE
-    ) * F.lit(1 << 31) + ((F.lit(a2) * uid_m + F.lit(b2)) % _MERSENNE)
-    rest = F.shiftrightunsigned(hv, 6)
-    rank = F.when(rest > 0, F.lit(57) - F.length(F.bin(rest))).otherwise(
-        F.lit(57)
-    )
+    hv = sketches.hll_hash62(F.col("user_id"), seed=23)
     h = ev.select(
         F.expr("unix_micros(ts) div 86400000000").cast("bigint").alias("day"),
-        hv.bitwiseAND(F.lit(63)).alias("reg"),
-        rank.alias("rank"),
+        sketches.hll_reg(hv, 64).alias("reg"),
+        sketches.hll_rank(hv, 64).alias("rank"),
     )
     daily = h.groupBy("day", "reg").agg(
         F.max("rank").cast("bigint").alias("mr")
@@ -12260,25 +12242,17 @@ def q228_sketch_set_algebra(spark: SparkSession, sf: str) -> DataFrame:
     The known caveat — inclusion-exclusion error grows when |A∩B| <<
     |A∪B| — is exactly what the side-by-side exact columns let you
     calibrate."""
-    from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
+    from kp_data_pipelines_spark.operators import sketches
 
-    (a1, b1), (a2, b2) = _hash_params(2, 23)
     ev = read_table(spark, sf, "events")
-    uid_m = F.pmod(F.col("user_id"), F.lit(_MERSENNE))
-    hv = (
-        (F.lit(a1) * uid_m + F.lit(b1)) % _MERSENNE
-    ) * F.lit(1 << 31) + ((F.lit(a2) * uid_m + F.lit(b2)) % _MERSENNE)
-    rest = F.shiftrightunsigned(hv, 6)
-    rank = F.when(rest > 0, F.lit(57) - F.length(F.bin(rest))).otherwise(
-        F.lit(57)
-    )
+    hv = sketches.hll_hash62(F.col("user_id"), seed=23)
     h = ev.select(
         F.when(F.expr("unix_micros(ts) div 86400000000") < 19738, 0)
         .otherwise(1)
         .alias("half"),
         "user_id",
-        hv.bitwiseAND(F.lit(63)).alias("reg"),
-        rank.alias("rank"),
+        sketches.hll_reg(hv, 64).alias("reg"),
+        sketches.hll_rank(hv, 64).alias("rank"),
     )
     regs = h.groupBy("half", "reg").agg(
         F.max("rank").cast("bigint").alias("mr")
@@ -18410,6 +18384,25 @@ def _media_table(spark: SparkSession, sf: str):
     )
 
 
+def _media_fp(spark: SparkSession, sf: str) -> DataFrame:
+    """``(media_id, phash)`` dHash fingerprints of ``_media_table``
+    under a lazy checkpoint: the frame feeds BOTH sides of the
+    ``hamming_pairs`` candidate self-join, so the pin makes the dHash
+    Arrow kernel run once. The projection is NARROWED before the pin:
+    pinning with the raw content bytes still attached materializes the
+    whole payload column (measured +1.6 s on q309 before the select was
+    added)."""
+    from kp_data_pipelines_spark.operators.multimodal import (
+        with_media_dhash,
+    )
+
+    return (
+        with_media_dhash(_media_table(spark, sf), "content", "phash")
+        .select("media_id", "phash")
+        .localCheckpoint(eager=False)
+    )
+
+
 @register("q301_media_phash", oracles.media_phash_sql())
 def q301_media_phash(spark: SparkSession, sf: str) -> DataFrame:
     """Perceptual fingerprint (dHash) of every media payload — the
@@ -18453,21 +18446,9 @@ def q302_media_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     all-pairs anywhere. The DuckDB twin generates candidates with the
     simpler single-chunk banding — BOTH schemes are exact, so the
     verified pair sets are identical."""
-    from kp_data_pipelines_spark.operators.multimodal import (
-        with_media_dhash,
-    )
     from kp_data_pipelines_spark.operators.similarity import hamming_pairs
 
-    # lazy checkpoint: fp feeds BOTH sides of the hamming_pairs
-    # candidate self-join — pin so the dHash Arrow kernel runs once.
-    # NARROW the projection first: pinning with the raw content
-    # bytes still attached materializes the whole payload column
-    # (measured +1.6 s on q309 before the select was added)
-    fp = (
-        with_media_dhash(_media_table(spark, sf), "content", "phash")
-        .select("media_id", "phash")
-        .localCheckpoint(eager=False)
-    )
+    fp = _media_fp(spark, sf)
     return hamming_pairs(
         fp, "media_id", "phash", max_hamming=4, agree_blocks=2
     ).orderBy("id_a", "id_b")
@@ -18492,24 +18473,12 @@ def q303_cross_modal_alignment(spark: SparkSession, sf: str) -> DataFrame:
     banded chunk equi-join candidates, two keyed joins to attach
     endpoint vectors, one <= 9-row aggregate; mean cosine DECIMAL-staged
     (q296 pattern)."""
-    from kp_data_pipelines_spark.operators.multimodal import (
-        with_media_dhash,
-    )
     from kp_data_pipelines_spark.operators.similarity import (
         _dot,
         hamming_pairs,
     )
 
-    # lazy checkpoint: fp feeds BOTH sides of the hamming_pairs
-    # candidate self-join — pin so the dHash Arrow kernel runs once.
-    # NARROW the projection first: pinning with the raw content
-    # bytes still attached materializes the whole payload column
-    # (measured +1.6 s on q309 before the select was added)
-    fp = (
-        with_media_dhash(_media_table(spark, sf), "content", "phash")
-        .select("media_id", "phash")
-        .localCheckpoint(eager=False)
-    )
+    fp = _media_fp(spark, sf)
     pairs = hamming_pairs(
         fp, "media_id", "phash", max_hamming=8, agree_blocks=2
     )
@@ -18559,7 +18528,12 @@ def q303_cross_modal_alignment(spark: SparkSession, sf: str) -> DataFrame:
 
 
 
-@register("q304_bpe_trainer", oracles.bpe_trainer_sql(rounds=6))
+@register(
+    "q304_bpe_trainer",
+    "SELECT * EXCLUDE (batch_rank) FROM ("
+    + oracles.bpe_trainer_sql(rounds=6, batch_cap=1, topk=1)
+    + ") ORDER BY round",
+)
 def q304_bpe_trainer(spark: SparkSession, sf: str) -> DataFrame:
     """ITERATIVE BPE trainer — q291's merge-pair counting closed into a
     working training loop: k=6 rounds of (count adjacent symbol pairs
@@ -18576,9 +18550,10 @@ def q304_bpe_trainer(spark: SparkSession, sf: str) -> DataFrame:
     round's symbol total follows) and one JVM-fold re-symbolization.
     Scale shape: every round's work is bounded by VOCABULARY (distinct
     words), never corpus tokens (q291's Heaps-sublinear argument, k
-    times); driver traffic is k two-row collects. The DuckDB twin
-    unrolls the same k rounds over MATERIALIZED vocab CTEs (q143's
-    unrolled-rounds pattern) and replays the identical fold."""
+    times); driver traffic is k two-row collects. The DuckDB twin is
+    q315's (``oracles.bpe_trainer_sql``) with the same one-pair batch
+    and pool: k unrolled rounds of the shared round template over
+    MATERIALIZED vocab CTEs (q143's unrolled-rounds pattern)."""
     from kp_data_pipelines_spark.operators.bpe import train_bpe_batched
 
     docs = read_table(spark, sf, "documents").select("text")
@@ -18887,21 +18862,9 @@ def q309_media_dedup_ledger(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.graph import (
         connected_components,
     )
-    from kp_data_pipelines_spark.operators.multimodal import (
-        with_media_dhash,
-    )
     from kp_data_pipelines_spark.operators.similarity import hamming_pairs
 
-    # lazy checkpoint: fp feeds BOTH sides of the hamming_pairs
-    # candidate self-join — pin so the dHash Arrow kernel runs once.
-    # NARROW the projection first: pinning with the raw content
-    # bytes still attached materializes the whole payload column
-    # (measured +1.6 s on q309 before the select was added)
-    fp = (
-        with_media_dhash(_media_table(spark, sf), "content", "phash")
-        .select("media_id", "phash")
-        .localCheckpoint(eager=False)
-    )
+    fp = _media_fp(spark, sf)
     pairs = hamming_pairs(
         fp, "media_id", "phash", max_hamming=4, agree_blocks=2
     ).select("id_a", "id_b")
@@ -18983,7 +18946,10 @@ def q310_streaming_media_ingest(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register("q311_bpe_tokenize_corpus", oracles.bpe_tokenize_sql(rounds=6))
+@register(
+    "q311_bpe_tokenize_corpus",
+    oracles.bpe_ledger_sql(rounds=6, batch_cap=1, topk=1),
+)
 def q311_bpe_tokenize_corpus(spark: SparkSession, sf: str) -> DataFrame:
     """The q304-trained tokenizer APPLIED at corpus scale — the
     deployment step that closes the trainer loop: run the same k=6
@@ -19000,9 +18966,10 @@ def q311_bpe_tokenize_corpus(spark: SparkSession, sf: str) -> DataFrame:
     the fold re-symbolization runs once per DISTINCT word
     (Heaps-sublinear) and the corpus only pays two keyed word aggs and
     one word equi-join; driver traffic is k bounded two-row collects
-    (plan_audit's sanctioned shape). The DuckDB twin replays the
-    unrolled rounds with the word carried through (q304's chain) and
-    joins the same ledger."""
+    (plan_audit's sanctioned shape). The DuckDB twin is q318's
+    (``oracles.bpe_ledger_sql``) with the same one-pair batch and pool:
+    the unrolled rounds with the word carried through, then the same
+    ledger."""
     from kp_data_pipelines_spark.operators.bpe import (
         tokenize_corpus_batched,
     )
@@ -19192,21 +19159,9 @@ def q314_media_datasheet(spark: SparkSession, sf: str) -> DataFrame:
     neardup_media by construction (each layer is a coarser identity),
     and the GAPS between them are the payloads only the finer layer
     would keep."""
-    from kp_data_pipelines_spark.operators.multimodal import (
-        with_media_dhash,
-    )
     from kp_data_pipelines_spark.operators.similarity import hamming_pairs
 
-    # lazy checkpoint: fp feeds BOTH sides of the hamming_pairs
-    # candidate self-join — pin so the dHash Arrow kernel runs once.
-    # NARROW the projection first: pinning with the raw content
-    # bytes still attached materializes the whole payload column
-    # (measured +1.6 s on q309 before the select was added)
-    fp = (
-        with_media_dhash(_media_table(spark, sf), "content", "phash")
-        .select("media_id", "phash")
-        .localCheckpoint(eager=False)
-    )
+    fp = _media_fp(spark, sf)
     pairs = hamming_pairs(
         fp, "media_id", "phash", max_hamming=4, agree_blocks=2
     )
@@ -19252,7 +19207,7 @@ def q314_media_datasheet(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "q315_bpe_batched_trainer", oracles.bpe_batched_trainer_sql()
+    "q315_bpe_batched_trainer", oracles.bpe_trainer_sql()
 )
 def q315_bpe_batched_trainer(spark: SparkSession, sf: str) -> DataFrame:
     """BATCHED BPE training at production merge counts — q304's trainer
@@ -19271,9 +19226,9 @@ def q315_bpe_batched_trainer(spark: SparkSession, sf: str) -> DataFrame:
     the merge TABLE (round, batch_rank, pair) plus the post-round
     corpus-symbol total and fertility — the "train k merges, watch
     fertility fall" curve at 13x the merge throughput. The DuckDB twin
-    replays the selection as a recursive CTE over the same ranked rows
-    and the batch application as the identical list_reduce fold
-    (``oracles.bpe_batched_trainer_sql``). The fold is
+    (``oracles.bpe_trainer_sql``) replays the selection as a recursive
+    CTE over the same ranked rows and the batch application as the
+    identical list_reduce fold (``oracles._bpe_round_ctes``). The fold is
     ``bpe.bpe_apply_merges_expr``, the one apply step of the shared
     merge loop (``bpe._merge_rounds``)."""
     from kp_data_pipelines_spark.operators.bpe import train_bpe_batched
@@ -19495,7 +19450,7 @@ def q317_dense_landmark_retrieval(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "q318_bpe_tokenize_batched", oracles.bpe_tokenize_batched_sql()
+    "q318_bpe_tokenize_batched", oracles.bpe_ledger_sql()
 )
 def q318_bpe_tokenize_batched(spark: SparkSession, sf: str) -> DataFrame:
     """q311's corpus tokenization ledger under the BATCHED trainer's
@@ -19512,7 +19467,7 @@ def q318_bpe_tokenize_batched(spark: SparkSession, sf: str) -> DataFrame:
     but ONE job per round — without per-round totals each round's lazy
     checkpoint materializes under the next round's ranked job. The
     DuckDB twin replays the recursive-CTE selection and the batch fold
-    with the word carried through (oracles.bpe_tokenize_batched_sql)."""
+    with the word carried through (oracles.bpe_ledger_sql)."""
     from kp_data_pipelines_spark.operators.bpe import (
         tokenize_corpus_batched,
     )
@@ -19522,7 +19477,7 @@ def q318_bpe_tokenize_batched(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "q319_bpe_encode_holdout", oracles.bpe_encode_holdout_sql()
+    "q319_bpe_encode_holdout", oracles.bpe_ledger_sql(holdout=True)
 )
 def q319_bpe_encode_holdout(spark: SparkSession, sf: str) -> DataFrame:
     """The ENCODE side of the tokenizer — the deployment path q315/q318
@@ -19541,7 +19496,7 @@ def q319_bpe_encode_holdout(spark: SparkSession, sf: str) -> DataFrame:
     is a driver artifact (~R x 12 pairs) and encode work is holdout-
     vocabulary-bounded, never corpus-bounded. The DuckDB twin replays
     training on the even half and the per-round folds on the holdout
-    vocab (oracles.bpe_encode_holdout_sql)."""
+    vocab (``oracles.bpe_ledger_sql(holdout=True)``)."""
     from kp_data_pipelines_spark.operators.bpe import (
         _tokenize_ledger,
         encode_with_batches,
@@ -19619,7 +19574,13 @@ def q320_decoded_media_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "q321_bpe_adaptive_trainer", oracles.bpe_adaptive_trainer_sql()
+    "q321_bpe_adaptive_trainer",
+    oracles.bpe_trainer_sql(
+        rounds=BPE_ADAPTIVE_ROUNDS,
+        topk=BPE_ADAPTIVE_TOPK,
+        alpha_den=BPE_ADAPTIVE_ALPHA_DEN,
+        w=BPE_CHUNK_WORDS,
+    ),
 )
 def q321_bpe_adaptive_trainer(spark: SparkSession, sf: str) -> DataFrame:
     """ADAPTIVE batched BPE at >=512 merges — the round-9 verdict's #1
@@ -19651,8 +19612,9 @@ def q321_bpe_adaptive_trainer(spark: SparkSession, sf: str) -> DataFrame:
     cs = total_pairs + total_units identity. Trains 554/574/591 merges
     at sf0.001/0.01/0.1 — every SF >= 512. The DuckDB twin replays
     selection as a recursive CTE carrying (used, round max) and the
-    fold with per-round map probes (``oracles.bpe_adaptive_trainer_
-    sql``); the fold is q315's ``bpe_apply_merges_expr``.
+    fold with per-round map probes — q315's ``oracles.bpe_trainer_sql``
+    with the count-band pick and chunk units; the fold is q315's
+    ``bpe_apply_merges_expr``.
     """
     from kp_data_pipelines_spark.operators.bpe import train_bpe_adaptive
 
@@ -19904,7 +19866,13 @@ def q324_df_cap_recall_sweep(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "q325_bpe_adaptive_tokenize", oracles.bpe_tokenize_adaptive_sql()
+    "q325_bpe_adaptive_tokenize",
+    oracles.bpe_ledger_sql(
+        rounds=BPE_ADAPTIVE_ROUNDS,
+        topk=BPE_ADAPTIVE_TOPK,
+        alpha_den=BPE_ADAPTIVE_ALPHA_DEN,
+        w=BPE_CHUNK_WORDS,
+    ),
 )
 def q325_bpe_adaptive_tokenize(spark: SparkSession, sf: str) -> DataFrame:
     """q321's >=512 adaptive merges APPLIED at corpus scale — the
@@ -19922,8 +19890,9 @@ def q325_bpe_adaptive_tokenize(spark: SparkSession, sf: str) -> DataFrame:
     keyed chunk aggregates + one chunk equi-join at corpus scale;
     Heaps-sublinear chunk vocab per SCALE.md §20), one ranked job per
     round (``bpe.tokenize_corpus_adaptive``). The DuckDB twin carries
-    the chunk through the shared adaptive round CTEs
-    (``oracles._adaptive_round_ctes``)."""
+    the chunk through the shared round template — q318's
+    ``oracles.bpe_ledger_sql`` with the count-band pick and chunk
+    units."""
     from kp_data_pipelines_spark.operators.bpe import (
         tokenize_corpus_adaptive,
     )
@@ -20023,7 +19992,7 @@ def q326_derived_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "q327_bpe_artifact_deploy", oracles.bpe_encode_holdout_sql()
+    "q327_bpe_artifact_deploy", oracles.bpe_ledger_sql(holdout=True)
 )
 def q327_bpe_artifact_deploy(spark: SparkSession, sf: str) -> DataFrame:
     """The tokenizer DEPLOYMENT path end-to-end under the oracle — the
@@ -20587,7 +20556,12 @@ def q330_wav_decoded_constellation(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "q331_bpe_deep_trainer",
-    oracles.bpe_adaptive_trainer_sql(rounds=35),
+    oracles.bpe_trainer_sql(
+        rounds=35,
+        topk=BPE_ADAPTIVE_TOPK,
+        alpha_den=BPE_ADAPTIVE_ALPHA_DEN,
+        w=BPE_CHUNK_WORDS,
+    ),
 )
 def q331_bpe_deep_trainer(spark: SparkSession, sf: str) -> DataFrame:
     """The adaptive BPE trainer in the >=1024-merge regime, ORACLE-

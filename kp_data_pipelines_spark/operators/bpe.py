@@ -33,9 +33,9 @@ Two pinned implementations of the fold:
 - ``bpe_apply_merges_expr`` — the interpreted JVM ``aggregate`` fold
   with literal lookup maps; the training loop (``_merge_rounds``)
   applies every batch with it;
-- the DuckDB oracle's ``list_reduce`` fold with ``list_position``
-  lookups over the per-round selection arrays
-  (``oracles.bpe_batched_trainer_sql``).
+- the DuckDB oracle's ``list_reduce`` fold with per-round map probes,
+  the one fold of the round template every BPE twin shares
+  (``oracles._bpe_round_ctes``).
 ENCODE (``bpe_encode_all_kernel``) runs the same fold for every trained
 round in one Arrow pass; test_bpe_apply_kernel_matches_expr pins it to
 the JVM fold, so holdout encoding tokenizes exactly as training did.
@@ -68,8 +68,8 @@ from pyspark.sql import functions as F
 # - BPE_BATCH_CAP = 12: on English-like text the top-ranked pairs share
 #   common symbols (vowels, "t", "s"), so greedy disjoint selection from
 #   a 64-pair pool saturates around 8-12 picks; capping at 12 keeps the
-#   per-round lookup maps small enough that the fold's per-element probe
-#   is O(1) dict / O(12) list_position on every engine.
+#   per-round lookup maps small (the fold probes them once per
+#   element on both engines).
 # - BPE_TOPK = 64: the ranked candidate pool collected per round (a
 #   bounded limit(64) driver collect, the plan_audit-sanctioned shape);
 #   must be comfortably > BATCH_CAP so symbol conflicts never starve a

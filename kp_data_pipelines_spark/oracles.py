@@ -25,6 +25,11 @@ TESTDATA.md).
 
 from __future__ import annotations
 
+from kp_data_pipelines_spark.operators.bpe import (
+    BPE_BATCH_CAP,
+    BPE_ROUNDS,
+    BPE_TOPK,
+)
 from kp_data_pipelines_spark.operators.similarity import (
     GRAM_MAX_PLANES,
     GRAM_TARGET_BUCKET,
@@ -3952,138 +3957,98 @@ def media_embedding_alignment_sql(max_hamming: int = 8) -> str:
     """
 
 
-def bpe_trainer_sql(rounds: int = 6) -> str:
-    """Twin of q304: the ITERATIVE BPE trainer — q291's single merge
-    iteration unrolled to ``rounds`` rounds (the q143 unrolled-rounds
-    twin pattern). Each round: adjacent symbol-pair counts over the
-    MATERIALIZED re-symbolized vocab, deterministic argmax (count DESC,
-    pair ASC), then the merge applied with a left fold (greedy
-    non-overlapping, identical to the Spark aggregate fold — a merged
-    symbol is a NEW symbol and can't re-merge with its neighbor in the
-    same round). Symbols ride as VARCHAR[] singletons inside the fold
-    so the accumulator and element types agree. Per-round output:
-    winning pair, its count, the corpus symbol total after the merge,
-    and fertility (symbols per corpus word); round 0 is the
-    one-symbol-per-char baseline."""
-    parts = [
-        f"""w0 AS MATERIALIZED (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-      FROM (SELECT unnest(string_split({_NORM_SQL}, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' GROUP BY word
-    ),
-    tw AS (SELECT CAST(SUM(freq) AS BIGINT) AS n FROM w0),
-    s0 AS MATERIALIZED (
-      SELECT freq,
-             list_transform(range(1, length(word) + 1),
-                            i -> substr(word, i, 1)) AS syms
-      FROM w0
-    ),
-    tot0 AS (SELECT CAST(SUM(freq * len(syms)) AS BIGINT) AS cs FROM s0)"""
-    ]
-    sels = [
-        "SELECT CAST(0 AS BIGINT) AS round, '' AS merge_a, '' AS merge_b, "
-        "CAST(0 AS BIGINT) AS pair_count, tot0.cs AS corpus_symbols, "
-        "CAST(tot0.cs AS DOUBLE) / CAST(tw.n AS DOUBLE) AS fertility "
-        "FROM tot0 CROSS JOIN tw"
-    ]
+def _bpe_units_sql(w: int, where: str = "") -> str:
+    """``(source, unit)`` rows, one per BPE unit occurrence in the
+    normalized corpus (``bpe._unit_rows``): whitespace words when
+    ``w == 1``, else consecutive ``w``-word CHUNKS re-joined with single
+    spaces (space is then an ordinary symbol; the trailing chunk may be
+    shorter) — byte-identical to the Spark ``slice``/``array_join``
+    projection. ``where`` filters documents (the holdout's
+    ``doc_id % 2`` halves)."""
+    units = "parts"
+    if w > 1:
+        units = (
+            f"list_transform(range(0, CAST(ceil(len(parts) / {w}.0) AS INT)),"
+            f" g -> array_to_string(parts[g * {w} + 1 : g * {w} + {w}], ' '))"
+        )
+    return f"""SELECT source, unit
+      FROM (SELECT source, unnest({units}) AS unit
+            FROM (SELECT source, string_split({_NORM_SQL}, ' ') AS parts
+                  FROM documents {where}))
+      WHERE unit <> ''"""
+
+
+# one symbol per character, spaces included (bpe._CHAR_SYMS)
+_BPE_CHAR_SYMS = (
+    "list_transform(range(1, length(unit) + 1), i -> substr(unit, i, 1))"
+)
+
+
+def _bpe_round_ctes(
+    rounds: int,
+    topk: int,
+    batch_cap: int | None,
+    alpha_den: int | None,
+    folds: dict[str, str],
+) -> list[str]:
+    """THE merge-round template of every BPE twin — the DuckDB replay
+    of ``bpe._merge_rounds``. Round ``r`` reads ``s{r-1}(…, freq,
+    syms)`` and emits:
+
+    - ``rk{r}``: the ranked pool — freq-weighted adjacent-pair counts,
+      ``row_number`` over (count DESC, a, b), ``rn <= topk``;
+    - ``g{r}``: greedy DISJOINT selection (``bpe.select_merge_batch``
+      / ``select_merge_batch_adaptive``) as a recursive walk down the
+      ranked rows carrying the used-symbol list, ``nsel`` (pairs taken
+      so far) and ``mx`` (the round's best count). A pair is taken iff
+      neither symbol was used by a higher-ranked selected pair. The
+      selection policy is the one predicate ``pick``: the fixed cap
+      ``nsel < batch_cap`` or the count band ``alpha_den * cnt >= mx``
+      (integer guard, exact on both engines). The walk is seeded with
+      the top pair, which every pick takes (nothing is used yet, and
+      its count is ``mx``), so a one-pair pool needs no walk. Both
+      picks are monotone along the ranking (``nsel`` only grows,
+      ``cnt`` only falls), so the walk stops at the first row ``pick``
+      rejects;
+    - ``sel{r}``: the batch (``batch_rank`` = ``nsel`` at the pick),
+      and ``mp{r}``: the batch as per-round MAPs (left symbol -> right
+      symbol / merged symbol);
+    - one fold per entry of ``folds`` (frame prefix -> carried
+      columns): ``{f}{r}`` = ``{f}{r-1}`` with the whole batch applied
+      in ONE ``list_reduce`` left fold — the fold of
+      ``bpe.bpe_apply_merges_expr``. Trainers fold ``s``; the holdout
+      encode also folds its own vocab ``h`` with the same maps.
+
+    Fold semantics: at each element, if the accumulator's last symbol
+    is a selected pair's left symbol and the element is its right
+    symbol, they fuse. Selected pairs are disjoint, so left symbols are
+    unique map keys; a merged OUTPUT symbol may still equal another
+    pair's left symbol, so within-pass chaining ("t","h","e" -> "the"
+    under {("th","e"), ("t","h")}) happens exactly as in the Spark
+    fold. A map probe (missing key -> empty list -> NULL -> no merge)
+    keeps the per-element cost flat where a scan of the selection
+    arrays would grow with the batch (adaptive batches run ~35 pairs).
+    An empty pool leaves the frame unchanged, so a vocab exhausted
+    before the last round passes through (the Spark loop stops)."""
+    if alpha_den is None:
+        pick = f"nsel < {batch_cap}"
+    else:
+        pick = f"{alpha_den} * k.cnt >= mx"
+    fresh = "NOT list_contains(used, k.a) AND NOT list_contains(used, k.b)"
+    parts = []
     for r in range(1, rounds + 1):
         p = r - 1
-        parts.append(
-            f"""pr{r} AS (
-      SELECT pr.a AS a, pr.b AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-      FROM (SELECT freq,
-                   unnest(list_transform(range(1, len(syms)),
-                     i -> struct_pack(a := syms[i], b := syms[i + 1]))) AS pr
-            FROM s{p} WHERE len(syms) >= 2)
-      GROUP BY pr.a, pr.b
-    ),
-    best{r} AS MATERIALIZED (
-      SELECT a, b, cnt FROM pr{r} ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s{r} AS MATERIALIZED (
-      SELECT freq,
-             list_reduce(
-               list_prepend(CAST([] AS VARCHAR[]),
-                            list_transform(syms, x -> [x])),
-               (acc, xl) -> CASE WHEN len(acc) > 0 AND acc[-1] = b{r}.a
-                                      AND xl[1] = b{r}.b
-                                 THEN acc[1:len(acc) - 1]
-                                      || [b{r}.a || b{r}.b]
-                                 ELSE acc || xl END) AS syms
-      FROM s{p} CROSS JOIN best{r} b{r}
-    ),
-    tot{r} AS (SELECT CAST(SUM(freq * len(syms)) AS BIGINT) AS cs
-               FROM s{r})"""
-        )
-        sels.append(
-            f"SELECT CAST({r} AS BIGINT) AS round, b.a AS merge_a, "
-            f"b.b AS merge_b, b.cnt AS pair_count, t.cs AS corpus_symbols, "
-            f"CAST(t.cs AS DOUBLE) / CAST(tw.n AS DOUBLE) AS fertility "
-            f"FROM best{r} b CROSS JOIN tot{r} t CROSS JOIN tw"
-        )
-    ctes = ",\n    ".join(parts)
-    union = " UNION ALL ".join(sels)
-    return f"""
-    WITH {ctes}
-    SELECT * FROM ({union}) u ORDER BY round
-    """
-
-
-def bpe_batched_trainer_sql(
-    rounds: int | None = None,
-    batch_cap: int | None = None,
-    topk: int | None = None,
-) -> str:
-    """Twin of q315: the BATCHED BPE trainer (``operators.bpe``) — per
-    round, rank adjacent-pair counts over the materialized vocab
-    (count DESC, a, b), replay the greedy disjoint-merge selection
-    (``bpe.select_merge_batch``) as a RECURSIVE CTE walking the ranked
-    rows rn = 1..topk carrying the used-symbol list (``list_position``
-    returns 0 on absence in DuckDB), then apply the whole batch in ONE
-    ``list_reduce`` fold: the per-round selection's (a, b, merged)
-    arrays ride in via a cross join and each element probes them with
-    ``list_position`` — the exact fold of ``bpe_apply_merges_expr``
-    including within-pass chain merges. Defaults come from
-    ``operators.bpe`` so the two engines can never drift."""
-    from kp_data_pipelines_spark.operators.bpe import (
-        BPE_BATCH_CAP,
-        BPE_ROUNDS,
-        BPE_TOPK,
-    )
-
-    rounds = BPE_ROUNDS if rounds is None else rounds
-    batch_cap = BPE_BATCH_CAP if batch_cap is None else batch_cap
-    topk = BPE_TOPK if topk is None else topk
-    parts = [
-        f"""w0 AS MATERIALIZED (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-      FROM (SELECT unnest(string_split({_NORM_SQL}, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' GROUP BY word
-    ),
-    tw AS (SELECT CAST(SUM(freq) AS BIGINT) AS n FROM w0),
-    s0 AS MATERIALIZED (
-      SELECT freq,
-             list_transform(range(1, length(word) + 1),
-                            i -> substr(word, i, 1)) AS syms
-      FROM w0
-    ),
-    tot0 AS (SELECT CAST(SUM(freq * len(syms)) AS BIGINT) AS cs FROM s0)"""
-    ]
-    sels = [
-        "SELECT CAST(0 AS BIGINT) AS round, CAST(0 AS BIGINT) AS batch_rank, "
-        "'' AS merge_a, '' AS merge_b, CAST(0 AS BIGINT) AS pair_count, "
-        "tot0.cs AS corpus_symbols, "
-        "CAST(tot0.cs AS DOUBLE) / CAST(tw.n AS DOUBLE) AS fertility "
-        "FROM tot0 CROSS JOIN tw"
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        ok = (
-            f"g{r}.nsel < {batch_cap} AND list_position(g{r}.used, r.a) = 0 "
-            f"AND list_position(g{r}.used, r.b) = 0"
-        )
+        step = "" if topk == 1 else f"""
+      UNION ALL
+      SELECT k.rn,
+             CASE WHEN {fresh} THEN used || [k.a, k.b] ELSE used END,
+             nsel + CASE WHEN {fresh} THEN 1 ELSE 0 END,
+             mx,
+             CASE WHEN {fresh} THEN k.a END,
+             CASE WHEN {fresh} THEN k.b END,
+             CASE WHEN {fresh} THEN k.cnt END
+      FROM g{r} JOIN rk{r} k ON k.rn = g{r}.rn + 1
+      WHERE {pick}"""
         parts.append(
             f"""rk{r} AS MATERIALIZED (
       SELECT a, b, cnt, row_number() OVER (ORDER BY cnt DESC, a, b) AS rn
@@ -4097,59 +4062,160 @@ def bpe_batched_trainer_sql(
       QUALIFY rn <= {topk}
     ),
     g{r} AS (
-      SELECT 0 AS rn, CAST([] AS VARCHAR[]) AS used,
-             CAST(NULL AS VARCHAR) AS a, CAST(NULL AS VARCHAR) AS b,
-             CAST(NULL AS BIGINT) AS cnt, 0 AS nsel
-      UNION ALL
-      SELECT r.rn,
-             CASE WHEN {ok} THEN g{r}.used || [r.a, r.b] ELSE g{r}.used END,
-             CASE WHEN {ok} THEN r.a END,
-             CASE WHEN {ok} THEN r.b END,
-             CASE WHEN {ok} THEN r.cnt END,
-             g{r}.nsel + CASE WHEN {ok} THEN 1 ELSE 0 END
-      FROM g{r} JOIN rk{r} r ON r.rn = g{r}.rn + 1
+      SELECT rn, [a, b] AS used, 1 AS nsel, cnt AS mx,
+             a AS sa, b AS sb, cnt AS sc
+      FROM rk{r} WHERE rn = 1{step}
     ),
     sel{r} AS MATERIALIZED (
-      SELECT a, b, cnt, row_number() OVER (ORDER BY rn) AS batch_rank
-      FROM g{r} WHERE a IS NOT NULL
+      SELECT sa AS a, sb AS b, sc AS cnt, nsel AS batch_rank
+      FROM g{r} WHERE sa IS NOT NULL
     ),
-    ar{r} AS (
-      SELECT list(a ORDER BY batch_rank) AS al,
-             list(b ORDER BY batch_rank) AS bl,
-             list(a || b ORDER BY batch_rank) AS ml,
+    mp{r} AS (
+      SELECT map(list(a ORDER BY batch_rank), list(b ORDER BY batch_rank))
+               AS mb,
+             map(list(a ORDER BY batch_rank),
+                 list(a || b ORDER BY batch_rank)) AS mm,
              COUNT(*) AS nb
       FROM sel{r}
-    ),
-    s{r} AS MATERIALIZED (
-      SELECT freq,
+    )"""
+        )
+        for f, keep in folds.items():
+            parts.append(
+                f"""{f}{r} AS MATERIALIZED (
+      SELECT {keep},
              CASE WHEN nb = 0 THEN syms ELSE list_reduce(
                list_prepend(CAST([] AS VARCHAR[]),
                             list_transform(syms, x -> [x])),
                (acc, xl) -> CASE WHEN len(acc) > 0
-                                  AND list_position(al, acc[-1]) > 0
-                                  AND xl[1] = bl[list_position(al, acc[-1])]
-                            THEN acc[1:len(acc) - 1]
-                                 || [ml[list_position(al, acc[-1])]]
+                                  AND mb[acc[-1]][1] = xl[1]
+                            THEN acc[1:len(acc) - 1] || mm[acc[-1]]
                             ELSE acc || xl END) END AS syms
-      FROM s{p} CROSS JOIN ar{r}
+      FROM {f}{p} CROSS JOIN mp{r}
+    )"""
+            )
+    return parts
+
+
+def bpe_trainer_sql(
+    rounds: int = BPE_ROUNDS,
+    topk: int = BPE_TOPK,
+    batch_cap: int | None = BPE_BATCH_CAP,
+    alpha_den: int | None = None,
+    w: int = 1,
+) -> str:
+    """Twin of the BPE merge table (``bpe._train_table``; q315, q321,
+    q331, and q304 without ``batch_rank``): the shared round template
+    over the distinct-unit vocab, one row per selected merge (round,
+    batch_rank, pair, count) with the post-round corpus symbol total
+    and fertility (symbols per unit), plus the round-0
+    one-symbol-per-char baseline. ``alpha_den`` switches the pick from
+    the fixed cap to the count band; ``w > 1`` trains on chunks."""
+    ctes = [
+        f"""s0 AS MATERIALIZED (
+      SELECT freq, {_BPE_CHAR_SYMS} AS syms
+      FROM (SELECT unit, CAST(COUNT(*) AS BIGINT) AS freq
+            FROM ({_bpe_units_sql(w)}) GROUP BY unit)
     ),
-    tot{r} AS (SELECT CAST(SUM(freq * len(syms)) AS BIGINT) AS cs
-               FROM s{r})"""
+    tw AS (SELECT CAST(SUM(freq) AS BIGINT) AS n FROM s0)""",
+        *_bpe_round_ctes(rounds, topk, batch_cap, alpha_den, {"s": "freq"}),
+    ]
+    sels = [
+        "SELECT 0 AS round, 0 AS batch_rank, '' AS merge_a, '' AS merge_b, "
+        "CAST(0 AS BIGINT) AS pair_count, t.cs FROM tot0 t"
+    ]
+    for r in range(rounds + 1):
+        ctes.append(
+            f"tot{r} AS (SELECT CAST(SUM(freq * len(syms)) AS BIGINT) AS cs"
+            f" FROM s{r})"
         )
-        sels.append(
-            f"SELECT CAST({r} AS BIGINT) AS round, "
-            f"CAST(s.batch_rank AS BIGINT) AS batch_rank, s.a AS merge_a, "
-            f"s.b AS merge_b, s.cnt AS pair_count, t.cs AS corpus_symbols, "
-            f"CAST(t.cs AS DOUBLE) / CAST(tw.n AS DOUBLE) AS fertility "
-            f"FROM sel{r} s CROSS JOIN tot{r} t CROSS JOIN tw"
+        if r:
+            sels.append(
+                f"SELECT {r}, batch_rank, a, b, cnt, t.cs "
+                f"FROM sel{r} CROSS JOIN tot{r} t"
+            )
+    ctes_sql = ",\n    ".join(ctes)
+    return f"""
+    WITH RECURSIVE {ctes_sql}
+    SELECT CAST(round AS BIGINT) AS round,
+           CAST(batch_rank AS BIGINT) AS batch_rank, merge_a, merge_b,
+           pair_count, cs AS corpus_symbols,
+           CAST(cs AS DOUBLE) / CAST(tw.n AS DOUBLE) AS fertility
+    FROM ({" UNION ALL ".join(sels)}) u CROSS JOIN tw
+    ORDER BY round, batch_rank
+    """
+
+
+def bpe_ledger_sql(
+    rounds: int = BPE_ROUNDS,
+    topk: int = BPE_TOPK,
+    batch_cap: int | None = BPE_BATCH_CAP,
+    alpha_den: int | None = None,
+    w: int = 1,
+    holdout: bool = False,
+) -> str:
+    """Twin of the per-source tokenization ledger
+    (``bpe._tokenize_ledger``; q311, q318, q319, q325, q327): the shared
+    round template over the GLOBAL distinct-unit vocab (same
+    frequencies -> same pools -> same batches as the trainer), final
+    per-unit symbol counts joined to per-(source, unit) frequencies:
+    units, tokens, tokens per unit (``fertility`` for words,
+    ``tokens_per_chunk`` for chunks) and chars per token. With
+    ``holdout`` the rounds train on the even-doc_id half and each
+    round's batch is also folded into the odd half's own vocab ``h`` —
+    the encode of text the trainer never saw — whose ledger is
+    reported."""
+    unit = "word" if w == 1 else "chunk"
+    per_unit = "fertility" if w == 1 else "tokens_per_chunk"
+    odd = "WHERE doc_id % 2 = 1" if holdout else ""
+    ctes = [
+        f"""ws AS MATERIALIZED (
+      SELECT source, unit, CAST(COUNT(*) AS BIGINT) AS freq_s
+      FROM ({_bpe_units_sql(w, odd)}) GROUP BY source, unit
+    )"""
+    ]
+    if holdout:
+        vocab = (
+            f"SELECT unit, CAST(COUNT(*) AS BIGINT) AS freq FROM "
+            f"({_bpe_units_sql(w, 'WHERE doc_id % 2 = 0')}) GROUP BY unit"
         )
-    ctes = ",\n    ".join(parts)
-    union = " UNION ALL ".join(sels)
-    return (
-        "\n    WITH RECURSIVE "
-        + ctes
-        + f"\n    SELECT * FROM ({union}) u ORDER BY round, batch_rank\n    "
+        folds, fin = {"s": "freq", "h": "unit"}, "h"
+        ctes.append(
+            f"""h0 AS MATERIALIZED (
+      SELECT unit, {_BPE_CHAR_SYMS} AS syms
+      FROM (SELECT DISTINCT unit FROM ws)
+    )"""
+        )
+    else:
+        vocab = (
+            "SELECT unit, CAST(SUM(freq_s) AS BIGINT) AS freq FROM ws "
+            "GROUP BY unit"
+        )
+        folds, fin = {"s": "unit, freq"}, "s"
+    ctes.append(
+        f"""s0 AS MATERIALIZED (
+      SELECT {folds["s"]}, {_BPE_CHAR_SYMS} AS syms FROM ({vocab})
+    )"""
     )
+    ctes.extend(_bpe_round_ctes(rounds, topk, batch_cap, alpha_den, folds))
+    ctes_sql = ",\n    ".join(ctes)
+    return f"""
+    WITH RECURSIVE {ctes_sql},
+    fin AS (
+      SELECT unit, CAST(len(syms) AS BIGINT) AS n_syms,
+             CAST(length(unit) AS BIGINT) AS n_chars
+      FROM {fin}{rounds}
+    )
+    SELECT ws.source,
+           CAST(SUM(ws.freq_s) AS BIGINT) AS n_{unit}s,
+           CAST(SUM(ws.freq_s * fin.n_syms) AS BIGINT) AS n_tokens,
+           CAST(SUM(ws.freq_s * fin.n_syms) AS DOUBLE)
+             / CAST(SUM(ws.freq_s) AS DOUBLE) AS {per_unit},
+           CAST(SUM(ws.freq_s * fin.n_chars) AS DOUBLE)
+             / CAST(SUM(ws.freq_s * fin.n_syms) AS DOUBLE)
+             AS chars_per_token
+    FROM ws JOIN fin USING (unit)
+    GROUP BY ws.source ORDER BY ws.source
+    """
 
 
 def hash_embed_ctes(dim: int) -> str:
@@ -4245,154 +4311,6 @@ def hash_embed_ann_sql(
     """
 
 
-def _adaptive_round_ctes(
-    r: int, topk: int, alpha_den: int, keep: str
-) -> str:
-    """One ADAPTIVE merge round's CTE block (rk/g/sel/ar/s{r}) over a
-    ``s{r-1}({keep}, syms)`` frame: ranked pair pool (count DESC, a, b;
-    QUALIFY rn <= topk), recursive count-band disjoint selection
-    (``alpha_den * cnt >= round max``, carried in the walk), and the
-    batch fold with per-round MAP probes. ``keep`` is the column list
-    carried through the re-symbolization ("freq" for the trainer,
-    "chunk, freq" for the corpus tokenizer). Shared by
-    ``bpe_adaptive_trainer_sql`` / ``bpe_tokenize_adaptive_sql``."""
-    p = r - 1
-    ok = (
-        f"{alpha_den} * r.cnt >= g{r}.mx "
-        f"AND list_position(g{r}.used, r.a) = 0 "
-        f"AND list_position(g{r}.used, r.b) = 0"
-    )
-    return f"""rk{r} AS MATERIALIZED (
-      SELECT a, b, cnt, row_number() OVER (ORDER BY cnt DESC, a, b) AS rn
-      FROM (SELECT pr.a AS a, pr.b AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-            FROM (SELECT freq,
-                         unnest(list_transform(range(1, len(syms)),
-                           i -> struct_pack(a := syms[i],
-                                            b := syms[i + 1]))) AS pr
-                  FROM s{p} WHERE len(syms) >= 2)
-            GROUP BY pr.a, pr.b)
-      QUALIFY rn <= {topk}
-    ),
-    g{r} AS (
-      SELECT 0 AS rn, CAST([] AS VARCHAR[]) AS used,
-             CAST(NULL AS VARCHAR) AS a, CAST(NULL AS VARCHAR) AS b,
-             CAST(NULL AS BIGINT) AS cnt,
-             (SELECT cnt FROM rk{r} WHERE rn = 1) AS mx
-      UNION ALL
-      SELECT r.rn,
-             CASE WHEN {ok} THEN g{r}.used || [r.a, r.b] ELSE g{r}.used END,
-             CASE WHEN {ok} THEN r.a END,
-             CASE WHEN {ok} THEN r.b END,
-             CASE WHEN {ok} THEN r.cnt END,
-             g{r}.mx
-      FROM g{r} JOIN rk{r} r ON r.rn = g{r}.rn + 1
-    ),
-    sel{r} AS MATERIALIZED (
-      SELECT a, b, cnt, row_number() OVER (ORDER BY rn) AS batch_rank
-      FROM g{r} WHERE a IS NOT NULL
-    ),
-    ar{r} AS (
-      SELECT map(coalesce(list(a ORDER BY batch_rank),
-                          CAST([] AS VARCHAR[])),
-                 coalesce(list(b ORDER BY batch_rank),
-                          CAST([] AS VARCHAR[]))) AS mb,
-             map(coalesce(list(a ORDER BY batch_rank),
-                          CAST([] AS VARCHAR[])),
-                 coalesce(list(a || b ORDER BY batch_rank),
-                          CAST([] AS VARCHAR[]))) AS mm,
-             COUNT(*) AS nb
-      FROM sel{r}
-    ),
-    s{r} AS MATERIALIZED (
-      SELECT {keep},
-             CASE WHEN nb = 0 THEN syms ELSE list_reduce(
-               list_prepend(CAST([] AS VARCHAR[]),
-                            list_transform(syms, x -> [x])),
-               (acc, xl) -> CASE WHEN len(acc) > 0
-                                  AND mb[acc[-1]][1] = xl[1]
-                            THEN acc[1:len(acc) - 1] || mm[acc[-1]]
-                            ELSE acc || xl END) END AS syms
-      FROM s{p} CROSS JOIN ar{r}
-    )"""
-
-
-_CHUNK_SQL_TMPL = (
-    "unnest(list_transform(range(0, CAST(ceil(len(parts) / {w}.0) AS "
-    "INT)), g -> array_to_string(parts[g * {w} + 1 : g * {w} + {w}], "
-    "' ')))"
-)
-
-
-def bpe_tokenize_adaptive_sql(
-    rounds: int | None = None,
-    topk: int | None = None,
-    alpha_den: int | None = None,
-    w: int | None = None,
-) -> str:
-    """Twin of q325: the ADAPTIVE trainer's merges applied at corpus
-    scale — the q318 ledger machinery with chunk units and count-band
-    selection: identical adaptive rounds over the global distinct-chunk
-    vocabulary (chunk carried through every fold), then the per-source
-    tokenization ledger off one chunk equi-join."""
-    from kp_data_pipelines_spark.operators.bpe import (
-        BPE_ADAPTIVE_ALPHA_DEN,
-        BPE_ADAPTIVE_ROUNDS,
-        BPE_ADAPTIVE_TOPK,
-        BPE_CHUNK_WORDS,
-    )
-
-    rounds = BPE_ADAPTIVE_ROUNDS if rounds is None else rounds
-    topk = BPE_ADAPTIVE_TOPK if topk is None else topk
-    alpha_den = BPE_ADAPTIVE_ALPHA_DEN if alpha_den is None else alpha_den
-    w = BPE_CHUNK_WORDS if w is None else w
-    chunk = _CHUNK_SQL_TMPL.format(w=w)
-    parts = [
-        f"""ck AS MATERIALIZED (
-      SELECT source, chunk
-      FROM (SELECT source, {chunk} AS chunk
-            FROM (SELECT source, string_split(norm, ' ') AS parts
-                  FROM (SELECT source, {_NORM_SQL} AS norm FROM documents)
-                  WHERE length(norm) > 0))
-      WHERE chunk <> ''
-    ),
-    ws AS (
-      SELECT source, chunk, CAST(COUNT(*) AS BIGINT) AS freq_s
-      FROM ck GROUP BY source, chunk
-    ),
-    s0 AS MATERIALIZED (
-      SELECT chunk, freq,
-             list_transform(range(1, length(chunk) + 1),
-                            i -> substr(chunk, i, 1)) AS syms
-      FROM (SELECT chunk, CAST(COUNT(*) AS BIGINT) AS freq
-            FROM ck GROUP BY chunk)
-    )"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            _adaptive_round_ctes(r, topk, alpha_den, keep="chunk, freq")
-        )
-    ctes = ",\n    ".join(parts)
-    return f"""
-    WITH RECURSIVE {ctes},
-    fin AS (
-      SELECT chunk, CAST(len(syms) AS BIGINT) AS n_syms,
-             CAST(length(chunk) AS BIGINT) AS n_chars
-      FROM s{rounds}
-    )
-    SELECT ws.source,
-           CAST(SUM(ws.freq_s) AS BIGINT) AS n_chunks,
-           CAST(SUM(ws.freq_s * fin.n_syms) AS BIGINT) AS n_tokens,
-           CAST(SUM(ws.freq_s * fin.n_syms) AS DOUBLE)
-             / CAST(SUM(ws.freq_s) AS DOUBLE) AS tokens_per_chunk,
-           CAST(SUM(ws.freq_s * fin.n_chars) AS DOUBLE)
-             / CAST(SUM(ws.freq_s * fin.n_syms) AS DOUBLE)
-               AS chars_per_token
-    FROM ws JOIN fin USING (chunk)
-    GROUP BY ws.source
-    ORDER BY ws.source
-    """
-
-
 def derived_embedding_dedup_sql(
     dim: int | None = None, threshold: float = 0.95
 ) -> str:
@@ -4446,329 +4364,6 @@ def derived_embedding_dedup_sql(
            b.n_docs - b.n_removed AS n_kept
     FROM base b LEFT JOIN pb ON pb.source = b.source
     ORDER BY b.source
-    """
-
-
-def bpe_adaptive_trainer_sql(
-    rounds: int | None = None,
-    topk: int | None = None,
-    alpha_den: int | None = None,
-    w: int | None = None,
-) -> str:
-    """Twin of q321: the ADAPTIVE batched BPE trainer
-    (``bpe.train_bpe_adaptive``) — q315's CTE chain with three changes:
-
-    - units are W-word CHUNKS (space is an ordinary symbol): per doc,
-      ``string_split`` the normalized text, slice consecutive ``w``-word
-      groups, re-join with single spaces — byte-identical to the Spark
-      ``slice``/``array_join`` projection;
-    - selection replays ``select_merge_batch_adaptive``: the recursive
-      walk carries the round's max count and takes a disjoint pair iff
-      ``alpha_den * cnt >= mx`` (exact BIGINT guard on both engines) —
-      no fixed batch cap;
-    - the fold probes per-round MAPs (``mb[acc[-1]][1]``, missing key
-      -> empty list -> NULL -> no merge) instead of ``list_position``
-      over the selection arrays: adaptive batches run ~35 pairs where
-      q315's cap is 12, and a map probe keeps the per-element fold cost
-      flat instead of linear in batch size.
-
-    Defaults come from ``operators.bpe`` so the engines cannot drift."""
-    from kp_data_pipelines_spark.operators.bpe import (
-        BPE_ADAPTIVE_ALPHA_DEN,
-        BPE_ADAPTIVE_ROUNDS,
-        BPE_ADAPTIVE_TOPK,
-        BPE_CHUNK_WORDS,
-    )
-
-    rounds = BPE_ADAPTIVE_ROUNDS if rounds is None else rounds
-    topk = BPE_ADAPTIVE_TOPK if topk is None else topk
-    alpha_den = BPE_ADAPTIVE_ALPHA_DEN if alpha_den is None else alpha_den
-    w = BPE_CHUNK_WORDS if w is None else w
-    parts = [
-        f"""c0 AS MATERIALIZED (
-      SELECT chunk, CAST(COUNT(*) AS BIGINT) AS freq
-      FROM (SELECT unnest(list_transform(
-                     range(0, CAST(ceil(len(parts) / {w}.0) AS INT)),
-                     g -> array_to_string(
-                       parts[g * {w} + 1 : g * {w} + {w}], ' '))) AS chunk
-            FROM (SELECT string_split(norm, ' ') AS parts
-                  FROM (SELECT {_NORM_SQL} AS norm FROM documents)
-                  WHERE length(norm) > 0))
-      WHERE chunk <> '' GROUP BY chunk
-    ),
-    tw AS (SELECT CAST(SUM(freq) AS BIGINT) AS n FROM c0),
-    s0 AS MATERIALIZED (
-      SELECT freq,
-             list_transform(range(1, length(chunk) + 1),
-                            i -> substr(chunk, i, 1)) AS syms
-      FROM c0
-    ),
-    tot0 AS (SELECT CAST(SUM(freq * len(syms)) AS BIGINT) AS cs FROM s0)"""
-    ]
-    sels = [
-        "SELECT CAST(0 AS BIGINT) AS round, CAST(0 AS BIGINT) AS batch_rank, "
-        "'' AS merge_a, '' AS merge_b, CAST(0 AS BIGINT) AS pair_count, "
-        "tot0.cs AS corpus_symbols, "
-        "CAST(tot0.cs AS DOUBLE) / CAST(tw.n AS DOUBLE) AS fertility "
-        "FROM tot0 CROSS JOIN tw"
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(_adaptive_round_ctes(r, topk, alpha_den, keep="freq"))
-        parts.append(
-            f"""tot{r} AS (SELECT CAST(SUM(freq * len(syms)) AS BIGINT) AS cs
-               FROM s{r})"""
-        )
-        sels.append(
-            f"SELECT CAST({r} AS BIGINT) AS round, "
-            f"CAST(s.batch_rank AS BIGINT) AS batch_rank, s.a AS merge_a, "
-            f"s.b AS merge_b, s.cnt AS pair_count, t.cs AS corpus_symbols, "
-            f"CAST(t.cs AS DOUBLE) / CAST(tw.n AS DOUBLE) AS fertility "
-            f"FROM sel{r} s CROSS JOIN tot{r} t CROSS JOIN tw"
-        )
-    ctes = ",\n    ".join(parts)
-    union = " UNION ALL ".join(sels)
-    return (
-        "\n    WITH RECURSIVE "
-        + ctes
-        + f"\n    SELECT * FROM ({union}) u ORDER BY round, batch_rank\n    "
-    )
-
-
-def bpe_tokenize_batched_sql(
-    rounds: int | None = None,
-    batch_cap: int | None = None,
-    topk: int | None = None,
-) -> str:
-    """Twin of q318: the BATCHED trainer's merges applied at corpus
-    scale — the q315 per-round CTE chain (ranked pool, recursive greedy
-    disjoint selection, one list_reduce batch fold) with the word
-    carried through each re-symbolization, then the per-source
-    tokenization ledger (bpe_tokenize_sql's final join). Training uses
-    GLOBAL word frequencies, so the batches are identical to q315's."""
-    from kp_data_pipelines_spark.operators.bpe import (
-        BPE_BATCH_CAP,
-        BPE_ROUNDS,
-        BPE_TOPK,
-    )
-
-    rounds = BPE_ROUNDS if rounds is None else rounds
-    batch_cap = BPE_BATCH_CAP if batch_cap is None else batch_cap
-    topk = BPE_TOPK if topk is None else topk
-    parts = [
-        f"""w0 AS MATERIALIZED (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-      FROM (SELECT unnest(string_split({_NORM_SQL}, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' GROUP BY word
-    ),
-    ws AS (
-      SELECT source, word, CAST(COUNT(*) AS BIGINT) AS freq_s
-      FROM (SELECT source, unnest(string_split({_NORM_SQL}, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' GROUP BY source, word
-    ),
-    s0 AS MATERIALIZED (
-      SELECT word, freq,
-             list_transform(range(1, length(word) + 1),
-                            i -> substr(word, i, 1)) AS syms
-      FROM w0
-    )"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        ok = (
-            f"g{r}.nsel < {batch_cap} AND list_position(g{r}.used, r.a) = 0 "
-            f"AND list_position(g{r}.used, r.b) = 0"
-        )
-        parts.append(
-            f"""rk{r} AS MATERIALIZED (
-      SELECT a, b, cnt, row_number() OVER (ORDER BY cnt DESC, a, b) AS rn
-      FROM (SELECT pr.a AS a, pr.b AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-            FROM (SELECT freq,
-                         unnest(list_transform(range(1, len(syms)),
-                           i -> struct_pack(a := syms[i],
-                                            b := syms[i + 1]))) AS pr
-                  FROM s{p} WHERE len(syms) >= 2)
-            GROUP BY pr.a, pr.b)
-      QUALIFY rn <= {topk}
-    ),
-    g{r} AS (
-      SELECT 0 AS rn, CAST([] AS VARCHAR[]) AS used,
-             CAST(NULL AS VARCHAR) AS a, CAST(NULL AS VARCHAR) AS b,
-             0 AS nsel
-      UNION ALL
-      SELECT r.rn,
-             CASE WHEN {ok} THEN g{r}.used || [r.a, r.b] ELSE g{r}.used END,
-             CASE WHEN {ok} THEN r.a END,
-             CASE WHEN {ok} THEN r.b END,
-             g{r}.nsel + CASE WHEN {ok} THEN 1 ELSE 0 END
-      FROM g{r} JOIN rk{r} r ON r.rn = g{r}.rn + 1
-    ),
-    ar{r} AS (
-      SELECT list(a ORDER BY rn) AS al,
-             list(b ORDER BY rn) AS bl,
-             list(a || b ORDER BY rn) AS ml,
-             COUNT(*) AS nb
-      FROM g{r} WHERE a IS NOT NULL
-    ),
-    s{r} AS MATERIALIZED (
-      SELECT word, freq,
-             CASE WHEN nb = 0 THEN syms ELSE list_reduce(
-               list_prepend(CAST([] AS VARCHAR[]),
-                            list_transform(syms, x -> [x])),
-               (acc, xl) -> CASE WHEN len(acc) > 0
-                                  AND list_position(al, acc[-1]) > 0
-                                  AND xl[1] = bl[list_position(al, acc[-1])]
-                            THEN acc[1:len(acc) - 1]
-                                 || [ml[list_position(al, acc[-1])]]
-                            ELSE acc || xl END) END AS syms
-      FROM s{p} CROSS JOIN ar{r}
-    )"""
-        )
-    ctes = ",\n    ".join(parts)
-    return f"""
-    WITH RECURSIVE {ctes},
-    fin AS (
-      SELECT word, CAST(len(syms) AS BIGINT) AS n_syms,
-             CAST(length(word) AS BIGINT) AS n_chars
-      FROM s{rounds}
-    )
-    SELECT ws.source,
-           CAST(SUM(ws.freq_s) AS BIGINT) AS n_words,
-           CAST(SUM(ws.freq_s * fin.n_syms) AS BIGINT) AS n_tokens,
-           CAST(SUM(ws.freq_s * fin.n_syms) AS DOUBLE)
-             / CAST(SUM(ws.freq_s) AS DOUBLE) AS fertility,
-           CAST(SUM(ws.freq_s * fin.n_chars) AS DOUBLE)
-             / CAST(SUM(ws.freq_s * fin.n_syms) AS DOUBLE)
-             AS chars_per_token
-    FROM ws JOIN fin ON fin.word = ws.word
-    GROUP BY ws.source ORDER BY ws.source
-    """
-
-
-def bpe_encode_holdout_sql(
-    rounds: int | None = None,
-    batch_cap: int | None = None,
-    topk: int | None = None,
-) -> str:
-    """Twin of q319: train the batched merges on the even-doc_id HALF,
-    then ENCODE the held-out odd half with them — the q315 training
-    chain (ranked pool -> recursive greedy selection -> batch fold)
-    over the train vocab, then the same per-round selection arrays
-    applied round-by-round to the HOLDOUT vocab, then the per-source
-    holdout ledger."""
-    from kp_data_pipelines_spark.operators.bpe import (
-        BPE_BATCH_CAP,
-        BPE_ROUNDS,
-        BPE_TOPK,
-    )
-
-    rounds = BPE_ROUNDS if rounds is None else rounds
-    batch_cap = BPE_BATCH_CAP if batch_cap is None else batch_cap
-    topk = BPE_TOPK if topk is None else topk
-    parts = [
-        f"""tw0 AS MATERIALIZED (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-      FROM (SELECT unnest(string_split({_NORM_SQL}, ' ')) AS word
-            FROM documents WHERE doc_id % 2 = 0)
-      WHERE word <> '' GROUP BY word
-    ),
-    hws AS (
-      SELECT source, word, CAST(COUNT(*) AS BIGINT) AS freq_s
-      FROM (SELECT source, unnest(string_split({_NORM_SQL}, ' ')) AS word
-            FROM documents WHERE doc_id % 2 = 1)
-      WHERE word <> '' GROUP BY source, word
-    ),
-    s0 AS MATERIALIZED (
-      SELECT freq,
-             list_transform(range(1, length(word) + 1),
-                            i -> substr(word, i, 1)) AS syms
-      FROM tw0
-    ),
-    hs0 AS MATERIALIZED (
-      SELECT word,
-             list_transform(range(1, length(word) + 1),
-                            i -> substr(word, i, 1)) AS syms
-      FROM (SELECT DISTINCT word FROM hws)
-    )"""
-    ]
-    fold = (
-        "list_reduce(\n"
-        "               list_prepend(CAST([] AS VARCHAR[]),\n"
-        "                            list_transform(syms, x -> [x])),\n"
-        "               (acc, xl) -> CASE WHEN len(acc) > 0\n"
-        "                                  AND list_position(al, acc[-1]) > 0\n"
-        "                                  AND xl[1] = bl[list_position(al, acc[-1])]\n"
-        "                            THEN acc[1:len(acc) - 1]\n"
-        "                                 || [ml[list_position(al, acc[-1])]]\n"
-        "                            ELSE acc || xl END)"
-    )
-    for r in range(1, rounds + 1):
-        p = r - 1
-        ok = (
-            f"g{r}.nsel < {batch_cap} AND list_position(g{r}.used, r.a) = 0 "
-            f"AND list_position(g{r}.used, r.b) = 0"
-        )
-        parts.append(
-            f"""rk{r} AS MATERIALIZED (
-      SELECT a, b, cnt, row_number() OVER (ORDER BY cnt DESC, a, b) AS rn
-      FROM (SELECT pr.a AS a, pr.b AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-            FROM (SELECT freq,
-                         unnest(list_transform(range(1, len(syms)),
-                           i -> struct_pack(a := syms[i],
-                                            b := syms[i + 1]))) AS pr
-                  FROM s{p} WHERE len(syms) >= 2)
-            GROUP BY pr.a, pr.b)
-      QUALIFY rn <= {topk}
-    ),
-    g{r} AS (
-      SELECT 0 AS rn, CAST([] AS VARCHAR[]) AS used,
-             CAST(NULL AS VARCHAR) AS a, CAST(NULL AS VARCHAR) AS b,
-             0 AS nsel
-      UNION ALL
-      SELECT r.rn,
-             CASE WHEN {ok} THEN g{r}.used || [r.a, r.b] ELSE g{r}.used END,
-             CASE WHEN {ok} THEN r.a END,
-             CASE WHEN {ok} THEN r.b END,
-             g{r}.nsel + CASE WHEN {ok} THEN 1 ELSE 0 END
-      FROM g{r} JOIN rk{r} r ON r.rn = g{r}.rn + 1
-    ),
-    ar{r} AS (
-      SELECT list(a ORDER BY rn) AS al,
-             list(b ORDER BY rn) AS bl,
-             list(a || b ORDER BY rn) AS ml,
-             COUNT(*) AS nb
-      FROM g{r} WHERE a IS NOT NULL
-    ),
-    s{r} AS MATERIALIZED (
-      SELECT freq,
-             CASE WHEN nb = 0 THEN syms ELSE {fold} END AS syms
-      FROM s{p} CROSS JOIN ar{r}
-    ),
-    hs{r} AS MATERIALIZED (
-      SELECT word,
-             CASE WHEN nb = 0 THEN syms ELSE {fold} END AS syms
-      FROM hs{p} CROSS JOIN ar{r}
-    )"""
-        )
-    ctes = ",\n    ".join(parts)
-    return f"""
-    WITH RECURSIVE {ctes},
-    hfin AS (
-      SELECT word, CAST(len(syms) AS BIGINT) AS n_syms,
-             CAST(length(word) AS BIGINT) AS n_chars
-      FROM hs{rounds}
-    )
-    SELECT hws.source,
-           CAST(SUM(hws.freq_s) AS BIGINT) AS n_words,
-           CAST(SUM(hws.freq_s * hfin.n_syms) AS BIGINT) AS n_tokens,
-           CAST(SUM(hws.freq_s * hfin.n_syms) AS DOUBLE)
-             / CAST(SUM(hws.freq_s) AS DOUBLE) AS fertility,
-           CAST(SUM(hws.freq_s * hfin.n_chars) AS DOUBLE)
-             / CAST(SUM(hws.freq_s * hfin.n_syms) AS DOUBLE)
-             AS chars_per_token
-    FROM hws JOIN hfin ON hfin.word = hws.word
-    GROUP BY hws.source ORDER BY hws.source
     """
 
 
@@ -5352,82 +4947,6 @@ def media_ingest_ledger_sql(max_hamming: int = 4) -> str:
              AS dup_media_share
     FROM d LEFT JOIN nnear nn ON nn.phash = d.phash
     GROUP BY source ORDER BY source
-    """
-
-
-def bpe_tokenize_sql(rounds: int = 6) -> str:
-    """Twin of q311: the q304-trained merge table APPLIED to the corpus
-    — the same unrolled training rounds over the global vocab (q304's
-    CTE chain with the word carried through each re-symbolization), then
-    a per-(source, word) frequency join and the per-source tokenization
-    ledger. Training uses GLOBAL word frequencies, so the merges are
-    identical to q304's."""
-    parts = [
-        f"""w0 AS MATERIALIZED (
-      SELECT word, CAST(COUNT(*) AS BIGINT) AS freq
-      FROM (SELECT unnest(string_split({_NORM_SQL}, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' GROUP BY word
-    ),
-    ws AS (
-      SELECT source, word, CAST(COUNT(*) AS BIGINT) AS freq_s
-      FROM (SELECT source, unnest(string_split({_NORM_SQL}, ' ')) AS word
-            FROM documents)
-      WHERE word <> '' GROUP BY source, word
-    ),
-    s0 AS MATERIALIZED (
-      SELECT word, freq,
-             list_transform(range(1, length(word) + 1),
-                            i -> substr(word, i, 1)) AS syms
-      FROM w0
-    )"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        parts.append(
-            f"""pr{r} AS (
-      SELECT pr.a AS a, pr.b AS b, CAST(SUM(freq) AS BIGINT) AS cnt
-      FROM (SELECT freq,
-                   unnest(list_transform(range(1, len(syms)),
-                     i -> struct_pack(a := syms[i], b := syms[i + 1]))) AS pr
-            FROM s{p} WHERE len(syms) >= 2)
-      GROUP BY pr.a, pr.b
-    ),
-    best{r} AS MATERIALIZED (
-      SELECT a, b, cnt FROM pr{r} ORDER BY cnt DESC, a, b LIMIT 1
-    ),
-    s{r} AS MATERIALIZED (
-      SELECT word, freq,
-             CASE WHEN b{r}.a IS NULL THEN syms ELSE
-             list_reduce(
-               list_prepend(CAST([] AS VARCHAR[]),
-                            list_transform(syms, x -> [x])),
-               (acc, xl) -> CASE WHEN len(acc) > 0 AND acc[-1] = b{r}.a
-                                      AND xl[1] = b{r}.b
-                                 THEN acc[1:len(acc) - 1]
-                                      || [b{r}.a || b{r}.b]
-                                 ELSE acc || xl END) END AS syms
-      FROM s{p} LEFT JOIN best{r} b{r} ON TRUE
-    )"""
-        )
-    ctes = ",\n    ".join(parts)
-    return f"""
-    WITH {ctes},
-    fin AS (
-      SELECT word, CAST(len(syms) AS BIGINT) AS n_syms,
-             CAST(length(word) AS BIGINT) AS n_chars
-      FROM s{rounds}
-    )
-    SELECT ws.source,
-           CAST(SUM(ws.freq_s) AS BIGINT) AS n_words,
-           CAST(SUM(ws.freq_s * fin.n_syms) AS BIGINT) AS n_tokens,
-           CAST(SUM(ws.freq_s * fin.n_syms) AS DOUBLE)
-             / CAST(SUM(ws.freq_s) AS DOUBLE) AS fertility,
-           CAST(SUM(ws.freq_s * fin.n_chars) AS DOUBLE)
-             / CAST(SUM(ws.freq_s * fin.n_syms) AS DOUBLE)
-             AS chars_per_token
-    FROM ws JOIN fin ON fin.word = ws.word
-    GROUP BY ws.source ORDER BY ws.source
     """
 
 

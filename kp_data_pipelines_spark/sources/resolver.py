@@ -3,8 +3,8 @@
 The reference picks the newest input by filename date / regex / mtime
 (Financial Snapshot Preprocess.ipynb:57-73,263-269; Saoirse
 Automation.ipynb:628-645). At scale the equivalent is a date-partitioned
-table + max-partition pruning; for file-drop layouts we keep a driver-side
-resolver (listing a directory is a metadata op, not a data op).
+table + partition pruning; for file-drop layouts this driver-side resolver
+lists a directory (a metadata op, not a data op).
 """
 
 from __future__ import annotations
@@ -50,22 +50,3 @@ def latest_snapshot(
         return max(paths, key=key)
     return max(paths, key=os.path.getmtime)
 
-
-def max_partition(spark, table_path: str, partition_col: str):
-    """Partitioned-table variant: newest partition value.
-
-    Hive-style layouts (``.../{col}=value/``) resolve from the DRIVER-SIDE
-    directory listing — zero Spark jobs, zero data read. Non-partitioned
-    fallback runs a column-pruned max() aggregate (Spark reads no data
-    pages for a pure partition column, but it is still a distributed job —
-    OptimizeMetadataOnlyQuery is disabled by default in modern Spark).
-    """
-    from pyspark.sql import functions as F
-
-    prefix = f"{partition_col}="
-    dirs = glob(os.path.join(table_path, prefix + "*"))
-    values = [os.path.basename(d)[len(prefix):] for d in dirs if os.path.isdir(d)]
-    if values:
-        return max(values)
-    df = spark.read.parquet(table_path)
-    return df.select(F.max(partition_col).alias("p")).collect()[0]["p"]

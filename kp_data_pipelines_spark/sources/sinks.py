@@ -3,7 +3,8 @@
 ``write_table`` is the scale path (partitioned parquet, versioned
 overwrite). ``write_report_csv`` reproduces the reference's single-file CSV
 contract (coalesce(1) — report outputs only, never the 100 TB path).
-Excel report emission (K2/K3) collects small results to pandas by design.
+Excel report emission (K2/K3, ``write_report_excel_interactive``) collects
+small results to pandas by design.
 """
 
 from __future__ import annotations
@@ -62,24 +63,6 @@ def vacuum_versions(base_path: str, keep: int = 3) -> list[str]:
 def write_report_csv(df: DataFrame, path: str, header: bool = True) -> None:
     """K1: single-file CSV contract for report consumers (small outputs)."""
     df.coalesce(1).write.mode("overwrite").option("header", header).csv(path)
-
-
-def write_report_excel(df: DataFrame, path: str, sheet_name: str = "Sheet1") -> None:
-    """K2: Excel sink — collect-to-pandas, small report outputs only."""
-    df.toPandas().to_excel(path, sheet_name=sheet_name, index=False)
-
-
-def write_report_excel_multi(
-    sheets: "dict[str, DataFrame]", path: str
-) -> None:
-    """K3: multi-sheet Excel reconciliation report (Summary / Matched /
-    Detail — DOR VP Compare.ipynb:552-634). Collects each (small) sheet to
-    pandas; requires an Excel engine (openpyxl/xlsxwriter) at runtime."""
-    import pandas as pd
-
-    with pd.ExcelWriter(path) as writer:
-        for name, df in sheets.items():
-            df.toPandas().to_excel(writer, sheet_name=name[:31], index=False)
 
 
 def excel_col(idx: int) -> str:
@@ -271,10 +254,11 @@ def write_report_excel_interactive(
     detail_sheets: "list[str] | None" = None,
     selector_sheet: str = "Detail",
 ) -> None:
-    """K3 interactive variant: the multi-sheet report plus a selector
-    sheet with (a) a dropdown (list data-validation) over ``key_sheet``'s
-    key column and (b) one spill FILTER block per detail sheet showing the
-    rows matching the selection — the reference's interactive
+    """K2/K3: the multi-sheet reconciliation report (Summary / Matched /
+    Detail — DOR VP Compare.ipynb:552-634) plus a selector sheet with
+    (a) a dropdown (list data-validation) over ``key_sheet``'s key column
+    and (b) one spill FILTER block per detail sheet showing the rows
+    matching the selection — the reference's interactive
     reconciliation workbook re-expressed. Uses xlsxwriter when available
     (full fidelity); falls back to the stdlib ``_MiniXlsxBook`` engine
     otherwise, so the workbook contract stays producible and testable in

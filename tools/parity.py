@@ -20,15 +20,12 @@ ANSI long overflow and 2^53 drift actually bite (sf0.01 passes mask
 them). The tag set lives in catalog.OVERFLOW_SENSITIVE and is asserted
 complete by tests/test_catalog_parity.py.
 
-``--full`` is the scripted whole-catalog sf0.1 certification (round-4
-verdict ask): every query in the catalog. Since round 7 there are no
-exclusions: the MinHash pair core of every graph twin is a banded
-EQUI-join materialized once (``pairs AS MATERIALIZED``,
+The whole-catalog sf0.1 certification is the plain sweep on the sf0.1
+directory (the ``FULL=1`` stage of ``tools/verify_all.sh``). Every twin
+runs there with no exclusions: the MinHash pair core of every graph twin
+is a banded EQUI-join materialized once (``pairs AS MATERIALIZED``,
 oracles._minhash_pairs_core), so the formerly-quadratic
-q179/q184/q190/q219/q227/q258 oracles are linear and hash-verify at
-sf0.1 like everything else. Standing use::
-
-    python tools/parity.py --full /root/testdata/sf0.1
+q179/q184/q190/q219/q227/q258 oracles are linear.
 """
 
 from __future__ import annotations
@@ -44,12 +41,6 @@ import duckdb
 import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
-
-# Round 7: empty — the banded, MATERIALIZED pair core made every graph
-# twin linear; kept so `--full` plumbing (and the verdict's "Done ="
-# check) has an explicit, greppable record.
-QUADRATIC_ORACLE_TWINS: dict[str, str] = {}
-
 
 def canonical(df: pd.DataFrame) -> pd.DataFrame:
     df = df[sorted(df.columns)].copy()
@@ -76,9 +67,6 @@ def main() -> int:
     vanilla = "--vanilla" in args
     if vanilla:
         args.remove("--vanilla")
-    full = "--full" in args
-    if full:
-        args.remove("--full")
     subset_tag = None
     if "--subset" in args:
         i = args.index("--subset")
@@ -115,13 +103,9 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    n_pass = n_fail = n_weak = n_skip = 0
+    n_pass = n_fail = n_weak = 0
     for name, fn in qs.items():
         if only and name not in only:
-            continue
-        if full and name in QUADRATIC_ORACLE_TWINS:
-            print(f"SKIP {name}: {QUADRATIC_ORACLE_TWINS[name]}")
-            n_skip += 1
             continue
         try:
             sdf = fn(spark, sf_dir).toPandas()
@@ -166,8 +150,7 @@ def main() -> int:
         else:
             print(f"PASS {name} ({len(sdf)} rows)")
             n_pass += 1
-    skip_note = f", {n_skip} skipped (quadratic oracle twin)" if n_skip else ""
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_weak} weak (no oracle){skip_note}")
+    print(f"\n{n_pass} pass, {n_fail} fail, {n_weak} weak (no oracle)")
     return 1 if n_fail else 0
 
 

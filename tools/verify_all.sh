@@ -26,7 +26,7 @@ echo "ALL GATES GREEN"
 # q180 lesson).
 if [[ "${FULL:-0}" == "1" ]]; then
   echo "=== FULL A: whole-catalog parity, sf0.1 ==="
-  python tools/parity.py --full /root/testdata/sf0.1
+  python tools/parity.py /root/testdata/sf0.1
   echo "=== FULL B: session-accumulation probe, sf0.1 ==="
   python tools/session_probe.py /root/testdata/sf0.1
   echo "FULL GATES GREEN"
