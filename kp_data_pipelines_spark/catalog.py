@@ -6147,7 +6147,7 @@ def q150_streaming_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
     return run_available_now_foreach_batch(
         stream,
-        lambda batch: minhash_incremental(
+        lambda batch, _: minhash_incremental(
             batch, corpus, "doc_id", "text", shingle_k=3, num_hashes=32,
             bands=16, jaccard_threshold=0.4, portable_hash=True,
         ),
@@ -7125,7 +7125,7 @@ def q169_streaming_asof(spark: SparkSession, sf: str) -> DataFrame:
         F.col("event_type") == "click"
     )
 
-    def attribute(batch: DataFrame) -> DataFrame:
+    def attribute(batch: DataFrame, _) -> DataFrame:
         us = F.unix_micros(F.col("ts"))
         tagged = batch.select(
             "user_id", us.alias("us"), "event_id",
@@ -9995,7 +9995,7 @@ def q205_streaming_drift_monitor(spark: SparkSession, sf: str) -> DataFrame:
 
     stream = read_table_stream(spark, sf, "events")
 
-    def partials(batch: DataFrame) -> DataFrame:
+    def partials(batch: DataFrame, _) -> DataFrame:
         return (
             batch.select(
                 F.when(
@@ -10773,15 +10773,7 @@ def q213_gini_diversity(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _hll_merge_sql(seed: int = 23, cut_day: int = 19738) -> str:
-    from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
-
-    (a1, b1), (a2, b2) = _hash_params(2, seed)
-    m = _MERSENNE
-    hv = (
-        f"(({a1} * (((user_id % {m}) + {m}) % {m}) + {b1}) % {m})"
-        f" * CAST(2147483648 AS BIGINT)"
-        f" + (({a2} * (((user_id % {m}) + {m}) % {m}) + {b2}) % {m})"
-    )
+    hv = oracles._hll_hash62_sql("user_id", "user_id", seed)
     return f"""
     WITH h AS (
       SELECT CASE WHEN epoch_us(ts) // 86400000000 < {cut_day}
@@ -11019,15 +11011,7 @@ def q216_period_over_period(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sliding_hll_sql(seed: int = 23, win: int = 7) -> str:
-    from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
-
-    (a1, b1), (a2, b2) = _hash_params(2, seed)
-    m = _MERSENNE
-    hv = (
-        f"(({a1} * (((user_id % {m}) + {m}) % {m}) + {b1}) % {m})"
-        f" * CAST(2147483648 AS BIGINT)"
-        f" + (({a2} * (((user_id % {m}) + {m}) % {m}) + {b2}) % {m})"
-    )
+    hv = oracles._hll_hash62_sql("user_id", "user_id", seed)
     pow_tbl = "[" + ", ".join(repr(2.0 ** -i) for i in range(58)) + "]"
     alpha_m2 = repr((0.7213 / (1 + 1.079 / 64)) * 4096.0)
     return f"""
@@ -12156,15 +12140,7 @@ def q227_split_leakage_audit(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _sketch_algebra_sql(seed: int = 23) -> str:
-    from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
-
-    (a1, b1), (a2, b2) = _hash_params(2, seed)
-    m = _MERSENNE
-    hv = (
-        f"(({a1} * (((user_id % {m}) + {m}) % {m}) + {b1}) % {m})"
-        f" * CAST(2147483648 AS BIGINT)"
-        f" + (({a2} * (((user_id % {m}) + {m}) % {m}) + {b2}) % {m})"
-    )
+    hv = oracles._hll_hash62_sql("user_id", "user_id", seed)
     pow_tbl = "[" + ", ".join(repr(2.0 ** -i) for i in range(58)) + "]"
     alpha_m2 = repr((0.7213 / (1 + 1.079 / 64)) * 4096.0)
     est = (
@@ -14451,11 +14427,9 @@ def q251_streaming_training_build(spark: SparkSession, sf: str) -> DataFrame:
     (streaming/training.py). Bins/pad are derived once from the merged
     totals (ceil-division is not mergeable). Oracle-checked against the
     SAME SQL twin as q250: stream and batch engines must agree
-    row-for-row. Cross-batch first-seen dedup equals the batch MIN
-    keeper under ascending-doc_id arrival (the multi-wave case is
-    pinned by the stream==batch equivalence test in
-    tests/test_streaming.py); here the backlog arrives as one trigger.
-    State/checkpoints are ephemeral per invocation."""
+    row-for-row. The store, its replay contract and the ascending-doc_id
+    guard are ``state_io.growing_store_step``; here the backlog arrives
+    as one trigger. State/checkpoints are ephemeral per invocation."""
     from kp_data_pipelines_spark.streaming.events import _ephemeral_dir
     from kp_data_pipelines_spark.streaming.training import (
         training_build_stream,
@@ -17442,7 +17416,7 @@ def q286_streaming_cdc_ingest(spark: SparkSession, sf: str) -> DataFrame:
         F.col("source") == "src19"
     )
 
-    def ingest(batch: DataFrame) -> DataFrame:
+    def ingest(batch: DataFrame, _) -> DataFrame:
         rows = with_cdc_chunks(
             ensure_parallelism(batch.select("doc_id", "text")),
             "text",
@@ -17575,15 +17549,15 @@ def q288_growing_store_cdc_ingest(spark: SparkSession, sf: str) -> DataFrame:
     char split with the duplicate share — the ingest dashboard. Dedup
     semantics are GLOBAL sequential first-occurrence by (doc_id, chunk
     position): store membership (earlier batches) + within-batch
-    MIN(doc_id, pos) keeper, which is batching-invariant for an
-    ascending-doc_id backlog (one trigger here; the multi-wave case
-    with injected cross-batch duplicate chunks is pinned by
-    tests/test_streaming.py's stream==batch equivalence). Per trigger
-    everything is a keyed agg / keyed equi-join on the packed identity;
-    the store grows by one 8-byte long per distinct chunk (~1/64 of
-    normalized corpus mass at mask 64). UNITS: normalized chars with
-    the 2^21-1 per-chunk cap (see q282). See streaming/cdc.py for the
-    operator."""
+    MIN(doc_id, pos) keeper; store layout, replay and ascending-doc_id
+    contracts are ``state_io.growing_store_step`` (one trigger here;
+    the multi-wave case with injected cross-batch duplicate chunks is
+    pinned by tests/test_streaming.py's stream==batch equivalence).
+    Per trigger everything is a keyed agg / keyed equi-join on the
+    packed identity; the store grows by one 8-byte long per distinct
+    chunk (~1/64 of normalized corpus mass at mask 64). UNITS:
+    normalized chars with the 2^21-1 per-chunk cap (see q282). See
+    streaming/cdc.py for the operator."""
     from kp_data_pipelines_spark.streaming.cdc import cdc_ingest_stream
     from kp_data_pipelines_spark.streaming.events import _ephemeral_dir
 
@@ -18927,11 +18901,11 @@ def q310_streaming_media_ingest(spark: SparkSession, sf: str) -> DataFrame:
     (hamming_block_keys — C(6,2)=15 hashed keys per fingerprint, the
     q302 candidate shape as a two-table equi-join, never
     store-vs-store); store grows 8 bytes per admitted fingerprint;
-    replay-safe per-(run, batch) OVERWRITE partitions and the
-    ascending-id watermark guard, both cdc.py's machinery verbatim.
-    Ledger equals the batch twin for ANY batching of an ordered
-    backlog (multi-wave stream==batch pinned in tests/
-    test_streaming_media.py with injected cross-batch duplicates).
+    store layout, replay and ascending-doc_id contracts are
+    ``state_io.growing_store_step``. Ledger equals the batch twin for
+    ANY batching of an ordered backlog (multi-wave stream==batch pinned
+    in tests/test_streaming_media.py with injected cross-batch
+    duplicates).
     See streaming/media.py for the operator."""
     from kp_data_pipelines_spark.streaming.events import _ephemeral_dir
     from kp_data_pipelines_spark.streaming.media import (

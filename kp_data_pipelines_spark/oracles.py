@@ -593,15 +593,10 @@ def portable_hll_sql(seed: int = 23) -> str:
     rank = 57 - bitlength(rest) via bin()-string length (identical in
     Spark and DuckDB), per-register max, and the raw estimate folded in
     register order from a shared literal table of exact 2^-i doubles."""
-    a1, b1 = _hash_params(2, seed)[0]
-    a2, b2 = _hash_params(2, seed)[1]
     return f"""
     WITH h AS (
       SELECT strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-             user_id,
-             (({a1} * (((user_id % {_MOD}) + {_MOD}) % {_MOD}) + {b1}) % {_MOD})
-               * CAST(2147483648 AS BIGINT)
-               + (({a2} * (((user_id % {_MOD}) + {_MOD}) % {_MOD}) + {b2}) % {_MOD}) AS hv
+             user_id, {_hll_hash62_sql("user_id", "user_id", seed)} AS hv
       FROM events
     ),
     r AS (

@@ -18,26 +18,14 @@ the q251 fingerprint-ledger pattern at CHUNK granularity. Per trigger:
    GLOBAL sequential first-occurrence semantics, so the final ledger is
    identical for ANY batching of an ordered backlog (pinned by the
    stream==batch test with injected cross-batch duplicate chunks);
-4. mergeable per-source counters (chunk/char new-vs-dup splits) are
-   written as the trigger's partial; the batch's new identities are
-   written to the store AFTER the partial's plan is checkpointed (the
-   partial must read the PRE-batch store).
+4. mergeable per-source counters are the trigger's partial; the
+   batch's new identities extend the store.
 
-Replay safety (foreachBatch is at-least-once): the store is laid out
-as ``state_dir/run=<token>/batch=<id>`` and each trigger's new
-identities are written with ``mode("overwrite")`` to ITS OWN batch
-directory, while the pre-batch view reads ``run != token OR batch <
-id`` — so a retried/resumed batch sees exactly the store state its
-first attempt saw and re-produces (not re-appends) its own partition.
-The run token is derived from the checkpoint location, so a restart
-against the same checkpoint (the replay case) lands on the same token,
-while a NEW ingest wave (new checkpoint, same ``state_dir``) gets a
-fresh token and deduplicates against every prior run's partitions.
-
-At scale the store is one 8-byte BIGINT per distinct chunk — ~1/64 of
-the normalized corpus mass at the default mask — appended per batch
-(metadata-only transaction on Delta/Iceberg; plain parquet here for
-zero-dependency tests). Every per-trigger stage is a keyed agg or keyed
+The store, its replay-safe layout, the order guard and the
+pin-then-write are ``state_io.growing_store_step`` (layout and
+contracts in its module docstring). At scale the store is one 8-byte
+BIGINT per distinct chunk — ~1/64 of the normalized corpus mass at the
+default mask. Every per-trigger stage is a keyed agg or keyed
 equi-join on the packed identity; nothing driver-side.
 
 UNITS: ``new_chars``/``dup_chars`` count whitespace-normalized
@@ -51,26 +39,13 @@ ships only its genuinely-new bytes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 CDC_INGEST_PARTIAL_SCHEMA = (
     "source string, n_docs long, n_chunks long, new_chunks long, "
     "dup_chunks long, new_chars long, dup_chars long"
 )
-
-_STORE_SCHEMA = "packed long, run string, batch long"
-
-
-def _read_chunk_store(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Read the run/batch-partitioned chunk-identity store; a missing
-    path means "first batch ever" (empty frame). Anything else re-raises
-    loudly — silently resetting state would let duplicates through."""
-    from kp_data_pipelines_spark.streaming.state_io import (
-        read_state_parquet,
-    )
-
-    return read_state_parquet(spark, state_dir, _STORE_SCHEMA)
 
 
 def _chunk_rows(batch: DataFrame, w: int, mask: int) -> DataFrame:
@@ -103,36 +78,16 @@ def _chunk_rows(batch: DataFrame, w: int, mask: int) -> DataFrame:
 
 
 def _cdc_ingest_partial(
-    batch: DataFrame,
-    state_dir: str,
-    w: int,
-    mask: int,
-    run_token: str,
-    batch_id: int,
-) -> DataFrame:
+    batch: DataFrame, seen: DataFrame, w: int, mask: int
+) -> tuple[DataFrame, DataFrame]:
     """One trigger: dedup the batch's chunk instances against the
-    pre-batch store view + within-batch keeper, emit mergeable
-    per-source counters, overwrite this batch's own store partition
-    with its new identities (idempotent under replay — see module
-    docstring)."""
-    spark = batch.sparkSession
+    pre-batch store view ``seen`` + within-batch keeper; returns the
+    mergeable per-source counters and the batch's new identities."""
     rows = _chunk_rows(batch, w, mask).localCheckpoint(
         eager=True
     )  # two consumers: partial + store write
-    # pre-batch view: every OTHER run in full, plus this run's earlier
-    # batches — a replayed batch's own (possibly half-written) partition
-    # is excluded, so the retry sees the store its first attempt saw
-    seen = (
-        _read_chunk_store(spark, state_dir)
-        .where(
-            (F.col("run") != F.lit(run_token))
-            | (F.col("batch") < F.lit(batch_id))
-        )
-        .select("packed")
-        .distinct()
-    )
     # checkpointed: the keeper aggregate feeds BOTH the partial and the
-    # store-append actions — without this the groupBy over every chunk
+    # store write — without this the groupBy over every chunk
     # instance would run twice per trigger
     keeper = (
         rows.groupBy("packed")
@@ -168,14 +123,7 @@ def _cdc_ingest_partial(
         .cast("bigint")
         .alias("dup_chars"),
     )
-    # persist this batch's new identities AFTER the partial's plan is
-    # pinned (the partial reads the PRE-batch store); overwrite of the
-    # batch's OWN partition keeps the write idempotent under replay
-    partial = partial.localCheckpoint(eager=True)
-    keeper.join(seen, "packed", "left_anti").select("packed").write.mode(
-        "overwrite"
-    ).parquet(f"{state_dir}/run={run_token}/batch={batch_id}")
-    return partial
+    return partial, keeper.join(seen, "packed", "left_anti")
 
 
 def finalize_cdc_ledger(partials: DataFrame) -> DataFrame:
@@ -211,7 +159,6 @@ def cdc_ingest_stream(
     w: int = 16,
     mask: int = 64,
     checkpoint_dir: str | None = None,
-    validate_order: bool = True,
     runner=None,
 ) -> DataFrame:
     """Run the growing-store CDC ingest over the current backlog
@@ -227,44 +174,30 @@ def cdc_ingest_stream(
     differs, which is the point: the growing-store contract does not
     depend on the source terminating.
 
-    ``state_dir`` hosts the persistent chunk-identity table — it
+    ``state_dir`` hosts the persistent chunk-identity store; it
     survives across invocations, so successive calls resume dedup
-    against everything already ingested.
-
-    ORDERING DEPENDENCY: the "ledger == global first-occurrence"
-    contract (and the q288 oracle equality) requires batches to arrive
-    in ascending-doc_id order. With a file stream source that is the
-    file LISTING order (modification time), which tracks doc_id order
-    only when backlog files were written in doc order — a backlog whose
-    mtimes were scrambled (touched/copied files) silently reorders
-    batches. ``validate_order=True`` (default) guards this: each
-    trigger's min(doc_id) is checked against every earlier watermark
-    (``state_io.AscendingIdGuard`` — persisted marker files, so the
-    guard survives restarts; this run's batches key by id so replays
-    stay idempotent, prior runs over the same growing store collapse
-    into a global floor) and a violation raises loudly instead of
-    producing a wrong ledger."""
+    against everything already ingested. Layout, replay and
+    ascending-doc_id contracts: ``state_io``."""
     from kp_data_pipelines_spark.streaming.events import (
         run_available_now_foreach_batch,
     )
-    from kp_data_pipelines_spark.streaming.state_io import AscendingIdGuard
+    from kp_data_pipelines_spark.streaming.state_io import (
+        growing_store_step,
+    )
 
-    guard = AscendingIdGuard(state_dir, checkpoint_dir, "cdc_ingest_stream")
-
-    def ingest(batch: DataFrame, batch_id: int) -> DataFrame:
-        if validate_order:
-            guard.check_batch(batch, batch_id)
-        return _cdc_ingest_partial(
-            batch, state_dir, w, mask, guard.run_token, batch_id
-        )
-
+    step = growing_store_step(
+        state_dir,
+        "packed long",
+        checkpoint_dir,
+        "cdc_ingest_stream",
+        lambda batch, seen: _cdc_ingest_partial(batch, seen, w, mask),
+    )
     if runner is None:
         runner = run_available_now_foreach_batch
     partials = runner(
         stream_df,
-        ingest,
+        step,
         CDC_INGEST_PARTIAL_SCHEMA,
         checkpoint_dir=checkpoint_dir,
-        with_batch_id=True,
     )
     return finalize_cdc_ledger(partials)

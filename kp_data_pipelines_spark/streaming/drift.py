@@ -96,7 +96,9 @@ def length_drift_stream(
     )
 
     partials = run_available_now_foreach_batch(
-        stream_df, hist_partial, HIST_PARTIAL_SCHEMA,
+        stream_df,
+        lambda batch, _: hist_partial(batch),
+        HIST_PARTIAL_SCHEMA,
         checkpoint_dir=checkpoint_dir,
     )
     return finalize_tvd(partials)
@@ -220,7 +222,7 @@ def ivf_cell_stats_stream(
 
     partials = run_available_now_foreach_batch(
         stream_df,
-        lambda batch: ivf_cell_partial(batch, centroids),
+        lambda batch, _: ivf_cell_partial(batch, centroids),
         "cid long, n long, sq decimal(38,0)",
         checkpoint_dir=checkpoint_dir,
     )
@@ -286,7 +288,9 @@ def vocab_growth_stream(
     )
 
     partials = run_available_now_foreach_batch(
-        stream_df, vocab_partial, VOCAB_PARTIAL_SCHEMA,
+        stream_df,
+        lambda batch, _: vocab_partial(batch),
+        VOCAB_PARTIAL_SCHEMA,
         checkpoint_dir=checkpoint_dir,
     )
     from kp_data_pipelines_spark.operators.textops import vocab_growth_table

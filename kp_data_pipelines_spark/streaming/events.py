@@ -120,17 +120,15 @@ def run_available_now(
     return stream_df.sparkSession.table(name)
 
 
-def _batch_writer(out_dir: str, batch_fn, with_batch_id: bool):
+def _batch_writer(out_dir: str, batch_fn):
     """The foreachBatch result sink shared by both runners: each batch's
     output is written to ``{out_dir}/batch={id}`` with overwrite, so a
     replayed batch id replaces its own earlier attempt."""
 
     def write(batch_df: DataFrame, batch_id: int) -> None:
-        out = (
-            batch_fn(batch_df, batch_id) if with_batch_id
-            else batch_fn(batch_df)
+        batch_fn(batch_df, batch_id).write.mode("overwrite").parquet(
+            f"{out_dir}/batch={batch_id}"
         )
-        out.write.mode("overwrite").parquet(f"{out_dir}/batch={batch_id}")
 
     return write
 
@@ -151,7 +149,6 @@ def run_available_now_foreach_batch(
     batch_fn,
     result_schema,
     checkpoint_dir: str | None = None,
-    with_batch_id: bool = False,
 ) -> DataFrame:
     """Execute a streaming query with ``foreachBatch`` over the current
     backlog (AvailableNow) and return the concatenated per-batch results
@@ -167,10 +164,10 @@ def run_available_now_foreach_batch(
     lives until process exit (the returned plan reads from it); ephemeral
     checkpoints are reclaimed as soon as the query stops.
 
-    ``with_batch_id=True`` calls ``batch_fn(batch_df, batch_id)`` —
-    stateful batch functions need the id to make their OWN side writes
-    idempotent under foreachBatch's at-least-once replay (the result
-    sink here is already per-batch-id overwrite, i.e. replay-safe)."""
+    ``batch_fn(batch_df, batch_id)`` has Spark's own foreachBatch
+    signature; only stateful functions read the id, to make their side
+    writes idempotent under replay (``state_io.growing_store_step``).
+    The result sink here is already per-batch-id overwrite."""
     import shutil
 
     own_ckpt = checkpoint_dir is None
@@ -179,7 +176,7 @@ def run_available_now_foreach_batch(
     out_dir = _ephemeral_dir("kp_stream_out_")
     q = (
         stream_df.writeStream.foreachBatch(
-            _batch_writer(out_dir, batch_fn, with_batch_id)
+            _batch_writer(out_dir, batch_fn)
         )
         .outputMode("update")
         .option("checkpointLocation", checkpoint_dir)
@@ -246,7 +243,6 @@ def run_bounded_foreach_batch(
     result_schema,
     total_rows: int,
     checkpoint_dir: str | None = None,
-    with_batch_id: bool = False,
     idle_batches: int = 3,
     timeout_sec: float = 300.0,
 ) -> DataFrame:
@@ -279,7 +275,7 @@ def run_bounded_foreach_batch(
     if own_ckpt:
         checkpoint_dir = _ephemeral_dir("kp_stream_ckpt_")
     out_dir = _ephemeral_dir("kp_stream_out_")
-    write = _batch_writer(out_dir, batch_fn, with_batch_id)
+    write = _batch_writer(out_dir, batch_fn)
     state = {"rows": 0, "idle": 0}
     done = threading.Event()
 

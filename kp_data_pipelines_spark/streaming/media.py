@@ -25,19 +25,14 @@ repeats). Per trigger:
    batch-vs-store as a plain equi-join, verified with one
    bit_count(xor);
 5. mergeable per-source counters are the trigger's partial; the
-   batch's admitted fingerprints are written to the store AFTER the
-   partial's plan is checkpointed (the partial must read the
-   PRE-batch store).
+   batch's admitted fingerprints extend the store.
 
-Under ascending-media_id arrival (validated per batch exactly like
-``cdc.cdc_ingest_stream``'s watermark guard) the ledger equals the
-batch twin for ANY batching of the backlog: "earlier fingerprint"
-means "first media_id smaller", and the store always holds exactly the
-fingerprints first seen at smaller ids. Replay safety is the cdc.py
-layout verbatim: ``state_dir/run=<token>/batch=<id>`` partitions
-written with ``mode("overwrite")``, pre-batch view = ``run != token OR
-batch < id``, so an at-least-once retry reproduces its own partition
-instead of double-admitting.
+"Earlier fingerprint" means "first media_id smaller", and the store
+always holds exactly the fingerprints first seen at smaller ids, so
+under ascending-media_id arrival the ledger equals the batch twin for
+ANY batching of the backlog. The store, its replay-safe layout, the
+order guard and the pin-then-write are ``state_io.growing_store_step``
+(layout and contracts in its module docstring).
 
 At scale the store is one 8-byte BIGINT per admitted fingerprint; the
 per-trigger probe shuffles C(d+k, k) hashed block keys per fingerprint
@@ -51,7 +46,7 @@ probe per new payload instead.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 MEDIA_INGEST_PARTIAL_SCHEMA = (
@@ -59,31 +54,13 @@ MEDIA_INGEST_PARTIAL_SCHEMA = (
     "near_flagged long, near_hits long"
 )
 
-_STORE_SCHEMA = "phash long, run string, batch long"
-
-
-def _read_fp_store(spark: SparkSession, state_dir: str) -> DataFrame:
-    """Read the run/batch-partitioned fingerprint store; missing path =
-    first batch ever. Missing-path detection via the Hadoop FileSystem
-    probe (``state_io``); anything else re-raises loudly."""
-    from kp_data_pipelines_spark.streaming.state_io import (
-        read_state_parquet,
-    )
-
-    return read_state_parquet(spark, state_dir, _STORE_SCHEMA)
-
 
 def _media_ingest_partial(
-    batch: DataFrame,
-    state_dir: str,
-    max_hamming: int,
-    agree_blocks: int,
-    run_token: str,
-    batch_id: int,
-) -> DataFrame:
+    batch: DataFrame, seen: DataFrame, max_hamming: int, agree_blocks: int
+) -> tuple[DataFrame, DataFrame]:
     """One trigger: admit the batch's new fingerprints against the
-    pre-batch store view, emit mergeable per-source counters, overwrite
-    this batch's own store partition."""
+    pre-batch store view ``seen``; returns the mergeable per-source
+    counters and the admitted fingerprints."""
     from kp_data_pipelines_spark.operators.multimodal import (
         with_media_dhash,
     )
@@ -93,7 +70,6 @@ def _media_ingest_partial(
         hamming_pairs,
     )
 
-    spark = batch.sparkSession
     media = ensure_parallelism(
         batch.select(
             F.col("doc_id").alias("media_id"),
@@ -106,16 +82,8 @@ def _media_ingest_partial(
         .select("media_id", "source", "phash")
         .localCheckpoint(eager=True)  # consumers: keeper, tagging, src map
     )
-    seen = (
-        _read_fp_store(spark, state_dir)
-        .where(
-            (F.col("run") != F.lit(run_token))
-            | (F.col("batch") < F.lit(batch_id))
-        )
-        .select("phash")
-        .distinct()
-        .localCheckpoint(eager=True)  # consumers: admit anti-join, probe
-    )
+    # consumers: admit anti-join, probe
+    seen = seen.localCheckpoint(eager=True)
     keeper = mfp.groupBy("phash").agg(F.min("media_id").alias("fid"))
     admitted = keeper.join(seen, "phash", "left_anti").localCheckpoint(
         eager=True
@@ -193,13 +161,7 @@ def _media_ingest_partial(
         .alias("near_flagged"),
         F.sum("n_near").cast("bigint").alias("near_hits"),
     )
-    # pin the partial BEFORE mutating the store (it reads the pre-batch
-    # view); overwrite of the batch's OWN partition = replay-idempotent
-    partial = partial.localCheckpoint(eager=True)
-    admitted.select("phash").write.mode("overwrite").parquet(
-        f"{state_dir}/run={run_token}/batch={batch_id}"
-    )
-    return partial
+    return partial, admitted
 
 
 def finalize_media_ledger(partials: DataFrame) -> DataFrame:
@@ -233,49 +195,31 @@ def media_ingest_stream(
     max_hamming: int = 4,
     agree_blocks: int = 2,
     checkpoint_dir: str | None = None,
-    validate_order: bool = True,
 ) -> DataFrame:
     """Run the growing-store fingerprint ingest over the current backlog
     (AvailableNow) and return the merged per-source admission ledger.
-
-    ORDERING DEPENDENCY (same contract as ``cdc.cdc_ingest_stream``):
-    "first occurrence" and "earlier fingerprint" are defined by
-    media_id order, so batches must arrive in ascending-doc_id order —
-    for a file stream source that is mtime listing order, which a
-    touched/copied backlog can scramble. ``validate_order=True`` checks
-    each trigger's min(doc_id) against every earlier batch's max and
-    raises loudly on violation (replay-aware: a retried batch id skips
-    the check against its own earlier attempt). Watermarks PERSIST as
-    ``<state_dir>__order`` marker files (``state_io.AscendingIdGuard``)
-    and reload on the guard's first run: a checkpointed stream
-    restarting mid-backlog sees pre-restart maxima keyed by batch id,
-    and a FRESH-checkpoint run over the same growing store sees every
-    prior run's maxima as a global floor — either hole would silently
-    corrupt the "earlier fingerprint" admission semantics."""
+    ``state_dir`` hosts the persistent fingerprint store. Layout,
+    replay and ascending-doc_id contracts: ``state_io``."""
     from kp_data_pipelines_spark.streaming.events import (
         run_available_now_foreach_batch,
     )
-    from kp_data_pipelines_spark.streaming.state_io import AscendingIdGuard
+    from kp_data_pipelines_spark.streaming.state_io import (
+        growing_store_step,
+    )
 
-    guard = AscendingIdGuard(state_dir, checkpoint_dir, "media_ingest_stream")
-
-    def ingest(batch: DataFrame, batch_id: int) -> DataFrame:
-        if validate_order:
-            guard.check_batch(batch, batch_id)
-        return _media_ingest_partial(
-            batch,
-            state_dir,
-            max_hamming,
-            agree_blocks,
-            guard.run_token,
-            batch_id,
-        )
-
+    step = growing_store_step(
+        state_dir,
+        "phash long",
+        checkpoint_dir,
+        "media_ingest_stream",
+        lambda batch, seen: _media_ingest_partial(
+            batch, seen, max_hamming, agree_blocks
+        ),
+    )
     partials = run_available_now_foreach_batch(
         stream_df,
-        ingest,
+        step,
         MEDIA_INGEST_PARTIAL_SCHEMA,
         checkpoint_dir=checkpoint_dir,
-        with_batch_id=True,
     )
     return finalize_media_ledger(partials)

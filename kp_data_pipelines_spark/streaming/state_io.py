@@ -1,15 +1,52 @@
-"""Shared persistent-state parquet I/O for the streaming stores.
+"""Persistent state for the streaming operators: the growing-store
+ingest step, its ascending-id order guard, and the parquet and marker
+I/O under both.
 
-Every growing-store stream (cdc chunk store, media fingerprint store,
-decontamination ledger, order watermarks) reads its state dir with the
-same contract: a MISSING path means "first batch ever" (empty frame with
-the explicit schema), anything else re-raises loudly — silently
-resetting state would let cross-batch duplicates through. Missing-path
-detection uses the Hadoop FileSystem API, which is deterministic across
-Spark versions and locales; the previous pattern (substring-matching the
-AnalysisException message for 'PATH_NOT_FOUND') would have turned every
-first-batch run into a hard failure the day the wording changed
-(round-8 ADVICE item, fixed here for all callers at once).
+GROWING STORE. cdc (q288), media (q310) and training (q251) dedup each
+micro-batch against every key earlier batches ingested, then add the
+batch's new keys. ``growing_store_step`` is that per-trigger step for
+all three; the operators supply only ``fn(batch, seen) -> (partial,
+new_keys)``. Per trigger, in this order:
+
+1. check the batch's doc_id range against every earlier watermark
+   (``AscendingIdGuard``, one agg job);
+2. build the pre-batch view ``seen``: the distinct key column of the
+   store, restricted to ``run != <token> OR batch < <id>``;
+3. call ``fn``;
+4. pin the partial with ``localCheckpoint(eager=True)`` — its plan
+   reads the pre-batch view, so it must be materialized before the
+   store changes;
+5. overwrite ``state_dir/run=<token>/batch=<id>`` with ``new_keys``.
+
+Layout: ``state_dir/run=<token>/batch=<id>/*.parquet``, one key column
+per store (the 8-byte chunk identity, dHash or sha256 fingerprint).
+The run token hashes the checkpoint location, so a restart against the
+same checkpoint lands on the same token and a new ingest wave (new
+checkpoint, same store) gets a fresh one; with no checkpoint it is
+random, which is safe because no replay outlives an ephemeral
+checkpoint.
+
+Replay contract: foreachBatch is at-least-once. A replayed (run,
+batch) excludes its own, possibly half-written, partition from the
+pre-batch view, so it sees exactly the store its first attempt saw,
+and it overwrites that partition instead of appending to the store.
+A replay therefore reproduces the same partial and leaves the store
+unchanged; an appended store would flag every key of the replayed
+batch as a duplicate of itself. A new wave dedups against every
+earlier run's partitions in full.
+
+Order contract: first occurrence is defined by doc_id, so batches must
+arrive in ascending doc_id order. For a file source that is the
+listing (mtime) order, which a touched or copied backlog scrambles;
+the guard then raises instead of producing a wrong ledger. Under the
+contract each ledger equals its batch twin for any batching.
+
+Missing state: a MISSING path means "first batch ever" (empty frame
+with the explicit schema); anything else re-raises loudly, since
+silently resetting state would let cross-batch duplicates through.
+Missing-path detection uses the Hadoop FileSystem API, which is
+deterministic across Spark versions and locales, never the text of
+an AnalysisException.
 """
 
 from __future__ import annotations
@@ -131,12 +168,9 @@ def read_markers(spark: SparkSession, dir_path: str) -> dict[str, str]:
 
 
 class AscendingIdGuard:
-    """The ascending-id ORDER GUARD shared by every growing-store
-    stream (media fingerprint ingest, CDC chunk ingest): "first
-    occurrence" semantics require batches to arrive in ascending id
-    order, so each trigger's min(id) is checked against every earlier
-    watermark and a violation raises loudly instead of producing a
-    wrong ledger.
+    """The ascending-id order guard of ``growing_store_step``: each
+    trigger's min(doc_id) is checked against every earlier watermark,
+    and a violation raises.
 
     Watermarks persist as marker files (``<state_dir>__order/<run>_<batch>``,
     atomic temp+rename, no Spark job) and reload on the guard's first
@@ -150,16 +184,10 @@ class AscendingIdGuard:
       to EVERY batch: a fresh-checkpoint run over the same growing
       store restarts batch ids at 0, so keying foreign watermarks by
       batch id would let batch 0 skip validation entirely (and let a
-      lower max overwrite a prior run's higher one) — the round-9
-      review finding this class exists to fix.
+      lower max overwrite a prior run's higher one).
 
-    The guard also owns the stream's RUN TOKEN (``run_token``), which
-    keys both its own markers and the store's per-(run, batch)
-    partitions: derived from ``checkpoint_dir`` it is stable across
-    restarts of the SAME checkpoint (replayed batch ids land on their
-    original store partitions) and fresh for a new ingest wave; with no
-    checkpoint it is random, which is safe because no replay outlives
-    an ephemeral checkpoint.
+    The guard owns the stream's run token (module docstring), which
+    keys both its markers and the store's partitions.
     """
 
     def __init__(
@@ -206,14 +234,8 @@ class AscendingIdGuard:
         """Check one trigger's doc_id range (one agg job) and record it."""
         from pyspark.sql import functions as F
 
-        mm = batch.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).first()
-        self.check_and_record(batch.sparkSession, batch_id, mm["lo"], mm["hi"])
-
-    def check_and_record(
-        self, spark: SparkSession, batch_id: int, lo, hi
-    ) -> None:
+        spark = batch.sparkSession
+        lo, hi = batch.agg(F.min("doc_id"), F.max("doc_id")).first()
         if lo is None:
             return
         if not self._loaded:
@@ -233,7 +255,7 @@ class AscendingIdGuard:
                 "ledger would be wrong"
             )
         self.batch_hi[batch_id] = int(hi)
-        # persist BEFORE the partial mutates the main store; a replay
+        # persist BEFORE the step mutates the store; a replay
         # overwrites its own marker (idempotent)
         write_marker(
             spark,
@@ -253,3 +275,36 @@ def read_state_parquet(
     if not path_exists(spark, state_dir):
         return spark.createDataFrame([], schema)
     return spark.read.schema(schema).parquet(state_dir)
+
+
+def growing_store_step(
+    state_dir: str, key: str, checkpoint_dir: str | None, what: str, fn
+):
+    """The foreachBatch function ``(batch, batch_id) -> partial`` of the
+    growing store at ``state_dir``, keyed by one column (``key`` in DDL,
+    e.g. ``"packed long"``). ``fn(batch, seen) -> (partial, new_keys)``
+    is the operator's dedup; the step runs the guard, the pre-batch
+    view, the pin and the store write around it (module docstring)."""
+    from pyspark.sql import functions as F
+
+    guard = AscendingIdGuard(state_dir, checkpoint_dir, what)
+    col = key.split()[0]
+    schema = f"{key}, run string, batch long"
+
+    def step(batch: DataFrame, batch_id: int) -> DataFrame:
+        guard.check_batch(batch, batch_id)
+        token = guard.run_token
+        seen = (
+            read_state_parquet(batch.sparkSession, state_dir, schema)
+            .where((F.col("run") != token) | (F.col("batch") < batch_id))
+            .select(col)
+            .distinct()
+        )
+        partial, new_keys = fn(batch, seen)
+        partial = partial.localCheckpoint(eager=True)
+        new_keys.select(col).write.mode("overwrite").parquet(
+            f"{state_dir}/run={token}/batch={batch_id}"
+        )
+        return partial
+
+    return step

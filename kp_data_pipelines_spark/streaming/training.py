@@ -5,25 +5,21 @@ deterministic split -> packing forecast over the whole corpus at once.
 The deploy shape for a live ingestion pipeline is the same composition
 per MICRO-BATCH via ``foreachBatch`` (the q150 stream-side batch-job
 pattern): each trigger computes the per-doc flags (stateless), dedups
-against a PERSISTENT fingerprint state table (cross-batch exact dedup —
-the state the stateless per-batch plan cannot carry), emits mergeable
-per-(lang, split) ledger PARTIALS, and appends the batch's new
-fingerprints to the state table. Bins/pad are ceil-division — NOT
+against a PERSISTENT fingerprint store (cross-batch exact dedup — the
+state the stateless per-batch plan cannot carry) and emits mergeable
+per-(lang, split) ledger PARTIALS. Bins/pad are ceil-division — NOT
 mergeable — so they are computed from the merged totals downstream,
 exactly like q250's final aggregate.
 
 Cross-batch dedup semantics: first-seen fingerprint wins (within a batch,
-lowest doc_id). This equals the batch ledger's MIN-doc_id keeper whenever
-waves arrive in ascending doc_id order — the same ordered-arrival contract
-as ``transition_counts_stateful`` — and the equivalence is pinned by
-tests/test_streaming.py (stream-over-waves == batch q250).
-
-At scale: the state table is one row per distinct quality-passing
-fingerprint (32-byte key + one long), partitioned parquet appended per
-batch; each trigger's work is the verified q250 keyed-agg/keyed-join
-stages plus one equi-join against the state table. On Delta/Iceberg the
-append becomes a metadata-only transaction; plain parquet is used here
-for zero-dependency tests (same posture as ``upsert_stream``).
+lowest doc_id). This equals the batch ledger's MIN-doc_id keeper under
+ascending-doc_id arrival, and the equivalence is pinned by
+tests/test_streaming.py (stream-over-waves == batch q250). The store,
+its replay-safe layout, the order guard and the pin-then-write are
+``state_io.growing_store_step`` (layout and contracts in its module
+docstring). At scale the store is one sha256 hex key per distinct
+quality-passing fingerprint; each trigger's work is the verified q250
+keyed-agg/keyed-join stages plus one equi-join against the store.
 
 Reference basis: the notebooks' monthly re-read-everything rebuild
 (e.g. `Study Startup Legacy Data merge.ipynb`) — re-expressed as an
@@ -111,19 +107,13 @@ def doc_flags(docs: DataFrame, seed: int = 67) -> DataFrame:
 
 
 def _ledger_partial(
-    flags: DataFrame, state_dir: str
-) -> DataFrame:
-    """One trigger's ledger partial: dedup `flags` against the persistent
-    fingerprint table at ``state_dir`` (plus within-batch min-doc_id
-    keeper), append the batch's NEW fingerprints, and aggregate the
-    mergeable per-(lang, split) counters."""
-    from kp_data_pipelines_spark.streaming.state_io import read_state_parquet
-
-    spark = flags.sparkSession
+    flags: DataFrame, seen: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """One trigger's ledger partial: dedup `flags` against the pre-batch
+    store view ``seen`` plus the within-batch min-doc_id keeper; returns
+    the mergeable per-(lang, split) counters and the batch's new
+    fingerprints."""
     flags = flags.localCheckpoint(eager=True)  # two consumers below
-    seen = read_state_parquet(spark, state_dir, "f string").select(
-        "f"
-    ).distinct()
     reps = (
         flags.filter(F.col("quality_pass") == 1)
         .groupBy("f")
@@ -165,13 +155,7 @@ def _ledger_partial(
         .cast("bigint")
         .alias("total_tokens"),
     )
-    # persist this batch's new fingerprints AFTER computing the partial
-    # (the partial plan reads the PRE-batch state)
-    partial = partial.localCheckpoint(eager=True)
-    reps.join(seen, "f", "left_anti").select("f").write.mode(
-        "append"
-    ).parquet(state_dir)
-    return partial
+    return partial, reps.join(seen, "f", "left_anti")
 
 
 def finalize_ledger(partials: DataFrame, budget: int = 4096) -> DataFrame:
@@ -213,16 +197,27 @@ def training_build_stream(
     backlog (AvailableNow) and return the merged q250-shaped ledger.
 
     ``stream_df`` is a streaming DataFrame of documents (doc_id, lang,
-    text, ...); ``state_dir`` hosts the persistent fingerprint table
+    text, ...); ``state_dir`` hosts the persistent fingerprint store
     (survives across invocations — incremental builds resume dedup
-    against everything already ingested)."""
+    against everything already ingested). Layout, replay and
+    ascending-doc_id contracts: ``state_io``."""
     from kp_data_pipelines_spark.streaming.events import (
         run_available_now_foreach_batch,
     )
+    from kp_data_pipelines_spark.streaming.state_io import (
+        growing_store_step,
+    )
 
+    step = growing_store_step(
+        state_dir,
+        "f string",
+        checkpoint_dir,
+        "training_build_stream",
+        lambda batch, seen: _ledger_partial(doc_flags(batch, seed), seen),
+    )
     partials = run_available_now_foreach_batch(
         stream_df,
-        lambda batch: _ledger_partial(doc_flags(batch, seed), state_dir),
+        step,
         LEDGER_PARTIAL_SCHEMA,
         checkpoint_dir=checkpoint_dir,
     )

@@ -883,57 +883,102 @@ def test_cdc_ingest_from_rate_source_equals_batch(spark, tmp_path):
     assert got == want
 
 
-def test_cdc_ingest_partial_replay_is_idempotent(spark, tmp_path):
+def _store_steps():
+    """Each growing store's key DDL and partial function
+    ``fn(batch, seen)``, at its stream function's default knobs."""
+    from kp_data_pipelines_spark.streaming import cdc, media, training
+
+    return {
+        "cdc": (
+            "packed long",
+            lambda b, seen: cdc._cdc_ingest_partial(b, seen, 16, 64),
+        ),
+        "media": (
+            "phash long",
+            lambda b, seen: media._media_ingest_partial(b, seen, 4, 2),
+        ),
+        "training": (
+            "f string",
+            lambda b, seen: training._ledger_partial(
+                training.doc_flags(b), seen
+            ),
+        ),
+    }
+
+
+@pytest.mark.parametrize("store", ["cdc", "media", "training"])
+def test_growing_store_replay_is_idempotent(spark, tmp_path, store):
     """foreachBatch is at-least-once: re-running a trigger (crash between
     the store write and the checkpoint commit) must reproduce the SAME
-    partial and leave the store unchanged — the ADVICE round-8 finding
-    was that plain mode('append') state writes double-inserted the
-    batch's identities and flagged all its chunks as duplicates on
-    replay. The fix: per-(run, batch) overwrite partitions + a pre-batch
-    store view that excludes the batch's own partition."""
-    from kp_data_pipelines_spark.streaming.cdc import (
-        _cdc_ingest_partial,
-        _read_chunk_store,
+    partial and leave the store unchanged. A plain mode('append') store
+    double-inserts the batch's keys, and the replay then flags every
+    kept key as a duplicate of itself (the training store did this: a
+    replayed partial moved all of n_kept into n_dup_dropped). The
+    shared step fixes this for every store: per-(run, batch) overwrite
+    partitions and a pre-batch view that excludes the batch's own
+    partition."""
+    from kp_data_pipelines_spark.streaming.state_io import (
+        growing_store_step,
+        read_state_parquet,
     )
 
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "source", "text")
+    key, fn = _store_steps()[store]
+    rows = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
         .orderBy("doc_id")
+        .limit(40)
+        .collect()
     )
-    b0 = docs.limit(4).localCheckpoint(eager=True)
-    b1 = docs.offset(4).limit(4).localCheckpoint(eager=True)
+    schema = spark.read.parquet(f"{SF_DIR}/documents.parquet").schema
+    b0 = spark.createDataFrame(rows[:20], schema)
+    b1 = spark.createDataFrame(rows[20:], schema)
     state = str(tmp_path / "state")
+    step = growing_store_step(
+        state, key, str(tmp_path / "ckpt"), store, fn
+    )
 
     def snap(df):
         return sorted(
             tuple(r) for r in df.select(*sorted(df.columns)).collect()
         )
 
-    p0 = snap(_cdc_ingest_partial(b0, state, 16, 64, "tokA", 0))
-    store_after_0 = snap(_read_chunk_store(spark, state))
-    # replay batch 0 (same run token + id): identical partial, store
-    # byte-identical (no duplicate identities, no dup-flag inflation)
-    assert snap(_cdc_ingest_partial(b0, state, 16, 64, "tokA", 0)) == p0
-    assert snap(_read_chunk_store(spark, state)) == store_after_0
+    def snap_store():
+        return snap(
+            read_state_parquet(
+                spark, state, f"{key}, run string, batch long"
+            )
+        )
 
-    p1 = snap(_cdc_ingest_partial(b1, state, 16, 64, "tokA", 1))
-    store_after_1 = snap(_read_chunk_store(spark, state))
-    assert snap(_cdc_ingest_partial(b1, state, 16, 64, "tokA", 1)) == p1
-    assert snap(_read_chunk_store(spark, state)) == store_after_1
+    for batch_id, batch in enumerate([b0, b1]):
+        partial = snap(step(batch, batch_id))
+        store_after = snap_store()
+        # replay (same run token + id): identical partial, store
+        # unchanged (no duplicate keys, no dup-flag inflation)
+        assert snap(step(batch, batch_id)) == partial
+        assert snap_store() == store_after
+    assert store_after  # both batches added keys
 
 
-def test_cdc_ingest_stream_rejects_out_of_order_backlog(spark, tmp_path):
+@pytest.mark.parametrize("stream_fn", ["cdc", "training"])
+def test_cdc_ingest_stream_rejects_out_of_order_backlog(
+    spark, tmp_path, stream_fn
+):
     """A backlog whose file mtimes do NOT track doc_id order (touched /
     copied files) breaks the global first-occurrence contract; the
-    ingest must fail loudly instead of producing a wrong ledger."""
-    import pytest
-
+    ingest must fail loudly instead of producing a wrong ledger. Both
+    the cdc ingest and the training build (same ascending-doc_id
+    contract, same shared store step) must raise."""
     from kp_data_pipelines_spark.streaming.cdc import cdc_ingest_stream
+    from kp_data_pipelines_spark.streaming.training import (
+        training_build_stream,
+    )
 
+    run = {"cdc": cdc_ingest_stream, "training": training_build_stream}[
+        stream_fn
+    ]
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "source", "text")
+        .select("doc_id", "source", "lang", "text")
         .orderBy("doc_id")
     )
     hi = docs.limit(8).offset(4)
@@ -951,7 +996,7 @@ def test_cdc_ingest_stream_rejects_out_of_order_backlog(spark, tmp_path):
         .parquet(src)
     )
     with pytest.raises(Exception, match="ascending-id order"):
-        cdc_ingest_stream(
+        run(
             stream,
             state_dir=str(tmp_path / "state"),
             checkpoint_dir=str(tmp_path / "ckpt"),

@@ -1,6 +1,7 @@
 """Streaming perceptual-fingerprint ingest (q310's operator):
 stream==batch equivalence with injected cross-batch duplicates, and
-replay idempotence of the per-trigger partial."""
+the ascending-id order guard across restarts and runs. Replay
+idempotence of every growing store is tested in test_streaming.py."""
 
 from __future__ import annotations
 
@@ -92,39 +93,6 @@ def test_media_ingest_stream_equals_batch_with_cross_batch_dups(
         ).collect()
     }
     assert got == want
-
-
-def test_media_ingest_partial_replay_is_idempotent(spark, tmp_path):
-    """foreachBatch is at-least-once: re-running a batch id must see the
-    store state its first attempt saw (its own partition is excluded
-    from the pre-batch view) and reproduce the identical partial."""
-    from kp_data_pipelines_spark.streaming.media import (
-        _media_ingest_partial,
-        _read_fp_store,
-    )
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .select("doc_id", "source", "text")
-        .orderBy("doc_id")
-        .limit(40)
-    )
-    rows = docs.collect()
-    b0 = spark.createDataFrame(rows[:20], docs.schema)
-    b1 = spark.createDataFrame(rows[20:], docs.schema)
-    state = str(tmp_path / "state")
-
-    def snap(df):
-        return sorted(tuple(r) for r in df.collect())
-
-    p0 = snap(_media_ingest_partial(b0, state, 4, 2, "tokA", 0))
-    n_store0 = _read_fp_store(spark, state).count()
-    # replay of batch 0: identical partial, store partition reproduced
-    assert snap(_media_ingest_partial(b0, state, 4, 2, "tokA", 0)) == p0
-    assert _read_fp_store(spark, state).count() == n_store0
-
-    p1 = snap(_media_ingest_partial(b1, state, 4, 2, "tokA", 1))
-    assert snap(_media_ingest_partial(b1, state, 4, 2, "tokA", 1)) == p1
 
 
 def test_order_guard_survives_restart(spark, tmp_path):
