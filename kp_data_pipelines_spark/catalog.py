@@ -12,6 +12,7 @@ Determinism contract with the oracle (driver hashes values after sorting):
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1040,18 +1041,15 @@ def q37_batch_inference(spark: SparkSession, sf: str) -> DataFrame:
 
 @register("q38_minhash_near_dups", oracles.minhash_near_dups_sql())
 def q38_minhash_near_dups(spark: SparkSession, sf: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs over documents (banding join). Runs with
-    ``portable_hash`` (polynomial gram folds, textops.with_poly_shingles)
-    so the DuckDB twin recomputes the exact signatures; the twin's
-    candidacy is band-slice equality — identical to the Spark side's
-    xxhash64 band-bucket join modulo ~2^-64 collisions."""
+    """MinHash+LSH near-dup pairs over documents (banding join). The
+    polynomial gram folds (textops.with_poly_shingles) let the DuckDB
+    twin recompute the exact signatures; the twin's candidacy is
+    band-slice equality — identical to the Spark side's xxhash64
+    band-bucket join modulo ~2^-64 collisions."""
     from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
 
     docs = read_table(spark, sf, "documents")
-    return minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    )
+    return minhash_near_dups(docs, "doc_id", "text")
 
 
 @register("q39_simhash", oracles.simhash_sql())
@@ -1063,9 +1061,7 @@ def q39_simhash(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.similarity import with_simhash
 
     docs = read_table(spark, sf, "documents")
-    return with_simhash(
-        docs, "text", out="simhash", k=2, portable_hash=True
-    ).select("doc_id", "simhash")
+    return with_simhash(docs, "text").select("doc_id", "simhash")
 
 
 @register("q40_lsh_ann", oracles.lsh_ann_sql())
@@ -1169,9 +1165,7 @@ def q43_simhash_hamming_pairs(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.similarity import simhash_hamming_pairs
 
     docs = read_table(spark, sf, "documents")
-    return simhash_hamming_pairs(
-        docs, "doc_id", "text", max_hamming=3, k=2, portable_hash=True
-    )
+    return simhash_hamming_pairs(docs, "doc_id", "text")
 
 
 @register(
@@ -2923,10 +2917,7 @@ def q66_dedup_components(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
 
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    )
+    pairs = minhash_near_dups(docs, "doc_id", "text")
     return connected_components(pairs, "id_a", "id_b")
 
 
@@ -6021,10 +6012,7 @@ def q146_dedup_representative(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
 
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    )
+    pairs = minhash_near_dups(docs, "doc_id", "text")
     comp = connected_components(pairs, "id_a", "id_b")
     quality = docs.select("doc_id", quality_score("text").alias("quality"))
     member = quality.join(
@@ -6063,11 +6051,6 @@ def q147_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
         docs.filter(F.col("source") != "src19"),
         "doc_id",
         "text",
-        shingle_k=3,
-        num_hashes=32,
-        bands=16,
-        jaccard_threshold=0.4,
-        portable_hash=True,
     )
 
 
@@ -6147,10 +6130,7 @@ def q150_streaming_incremental_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
     return run_available_now_foreach_batch(
         stream,
-        lambda batch, _: minhash_incremental(
-            batch, corpus, "doc_id", "text", shingle_k=3, num_hashes=32,
-            bands=16, jaccard_threshold=0.4, portable_hash=True,
-        ),
+        lambda batch, _: minhash_incremental(batch, corpus, "doc_id", "text"),
         "doc_id long, n_matches long, dup_of long, keep boolean",
     )
 
@@ -6261,16 +6241,16 @@ def q154_minhash_calibration(spark: SparkSession, sf: str) -> DataFrame:
     (order-independent, oracle-exact). At scale this runs on a sampled
     pair subset; the shapes (band join + two gram lookups) are the q38
     machinery."""
-    from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
+    from kp_data_pipelines_spark.operators.similarity import (
+        MINHASH_SHINGLE_K,
+        minhash_near_dups,
+    )
     from kp_data_pipelines_spark.operators.textops import with_poly_shingles
 
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    )
+    pairs = minhash_near_dups(docs, "doc_id", "text")
     g = with_poly_shingles(
-        docs.select("doc_id", "text"), "text", "__g", 3
+        docs.select("doc_id", "text"), "text", "__g", MINHASH_SHINGLE_K
     ).select("doc_id", F.array_distinct("__g").alias("grams"))
     ga = g.select(F.col("doc_id").alias("id_a"), F.col("grams").alias("ga"))
     gb = g.select(F.col("doc_id").alias("id_b"), F.col("grams").alias("gb"))
@@ -7030,6 +7010,22 @@ def q167_fuzzy_entity_match(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _near_dup_edges(docs: DataFrame) -> DataFrame:
+    """The q38 near-dup graph as a pinned symmetric (src, dst) edge list:
+    both directions of every pair, the input of the iterative graph
+    queries (q168/q179/q184/q190)."""
+    from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
+
+    pairs = minhash_near_dups(docs, "doc_id", "text").select("id_a", "id_b")
+    return (
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .unionAll(
+            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
 @register("q168_pagerank_neardup", oracles.pagerank_neardup_sql())
 def q168_pagerank_neardup(spark: SparkSession, sf: str) -> DataFrame:
     """PageRank (3 rounds, damping 0.85) over the MinHash near-dup
@@ -7045,21 +7041,9 @@ def q168_pagerank_neardup(spark: SparkSession, sf: str) -> DataFrame:
     are identical IEEE doubles in the unrolled DuckDB twin.
     localCheckpoint between rounds cuts the iterative lineage (the q66
     pattern)."""
-    from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
-
     quant = 10**12
     damping, base = 0.85, 0.15
-    docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    ).select("id_a", "id_b")
-    sym = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).unionAll(
-        pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-    )
-    sym = sym.localCheckpoint(eager=True)
+    sym = _near_dup_edges(read_table(spark, sf, "documents"))
     deg = sym.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -7306,10 +7290,7 @@ def q172_triangle_count(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = read_table(spark, sf, "documents")
     edges = (
-        minhash_near_dups(
-            docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-            jaccard_threshold=0.4, portable_hash=True,
-        )
+        minhash_near_dups(docs, "doc_id", "text")
         .select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .localCheckpoint(eager=True)
     )
@@ -7675,20 +7656,8 @@ def q179_label_propagation(spark: SparkSession, sf: str) -> DataFrame:
     row_number window — shuffle volume O(edges) per round, state is
     one label per node, localCheckpoint cuts the iterative lineage
     (q66/q168 pattern). The oracle unrolls the identical rounds."""
-    from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
-
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    ).select("id_a", "id_b")
-    sym = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    sym = _near_dup_edges(docs)
     nodes = sym.select(F.col("src").alias("node")).distinct()
     labels = nodes.join(
         docs.select(F.col("doc_id").alias("node"), "lang"), "node"
@@ -8116,21 +8085,8 @@ def q184_kcore_decomposition(spark: SparkSession, sf: str) -> DataFrame:
     lineage (q66/q179 pattern). Peeling converges in <= diameter rounds
     on these band graphs; the fixed unroll keeps the DuckDB twin exact.
     Emits surviving nodes with their final in-subgraph degree."""
-    from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
-
     core_k, rounds = 2, 4
-    docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    ).select("id_a", "id_b")
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    edges = _near_dup_edges(read_table(spark, sf, "documents"))
     for _ in range(rounds):
         alive = (
             edges.groupBy("src")
@@ -8687,21 +8643,9 @@ def q190_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
     cuts lineage per round (q66/q179/q184 pattern). At 100 TB the
     frontier join stays keyed on node ids — the classic Pregel
     iteration expressed as DataFrame ops."""
-    from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
-
     seed_mod, rounds = 50, 3
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    ).select("id_a", "id_b")
-    sym = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionAll(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
-    )
+    sym = _near_dup_edges(docs)
     labels = docs.select(
         F.col("doc_id").alias("node"),
         F.when(F.col("doc_id") % seed_mod == 0, F.lit(0))
@@ -11206,22 +11150,19 @@ def q218_funnel_timeout_steps(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _negative_sampling_sql(
-    k: int = 4,
-    seed: int = 43,
-    shingle_k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-) -> str:
-    from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
+def _negative_sampling_sql(k: int = 4, seed: int = 43) -> str:
+    from kp_data_pipelines_spark.operators.similarity import (
+        _MERSENNE,
+        MINHASH_THRESHOLD,
+        _hash_params,
+    )
 
     (a, b) = _hash_params(1, seed)[0]
     m = _MERSENNE
     return f"""
-    WITH {oracles._minhash_pairs_core(shingle_k, num_hashes, bands, threshold)},
+    WITH {oracles._minhash_pairs_core()},
     pos AS (
-      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     idx AS (
       SELECT doc_id, ROW_NUMBER() OVER (ORDER BY doc_id) - 1 AS i
@@ -11276,10 +11217,7 @@ def q219_negative_sampling(spark: SparkSession, sf: str) -> DataFrame:
     k, seed = 4, 43
     (a, b) = _hash_params(1, seed)[0]
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    ).select("id_a", "id_b")
+    pairs = minhash_near_dups(docs, "doc_id", "text").select("id_a", "id_b")
     sym = pairs.unionAll(
         pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
     )
@@ -12016,8 +11954,7 @@ def q225_behavior_near_dups(spark: SparkSession, sf: str) -> DataFrame:
         .withColumnRenamed("user_id", "doc_id")
     )
     pairs = minhash_near_dups(
-        seq, "doc_id", "text", shingle_k=5, num_hashes=32, bands=16,
-        jaccard_threshold=0.0625, portable_hash=True,
+        seq, "doc_id", "text", shingle_k=5, jaccard_threshold=0.0625
     )
     return pairs.select(
         F.col("id_a").alias("user_a"),
@@ -12096,10 +12033,7 @@ def q227_split_leakage_audit(spark: SparkSession, sf: str) -> DataFrame:
 
     (a, b) = _hash_params(1, 31)[0]
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    ).select("id_a", "id_b")
+    pairs = minhash_near_dups(docs, "doc_id", "text").select("id_a", "id_b")
     split = (
         (F.lit(a) * F.pmod(F.col("doc_id"), F.lit(_MERSENNE)) + F.lit(b))
         % _MERSENNE
@@ -12521,7 +12455,7 @@ def q231_curation_funnel(spark: SparkSession, sf: str) -> DataFrame:
         quality_score,
     )
 
-    q_min, threshold = 0.7, 0.4
+    q_min = 0.7
     docs = read_table(spark, sf, "documents")
     # lazy checkpoint: qual feeds the stage ledger AND the canonical
     # chain — pin so the quality/fingerprint scoring pass runs once
@@ -12542,10 +12476,7 @@ def q231_curation_funnel(spark: SparkSession, sf: str) -> DataFrame:
         .select("doc_id", "text", "lang")
         .localCheckpoint(eager=False)
     )
-    pairs = minhash_near_dups(
-        canon, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=threshold, portable_hash=True,
-    )
+    pairs = minhash_near_dups(canon, "doc_id", "text")
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     kept = canon.join(dropped, "doc_id", "left_anti").select("lang", "doc_id")
     stage = qual.groupBy("lang").agg(
@@ -14417,6 +14348,20 @@ def q250_training_data_build(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+def _ephemeral_store(prefix: str) -> str:
+    """A growing store's ``state_dir`` one level inside a fresh ephemeral
+    dir: the store's order guard keeps its markers BESIDE the store
+    (``<state_dir>__order``), so the exit-time removal of the parent
+    dir reclaims both. The store dir is created empty: the first
+    trigger then reads it as an empty parquet scan, where a missing
+    path would build its empty frame from a Python RDD."""
+    from kp_data_pipelines_spark.streaming.events import _ephemeral_dir
+
+    store = os.path.join(_ephemeral_dir(prefix), "store")
+    os.mkdir(store)
+    return store
+
+
 @register("q251_streaming_training_build", _training_build_sql())
 def q251_streaming_training_build(spark: SparkSession, sf: str) -> DataFrame:
     """q250's DEPLOY shape: the corpus arrives as a STREAM (file source,
@@ -14430,14 +14375,13 @@ def q251_streaming_training_build(spark: SparkSession, sf: str) -> DataFrame:
     row-for-row. The store, its replay contract and the ascending-doc_id
     guard are ``state_io.growing_store_step``; here the backlog arrives
     as one trigger. State/checkpoints are ephemeral per invocation."""
-    from kp_data_pipelines_spark.streaming.events import _ephemeral_dir
     from kp_data_pipelines_spark.streaming.training import (
         training_build_stream,
     )
 
     return training_build_stream(
         read_table_stream(spark, sf, "documents"),
-        state_dir=_ephemeral_dir("kp_training_state_"),
+        state_dir=_ephemeral_store("kp_training_state_"),
     )
 
 
@@ -15013,10 +14957,11 @@ def q258_component_aware_split(spark: SparkSession, sf: str) -> DataFrame:
 
     (a1, b1), (a2, b2) = _hash_params(2, 31)
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    ).select("id_a", "id_b").localCheckpoint(eager=True)
+    pairs = (
+        minhash_near_dups(docs, "doc_id", "text")
+        .select("id_a", "id_b")
+        .localCheckpoint(eager=True)
+    )
     comp = connected_components(pairs, "id_a", "id_b")
     d = docs.select("doc_id").join(
         comp, docs["doc_id"] == comp["node"], "left"
@@ -15293,10 +15238,7 @@ def q263_quality_dup_association(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.textops import quality_score
 
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    )
+    pairs = minhash_near_dups(docs, "doc_id", "text")
     dup = (
         pairs.select(
             F.explode(F.array(F.col("id_a"), F.col("id_b"))).alias("doc_id")
@@ -16061,21 +16003,19 @@ def q272_dedup_threshold_sweep(spark: SparkSession, sf: str) -> DataFrame:
     counts are a distinct-project per cut — never a second pass over
     documents."""
     from kp_data_pipelines_spark.operators.similarity import (
+        MINHASH_NUM_HASHES,
         minhash_near_dups,
     )
 
-    num_hashes, cuts = 32, [8, 12, 16, 20, 24, 28]
+    cuts = [8, 12, 16, 20, 24, 28]
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=num_hashes,
-        bands=16, jaccard_threshold=0.25, portable_hash=True,
-    )
+    pairs = minhash_near_dups(docs, "doc_id", "text", jaccard_threshold=0.25)
     grid = F.array(*[F.lit(c).cast("bigint") for c in cuts])
     pt = pairs.select(
         "id_a", "id_b", "est_jaccard", F.explode(grid).alias("cut")
     ).filter(
         F.col("est_jaccard")
-        >= F.col("cut").cast("double") / F.lit(float(num_hashes))
+        >= F.col("cut").cast("double") / F.lit(float(MINHASH_NUM_HASHES))
     )
     np_ = pt.groupBy("cut").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_pairs")
@@ -16092,9 +16032,9 @@ def q272_dedup_threshold_sweep(spark: SparkSession, sf: str) -> DataFrame:
         np_.join(nd, "cut")
         .select(
             "cut",
-            (F.col("cut").cast("double") / F.lit(float(num_hashes))).alias(
-                "threshold"
-            ),
+            (
+                F.col("cut").cast("double") / F.lit(float(MINHASH_NUM_HASHES))
+            ).alias("threshold"),
             "n_pairs",
             "n_docs",
         )
@@ -16122,10 +16062,7 @@ def q273_source_neardup_matrix(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf, "documents")
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    )
+    pairs = minhash_near_dups(docs, "doc_id", "text")
     src = docs.select("doc_id", "source")
     sp = (
         pairs.join(
@@ -16614,10 +16551,11 @@ def q278_dedup_threshold_decision(spark: SparkSession, sf: str) -> DataFrame:
     bounded explode, keyed joins, |S|-row aggregates — nothing in the
     plan scales with the pair count beyond the verified q272 stages."""
     from kp_data_pipelines_spark.operators.similarity import (
+        MINHASH_NUM_HASHES,
         minhash_near_dups,
     )
 
-    num_hashes, cuts, base = 32, [8, 12, 16, 20, 24, 28], 0.25
+    cuts, base = [8, 12, 16, 20, 24, 28], 0.25
     budget_num, budget_den = 4, 5
     max_cut = max(cuts)
     docs = read_table(spark, sf, "documents")
@@ -16627,10 +16565,7 @@ def q278_dedup_threshold_decision(spark: SparkSession, sf: str) -> DataFrame:
         F.size(F.split("text", " ")).cast("bigint").alias("n_toks"),
     )
     tot = d.agg(F.sum("n_toks").cast("bigint").alias("t"))
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=num_hashes,
-        bands=16, jaccard_threshold=base, portable_hash=True,
-    )
+    pairs = minhash_near_dups(docs, "doc_id", "text", jaccard_threshold=base)
     grid_arr = F.array(*[F.lit(c).cast("bigint") for c in cuts])
     # lazy checkpoint: dropped feeds the per-cut token pricing AND the
     # chosen-cut drop set — without the pin the whole MinHash pair
@@ -16640,7 +16575,7 @@ def q278_dedup_threshold_decision(spark: SparkSession, sf: str) -> DataFrame:
         pairs.select("id_b", "est_jaccard", F.explode(grid_arr).alias("cut"))
         .filter(
             F.col("est_jaccard")
-            >= F.col("cut").cast("double") / F.lit(float(num_hashes))
+            >= F.col("cut").cast("double") / F.lit(float(MINHASH_NUM_HASHES))
         )
         .select("cut", F.col("id_b").alias("doc_id"))
         .distinct()
@@ -16747,7 +16682,7 @@ def q278_dedup_threshold_decision(spark: SparkSession, sf: str) -> DataFrame:
             "chosen_cut",
             (
                 F.col("chosen_cut").cast("double")
-                / F.lit(float(num_hashes))
+                / F.lit(float(MINHASH_NUM_HASHES))
             ).alias("threshold"),
             F.col("b").alias("budget_tokens"),
             F.col("kept_total").alias("kept_tokens_total"),
@@ -17559,13 +17494,12 @@ def q288_growing_store_cdc_ingest(spark: SparkSession, sf: str) -> DataFrame:
     normalized chars with the 2^21-1 per-chunk cap (see q282). See
     streaming/cdc.py for the operator."""
     from kp_data_pipelines_spark.streaming.cdc import cdc_ingest_stream
-    from kp_data_pipelines_spark.streaming.events import _ephemeral_dir
 
     stream = read_table_stream(spark, sf, "documents").select(
         "doc_id", "source", "text"
     )
     return cdc_ingest_stream(
-        stream, state_dir=_ephemeral_dir("kp_cdc_store_")
+        stream, state_dir=_ephemeral_store("kp_cdc_store_")
     )
 
 
@@ -17780,17 +17714,16 @@ def q292_warm_start_components(spark: SparkSession, sf: str) -> DataFrame:
     # ONCE (pinned — it feeds both graphs' self-joins) instead of
     # running the two-kernel MinHash pipeline separately per graph.
     banded = _minhash_banded(
-        docs, "doc_id", "text", shingle_k=4, num_hashes=32, bands=16,
-        portable_hash=True,
+        docs, "doc_id", "text", shingle_k=4
     ).localCheckpoint(eager=False)
     prior = connected_components(
         minhash_pairs_from_banded(
-            banded.filter(F.col("doc_id") % 2 == 0), "doc_id", 32, 0.3
+            banded.filter(F.col("doc_id") % 2 == 0), "doc_id", 0.3
         ),
         "id_a",
         "id_b",
     )
-    pairs = minhash_pairs_from_banded(banded, "doc_id", 32, 0.3)
+    pairs = minhash_pairs_from_banded(banded, "doc_id", 0.3)
     labels, _rounds = warm_start_components(pairs, prior, "id_a", "id_b")
     return labels.orderBy("node")
 
@@ -17854,10 +17787,7 @@ def q293_source_datasheet(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("source")
         .agg(F.sum("is_dup").cast("bigint").alias("n_exact_dup_docs"))
     )
-    pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    )
+    pairs = minhash_near_dups(docs, "doc_id", "text")
     nd_ids = (
         pairs.select(F.col("id_a").alias("id"))
         .union(pairs.select(F.col("id_b").alias("id")))
@@ -18029,8 +17959,7 @@ def q296_text_embedding_alignment(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = read_table(spark, sf, "documents")
     pairs = minhash_near_dups(
-        docs, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.0, portable_hash=True,
+        docs, "doc_id", "text", jaccard_threshold=0.0
     ).select("id_a", "id_b", "est_jaccard")
     emb = ensure_parallelism(read_table(spark, sf, "embeddings"))
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -18298,10 +18227,7 @@ def q300_token_yield_forecast(spark: SparkSession, sf: str) -> DataFrame:
     canon = ranked.filter(F.col("rn") == 1).select(
         "doc_id", "source", "text", "toks"
     )
-    pairs = minhash_near_dups(
-        canon, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
-        jaccard_threshold=0.4, portable_hash=True,
-    )
+    pairs = minhash_near_dups(canon, "doc_id", "text")
     dropped = pairs.select(F.col("id_b").alias("doc_id")).distinct()
     tagged = (
         ranked.join(
@@ -18907,7 +18833,6 @@ def q310_streaming_media_ingest(spark: SparkSession, sf: str) -> DataFrame:
     in tests/test_streaming_media.py with injected cross-batch
     duplicates).
     See streaming/media.py for the operator."""
-    from kp_data_pipelines_spark.streaming.events import _ephemeral_dir
     from kp_data_pipelines_spark.streaming.media import (
         media_ingest_stream,
     )
@@ -18916,7 +18841,7 @@ def q310_streaming_media_ingest(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", "source", "text"
     )
     return media_ingest_stream(
-        stream, state_dir=_ephemeral_dir("kp_media_fp_store_")
+        stream, state_dir=_ephemeral_store("kp_media_fp_store_")
     )
 
 
@@ -19067,16 +18992,7 @@ def q313_neardup_edit_distance(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf, "documents").select("doc_id", "text")
-    pairs = minhash_near_dups(
-        ensure_parallelism(docs),
-        "doc_id",
-        "text",
-        shingle_k=3,
-        num_hashes=32,
-        bands=16,
-        jaccard_threshold=0.4,
-        portable_hash=True,
-    )
+    pairs = minhash_near_dups(docs, "doc_id", "text")
     ta = docs.select(
         F.col("doc_id").alias("id_a"),
         F.col("text").alias("text_a"),

@@ -343,31 +343,24 @@ DENSE_CTX_LEN = 4
 DENSE_CTX_MOD = 1024
 
 
-def shared_segment_pairs(
-    chunks: DataFrame,
-    min_shared: int | None = None,
-    df_cap_min: int | None = None,
-    df_cap_max: int | None = None,
-) -> DataFrame:
-    """Media pairs sharing >= ``min_shared`` distinct content chunks —
-    q305's pair stage as a reusable operator over ANY chunk stream:
-    ``chunk_media`` output (in-table payloads) and
+def shared_segment_pairs(chunks: DataFrame) -> DataFrame:
+    """Media pairs sharing >= ``SEGMENT_MIN_SHARED`` distinct content
+    chunks — q305's pair stage as a reusable operator over ANY chunk
+    stream: ``chunk_media`` output (in-table payloads) and
     ``sources.media_source.chunked_media_ingest`` output (file-resident
     payloads, chunked at ingest) both feed it unchanged. Chunk identity
-    is sha256 of the chunk bytes; identities seen in df_cap_min..
-    df_cap_max media join pairwise (the boilerplate guard); pairs
+    is sha256 of the chunk bytes; identities seen in MEDIA_DF_CAP_MIN..
+    MEDIA_DF_CAP_MAX media join pairwise (the boilerplate guard); pairs
     report their shared-chunk count. Input needs (media_id, chunk).
     Returns (id_a, id_b, shared_chunks), id_a < id_b."""
-    min_shared = SEGMENT_MIN_SHARED if min_shared is None else min_shared
-    df_cap_min = MEDIA_DF_CAP_MIN if df_cap_min is None else df_cap_min
-    df_cap_max = MEDIA_DF_CAP_MAX if df_cap_max is None else df_cap_max
     hh = chunks.select(
         "media_id", F.sha2("chunk", 256).alias("ch")
     ).dropDuplicates(["media_id", "ch"])
     chdf = hh.groupBy("ch").agg(F.countDistinct("media_id").alias("nm"))
     k = hh.join(
         chdf.filter(
-            (F.col("nm") >= df_cap_min) & (F.col("nm") <= df_cap_max)
+            (F.col("nm") >= MEDIA_DF_CAP_MIN)
+            & (F.col("nm") <= MEDIA_DF_CAP_MAX)
         ),
         "ch",
     ).select("media_id", "ch")
@@ -384,7 +377,7 @@ def shared_segment_pairs(
         )
         .agg(F.count(F.lit(1)).cast("bigint").alias("shared_chunks"))
     )
-    return p.filter(F.col("shared_chunks") >= min_shared)
+    return p.filter(F.col("shared_chunks") >= SEGMENT_MIN_SHARED)
 
 
 # --- perceptual fingerprints (media near-dup dedup) ------------------------

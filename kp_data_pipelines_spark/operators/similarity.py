@@ -401,6 +401,21 @@ def bucket_hard_negatives(
 
 _MERSENNE = (1 << 31) - 1  # Mersenne-31: a*h+b stays < 2^62 (no ANSI overflow)
 
+# The near-dup configuration of the MinHash family, read by every caller
+# and by the DuckDB twins (oracles.py): 32 signature slots split into 16
+# bands of 2 rows; word 3-gram shingles and an estimated-Jaccard cut of
+# 0.4 unless a caller passes its own. The gram hash is always the
+# polynomial fold (textops.with_poly_shingles), so the twins recompute
+# every signature.
+MINHASH_NUM_HASHES = 32
+MINHASH_BANDS = 16
+MINHASH_SHINGLE_K = 3
+MINHASH_THRESHOLD = 0.4
+assert MINHASH_NUM_HASHES % MINHASH_BANDS == 0, (
+    "bands must evenly divide the signature: a remainder silently drops "
+    "slots from banding"
+)
+
 
 def _hash_params(num_hashes: int, seed: int = 11) -> list[tuple[int, int]]:
     """LCG-derived (a, b) universal-hash parameters."""
@@ -415,9 +430,9 @@ def _hash_params(num_hashes: int, seed: int = 11) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(shingle_hashes, num_hashes: int = 32, seed: int = 11):
-    """Array of ``num_hashes`` MinHash values over a *pre-hashed* shingle
-    array (long values in [0, Mersenne-31)).
+def minhash_signature(shingle_hashes):
+    """Array of ``MINHASH_NUM_HASHES`` MinHash values over a *pre-hashed*
+    shingle array (long values in [0, Mersenne-31)).
 
     Each slot is ``min((a*h + b) mod p)`` — pure int64 arithmetic, bounded
     to avoid ANSI overflow. The caller must materialize the hashed-shingle
@@ -433,7 +448,7 @@ def minhash_signature(shingle_hashes, num_hashes: int = 32, seed: int = 11):
     from pyspark.sql.functions import pandas_udf
     from pyspark.sql.types import ArrayType, LongType
 
-    params = _hash_params(num_hashes, seed)
+    params = _hash_params(MINHASH_NUM_HASHES)
     A = np.array([p[0] for p in params], dtype=np.int64)[:, None]
     B = np.array([p[1] for p in params], dtype=np.int64)[:, None]
 
@@ -454,29 +469,15 @@ def _minhash_banded(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_k: int,
-    num_hashes: int,
-    bands: int,
-    portable_hash: bool,
+    shingle_k: int = MINHASH_SHINGLE_K,
 ) -> DataFrame:
     """Shared signature stage: (id, sig, band_idx, band_hash) rows, one
     per band per document. Stage 1 computes gram hashes once per row;
     stage 2 folds them into [0, p) for the universal hashes."""
-    from kp_data_pipelines_spark.operators.textops import (
-        with_hashed_shingles,
-        with_poly_shingles,
-    )
+    from kp_data_pipelines_spark.operators.textops import with_poly_shingles
 
-    if bands <= 0 or num_hashes % bands != 0:
-        raise ValueError(
-            f"bands must evenly divide num_hashes (got bands={bands}, "
-            f"num_hashes={num_hashes}): a remainder silently drops signature "
-            "slots from banding; bands > num_hashes would hash empty slices "
-            "and put every row in one bucket"
-        )
-    rows_per_band = num_hashes // bands
-    shingler = with_poly_shingles if portable_hash else with_hashed_shingles
-    hashed = shingler(
+    rows_per_band = MINHASH_NUM_HASHES // MINHASH_BANDS
+    hashed = with_poly_shingles(
         ensure_parallelism(df.select(id_col, text_col)), text_col, "__g", shingle_k
     ).select(
         F.col(id_col),
@@ -485,8 +486,7 @@ def _minhash_banded(
         ).alias("__sh"),
     )
     sig = hashed.select(
-        F.col(id_col),
-        minhash_signature(F.col("__sh"), num_hashes).alias("sig"),
+        F.col(id_col), minhash_signature(F.col("__sh")).alias("sig")
     )
     return sig.select(
         id_col,
@@ -495,11 +495,19 @@ def _minhash_banded(
             F.array(
                 *[
                     F.xxhash64(F.slice("sig", i * rows_per_band + 1, rows_per_band))
-                    for i in range(bands)
+                    for i in range(MINHASH_BANDS)
                 ]
             )
         ).alias("band_idx", "band_hash"),
     )
+
+
+def _est_jaccard(sig_a: str, sig_b: str):
+    """Signature agreement rate: the MinHash estimate of Jaccard."""
+    agree = F.size(
+        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v)
+    )
+    return agree.cast("double") / F.lit(float(MINHASH_NUM_HASHES))
 
 
 def minhash_incremental(
@@ -507,11 +515,8 @@ def minhash_incremental(
     corpus_df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_k: int = 5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    jaccard_threshold: float = 0.7,
-    portable_hash: bool = False,
+    shingle_k: int = MINHASH_SHINGLE_K,
+    jaccard_threshold: float = MINHASH_THRESHOLD,
 ) -> DataFrame:
     """Incremental corpus dedup: score each NEW document against the
     EXISTING corpus only (bipartite banding join — no new×new or old×old
@@ -522,12 +527,8 @@ def minhash_incremental(
     Returns one row per new document: (id, n_matches, dup_of = smallest
     matching corpus id or NULL, keep = no match >= threshold). The same
     banding guarantees as ``minhash_near_dups``."""
-    nb = _minhash_banded(
-        new_df, id_col, text_col, shingle_k, num_hashes, bands, portable_hash
-    )
-    cb = _minhash_banded(
-        corpus_df, id_col, text_col, shingle_k, num_hashes, bands, portable_hash
-    )
+    nb = _minhash_banded(new_df, id_col, text_col, shingle_k)
+    cb = _minhash_banded(corpus_df, id_col, text_col, shingle_k)
     cand = (
         nb.alias("n")
         .join(
@@ -543,12 +544,8 @@ def minhash_incremental(
         )
         .dropDuplicates(["new_id", "corpus_id"])
     )
-    agree = F.size(
-        F.filter(F.zip_with("sig_n", "sig_c", lambda x, y: x == y), lambda v: v)
-    )
-    est = agree.cast("double") / F.lit(float(num_hashes))
     matches = (
-        cand.withColumn("est_jaccard", est)
+        cand.withColumn("est_jaccard", _est_jaccard("sig_n", "sig_c"))
         .filter(F.col("est_jaccard") >= jaccard_threshold)
         .groupBy("new_id")
         .agg(
@@ -572,27 +569,23 @@ def minhash_near_dups(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_k: int = 5,
-    num_hashes: int = 32,
-    bands: int = 8,
-    jaccard_threshold: float = 0.7,
-    portable_hash: bool = False,
+    shingle_k: int = MINHASH_SHINGLE_K,
+    jaccard_threshold: float = MINHASH_THRESHOLD,
 ) -> DataFrame:
     """MinHash/LSH near-duplicate pairs.
 
-    shingle -> minhash signature -> split into ``bands`` bands -> candidate
-    pairs = equi-join on (band_index, band_hash) -> verify with estimated
-    Jaccard (signature agreement rate) >= threshold.
+    shingle -> minhash signature -> split into ``MINHASH_BANDS`` bands ->
+    candidate pairs = equi-join on (band_index, band_hash) -> verify with
+    estimated Jaccard (signature agreement rate) >= threshold.
 
     The only shuffle keys are band hashes — at 100 TB this is the standard
     banding trick: no pairwise comparison outside shared buckets. Returns
     (id_a, id_b, est_jaccard) with id_a < id_b.
 
-    ``portable_hash`` swaps the xxhash64 gram hash for the polynomial fold
-    (textops.with_poly_shingles) so a DuckDB oracle can recompute the
-    signatures bit-for-bit; the band-bucket key stays xxhash64 (it only
-    gates candidates — a collision adds a candidate that the est_jaccard
-    verify then judges, so the result set is hash-agnostic).
+    The band-bucket key is xxhash64: it only gates candidates — a
+    collision adds a candidate that the est_jaccard verify then judges,
+    so the result set is hash-agnostic and the DuckDB twin compares band
+    slices directly.
     """
     # Lazy checkpoint: the banded signature table feeds BOTH sides of
     # the candidate self-join, and the planner broadcasts one side at
@@ -602,19 +595,14 @@ def minhash_near_dups(
     # the signature pass once; every consumer (q38/q66/q146/q231/q272/
     # q278/q292/...) inherits the halving. At cluster scale this is
     # also the natural place the signature table would be persisted.
-    banded = _minhash_banded(
-        df, id_col, text_col, shingle_k, num_hashes, bands, portable_hash
-    ).localCheckpoint(eager=False)
-    return minhash_pairs_from_banded(
-        banded, id_col, num_hashes, jaccard_threshold
+    banded = _minhash_banded(df, id_col, text_col, shingle_k).localCheckpoint(
+        eager=False
     )
+    return minhash_pairs_from_banded(banded, id_col, jaccard_threshold)
 
 
 def minhash_pairs_from_banded(
-    banded: DataFrame,
-    id_col: str,
-    num_hashes: int,
-    jaccard_threshold: float,
+    banded: DataFrame, id_col: str, jaccard_threshold: float
 ) -> DataFrame:
     """The candidate + verify half of ``minhash_near_dups`` over an
     already-built banded signature table — exposed so callers that need
@@ -639,10 +627,8 @@ def minhash_pairs_from_banded(
         )
         .dropDuplicates(["id_a", "id_b"])
     )
-    agree = F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-    est = agree.cast("double") / F.lit(float(num_hashes))
     return (
-        cand.withColumn("est_jaccard", est)
+        cand.withColumn("est_jaccard", _est_jaccard("sig_a", "sig_b"))
         .filter(F.col("est_jaccard") >= jaccard_threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -677,28 +663,18 @@ def simhash64_from_hashes(hashed_col) -> "F.Column":
 
 
 def with_simhash(
-    df: DataFrame,
-    text_col: str,
-    out: str = "simhash",
-    k: int = 2,
-    portable_hash: bool = False,
+    df: DataFrame, text_col: str, out: str = "simhash", k: int = 2
 ) -> DataFrame:
     """Attach a 64-bit SimHash fingerprint over word k-shingles.
 
     Two projection stages (gram hashes once, then the vectorized bit vote)
-    so the expensive array work runs once per row. ``portable_hash`` uses
-    the 62-bit polynomial gram hash (textops.with_poly_shingles bits64)
-    instead of xxhash64, making the fingerprints oracle-recomputable (the
-    top two bits then vote 0 — still a valid SimHash)."""
-    from kp_data_pipelines_spark.operators.textops import (
-        with_hashed_shingles,
-        with_poly_shingles,
-    )
+    so the expensive array work runs once per row. The gram hash is the
+    62-bit polynomial fold (textops.with_poly_shingles bits64), so the
+    DuckDB twin recomputes every fingerprint (the top two bits vote 0 —
+    still a valid SimHash)."""
+    from kp_data_pipelines_spark.operators.textops import with_poly_shingles
 
-    if portable_hash:
-        hashed = with_poly_shingles(df, text_col, "__sh_hashes", k, bits64=True)
-    else:
-        hashed = with_hashed_shingles(df, text_col, "__sh_hashes", k)
+    hashed = with_poly_shingles(df, text_col, "__sh_hashes", k, bits64=True)
     return hashed.withColumn(out, simhash64_from_hashes(F.col("__sh_hashes"))).drop(
         "__sh_hashes"
     )
@@ -907,17 +883,12 @@ def simhash_hamming_pairs(
     text_col: str,
     max_hamming: int = 3,
     k: int = 2,
-    portable_hash: bool = False,
 ) -> DataFrame:
     """SimHash near-dup pairs within a Hamming radius: fingerprint the
     text, then the generic pigeonhole chunk-banding join
     (``hamming_pairs``)."""
     fp = with_simhash(
-        ensure_parallelism(df.select(id_col, text_col)),
-        text_col,
-        "fp",
-        k,
-        portable_hash=portable_hash,
+        ensure_parallelism(df.select(id_col, text_col)), text_col, "fp", k
     ).select(id_col, "fp")
     return hamming_pairs(fp, id_col, "fp", max_hamming)
 

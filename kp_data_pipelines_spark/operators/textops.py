@@ -325,7 +325,8 @@ def with_poly_shingles(
     Arrow/numpy pass (~4x the interpreted JVM HOFs — tools/stress.py);
     ``impl="jvm"`` is the pure-expression fold, bit-identical by test —
     the no-Python reference and the shape the DuckDB twins mirror.
-    Prefer ``with_hashed_shingles`` when no oracle needs the values."""
+    MinHash and SimHash always hash grams here; ``with_hashed_shingles``
+    is faster only on short documents (q41/q68, SCALE.md §11)."""
     if impl == "kernel":
         toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
         return df.withColumn(out, _poly_shingles_kernel(k, bits64)(toks))

@@ -33,6 +33,10 @@ from kp_data_pipelines_spark.operators.bpe import (
 from kp_data_pipelines_spark.operators.similarity import (
     GRAM_MAX_PLANES,
     GRAM_TARGET_BUCKET,
+    MINHASH_BANDS,
+    MINHASH_NUM_HASHES,
+    MINHASH_SHINGLE_K,
+    MINHASH_THRESHOLD,
     _hash_params,
     adaptive_n_planes_case_sql,
     simhash_planes,
@@ -91,19 +95,18 @@ def _lit_list(vals, cast: str) -> str:
 
 
 def _minhash_sig_cte(
-    k: int, num_hashes: int, seed: int = 11, extra_cols: str = "",
-    src: str = "documents",
+    k: int = MINHASH_SHINGLE_K, extra_cols: str = "", src: str = "documents"
 ) -> str:
     """CTEs ``src``(doc_id, text) -> per-doc MinHash signature (``sig``).
 
-    The signature is UNROLLED into ``num_hashes`` independent
+    The signature is UNROLLED into ``MINHASH_NUM_HASHES`` independent
     ``list_min(list_transform(...))`` slots with the (a, b) constants
     INLINED — arithmetically identical to indexing literal parameter
     arrays per element, but ~70x faster in DuckDB (the
     ``(literal_list)[j]`` lookup inside a nested lambda re-evaluated
     per gram per slot dominated the whole MinHash oracle family at
     sf0.1: 267 s -> ~4 s for the pair core)."""
-    params = _hash_params(num_hashes, seed)
+    params = _hash_params(MINHASH_NUM_HASHES)
     slots = ",\n               ".join(
         f"list_min(list_transform(grams, h -> ({a} * h + {b}) % {_MOD}))"
         for a, b in params
@@ -124,13 +127,12 @@ def _minhash_sig_cte(
 
 
 def _minhash_pairs_core(
-    k: int, num_hashes: int, bands: int, threshold: float,
-    src: str = "documents",
+    k: int = MINHASH_SHINGLE_K, src: str = "documents"
 ) -> str:
     """CTE chain ending in ``pairs(id_a, id_b, est_jaccard)``.
 
     The candidate set is a banded EQUI-join (each doc explodes into
-    ``bands`` (band, band-signature) keys; same-key different-doc rows
+    ``MINHASH_BANDS`` (band, band-signature) keys; same-key different-doc rows
     pair up, DISTINCT across bands) — the same asymptotic shape as the
     Spark side's xxhash64 band-key join, never the all-pairs
     band-predicate theta join. ``pairs`` is ``AS MATERIALIZED`` so the
@@ -139,13 +141,13 @@ def _minhash_pairs_core(
     round — this is what makes the q179/q184/q190/q219/q227/q258
     oracles linear and lets the full-catalog sf0.1 certification
     include them."""
-    rpb = num_hashes // bands
-    return f"""{_minhash_sig_cte(k, num_hashes, src=src)},
+    rpb = MINHASH_NUM_HASHES // MINHASH_BANDS
+    return f"""{_minhash_sig_cte(k, src=src)},
     mh_bnd AS (
       SELECT doc_id, band,
              array_to_string(sig[(band - 1) * {rpb} + 1:band * {rpb}], ',')
                AS bkey
-      FROM sig CROSS JOIN (SELECT unnest(range(1, {bands + 1})) AS band) bb
+      FROM sig CROSS JOIN (SELECT unnest(range(1, {MINHASH_BANDS + 1})) AS band) bb
     ),
     mh_cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -154,24 +156,22 @@ def _minhash_pairs_core(
     ),
     pairs AS MATERIALIZED (
       SELECT c.id_a, c.id_b,
-             CAST(len(list_filter(range(1, {num_hashes + 1}),
+             CAST(len(list_filter(range(1, {MINHASH_NUM_HASHES + 1}),
                         j -> sa.sig[j] = sb.sig[j])) AS DOUBLE)
-               / {float(num_hashes)} AS est_jaccard
+               / {float(MINHASH_NUM_HASHES)} AS est_jaccard
       FROM mh_cand c
       JOIN sig sa ON sa.doc_id = c.id_a
       JOIN sig sb ON sb.doc_id = c.id_b
     )"""
 
 
-def minhash_near_dups_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16, threshold: float = 0.4
-) -> str:
+def minhash_near_dups_sql() -> str:
     """Twin of q38: all-pairs with band-slice-equality candidacy (the Spark
     side's xxhash64 band key collides with prob ~2^-64, i.e. never)."""
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, threshold)}
+    WITH {_minhash_pairs_core()}
     SELECT id_a, id_b, est_jaccard FROM pairs
-    WHERE est_jaccard >= {threshold}
+    WHERE est_jaccard >= {MINHASH_THRESHOLD}
     """
 
 
@@ -217,13 +217,13 @@ def simhash_hamming_pairs_sql(max_hamming: int = 3, k: int = 2) -> str:
 
 
 def dedup_components_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16, threshold: float = 0.4
+    k: int = MINHASH_SHINGLE_K, threshold: float = MINHASH_THRESHOLD
 ) -> str:
     """Twin of q66: MinHash pairs -> recursive-CTE transitive closure ->
     min reachable id per node (the q141 twin's fixpoint, over edge
     endpoints only, matching graph.connected_components)."""
     return f"""
-    WITH RECURSIVE {_minhash_pairs_core(k, num_hashes, bands, threshold)},
+    WITH RECURSIVE {_minhash_pairs_core(k)},
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
       WHERE est_jaccard >= {threshold}
@@ -326,17 +326,15 @@ def bloom_contamination_sql(
     """
 
 
-def dedup_representative_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16, threshold: float = 0.4
-) -> str:
+def dedup_representative_sql() -> str:
     """Twin of q146: MinHash components (q66's closure) + the q22 quality
     score; the representative is the (quality DESC, doc_id ASC) window
     head per component, singletons forming their own component."""
     return f"""
-    WITH RECURSIVE {_minhash_pairs_core(k, num_hashes, bands, threshold)},
+    WITH RECURSIVE {_minhash_pairs_core()},
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM pairs
-      WHERE est_jaccard >= {threshold}
+      WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     sym AS (
       SELECT src, dst FROM edges UNION SELECT dst, src FROM edges
@@ -414,23 +412,17 @@ def top_pc_sql(n_iter: int = 3) -> str:
     """
 
 
-def minhash_incremental_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-    new_source: str = "src19",
-) -> str:
+def minhash_incremental_sql(new_source: str = "src19") -> str:
     """Twin of q147: the bipartite (new shard x existing corpus) variant
     of the q38 twin — band-slice-equality candidacy restricted to
     cross-side pairs, min matching corpus id per new doc."""
-    rpb = num_hashes // bands
+    rpb = MINHASH_NUM_HASHES // MINHASH_BANDS
     band_eq = " OR ".join(
         f"n.sig[{i * rpb + 1}:{(i + 1) * rpb}] = c.sig[{i * rpb + 1}:{(i + 1) * rpb}]"
-        for i in range(bands)
+        for i in range(MINHASH_BANDS)
     )
     return f"""
-    WITH {_minhash_sig_cte(k, num_hashes, extra_cols=", source")},
+    WITH {_minhash_sig_cte(extra_cols=", source")},
     matches AS (
       SELECT n.doc_id AS new_id,
              COUNT(*) AS n_matches,
@@ -438,9 +430,9 @@ def minhash_incremental_sql(
       FROM sig n JOIN sig c
         ON n.source = '{new_source}' AND c.source <> '{new_source}'
        AND ({band_eq})
-       AND CAST(len(list_filter(range(1, {num_hashes + 1}),
+       AND CAST(len(list_filter(range(1, {MINHASH_NUM_HASHES + 1}),
                      j -> n.sig[j] = c.sig[j])) AS DOUBLE)
-             / {float(num_hashes)} >= {threshold}
+             / {float(MINHASH_NUM_HASHES)} >= {MINHASH_THRESHOLD}
       GROUP BY n.doc_id
     )
     SELECT s.doc_id,
@@ -708,24 +700,22 @@ def rank_perplexity_sql() -> str:
     """
 
 
-def minhash_calibration_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16, threshold: float = 0.4
-) -> str:
+def minhash_calibration_sql() -> str:
     """Twin of q154: per estimated-Jaccard bucket, how good is the MinHash
     estimate? Exact Jaccard over the same distinct gram sets (intersection
     and union counts are integers), mean-true via quantized-integer sums."""
-    rpb = num_hashes // bands
+    rpb = MINHASH_NUM_HASHES // MINHASH_BANDS
     band_eq = " OR ".join(
         f"a.sig[{i * rpb + 1}:{(i + 1) * rpb}] = b.sig[{i * rpb + 1}:{(i + 1) * rpb}]"
-        for i in range(bands)
+        for i in range(MINHASH_BANDS)
     )
     return f"""
-    WITH {_minhash_sig_cte(k, num_hashes)},
+    WITH {_minhash_sig_cte()},
     pairs AS (
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(len(list_filter(range(1, {num_hashes + 1}),
+             CAST(len(list_filter(range(1, {MINHASH_NUM_HASHES + 1}),
                         j -> a.sig[j] = b.sig[j])) AS DOUBLE)
-               / {float(num_hashes)} AS est
+               / {float(MINHASH_NUM_HASHES)} AS est
       FROM sig a JOIN sig b ON a.doc_id < b.doc_id
       WHERE {band_eq}
     ),
@@ -738,7 +728,7 @@ def minhash_calibration_sql(
       FROM pairs p
       JOIN g ga ON ga.doc_id = p.id_a
       JOIN g gb ON gb.doc_id = p.id_b
-      WHERE p.est >= {threshold}
+      WHERE p.est >= {MINHASH_THRESHOLD}
     )
     SELECT CAST(floor(est * 8.0) AS INTEGER) AS est_bucket,
            COUNT(*) AS n_pairs,
@@ -1268,10 +1258,6 @@ def countmin_heavyhitters_sql(
 
 
 def pagerank_neardup_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
     n_iter: int = 3,
     damping: str = "0.85",
     quant: int = 10**12,
@@ -1285,9 +1271,9 @@ def pagerank_neardup_sql(
     d = f"CAST({damping} AS DOUBLE)"
     base = f"CAST({repr(1 - float(damping))} AS DOUBLE)"
     parts = [
-        _minhash_pairs_core(k, num_hashes, bands, threshold),
+        _minhash_pairs_core(),
         f"""edges AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a AS src, id_b AS dst FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     sym AS (
       SELECT src, dst FROM edges UNION ALL SELECT dst, src FROM edges
@@ -1327,20 +1313,15 @@ def pagerank_neardup_sql(
     """
 
 
-def triangle_count_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-) -> str:
+def triangle_count_sql() -> str:
     """Twin of q172: per-node triangle counts over the MinHash
     near-dup graph. Edges are id-oriented (a < b) so each triangle is
     enumerated exactly once as a < b < c: wedge join on the middle
     node, then a 2-key closing-edge join."""
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, threshold)},
+    WITH {_minhash_pairs_core()},
     edges AS (
-      SELECT id_a AS a, id_b AS b FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a AS a, id_b AS b FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     tri AS (
       SELECT e1.a, e1.b, e2.b AS c
@@ -1454,22 +1435,16 @@ def bm25_proxy_sql(
     """
 
 
-def label_propagation_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-    n_iter: int = 3,
-) -> str:
+def label_propagation_sql(n_iter: int = 3) -> str:
     """Twin of q179: semi-supervised label propagation over the MinHash
     near-dup graph, the n_iter synchronous rounds unrolled as CTEs.
     Seeds (doc_id % 3 = 0) stay clamped; unlabeled nodes adopt the
     neighbourhood-majority label with the deterministic
     (count DESC, label ASC) tie-break."""
     parts = [
-        _minhash_pairs_core(k, num_hashes, bands, threshold),
+        _minhash_pairs_core(),
         f"""edges AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a AS src, id_b AS dst FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     sym AS (
       SELECT src, dst FROM edges UNION ALL SELECT dst, src FROM edges
@@ -1567,22 +1542,15 @@ def containment_join_sql(k: int = 3, t_num: int = 4, t_den: int = 5) -> str:
     """
 
 
-def kcore_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-    core_k: int = 2,
-    rounds: int = 4,
-) -> str:
+def kcore_sql(core_k: int = 2, rounds: int = 4) -> str:
     """Twin of q184: k-core decomposition of the MinHash near-dup graph
     by iterative peeling, the fixed number of rounds unrolled as CTEs —
     each round drops nodes whose degree in the SURVIVING subgraph is
     below core_k, then drops their incident edges."""
     parts = [
-        _minhash_pairs_core(k, num_hashes, bands, threshold),
+        _minhash_pairs_core(),
         f"""ed AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a AS src, id_b AS dst FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     e0 AS (
       SELECT src, dst FROM ed UNION ALL SELECT dst, src FROM ed
@@ -1610,22 +1578,15 @@ def kcore_sql(
     """
 
 
-def bfs_hops_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-    seed_mod: int = 50,
-    rounds: int = 3,
-) -> str:
+def bfs_hops_sql(seed_mod: int = 50, rounds: int = 3) -> str:
     """Twin of q190: multi-source BFS hop distance over the MinHash
     near-dup graph from the seed set (doc_id % seed_mod = 0), the
     fixed rounds unrolled — each round relaxes dist(dst) against
     min(dist(src)) + 1 over the symmetric edge set."""
     parts = [
-        _minhash_pairs_core(k, num_hashes, bands, threshold),
+        _minhash_pairs_core(),
         f"""ed AS (
-      SELECT id_a AS src, id_b AS dst FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a AS src, id_b AS dst FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     sym AS (
       SELECT src, dst FROM ed UNION ALL SELECT dst, src FROM ed
@@ -1660,9 +1621,7 @@ def bfs_hops_sql(
     """
 
 
-def behavior_near_dups_sql(
-    k: int = 5, num_hashes: int = 32, bands: int = 16, threshold: float = 0.0625
-) -> str:
+def behavior_near_dups_sql() -> str:
     """Twin of q225: MinHash near-dup USERS over their event-type
     sequences. A leading CTE named ``documents`` (user_id -> doc_id,
     ordered event-type sequence -> text) shadows the documents view, so
@@ -1674,9 +1633,9 @@ def behavior_near_dups_sql(
                AS text
       FROM events GROUP BY user_id
     ),
-    {_minhash_pairs_core(k, num_hashes, bands, threshold)}
+    {_minhash_pairs_core(5)}
     SELECT id_a AS user_a, id_b AS user_b, est_jaccard
-    FROM pairs WHERE est_jaccard >= {threshold}
+    FROM pairs WHERE est_jaccard >= 0.0625
     ORDER BY id_a, id_b
     """
 
@@ -1729,13 +1688,7 @@ def knn_label_noise_sql(seed: int = 7, k: int = 5) -> str:
     """
 
 
-def split_leakage_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-    seed: int = 31,
-) -> str:
+def split_leakage_sql(seed: int = 31) -> str:
     """Twin of q227: near-dup pairs straddling a hash train/test split."""
     (a, b) = _hash_params(1, seed)[0]
     m = (1 << 31) - 1
@@ -1743,9 +1696,9 @@ def split_leakage_sql(
         f"(({a} * (((doc_id % {m}) + {m}) % {m}) + {b}) % {m}) % 10"
     )
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, threshold)},
+    WITH {_minhash_pairs_core()},
     pos AS (
-      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     s AS (
       SELECT doc_id,
@@ -1769,13 +1722,7 @@ def split_leakage_sql(
     """
 
 
-def curation_funnel_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-    q_min: str = "0.7",
-) -> str:
+def curation_funnel_sql(q_min: str = "0.7") -> str:
     """Twin of q231: the end-to-end curation funnel — quality gate,
     exact-dedup canonicals, pairwise keep-min near-dup drop, and the
     q193 mixture quota — one stage-count manifest per language."""
@@ -1805,10 +1752,10 @@ def curation_funnel_sql(
         FROM passed
       ) WHERE rn = 1
     ),
-    {_minhash_pairs_core(k, num_hashes, bands, threshold, src="canon")},
+    {_minhash_pairs_core(src="canon")},
     dropped AS (
       SELECT DISTINCT id_b AS doc_id FROM pairs
-      WHERE est_jaccard >= {threshold}
+      WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     kept AS (
       SELECT c.lang, c.doc_id FROM canon c
@@ -1848,13 +1795,7 @@ def curation_funnel_sql(
     """
 
 
-def component_split_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-    seed: int = 31,
-) -> str:
+def component_split_sql(seed: int = 31) -> str:
     """Twin of q258: GROUP-AWARE train/test split — the fix q227's
     leakage measurement motivates. Near-dup pairs close into connected
     components (the q66 recursive-CTE fixpoint), every document splits
@@ -1866,9 +1807,9 @@ def component_split_sql(
     h1 = f"(({a1} * ((comp % {m} + {m}) % {m}) + {b1}) % {m})"
     h2 = f"(({a2} * {h1} + {b2}) % {m})"
     return f"""
-    WITH RECURSIVE {_minhash_pairs_core(k, num_hashes, bands, threshold)},
+    WITH RECURSIVE {_minhash_pairs_core()},
     pos AS (
-      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     sym AS (
       SELECT id_a AS src, id_b AS dst FROM pos
@@ -2014,19 +1955,14 @@ def gate_agreement_sql(q_min: str = "0.7") -> str:
     """
 
 
-def quality_dup_association_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    threshold: float = 0.4,
-) -> str:
+def quality_dup_association_sql() -> str:
     """Twin of q263: per quality decile, the NEAR-duplicate membership
     rate (docs appearing in any MinHash pair) and its lift over the
     corpus rate — lift NULL-guarded for dup-free corpora."""
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, threshold)},
+    WITH {_minhash_pairs_core()},
     pos AS (
-      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     dup AS (
       SELECT DISTINCT doc_id FROM (
@@ -2500,9 +2436,7 @@ def ks_drift_sql(n_buckets: int = 50, width: int = 100) -> str:
     """
 
 
-def dedup_threshold_sweep_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16, base: float = 0.25
-) -> str:
+def dedup_threshold_sweep_sql() -> str:
     """Twin of q272: near-dup pair volume and affected-doc counts at a
     grid of Jaccard cuts, all read off ONE banded MinHash pass (q38's
     machinery at a low base threshold). Estimates are exact dyadic
@@ -2510,17 +2444,17 @@ def dedup_threshold_sweep_sql(
     engines."""
     cuts = "[8, 12, 16, 20, 24, 28]"
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, base)},
+    WITH {_minhash_pairs_core()},
     kept AS (
       SELECT id_a, id_b, est_jaccard FROM pairs
-      WHERE est_jaccard >= {base}
+      WHERE est_jaccard >= 0.25
     ),
     grid AS (SELECT unnest({cuts}) AS cut),
     pt AS (
       SELECT g.cut, kp.id_a, kp.id_b
       FROM kept kp JOIN grid g
         ON kp.est_jaccard >= CAST(g.cut AS DOUBLE)
-                               / CAST({num_hashes} AS DOUBLE)
+                               / CAST({MINHASH_NUM_HASHES} AS DOUBLE)
     ),
     np AS (
       SELECT cut, CAST(COUNT(*) AS BIGINT) AS n_pairs FROM pt GROUP BY cut
@@ -2533,7 +2467,7 @@ def dedup_threshold_sweep_sql(
       ) GROUP BY cut
     )
     SELECT CAST(np.cut AS BIGINT) AS cut,
-           CAST(np.cut AS DOUBLE) / CAST({num_hashes} AS DOUBLE)
+           CAST(np.cut AS DOUBLE) / CAST({MINHASH_NUM_HASHES} AS DOUBLE)
              AS threshold,
            np.n_pairs, nd.n_docs
     FROM np JOIN nd ON np.cut = nd.cut
@@ -2541,17 +2475,15 @@ def dedup_threshold_sweep_sql(
     """
 
 
-def source_neardup_matrix_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16, threshold: float = 0.4
-) -> str:
+def source_neardup_matrix_sql() -> str:
     """Twin of q273: the source-to-source near-duplication flow matrix
     (q38's banded pairs, each mapped to its unordered source pair) with
     expected-count lift. Counts are exact integers; lift divides exact
     doubles in pinned order."""
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, threshold)},
+    WITH {_minhash_pairs_core()},
     kept AS (
-      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a, id_b FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     sp AS (
       SELECT least(da.source, db.source) AS src_lo,
@@ -2806,10 +2738,6 @@ def lsh_multiprobe_sweep_sql(
 
 
 def dedup_threshold_decision_sql(
-    k: int = 3,
-    num_hashes: int = 32,
-    bands: int = 16,
-    base: float = 0.25,
     budget_num: int = 4,
     budget_den: int = 5,
 ) -> str:
@@ -2831,7 +2759,7 @@ def dedup_threshold_decision_sql(
         "x -> x.sq)), (acc, x) -> acc + x)"
     )
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, base)},
+    WITH {_minhash_pairs_core()},
     d AS (
       SELECT doc_id, source,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_toks
@@ -2843,8 +2771,8 @@ def dedup_threshold_decision_sql(
       SELECT g.cut, p.id_b
       FROM pairs p JOIN grid g
         ON p.est_jaccard >= CAST(g.cut AS DOUBLE)
-                              / CAST({num_hashes} AS DOUBLE)
-      WHERE p.est_jaccard >= {base}
+                              / CAST({MINHASH_NUM_HASHES} AS DOUBLE)
+      WHERE p.est_jaccard >= 0.25
     ),
     dropped AS (SELECT DISTINCT cut, id_b AS doc_id FROM pt),
     dtok AS (
@@ -2899,7 +2827,7 @@ def dedup_threshold_decision_sql(
            sqrt(CAST(s.tok_raw AS DOUBLE)) / t2.tot_raw AS w_raw,
            sqrt(CAST(s.tok_kept AS DOUBLE)) / t2.tot_kept AS w_kept,
            CAST(chosen.cut AS BIGINT) AS chosen_cut,
-           CAST(chosen.cut AS DOUBLE) / CAST({num_hashes} AS DOUBLE)
+           CAST(chosen.cut AS DOUBLE) / CAST({MINHASH_NUM_HASHES} AS DOUBLE)
              AS threshold,
            budget.b AS budget_tokens,
            ksum.kept_total AS kept_tokens_total
@@ -3272,17 +3200,14 @@ def bpe_merge_pairs_sql(topk: int = 20) -> str:
     """
 
 
-def source_datasheet_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16,
-    threshold: float = 0.4,
-) -> str:
+def source_datasheet_sql() -> str:
     """Twin of q293: the per-source dataset DATASHEET — one row per
     source composing the verified stage metrics: doc/token counts,
     quantized mean quality (q280 staging), Gini-Simpson language
     diversity (q213 staging), exact-dup droppable docs (q231's sha256
     canon rule), and near-dup involved docs (banded MinHash pairs)."""
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, threshold)},
+    WITH {_minhash_pairs_core()},
     base AS (
       SELECT doc_id, source, lang,
              CAST(round({_QUALITY_SQL} * 1.0e6) AS BIGINT) AS qk,
@@ -3319,9 +3244,9 @@ def source_datasheet_sql(
       FROM ranked GROUP BY source
     ),
     nd_ids AS (
-      SELECT id_a AS id FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_a AS id FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
       UNION
-      SELECT id_b FROM pairs WHERE est_jaccard >= {threshold}
+      SELECT id_b FROM pairs WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     nd AS (
       SELECT b.source, CAST(COUNT(*) AS BIGINT) AS n_neardup_docs
@@ -3448,9 +3373,7 @@ def adaptive_plan_report_sql(dim: int = 64) -> str:
     """
 
 
-def text_embedding_alignment_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16,
-) -> str:
+def text_embedding_alignment_sql() -> str:
     """Twin of q296: token-space vs vector-space similarity alignment.
     Every banded MinHash candidate pair (threshold 0 — the full
     equi-join candidate set) whose BOTH endpoints carry an embedding
@@ -3460,7 +3383,7 @@ def text_embedding_alignment_sql(
     (matches/4), so the bucketing floor is bit-identical on both
     engines."""
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, 0.0)},
+    WITH {_minhash_pairs_core()},
     ev AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
              sqrt({_dot("CAST(embedding AS DOUBLE[])",
@@ -3477,13 +3400,13 @@ def text_embedding_alignment_sql(
     bkt AS (
       SELECT CAST(least(CAST(floor(est_jaccard * 8.0) AS BIGINT), 7)
                   AS BIGINT) AS est_octile,
-             CAST(round(est_jaccard * {num_hashes}) AS BIGINT) AS mk,
+             CAST(round(est_jaccard * {MINHASH_NUM_HASHES}) AS BIGINT) AS mk,
              cos
       FROM pe
     )
     SELECT est_octile,
            CAST(COUNT(*) AS BIGINT) AS n_pairs,
-           CAST(SUM(mk) AS DOUBLE) / {float(num_hashes)}
+           CAST(SUM(mk) AS DOUBLE) / {float(MINHASH_NUM_HASHES)}
              / CAST(COUNT(*) AS DOUBLE) AS mean_est_jaccard,
            CAST(SUM(CAST(round(cos * 1.0e9) AS DECIMAL(38,0))) AS DOUBLE)
              / 1.0e9 / CAST(COUNT(*) AS DOUBLE) AS mean_cos
@@ -3572,10 +3495,7 @@ def bucket_width_audit_sql(seed: int = 7) -> str:
     """
 
 
-def token_yield_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16,
-    threshold: float = 0.4,
-) -> str:
+def token_yield_sql() -> str:
     """Twin of q300: effective-token-yield forecast per source — total
     tokens, tokens lost to exact dedup (non-canonical docs, q231's
     sha256 min-doc_id rule), tokens lost to near-dup drop (banded pairs
@@ -3598,10 +3518,10 @@ def token_yield_sql(
     canon AS (
       SELECT doc_id, source, text, toks FROM ranked WHERE rn = 1
     ),
-    {_minhash_pairs_core(k, num_hashes, bands, threshold, src="canon")},
+    {_minhash_pairs_core(src="canon")},
     dropped AS (
       SELECT DISTINCT id_b AS doc_id FROM pairs
-      WHERE est_jaccard >= {threshold}
+      WHERE est_jaccard >= {MINHASH_THRESHOLD}
     ),
     tagged AS (
       SELECT r.source, r.toks,
@@ -5232,10 +5152,7 @@ def df_cap_recall_sweep_sql(
     """
 
 
-def neardup_edit_distance_sql(
-    k: int = 3, num_hashes: int = 32, bands: int = 16,
-    threshold: float = 0.4,
-) -> str:
+def neardup_edit_distance_sql() -> str:
     """Twin of q313: exact edit-distance verification of the q38
     MinHash candidate pairs — per (est-Jaccard octile x normalized-
     edit-distance decile), the pair count. UNITS: DuckDB's levenshtein
@@ -5244,7 +5161,7 @@ def neardup_edit_distance_sql(
     corpus would need a transliteration stage or a code-point UDF on
     the oracle side, and the Spark side is authoritative)."""
     return f"""
-    WITH {_minhash_pairs_core(k, num_hashes, bands, threshold)},
+    WITH {_minhash_pairs_core()},
     pe AS (
       SELECT p.est_jaccard,
              CAST(levenshtein(da.text, db.text) AS BIGINT) AS lev,
@@ -5252,7 +5169,7 @@ def neardup_edit_distance_sql(
       FROM pairs p
       JOIN documents da ON da.doc_id = p.id_a
       JOIN documents db ON db.doc_id = p.id_b
-      WHERE p.est_jaccard >= {threshold}
+      WHERE p.est_jaccard >= {MINHASH_THRESHOLD}
     ),
     edgrid AS (
       SELECT LEAST(CAST(FLOOR(est_jaccard * 8) AS BIGINT), 7)

@@ -285,16 +285,6 @@ def test_interval_join_left_keeps_unmatched_points(spark):
     assert got == {1: 10, 2: None}  # unmatched point survives null-padded
 
 
-def test_minhash_rejects_bad_band_config(spark):
-    import pytest
-
-    from kp_data_pipelines_spark.operators.similarity import minhash_near_dups
-
-    df = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
-    with pytest.raises(ValueError, match="bands"):
-        minhash_near_dups(df, "doc_id", "text", num_hashes=32, bands=5)
-
-
 def test_embedding_near_dups_empty_input(spark):
     from kp_data_pipelines_spark.operators.similarity import embedding_near_dup_pairs
 

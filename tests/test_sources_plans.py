@@ -103,6 +103,20 @@ def test_latest_snapshot(tmp_path):
     assert latest_snapshot(str(tmp_path / "nope_*.csv")) is None
 
 
+def test_read_binary_dir(spark, tmp_path):
+    from kp_data_pipelines_spark.sources.readers import read_binary_dir
+
+    files = {"a.bin": b"\x00\x01payload", "b.bin": b"second file"}
+    for name, data in files.items():
+        (tmp_path / name).write_bytes(data)
+    rows = read_binary_dir(spark, str(tmp_path / "*.bin")).collect()
+    got = {
+        os.path.basename(r["path"]): (bytes(r["content"]), r["length"])
+        for r in rows
+    }
+    assert got == {name: (data, len(data)) for name, data in files.items()}
+
+
 def test_pipeline_graph(spark):
     p = Pipeline(spark)
     p.source("orders", lambda s: read_table(s, SF_DIR, "orders"))

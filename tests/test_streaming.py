@@ -1001,3 +1001,23 @@ def test_cdc_ingest_stream_rejects_out_of_order_backlog(
             state_dir=str(tmp_path / "state"),
             checkpoint_dir=str(tmp_path / "ckpt"),
         )
+
+
+def test_ephemeral_growing_stores_leave_no_order_dir(
+    spark, tmp_path, monkeypatch
+):
+    """The catalog's ephemeral growing stores keep the order guard's
+    ``<state_dir>__order`` markers inside the ephemeral dir that the
+    exit-time cleanup removes, never beside it in the temp dir."""
+    import os
+    import tempfile
+
+    from kp_data_pipelines_spark.catalog import QUERIES
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in (
+        "q288_growing_store_cdc_ingest",
+        "q251_streaming_training_build",
+    ):
+        assert QUERIES[name](spark, SF_DIR).count() > 0
+    assert not [e for e in os.listdir(tmp_path) if e.endswith("__order")]

@@ -4,13 +4,16 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
+from kp_data_pipelines_spark import oracles
 from kp_data_pipelines_spark.operators.similarity import (
     cosine_topk,
     lsh_bucket_cosine_topk,
     minhash_near_dups,
     ngram_jaccard_pairs,
+    simhash_hamming_pairs,
     with_simhash,
 )
 from kp_data_pipelines_spark.operators.textops import (
@@ -100,11 +103,50 @@ def test_minhash_finds_near_duplicate(spark):
     near = base.replace("today", "tonight")
     other = "completely different words in this unrelated document about spark engines"
     df = spark.createDataFrame([(1, base), (2, near), (3, other)], ["doc_id", "text"])
-    pairs = minhash_near_dups(df, "doc_id", "text", shingle_k=3, num_hashes=32, bands=16,
+    pairs = minhash_near_dups(df, "doc_id", "text", shingle_k=3,
                               jaccard_threshold=0.3)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got
     assert all(p == (1, 2) for p in got)
+
+
+@pytest.mark.parametrize(
+    "operator, twin",
+    [
+        (
+            lambda docs: minhash_near_dups(docs, "doc_id", "text"),
+            oracles.minhash_near_dups_sql,
+        ),
+        (
+            lambda docs: with_simhash(docs, "text").select("doc_id", "simhash"),
+            oracles.simhash_sql,
+        ),
+        (
+            lambda docs: simhash_hamming_pairs(docs, "doc_id", "text"),
+            oracles.simhash_hamming_pairs_sql,
+        ),
+    ],
+    ids=["minhash_near_dups", "with_simhash", "simhash_hamming_pairs"],
+)
+def test_dedup_defaults_match_twins(spark, operator, twin):
+    """The near-dup operators at their own defaults compute exactly what
+    their DuckDB twins compute at theirs: one configuration, two engines."""
+    import duckdb
+
+    from conftest import SF_DIR
+    from kp_data_pipelines_spark.sources.readers import read_table
+    from tools.parity import value_hash
+
+    docs = read_table(spark, SF_DIR, "documents")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{SF_DIR}/documents.parquet')"
+    )
+    got = operator(docs).toPandas()
+    want = con.sql(twin()).df()
+    assert len(got) == len(want) > 0
+    assert value_hash(got) == value_hash(want)
 
 
 def test_ngram_jaccard_exact(spark):
@@ -353,8 +395,8 @@ def test_minhash_incremental_flags_known_dup(spark):
     out = {
         r["doc_id"]: r
         for r in minhash_incremental(
-            new, corpus, "doc_id", "text", shingle_k=2, num_hashes=32,
-            bands=16, jaccard_threshold=0.5,
+            new, corpus, "doc_id", "text", shingle_k=2,
+            jaccard_threshold=0.5,
         ).collect()
     }
     assert out[10]["dup_of"] == 1 and out[10]["keep"] is False

@@ -65,9 +65,9 @@ def main() -> int:
             quality_score("text").alias("q"),
         ).filter(F.col("q") > 0.5),
     )
-    # Shingle hashing: the xxhash64 path is the 100 TB default; the
-    # portable polynomial path exists for oracle-checked queries
-    # (interpreted per-char folds — measure the gap, SCALE.md §11).
+    # Shingle hashing, both gram hashes: the polynomial kernel is the
+    # one MinHash and SimHash use (the 100 TB near-dup path); xxhash64
+    # stays for q41/q68's short documents (SCALE.md §11).
     from kp_data_pipelines_spark.operators.textops import (
         with_hashed_shingles,
         with_poly_shingles,
