@@ -99,10 +99,10 @@ def main() -> None:
         # doesn't accumulate across the 250x2-run session — the round-4
         # q180 9.0s-in-bench vs 4.8s-isolated regression. Periodic JVM GC
         # lets the ContextCleaner also reap dead broadcasts/shuffles.
-        # blocking=True: async unpersist (the default) would overlap the
+        # The release blocks: an async unpersist would overlap the
         # NEXT query's timed region and inflate it — measured +7% across
         # the shared-250 subset (round-6 bisect, SCALE.md §15).
-        release_pinned_rdds(spark, blocking=True)
+        release_pinned_rdds(spark)
         if (i + 1) % 50 == 0:
             spark.sparkContext._jvm.System.gc()
 

@@ -73,13 +73,11 @@ ORACLE: dict[str, str] = {}
 TAGS: dict[str, set[str]] = {}
 
 
-def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
+def register(name: str, oracle: str | None = None):
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = fn
         if oracle is not None:
             ORACLE[name] = oracle
-        if tags:
-            TAGS.setdefault(name, set()).update(tags)
         return fn
 
     return deco
@@ -7366,11 +7364,11 @@ def q173_incremental_mv_merge(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _morton_sql(x: str, y: str, bits: int = 16) -> str:
+def _morton_sql(x: str, y: str) -> str:
     """Bit-interleave SQL identical on Spark and DuckDB: BIGINT
     shifts/ANDs are exact integer ops on both engines."""
     terms = []
-    for i in range(bits):
+    for i in range(16):
         terms.append(f"((({x} >> {i}) & 1) << {2 * i})")
         terms.append(f"((({y} >> {i}) & 1) << {2 * i + 1})")
     return " + ".join(terms)
@@ -7791,10 +7789,11 @@ def q180_containment_join(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _kmv_sql(k: int = 64, seed: int = 29) -> str:
+def _kmv_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a1, b1), (a2, b2) = _hash_params(2, seed)
+    k = 64
+    (a1, b1), (a2, b2) = _hash_params(2, 29)
     m = _MERSENNE
     return f"""
     WITH h AS (
@@ -8179,10 +8178,11 @@ def q185_pareto_frontier(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _target_encoding_sql(alpha: int = 20, seed: int = 31) -> str:
+def _target_encoding_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a, b) = _hash_params(1, seed)[0]
+    alpha = 20
+    (a, b) = _hash_params(1, 31)[0]
     m = _MERSENNE
     split = f"(({a} * (((o_orderkey % {m}) + {m}) % {m}) + {b}) % {m}) % 10"
     return f"""
@@ -8287,7 +8287,8 @@ def q186_target_encoding(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _ewma_sql(depth: int = 8) -> str:
+def _ewma_sql() -> str:
+    depth = 8
     terms = " + ".join(
         f"COALESCE(LAG(qv, {j}) OVER w, CAST(0 AS BIGINT)) * {1 << (depth - 1 - j)}"
         for j in range(depth)
@@ -8511,12 +8512,12 @@ def q188_mad_outliers(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _hrw_rebalance_sql(
-    old_n: int = 16, new_n: int = 24, seed: int = 37
-) -> str:
+def _hrw_rebalance_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a1, b1), (a2, b2) = _hash_params(2, seed)
+    old_n = 16
+    new_n = 24
+    (a1, b1), (a2, b2) = _hash_params(2, 37)
     m = _MERSENNE
     return f"""
     WITH u AS (
@@ -9222,11 +9223,12 @@ def q197_scd2_build(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _mmr_sql(k_sel: int = 5, dim: int = 64) -> str:
+def _mmr_sql() -> str:
+    k_sel = 5
     def fold(a: str, b: str) -> str:
         return (
             f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(range(1, {dim + 1}), i -> {a}[i] * {b}[i])), "
+            f"list_transform(range(1, 65), i -> {a}[i] * {b}[i])), "
             f"(acc, x) -> acc + x)"
         )
 
@@ -10100,10 +10102,10 @@ def q206_conformal_calibration(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _ipw_sql(seed: int = 41) -> str:
+def _ipw_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a, b) = _hash_params(1, seed)[0]
+    (a, b) = _hash_params(1, 41)[0]
     m = _MERSENNE
     return f"""
     WITH rates AS (
@@ -10716,11 +10718,11 @@ def q213_gini_diversity(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("source")
 
 
-def _hll_merge_sql(seed: int = 23, cut_day: int = 19738) -> str:
-    hv = oracles._hll_hash62_sql("user_id", "user_id", seed)
+def _hll_merge_sql() -> str:
+    hv = oracles._hll_hash62_sql("user_id", "user_id", 23)
     return f"""
     WITH h AS (
-      SELECT CASE WHEN epoch_us(ts) // 86400000000 < {cut_day}
+      SELECT CASE WHEN epoch_us(ts) // 86400000000 < 19738
                   THEN 0 ELSE 1 END AS part,
              {hv} AS hv
       FROM events
@@ -10954,8 +10956,9 @@ def q216_period_over_period(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("event_type", "week_idx")
 
 
-def _sliding_hll_sql(seed: int = 23, win: int = 7) -> str:
-    hv = oracles._hll_hash62_sql("user_id", "user_id", seed)
+def _sliding_hll_sql() -> str:
+    win = 7
+    hv = oracles._hll_hash62_sql("user_id", "user_id", 23)
     pow_tbl = "[" + ", ".join(repr(2.0 ** -i) for i in range(58)) + "]"
     alpha_m2 = repr((0.7213 / (1 + 1.079 / 64)) * 4096.0)
     return f"""
@@ -11150,14 +11153,15 @@ def q218_funnel_timeout_steps(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _negative_sampling_sql(k: int = 4, seed: int = 43) -> str:
+def _negative_sampling_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import (
         _MERSENNE,
         MINHASH_THRESHOLD,
         _hash_params,
     )
 
-    (a, b) = _hash_params(1, seed)[0]
+    k = 4
+    (a, b) = _hash_params(1, 43)[0]
     m = _MERSENNE
     return f"""
     WITH {oracles._minhash_pairs_core()},
@@ -11264,10 +11268,11 @@ def q219_negative_sampling(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("anchor", "slot", "neg_id")
 
 
-def _half_sample_sql(n_rep: int = 20, seed: int = 47) -> str:
+def _half_sample_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a, b) = _hash_params(1, seed)[0]
+    n_rep = 20
+    (a, b) = _hash_params(1, 47)[0]
     m = _MERSENNE
     return f"""
     WITH e AS (
@@ -11404,19 +11409,15 @@ def q220_half_sample_ci(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _rrf_sql(
-    terms: tuple = ("hash", "merge", "vector"),
-    c: int = 60,
-    pool: int = 100,
-    topk: int = 20,
-    dim: int = 64,
-) -> str:
-    terms_list = ", ".join(f"'{t}'" for t in terms)
+def _rrf_sql() -> str:
+    c = 60
+    pool = 100
+    terms_list = ", ".join(f"'{t}'" for t in ("hash", "merge", "vector"))
 
     def fold(a: str, b: str) -> str:
         return (
             f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_transform(range(1, {dim + 1}), i -> {a}[i] * {b}[i])), "
+            f"list_transform(range(1, 65), i -> {a}[i] * {b}[i])), "
             f"(acc, x) -> acc + x)"
         )
 
@@ -11490,7 +11491,7 @@ def _rrf_sql(
              + COALESCE(1.0 / CAST({c} + s.r AS DOUBLE), CAST(0.0 AS DOUBLE))
              AS rrf
     FROM lex l FULL OUTER JOIN sem s ON s.doc_id = l.doc_id
-    ORDER BY rrf DESC, doc_id LIMIT {topk}
+    ORDER BY rrf DESC, doc_id LIMIT 20
     """
 
 
@@ -11598,10 +11599,12 @@ def q221_reciprocal_rank_fusion(spark: SparkSession, sf: str) -> DataFrame:
     return fused.orderBy(F.desc("rrf"), "doc_id").limit(topk)
 
 
-def _spatial_join_sql(cell: int = 1000, radius: int = 800, seed: int = 53) -> str:
+def _spatial_join_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a1, b1), (a2, b2) = _hash_params(2, seed)
+    cell = 1000
+    radius = 800
+    (a1, b1), (a2, b2) = _hash_params(2, 53)
     m = _MERSENNE
     return f"""
     WITH pts AS (
@@ -12073,8 +12076,8 @@ def q227_split_leakage_audit(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _sketch_algebra_sql(seed: int = 23) -> str:
-    hv = oracles._hll_hash62_sql("user_id", "user_id", seed)
+def _sketch_algebra_sql() -> str:
+    hv = oracles._hll_hash62_sql("user_id", "user_id", 23)
     pow_tbl = "[" + ", ".join(repr(2.0 ** -i) for i in range(58)) + "]"
     alpha_m2 = repr((0.7213 / (1 + 1.079 / 64)) * 4096.0)
     est = (
@@ -12321,10 +12324,11 @@ def q229_burst_detection(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _antientropy_sql(seg: int = 1000, seed: int = 59) -> str:
+def _antientropy_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a, b) = _hash_params(1, seed)[0]
+    seg = 1000
+    (a, b) = _hash_params(1, 59)[0]
     m = _MERSENNE
     rh = (
         f"(({a} * (((o_orderkey * 31 + CAST(round(o_totalprice * 100) AS BIGINT)"
@@ -12588,15 +12592,15 @@ def q232_weighted_percentile(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _partition_skew_sql(n_parts: int = 32, seed: int = 61) -> str:
+def _partition_skew_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a, b) = _hash_params(1, seed)[0]
+    (a, b) = _hash_params(1, 61)[0]
     m = _MERSENNE
     return f"""
     WITH p AS (
       SELECT (({a} * (((user_id % {m}) + {m}) % {m}) + {b}) % {m})
-               % {n_parts} AS part,
+               % 32 AS part,
              user_id
       FROM events
     ),
@@ -13148,10 +13152,10 @@ def q236_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _stratified_split_sql(seed: int = 67) -> str:
+def _stratified_split_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a, b) = _hash_params(1, seed)[0]
+    (a, b) = _hash_params(1, 67)[0]
     m = _MERSENNE
     return f"""
     WITH h AS (
@@ -13303,11 +13307,11 @@ def q238_asof_join(spark: SparkSession, sf: str) -> DataFrame:
     ).orderBy("user_id", "purchase_id")
 
 
-def _sequence_packing_sql(
-    budget: int = 4096, shards: int = 32, seed: int = 71
-) -> str:
+def _sequence_packing_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
+    budget = 4096
+    seed = 71
     # TWO LCG rounds: dense ids through one linear map mod M mod 32 keep
     # arithmetic structure (only 8 of 32 shards hit); the second round
     # breaks it (13-19 docs/shard at n=500, near-uniform at 50k).
@@ -13319,7 +13323,7 @@ def _sequence_packing_sql(
       SELECT doc_id,
              CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
              (({a2} * (({a1} * (((doc_id % {m}) + {m}) % {m}) + {b1}) % {m})
-               + {b2}) % {m}) % {shards} AS shard
+               + {b2}) % {m}) % 32 AS shard
       FROM documents
     ),
     c AS (
@@ -13626,10 +13630,10 @@ def q242_int8_quantization_error(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _stratified_sample_sql(k: int = 20, seed: int = 73) -> str:
+def _stratified_sample_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a, b) = _hash_params(1, seed)[0]
+    (a, b) = _hash_params(1, 73)[0]
     m = _MERSENNE
     return f"""
     WITH h AS (
@@ -13644,7 +13648,7 @@ def _stratified_sample_sql(k: int = 20, seed: int = 73) -> str:
       FROM h
     )
     SELECT lang, CAST(rk AS BIGINT) AS rk, doc_id
-    FROM r WHERE rk <= {k}
+    FROM r WHERE rk <= 20
     ORDER BY lang, rk
     """
 
@@ -14152,10 +14156,11 @@ def q249_lag_features(spark: SparkSession, sf: str) -> DataFrame:
 
 
 
-def _training_build_sql(seed: int = 67, budget: int = 4096) -> str:
+def _training_build_sql() -> str:
     from kp_data_pipelines_spark.operators.similarity import _MERSENNE, _hash_params
 
-    (a, b) = _hash_params(1, seed)[0]
+    budget = 4096
+    (a, b) = _hash_params(1, 67)[0]
     m = _MERSENNE
     return f"""
     WITH d AS (
@@ -14352,14 +14357,10 @@ def _ephemeral_store(prefix: str) -> str:
     """A growing store's ``state_dir`` one level inside a fresh ephemeral
     dir: the store's order guard keeps its markers BESIDE the store
     (``<state_dir>__order``), so the exit-time removal of the parent
-    dir reclaims both. The store dir is created empty: the first
-    trigger then reads it as an empty parquet scan, where a missing
-    path would build its empty frame from a Python RDD."""
+    dir reclaims both."""
     from kp_data_pipelines_spark.streaming.events import _ephemeral_dir
 
-    store = os.path.join(_ephemeral_dir(prefix), "store")
-    os.mkdir(store)
-    return store
+    return os.path.join(_ephemeral_dir(prefix), "store")
 
 
 @register("q251_streaming_training_build", _training_build_sql())
@@ -18328,9 +18329,7 @@ def q301_media_phash(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
-    "q302_media_near_dups", oracles.media_near_dup_pairs_sql(max_hamming=4)
-)
+@register("q302_media_near_dups", oracles.media_near_dup_pairs_sql())
 def q302_media_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     """MEDIA near-duplicate pairs: all payload pairs within Hamming
     distance 4 of their dHash fingerprints — perceptual dedup for the
@@ -18356,7 +18355,7 @@ def q302_media_near_dups(spark: SparkSession, sf: str) -> DataFrame:
 
 @register(
     "q303_cross_modal_alignment",
-    oracles.media_embedding_alignment_sql(max_hamming=8),
+    oracles.media_embedding_alignment_sql(),
 )
 def q303_cross_modal_alignment(spark: SparkSession, sf: str) -> DataFrame:
     """CROSS-MODAL alignment audit (q296's shape with pixel-space
@@ -18564,7 +18563,7 @@ def q306_video_frame_overlap(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register("q307_dup_span_excision", oracles.dup_span_excision_sql(k=8))
+@register("q307_dup_span_excision", oracles.dup_span_excision_sql())
 def q307_dup_span_excision(spark: SparkSession, sf: str) -> DataFrame:
     """EXACT duplicated-span excision ledger — q260's diagnostic turned
     into the transformation it motivates (the ExactSubstr dedup of Lee
@@ -18742,9 +18741,7 @@ def q308_audio_constellation(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
-    "q309_media_dedup_ledger", oracles.media_dedup_ledger_sql(max_hamming=4)
-)
+@register("q309_media_dedup_ledger", oracles.media_dedup_ledger_sql())
 def q309_media_dedup_ledger(spark: SparkSession, sf: str) -> DataFrame:
     """Perceptual media dedup LIFECYCLE closed end-to-end — the q146
     keep-policy ledger for the multimodal store: q302's Hamming<=4
@@ -19127,9 +19124,7 @@ def q315_bpe_batched_trainer(spark: SparkSession, sf: str) -> DataFrame:
     return train_bpe_batched(spark, docs, "text")
 
 
-@register(
-    "q316_span_excision_apply", oracles.dup_span_excision_apply_sql(k=8)
-)
+@register("q316_span_excision_apply", oracles.dup_span_excision_apply_sql())
 def q316_span_excision_apply(spark: SparkSession, sf: str) -> DataFrame:
     """The APPLY step q307 prices — emit the SCRUBBED corpus (the Lee
     et al. 2021 ExactSubstr pipeline's actual output): per document,

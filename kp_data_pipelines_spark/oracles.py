@@ -58,10 +58,10 @@ def _dot(v: str, w: str) -> str:
     )
 
 
-def _tok_hashes(text: str) -> str:
+def _tok_hashes() -> str:
     """textops.poly_token_hashes: per-token char fold, base 31 mod M31."""
     return (
-        f"list_transform(regexp_split_to_array(trim(lower({text})), '\\s+'), "
+        f"list_transform(regexp_split_to_array(trim(lower(text)), '\\s+'), "
         f"t -> list_reduce(list_prepend(CAST(0 AS BIGINT), "
         f"list_transform(range(1, length(t)+1), "
         f"i -> CAST(ord(substr(t, i, 1)) AS BIGINT))), "
@@ -77,8 +77,10 @@ def _gram_fold(th: str, base: int, k: int) -> str:
     )
 
 
-def _grams(th: str, k: int, bits64: bool) -> str:
-    """textops.with_poly_shingles over a token-hash array column."""
+def _grams(k: int, bits64: bool) -> str:
+    """textops.with_poly_shingles over the token-hash array column
+    ``th``."""
+    th = "th"
     idx = f"range(1, greatest(len({th}) - {k - 1}, 1) + 1)"
     if bits64:
         body = (
@@ -90,8 +92,8 @@ def _grams(th: str, k: int, bits64: bool) -> str:
     return f"list_transform({idx}, i -> {body})"
 
 
-def _lit_list(vals, cast: str) -> str:
-    return "[" + ", ".join(f"CAST({v} AS {cast})" for v in vals) + "]"
+def _lit_list(vals) -> str:
+    return "[" + ", ".join(f"CAST({v} AS DOUBLE)" for v in vals) + "]"
 
 
 def _minhash_sig_cte(
@@ -113,10 +115,10 @@ def _minhash_sig_cte(
     )
     return f"""
     th AS (
-      SELECT doc_id{extra_cols}, {_tok_hashes("text")} AS th FROM {src}
+      SELECT doc_id{extra_cols}, {_tok_hashes()} AS th FROM {src}
     ),
     g AS (
-      SELECT doc_id{extra_cols}, list_distinct({_grams("th", k, False)}) AS grams
+      SELECT doc_id{extra_cols}, list_distinct({_grams(k, False)}) AS grams
       FROM th
     ),
     sig AS (
@@ -175,15 +177,15 @@ def minhash_near_dups_sql() -> str:
     """
 
 
-def _simhash_cte(k: int, table: str = "documents") -> str:
+def _simhash_cte() -> str:
     """CTEs -> ``fp(doc_id, simhash)`` — the per-bit majority vote of
     similarity.simhash64_from_hashes over portable 62-bit gram hashes."""
     return f"""
     th AS (
-      SELECT doc_id, {_tok_hashes("text")} AS th FROM {table}
+      SELECT doc_id, {_tok_hashes()} AS th FROM documents
     ),
     hs AS (
-      SELECT doc_id, {_grams("th", k, True)} AS hs FROM th
+      SELECT doc_id, {_grams(2, True)} AS hs FROM th
     ),
     fp AS (
       SELECT doc_id,
@@ -198,21 +200,21 @@ def _simhash_cte(k: int, table: str = "documents") -> str:
     )"""
 
 
-def simhash_sql(k: int = 2) -> str:
+def simhash_sql() -> str:
     """Twin of q39."""
-    return f"WITH {_simhash_cte(k)} SELECT doc_id, simhash FROM fp"
+    return f"WITH {_simhash_cte()} SELECT doc_id, simhash FROM fp"
 
 
-def simhash_hamming_pairs_sql(max_hamming: int = 3, k: int = 2) -> str:
+def simhash_hamming_pairs_sql() -> str:
     """Twin of q43. The Spark side's pigeonhole chunk banding is EXACT
     (any pair within Hamming d shares one of d+1 chunks), so the twin is
     simply all pairs within the radius."""
     return f"""
-    WITH {_simhash_cte(k)}
+    WITH {_simhash_cte()}
     SELECT a.doc_id AS id_a, b.doc_id AS id_b,
            CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
     FROM fp a JOIN fp b ON a.doc_id < b.doc_id
-    WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
+    WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
     """
 
 
@@ -250,12 +252,13 @@ _QUALITY_SQL = """round(0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000 THEN
                         THEN 1.0 ELSE 0.5 END), 6)"""
 
 
-def chunk_documents_sql(chunk_size: int = 32, overlap: int = 8) -> str:
+def chunk_documents_sql() -> str:
     """Twin of q144: same true-integer chunk-count formula (DuckDB ``//``
     mirroring Spark ``div`` — numerator is non-negative in that branch so
     floor==trunc on both engines) and the same clamped slice per chunk;
     chunk text is a plain string join, so the comparison is exact."""
-    stride = chunk_size - overlap
+    chunk_size = 32
+    stride = chunk_size - 8
     sl = f"toks[chunk_id*{stride}+1 : chunk_id*{stride}+{chunk_size}]"
     return f"""
     WITH t AS (
@@ -281,18 +284,13 @@ def chunk_documents_sql(chunk_size: int = 32, overlap: int = 8) -> str:
     """
 
 
-def bloom_contamination_sql(
-    shingle_k: int = 3,
-    n_bits: int = 4096,
-    n_hashes: int = 3,
-    seed: int = 29,
-    bench_source: str = "src0",
-) -> str:
+def bloom_contamination_sql() -> str:
     """Twin of q145: the benchmark bucket set and the all-hashes membership
     test are pure integer arithmetic over the portable gram hashes."""
-    params = _hash_params(n_hashes, seed)
+    bench_source = "src0"
+    params = _hash_params(3, 29)
     bexprs = [
-        f"(({a} * gram + {b}) % {_MOD}) % {n_bits}" for a, b in params
+        f"(({a} * gram + {b}) % {_MOD}) % 4096" for a, b in params
     ]
     bucket_list = "[" + ", ".join(bexprs) + "]"
     all_in = " AND ".join(
@@ -300,11 +298,11 @@ def bloom_contamination_sql(
     )
     return f"""
     WITH th AS (
-      SELECT doc_id, source, {_tok_hashes("text")} AS th FROM documents
+      SELECT doc_id, source, {_tok_hashes()} AS th FROM documents
     ),
     g AS (
       SELECT doc_id, source,
-             unnest(list_distinct({_grams("th", shingle_k, False)})) AS gram
+             unnest(list_distinct({_grams(3, False)})) AS gram
       FROM th
     ),
     bb AS (
@@ -365,13 +363,14 @@ def dedup_representative_sql() -> str:
     """
 
 
-def top_pc_sql(n_iter: int = 3) -> str:
+def top_pc_sql() -> str:
     """Twin of q149: power iteration unrolled into ``n_iter`` CTE rounds.
     Per round: per-row scalar s = v . x (sequential fold), per-dimension
     quantized-integer contribution sum (round(v_d * s * 1e6) — exact in
     BIGINT range), list rebuild ordered by dim, and normalization by the
     sequential-fold norm — every operation IEEE/IEEE-integer identical to
     the Spark path."""
+    n_iter = 3
     dim = EMBEDDING_DIM
     x0 = "[" + ", ".join(["CAST(0.125 AS DOUBLE)"] * dim) + "]"
     parts = [
@@ -412,10 +411,11 @@ def top_pc_sql(n_iter: int = 3) -> str:
     """
 
 
-def minhash_incremental_sql(new_source: str = "src19") -> str:
+def minhash_incremental_sql() -> str:
     """Twin of q147: the bipartite (new shard x existing corpus) variant
     of the q38 twin — band-slice-equality candidacy restricted to
     cross-side pairs, min matching corpus id per new doc."""
+    new_source = "src19"
     rpb = MINHASH_NUM_HASHES // MINHASH_BANDS
     band_eq = " OR ".join(
         f"n.sig[{i * rpb + 1}:{(i + 1) * rpb}] = c.sig[{i * rpb + 1}:{(i + 1) * rpb}]"
@@ -444,7 +444,7 @@ def minhash_incremental_sql(new_source: str = "src19") -> str:
     """
 
 
-def mixture_temperature_sql(tau_num: int = 1, tau_den: int = 2) -> str:
+def mixture_temperature_sql() -> str:
     """Twin of q148 (tau = 1/2 hard-wired as sqrt — correctly rounded in
     both engines, unlike pow()): per-source sampling weights with the
     denominator as an exact integer sum of quantized sqrt values."""
@@ -474,11 +474,11 @@ def mixture_temperature_sql(tau_num: int = 1, tau_den: int = 2) -> str:
     """
 
 
-def quality_weighted_sample_sql(seed: int = 17) -> str:
+def quality_weighted_sample_sql() -> str:
     """Twin of q151: deterministic Bernoulli thinning — keep a document
     iff LCG(doc_id)/p < quality. Integer hash + one exact division; the
-    (a, b) constants are similarity._hash_params(1, seed)."""
-    a, b = _hash_params(1, seed)[0]
+    (a, b) constants are similarity._hash_params(1, 17)."""
+    a, b = _hash_params(1, 17)[0]
     return f"""
     WITH q AS (
       SELECT doc_id, {_QUALITY_SQL} AS quality FROM documents
@@ -492,7 +492,7 @@ def quality_weighted_sample_sql(seed: int = 17) -> str:
     """
 
 
-def token_budget_selection_sql(budget: int = 10000) -> str:
+def token_budget_selection_sql() -> str:
     """Twin of q152: greedy quality-first corpus selection under a token
     budget. The selection key packs (quality DESC, doc_id ASC) into one
     BIGINT — round((1-quality)*1e6) * 2^40 + doc_id — so the running sum
@@ -520,14 +520,15 @@ def token_budget_selection_sql(budget: int = 10000) -> str:
       FROM k
     )
     SELECT doc_id, quality, n_tokens, cum_tokens
-    FROM c WHERE cum_tokens <= {budget}
+    FROM c WHERE cum_tokens <= 10000
     """
 
 
-def product_quantize_sql(n_subspaces: int = 8, n_codes: int = 16) -> str:
+def product_quantize_sql() -> str:
     """Twin of q155: per-subspace nearest-codebook assignment (L2,
     sequential folds; tie-break dist ASC, cid ASC) and the fixed-order
     per-row error sum."""
+    n_subspaces = 8
     dim = EMBEDDING_DIM
     sub = dim // n_subspaces
 
@@ -541,13 +542,13 @@ def product_quantize_sql(n_subspaces: int = 8, n_codes: int = 16) -> str:
         )
 
     parts = [
-        f"""e AS (
+        """e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
     ),
     c AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
              CAST(embedding AS DOUBLE[]) AS cv
-      FROM embeddings ORDER BY vec_id LIMIT {n_codes}
+      FROM embeddings ORDER BY vec_id LIMIT 16
     )"""
     ]
     for s in range(n_subspaces):
@@ -579,7 +580,7 @@ HLL_ALPHA_M2 = repr((0.7213 / (1 + 1.079 / HLL_M)) * float(HLL_M * HLL_M))
 HLL_POW = "[" + ", ".join(repr(2.0 ** -i) for i in range(58)) + "]"
 
 
-def portable_hll_sql(seed: int = 23) -> str:
+def portable_hll_sql() -> str:
     """Twin of q157: a from-scratch HyperLogLog whose registers BOTH
     engines compute exactly — LCG 62-bit hash, register = low 6 bits,
     rank = 57 - bitlength(rest) via bin()-string length (identical in
@@ -588,7 +589,7 @@ def portable_hll_sql(seed: int = 23) -> str:
     return f"""
     WITH h AS (
       SELECT strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
-             user_id, {_hll_hash62_sql("user_id", "user_id", seed)} AS hv
+             user_id, {_hll_hash62_sql("user_id", "user_id", 23)} AS hv
       FROM events
     ),
     r AS (
@@ -623,12 +624,12 @@ def portable_hll_sql(seed: int = 23) -> str:
     """
 
 
-def winnow_pairs_sql(
-    k: int = 20, w: int = 8, max_doc_freq: int = 20, min_shared: int = 3
-) -> str:
+def winnow_pairs_sql() -> str:
     """Twin of q156: winnowing fingerprints recomputed with list ops —
     char k-gram Horner hashes, per-window rightmost minimum, distinct
     selected hashes, doc-frequency filter, pair counts."""
+    k = 20
+    w = 8
     return f"""
     WITH d AS (
       SELECT doc_id, {_NORM_SQL} AS t
@@ -663,13 +664,13 @@ def winnow_pairs_sql(
     fpt AS (SELECT doc_id, unnest(fps) AS fp FROM sel),
     rare AS (
       SELECT fp FROM (SELECT fp, COUNT(*) AS df FROM fpt GROUP BY fp)
-      WHERE df <= {max_doc_freq}
+      WHERE df <= 20
     ),
     kept AS (SELECT f.doc_id, f.fp FROM fpt f JOIN rare r ON f.fp = r.fp)
     SELECT a.doc_id AS id_a, b.doc_id AS id_b, COUNT(*) AS n_shared
     FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
     GROUP BY 1, 2
-    HAVING COUNT(*) >= {min_shared}
+    HAVING COUNT(*) >= 3
     """
 
 
@@ -750,7 +751,7 @@ def _bucket_expr(v: str, planes) -> str:
     return "concat(" + ", ".join(bits) + ")"
 
 
-def _adaptive_np_cte(src: str = "embeddings") -> str:
+def _adaptive_np_cte() -> str:
     """1-row CTE ``nps(np)``: the adaptive gram-kernel plane count derived
     from the indexed corpus's COUNT(*) — the integer CASE-ladder twin of
     ``similarity.adaptive_n_planes``, so both engines pick the identical
@@ -759,16 +760,16 @@ def _adaptive_np_cte(src: str = "embeddings") -> str:
     (``simhash_planes`` is prefix-stable)."""
     return (
         f"nps AS (SELECT {adaptive_n_planes_case_sql('c')} AS np "
-        f"FROM (SELECT COUNT(*) AS c FROM {src}))"
+        f"FROM (SELECT COUNT(*) AS c FROM embeddings))"
     )
 
 
-def lsh_ann_sql(n_planes: int = 6, kk: int = 10, seed: int = 7) -> str:
+def lsh_ann_sql() -> str:
     """Twin of q40: hyperplane-LSH bucket match against vec_id 0's bucket,
     exact cosine top-k inside the bucket. Planes are the LCG constants of
     similarity.simhash_planes; every fold is sequential, so bucket bits
     and cosines are bit-identical to the Spark plan's F.aggregate."""
-    planes = simhash_planes(EMBEDDING_DIM, n_planes, seed)
+    planes = simhash_planes(EMBEDDING_DIM, 6, 7)
     return f"""
     WITH e AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
@@ -792,22 +793,18 @@ def lsh_ann_sql(n_planes: int = 6, kk: int = 10, seed: int = 7) -> str:
       FROM be JOIN bq ON be.bucket = bq.bucket
     )
     ORDER BY cos DESC, vec_id
-    LIMIT {kk}
+    LIMIT 10
     """
 
 
-def ivf_refined_ann_sql(
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    kk: int = 10,
-    n_iter: int = 3,
-) -> str:
+def ivf_refined_ann_sql() -> str:
     """Twin of q143 (IVF + Lloyd refinement): the k-means loop is unrolled
     into ``n_iter`` CTE rounds — assign (cos DESC, cid DESC tie-break,
     mirroring reverse(array_sort)), per-(cell, dim) QUANTIZED mean
     (round(x*1e6) -> BIGINT-exact sum -> (sum/count)/1e6 in double —
     identical IEEE ops to kmeans_refine's decimal-staged aggregate), and
     empty cells carrying the previous centroid via a left join."""
+    n_iter = 3
     dim = EMBEDDING_DIM
 
     def norm_cte(src: str, out: str) -> str:
@@ -831,7 +828,7 @@ def ivf_refined_ann_sql(
     )"""
 
     parts = [
-        f"""e AS (
+        """e AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
       FROM embeddings WHERE vec_id <> 0
     ),
@@ -841,7 +838,7 @@ def ivf_refined_ann_sql(
     r0 AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
              v AS cv
-      FROM e ORDER BY vec_id LIMIT {n_centroids}
+      FROM e ORDER BY vec_id LIMIT 16
     )"""
     ]
     for i in range(1, n_iter + 1):
@@ -874,7 +871,7 @@ def ivf_refined_ann_sql(
                row_number() OVER (
                  ORDER BY {_dot("q.qv", "c.cv")} / c.ncv DESC, c.cid) AS prn
         FROM rn{n_iter} c CROSS JOIN q
-      ) WHERE prn <= {nprobe}
+      ) WHERE prn <= 4
     )"""
     )
     ctes = ",\n    ".join(parts)
@@ -890,20 +887,18 @@ def ivf_refined_ann_sql(
       WHERE a.cid IN (SELECT cid FROM probe)
     )
     ORDER BY cos DESC, vec_id
-    LIMIT {kk}
+    LIMIT 10
     """
 
 
-def semantic_dedup_sql(
-    threshold: float = 0.5, n_planes: int = 4, seed: int = 7
-) -> str:
+def semantic_dedup_sql() -> str:
     """Twin of q141: exact cosine pairs blocked on (label, hyperplane
     bucket), closed into components by a recursive CTE. The bucket is the
     same LCG-plane sign-bit string the Spark plan computes, so both
     engines see the identical candidate set; blocking on the bucket (not
     just the fixed-cardinality label) is what keeps per-block pair counts
     bounded as the corpus grows."""
-    planes = simhash_planes(EMBEDDING_DIM, n_planes, seed)
+    planes = simhash_planes(EMBEDDING_DIM, 4, 7)
     return f"""
     WITH RECURSIVE e AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
@@ -921,7 +916,7 @@ def semantic_dedup_sql(
         ON a.label = b.label AND a.bucket = b.bucket AND a.vec_id < b.vec_id
     ),
     edges AS (
-      SELECT id_a AS src, id_b AS dst FROM p WHERE cos >= {threshold}
+      SELECT id_a AS src, id_b AS dst FROM p WHERE cos >= 0.5
     ),
     sym AS (
       SELECT src, dst FROM edges
@@ -950,8 +945,8 @@ def semantic_dedup_sql(
     """
 
 
-def ivf_ann_sql(n_centroids: int = 16, nprobe: int = 4, kk: int = 10) -> str:
-    """Twin of q45. Centroids = first ``n_centroids`` vectors by vec_id of
+def ivf_ann_sql() -> str:
+    """Twin of q45. Centroids = first 16 vectors by vec_id of
     the vec_id<>0 set (similarity.ivf_centroids' deterministic seed);
     assignment tie-break (cos DESC, cid DESC) mirrors
     reverse(array_sort(struct(cos, cid))); probe tie-break (cos DESC, cid
@@ -968,7 +963,7 @@ def ivf_ann_sql(n_centroids: int = 16, nprobe: int = 4, kk: int = 10) -> str:
     c AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
              v AS cv
-      FROM e ORDER BY vec_id LIMIT {n_centroids}
+      FROM e ORDER BY vec_id LIMIT 16
     ),
     cn AS (
       SELECT cid, cv,
@@ -993,7 +988,7 @@ def ivf_ann_sql(n_centroids: int = 16, nprobe: int = 4, kk: int = 10) -> str:
                row_number() OVER (
                  ORDER BY {_dot("q.qv", "cn.cv")} / cn.ncv DESC, cn.cid) AS prn
         FROM cn CROSS JOIN q
-      ) WHERE prn <= {nprobe}
+      ) WHERE prn <= 4
     )
     SELECT vec_id, label
     FROM (
@@ -1005,7 +1000,7 @@ def ivf_ann_sql(n_centroids: int = 16, nprobe: int = 4, kk: int = 10) -> str:
       WHERE a.rn = 1 AND a.cid IN (SELECT cid FROM probe)
     )
     ORDER BY cos DESC, vec_id
-    LIMIT {kk}
+    LIMIT 10
     """
 
 
@@ -1028,8 +1023,8 @@ def _hll_consts(m: int):
     # every float literal is CAST AS DOUBLE: DuckDB parses decimal-point
     # literals as DECIMAL, and decimal-domain (-, *) drifts from the
     # Spark side's double ops by ulps (the q132 lesson)
-    pow_lit = _lit_list([repr(v) for v in pow2_table()], "DOUBLE")
-    ln_lit = _lit_list([repr(v) for v in ln_table(m)], "DOUBLE")
+    pow_lit = _lit_list([repr(v) for v in pow2_table()])
+    ln_lit = _lit_list([repr(v) for v in ln_table(m)])
     return {
         "m": m,
         "p": p,
@@ -1094,14 +1089,14 @@ def _hll_est(c: dict) -> str:
     )
 
 
-def source_cardinality_hll_sql(m: int = 1024, seed: int = 29) -> str:
+def source_cardinality_hll_sql() -> str:
     """Twin of q101: per-source distinct-text cardinality via the portable
     HLL — 62-bit hash from two char-fold lanes (bases 31 / 1000003, the
     rolling_hash fold), register max per (source, reg), harmonic fold +
     literal-ln linear counting. n_docs / avg_len ride the same single
     aggregation pass."""
-    c = _hll_consts(m)
-    hv = _hll_hash62_sql(_char_fold("text", 31), _char_fold("text", 1000003), seed)
+    c = _hll_consts(1024)
+    hv = _hll_hash62_sql(_char_fold("text", 31), _char_fold("text", 1000003), 29)
     return f"""
     WITH h AS (
       SELECT source, length(text) AS len, {hv} AS hv FROM documents
@@ -1125,12 +1120,12 @@ def source_cardinality_hll_sql(m: int = 1024, seed: int = 29) -> str:
     """
 
 
-def weekly_user_hll_sql(m: int = 1024, seed: int = 41) -> str:
+def weekly_user_hll_sql() -> str:
     """Twin of q131: two-level mergeable roll-up — per-(day, reg) maxes
     built once, merged to ISO weeks by a second MAX (never rescanning the
     fact table), then the same portable fold + estimate as q101."""
-    c = _hll_consts(m)
-    hv = _hll_hash62_sql("user_id", "user_id", seed)
+    c = _hll_consts(1024)
+    hv = _hll_hash62_sql("user_id", "user_id", 41)
     return f"""
     WITH h AS (
       SELECT CAST(ts AS DATE) AS day, {hv} AS hv FROM events
@@ -1219,15 +1214,14 @@ def quantile_hist_sql() -> str:
     """
 
 
-def countmin_heavyhitters_sql(
-    d: int = 4, w: int = 1024, topk: int = 10, seed: int = 57
-) -> str:
+def countmin_heavyhitters_sql() -> str:
     """Twin of q160: the Count-Min table is rebuilt with the same LCG
     bucket lanes (integer mod arithmetic — engine-exact), the same
     exact top-k candidates, and the same min-over-rows estimate."""
-    params = _hash_params(d, seed)
+    d = 4
+    params = _hash_params(d, 57)
     lanes = ", ".join(
-        f"(({a} * {_pm31('user_id')} + {b}) % {_MOD}) % {w}"
+        f"(({a} * {_pm31('user_id')} + {b}) % {_MOD}) % 1024"
         for a, b in params
     )
     return f"""
@@ -1242,7 +1236,7 @@ def countmin_heavyhitters_sql(
     exact AS (
       SELECT user_id, CAST(COUNT(*) AS BIGINT) AS exact_n
       FROM events GROUP BY user_id
-      ORDER BY exact_n DESC, user_id LIMIT {topk}
+      ORDER BY exact_n DESC, user_id LIMIT 10
     ),
     cand AS (
       SELECT e.user_id, e.exact_n, r.i AS row_idx,
@@ -1257,17 +1251,16 @@ def countmin_heavyhitters_sql(
     """
 
 
-def pagerank_neardup_sql(
-    n_iter: int = 3,
-    damping: str = "0.85",
-    quant: int = 10**12,
-) -> str:
+def pagerank_neardup_sql() -> str:
     """Twin of q168: PageRank over the MinHash near-dup graph, the
     n_iter rounds unrolled as CTEs. Per-round incoming mass sums as
     QUANTIZED integers (round(contrib * 1e12) -> BIGINT, exact and
     order-independent) and every float op (the division by degree, the
     damping blend) is the identical IEEE double op on both engines, so
     the ranks are bit-exact."""
+    n_iter = 3
+    damping = "0.85"
+    quant = 10**12
     d = f"CAST({damping} AS DOUBLE)"
     base = f"CAST({repr(1 - float(damping))} AS DOUBLE)"
     parts = [
@@ -1339,17 +1332,17 @@ def triangle_count_sql() -> str:
     """
 
 
-def novelty_score_sql(k: int = 5) -> str:
+def novelty_score_sql() -> str:
     """Twin of q175: per-document shingle novelty — the fraction of a
     doc's distinct k-gram poly-shingles whose corpus document frequency
     is 1. Counts are integer-exact; the final ratio is one IEEE
     division."""
     return f"""
     WITH th AS (
-      SELECT doc_id, {_tok_hashes("text")} AS th FROM documents
+      SELECT doc_id, {_tok_hashes()} AS th FROM documents
     ),
     g AS (
-      SELECT doc_id, list_distinct({_grams("th", k, False)}) AS grams FROM th
+      SELECT doc_id, list_distinct({_grams(5, False)}) AS grams FROM th
     ),
     ex AS (
       SELECT doc_id, unnest(grams) AS gram FROM g
@@ -1368,20 +1361,17 @@ def novelty_score_sql(k: int = 5) -> str:
     """
 
 
-def bm25_proxy_sql(
-    terms: tuple = ("hash", "merge", "vector"),
-    k1: str = "1.2",
-    b: str = "0.75",
-    quant: int = 10**9,
-    topk: int = 10,
-) -> str:
+def bm25_proxy_sql() -> str:
     """Twin of q176: log-free BM25 ranked retrieval. idf' is the
     rational Robertson fraction (N - df + 0.5) / (df + 0.5) WITHOUT the
     log (monotone in the same direction, so ranking is preserved and
     every op stays an elementwise IEEE double — q153's log-free rule).
     Per-(doc, term) scores quantize to BIGINT before the per-doc sum so
     accumulation order cannot perturb the hash."""
-    terms_list = ", ".join(f"'{t}'" for t in terms)
+    k1 = "1.2"
+    b = "0.75"
+    quant = 10**9
+    terms_list = ", ".join(f"'{t}'" for t in ("hash", "merge", "vector"))
     return f"""
     WITH tok AS (
       SELECT doc_id, unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))
@@ -1431,16 +1421,17 @@ def bm25_proxy_sql(
            CAST(qscore_sum AS DOUBLE) / {quant} AS bm25_proxy
     FROM agg
     ORDER BY qscore_sum DESC, doc_id
-    LIMIT {topk}
+    LIMIT 10
     """
 
 
-def label_propagation_sql(n_iter: int = 3) -> str:
+def label_propagation_sql() -> str:
     """Twin of q179: semi-supervised label propagation over the MinHash
     near-dup graph, the n_iter synchronous rounds unrolled as CTEs.
     Seeds (doc_id % 3 = 0) stay clamped; unlabeled nodes adopt the
     neighbourhood-majority label with the deterministic
     (count DESC, label ASC) tie-break."""
+    n_iter = 3
     parts = [
         _minhash_pairs_core(),
         f"""edges AS (
@@ -1489,18 +1480,20 @@ def label_propagation_sql(n_iter: int = 3) -> str:
     """
 
 
-def containment_join_sql(k: int = 3, t_num: int = 4, t_den: int = 5) -> str:
+def containment_join_sql() -> str:
     """Twin of q180: asymmetric set-containment join on k-gram shingle
     sets — pairs (a, b) with |Ta ∩ Tb| >= (t_num/t_den)|Ta|. Candidates
     come from the rarity-ranked prefix filter (a doc's first
     floor((1 - t)|Ta|) + 1 rarest grams); the threshold test is exact
     integer arithmetic."""
+    t_num = 4
+    t_den = 5
     return f"""
     WITH th AS (
-      SELECT doc_id, {_tok_hashes("text")} AS th FROM documents
+      SELECT doc_id, {_tok_hashes()} AS th FROM documents
     ),
     ex AS (
-      SELECT doc_id, unnest(list_distinct({_grams("th", k, False)})) AS gram
+      SELECT doc_id, unnest(list_distinct({_grams(3, False)})) AS gram
       FROM th
     ),
     dfc AS (
@@ -1542,11 +1535,12 @@ def containment_join_sql(k: int = 3, t_num: int = 4, t_den: int = 5) -> str:
     """
 
 
-def kcore_sql(core_k: int = 2, rounds: int = 4) -> str:
+def kcore_sql() -> str:
     """Twin of q184: k-core decomposition of the MinHash near-dup graph
     by iterative peeling, the fixed number of rounds unrolled as CTEs —
     each round drops nodes whose degree in the SURVIVING subgraph is
-    below core_k, then drops their incident edges."""
+    below 2, then drops their incident edges."""
+    rounds = 4
     parts = [
         _minhash_pairs_core(),
         f"""ed AS (
@@ -1562,7 +1556,7 @@ def kcore_sql(core_k: int = 2, rounds: int = 4) -> str:
       SELECT src, COUNT(*) AS c FROM e{i - 1} GROUP BY src
     ),
     a{i} AS (
-      SELECT src FROM d{i} WHERE c >= {core_k}
+      SELECT src FROM d{i} WHERE c >= 2
     ),
     e{i} AS (
       SELECT e.src, e.dst FROM e{i - 1} e
@@ -1578,11 +1572,12 @@ def kcore_sql(core_k: int = 2, rounds: int = 4) -> str:
     """
 
 
-def bfs_hops_sql(seed_mod: int = 50, rounds: int = 3) -> str:
+def bfs_hops_sql() -> str:
     """Twin of q190: multi-source BFS hop distance over the MinHash
-    near-dup graph from the seed set (doc_id % seed_mod = 0), the
+    near-dup graph from the seed set (doc_id % 50 = 0), the
     fixed rounds unrolled — each round relaxes dist(dst) against
     min(dist(src)) + 1 over the symmetric edge set."""
+    rounds = 3
     parts = [
         _minhash_pairs_core(),
         f"""ed AS (
@@ -1593,7 +1588,7 @@ def bfs_hops_sql(seed_mod: int = 50, rounds: int = 3) -> str:
     ),
     l0 AS (
       SELECT doc_id AS node,
-             CASE WHEN doc_id % {seed_mod} = 0 THEN 0 ELSE NULL END AS hops
+             CASE WHEN doc_id % 50 = 0 THEN 0 ELSE NULL END AS hops
       FROM documents
     )""",
     ]
@@ -1640,14 +1635,14 @@ def behavior_near_dups_sql() -> str:
     """
 
 
-def knn_label_noise_sql(seed: int = 7, k: int = 5) -> str:
+def knn_label_noise_sql() -> str:
     """Twin of q226: LSH-bucketed kNN label-agreement screen. Planes are
     similarity.simhash_planes literals; the plane COUNT is the adaptive
     CASE ladder over COUNT(*) (``_adaptive_np_cte`` — the exact integer
     twin of the Spark side's ``adaptive_n_planes``), applied as a prefix
     of the GRAM_MAX_PLANES-bit code; cosines are sequential folds, so
     neighbor ranking is bit-identical to the Spark plan."""
-    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, seed)
+    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, 7)
     return f"""
     WITH e AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
@@ -1672,7 +1667,7 @@ def knn_label_noise_sql(seed: int = 7, k: int = 5) -> str:
                ROW_NUMBER() OVER (PARTITION BY anchor
                                   ORDER BY cos DESC, nb) AS rn
         FROM cand
-      ) WHERE rn <= {k}
+      ) WHERE rn <= 5
     ),
     agg AS (
       SELECT anchor, CAST(MAX(alabel) AS BIGINT) AS label,
@@ -1688,9 +1683,9 @@ def knn_label_noise_sql(seed: int = 7, k: int = 5) -> str:
     """
 
 
-def split_leakage_sql(seed: int = 31) -> str:
+def split_leakage_sql() -> str:
     """Twin of q227: near-dup pairs straddling a hash train/test split."""
-    (a, b) = _hash_params(1, seed)[0]
+    (a, b) = _hash_params(1, 31)[0]
     m = (1 << 31) - 1
     split = (
         f"(({a} * (((doc_id % {m}) + {m}) % {m}) + {b}) % {m}) % 10"
@@ -1722,10 +1717,11 @@ def split_leakage_sql(seed: int = 31) -> str:
     """
 
 
-def curation_funnel_sql(q_min: str = "0.7") -> str:
+def curation_funnel_sql() -> str:
     """Twin of q231: the end-to-end curation funnel — quality gate,
     exact-dedup canonicals, pairwise keep-min near-dup drop, and the
     q193 mixture quota — one stage-count manifest per language."""
+    q_min = "0.7"
     quality = (
         "round(0.4 * (CASE WHEN length(text) BETWEEN 100 AND 20000"
         " THEN 1.0 ELSE 0.5 END)"
@@ -1795,14 +1791,14 @@ def curation_funnel_sql(q_min: str = "0.7") -> str:
     """
 
 
-def component_split_sql(seed: int = 31) -> str:
+def component_split_sql() -> str:
     """Twin of q258: GROUP-AWARE train/test split — the fix q227's
     leakage measurement motivates. Near-dup pairs close into connected
     components (the q66 recursive-CTE fixpoint), every document splits
     by a two-round LCG hash of its COMPONENT id (singletons hash their
     own doc_id), and the straddling-pair count is recomputed under the
     new split — zero by construction, verified not asserted."""
-    (a1, b1), (a2, b2) = _hash_params(2, seed)
+    (a1, b1), (a2, b2) = _hash_params(2, 31)
     m = _MOD
     h1 = f"(({a1} * ((comp % {m} + {m}) % {m}) + {b1}) % {m})"
     h2 = f"(({a2} * {h1} + {b2}) % {m})"
@@ -1854,7 +1850,7 @@ def component_split_sql(seed: int = 31) -> str:
     """
 
 
-def dup_span_coverage_sql(k: int = 8) -> str:
+def dup_span_coverage_sql() -> str:
     """Twin of q260: duplicated k-gram SPAN coverage per source — for
     every document, the fraction of its k-token shingle positions whose
     gram hash occurs in >= 2 distinct documents corpus-wide (the
@@ -1862,10 +1858,10 @@ def dup_span_coverage_sql(k: int = 8) -> str:
     rolled up per source with a majority-duplicated doc count."""
     return f"""
     WITH th AS (
-      SELECT doc_id, source, {_tok_hashes("text")} AS th FROM documents
+      SELECT doc_id, source, {_tok_hashes()} AS th FROM documents
     ),
     g AS (
-      SELECT doc_id, source, {_grams("th", k, False)} AS grams FROM th
+      SELECT doc_id, source, {_grams(8, False)} AS grams FROM th
     ),
     s AS (
       SELECT doc_id, source, unnest(grams) AS gram FROM g
@@ -1894,10 +1890,10 @@ def dup_span_coverage_sql(k: int = 8) -> str:
     """
 
 
-def gate_agreement_sql(q_min: str = "0.7") -> str:
+def gate_agreement_sql() -> str:
     """Twin of q262: 2x2 agreement between the two quality gates the
     catalog already verifies separately — the q22 composite SCORE gate
-    (>= q_min) and the q235 Gopher REPETITION gate (distinct-token and
+    (>= 0.7) and the q235 Gopher REPETITION gate (distinct-token and
     top-bigram integer cross-multiplications, exactly the streaming
     build's ``doc_flags`` quality_pass) — per source."""
     return f"""
@@ -1930,7 +1926,7 @@ def gate_agreement_sql(q_min: str = "0.7") -> str:
     ),
     gates AS (
       SELECT b.source,
-             CASE WHEN {_QUALITY_SQL} >= {q_min} THEN 1 ELSE 0 END
+             CASE WHEN {_QUALITY_SQL} >= 0.7 THEN 1 ELSE 0 END
                AS pass_a,
              CASE WHEN ((p.n_tokens - p.n_distinct_tokens) * 2
                         > p.n_tokens)
@@ -2001,17 +1997,17 @@ def quality_dup_association_sql() -> str:
     """
 
 
-def ann_recall_sql(
-    n_queries: int = 8, n_centroids: int = 16, nprobe: int = 4, kk: int = 10
-) -> str:
+def ann_recall_sql() -> str:
     """Twin of q265: per-anchor recall@k of the IVF probe path against the
     exact brute-force ranking. Mirrors q45's machinery exactly — centroid
-    seed = first ``n_centroids`` candidates by vec_id, assignment
+    seed = first 16 candidates by vec_id, assignment
     tie-break (cos DESC, cid DESC) = the kernel's
     reverse(array_sort(struct(cos, cid))), probe score = dot/ncv with
     tie-break cid ASC (Python's stable sorted), exact/approx top-k
     ordering (cos DESC, vec_id ASC). Every cosine is the sequential left
     fold (``_dot``), so rankings match Spark bit-for-bit."""
+    n_queries = 8
+    kk = 10
     return f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -2024,7 +2020,7 @@ def ann_recall_sql(
     c AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
              v AS cv
-      FROM e ORDER BY vec_id LIMIT {n_centroids}
+      FROM e ORDER BY vec_id LIMIT 16
     ),
     cn AS (
       SELECT cid, cv,
@@ -2049,7 +2045,7 @@ def ann_recall_sql(
                  ORDER BY {_dot("q.qv", "cn.cv")} / cn.ncv DESC, cn.cid)
                  AS prn
         FROM q CROSS JOIN cn
-      ) WHERE prn <= {nprobe}
+      ) WHERE prn <= 4
     ),
     scored AS (
       SELECT q.qid, e.vec_id,
@@ -2088,10 +2084,10 @@ def ann_recall_sql(
     """
 
 
-def silhouette_sql(n_centroids: int = 16) -> str:
+def silhouette_sql() -> str:
     """Twin of q266: simplified (centroid-distance) silhouette per
     cluster. Same deterministic seed + assignment ordering as q45/q265
-    (first ``n_centroids`` by vec_id; cos DESC, cid DESC ties); the
+    (first 16 by vec_id; cos DESC, cid DESC ties); the
     per-point score s = (cos1-cos2)/(1-cos2) is the same IEEE double on
     both engines, and the cluster mean aggregates QUANTIZED
     (round(s*1e6) through DECIMAL(38,0)) so the sum is order-independent
@@ -2103,7 +2099,7 @@ def silhouette_sql(n_centroids: int = 16) -> str:
     c AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
              v AS cv
-      FROM e ORDER BY vec_id LIMIT {n_centroids}
+      FROM e ORDER BY vec_id LIMIT 16
     ),
     cn AS (
       SELECT cid, cv,
@@ -2144,9 +2140,7 @@ def silhouette_sql(n_centroids: int = 16) -> str:
     """
 
 
-def dsir_importance_sql(
-    n_buckets: int = 1024, target_lang: str = "en", kk: int = 20
-) -> str:
+def dsir_importance_sql() -> str:
     """Twin of q267: hashed-unigram DSIR-style importance scores. Token
     hashes are the portable char fold (``_tok_hashes`` ==
     textops.poly_token_hashes bit-for-bit); bucket weights quantize the
@@ -2156,14 +2150,14 @@ def dsir_importance_sql(
     q = "CAST(1000000000 AS DOUBLE)"
     return f"""
     WITH toks AS (
-      SELECT doc_id, lang, unnest({_tok_hashes("text")}) AS th
+      SELECT doc_id, lang, unnest({_tok_hashes()}) AS th
       FROM documents
     ),
-    tb AS (SELECT doc_id, lang, th % {n_buckets} AS bucket FROM toks),
+    tb AS (SELECT doc_id, lang, th % 1024 AS bucket FROM toks),
     b AS (
       SELECT bucket,
              CAST(COUNT(*) AS BIGINT) AS n_bg,
-             CAST(SUM(CASE WHEN lang = '{target_lang}' THEN 1 ELSE 0 END)
+             CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END)
                   AS BIGINT) AS n_t
       FROM tb GROUP BY bucket
     ),
@@ -2186,17 +2180,17 @@ def dsir_importance_sql(
     FROM tb JOIN w USING (bucket)
     GROUP BY tb.doc_id
     ORDER BY dsir_score DESC, doc_id
-    LIMIT {kk}
+    LIMIT 20
     """
 
 
-def ann_nprobe_sweep_sql(
-    n_queries: int = 8, n_centroids: int = 16, kk: int = 10
-) -> str:
+def ann_nprobe_sweep_sql() -> str:
     """Twin of q268: mean recall@k over the anchor set for each nprobe in
     a literal grid — q265's machinery with the probe rank kept as a
     column instead of filtered at a fixed nprobe. Same seed, folds and
     tie-breaks as q45/q265."""
+    n_queries = 8
+    kk = 10
     return f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -2209,7 +2203,7 @@ def ann_nprobe_sweep_sql(
     c AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
              v AS cv
-      FROM e ORDER BY vec_id LIMIT {n_centroids}
+      FROM e ORDER BY vec_id LIMIT 16
     ),
     cn AS (
       SELECT cid, cv,
@@ -2278,13 +2272,13 @@ def ann_nprobe_sweep_sql(
     """
 
 
-def hard_negative_sql(seed: int = 7, k: int = 3) -> str:
+def hard_negative_sql() -> str:
     """Twin of q269: per-anchor top-k different-label neighbors inside
     hyperplane-LSH buckets (the q40/q226 planes; plane COUNT from the
     adaptive COUNT(*) CASE ladder, ``_adaptive_np_cte``), as a bucket
     self-join + per-anchor window — rankings match the Spark kernel's
     dim-sequential gram matrix bit-for-bit."""
-    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, seed)
+    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, 7)
     return f"""
     WITH e AS (
       SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v
@@ -2311,20 +2305,21 @@ def hard_negative_sql(seed: int = 7, k: int = 3) -> str:
     SELECT vec_id, CAST(label AS BIGINT) AS label, neg_id,
            CAST(neg_label AS BIGINT) AS neg_label,
            CAST(neg_rank AS BIGINT) AS neg_rank
-    FROM r WHERE neg_rank <= {k}
+    FROM r WHERE neg_rank <= 3
     ORDER BY vec_id, neg_rank
     """
 
 
-def jl_projection_sql(k_proj: int = 16, seed: int = 13) -> str:
+def jl_projection_sql() -> str:
     """Twin of q270: Johnson-Lindenstrauss distortion audit. The
     projection planes are the deterministic LCG constants of
-    similarity.simhash_planes(EMBEDDING_DIM, k_proj, seed); squared
+    similarity.simhash_planes(EMBEDDING_DIM, k_proj, 13); squared
     distances are sequential left folds over explicit element
     differences (list_reduce == F.aggregate bit-for-bit); the per-bucket
     mean ratio aggregates QUANTIZED (round(r*1e6) through
     DECIMAL(38,0))."""
-    planes = simhash_planes(EMBEDDING_DIM, k_proj, seed)
+    k_proj = 16
+    planes = simhash_planes(EMBEDDING_DIM, k_proj, 13)
     proj_items = ", ".join(_dot("v", _plane_lit(p)) for p in planes)
     return f"""
     WITH e AS (
@@ -2374,17 +2369,18 @@ def _sq_diff_fold(a: str, b: str, n: str) -> str:
     )
 
 
-def ks_drift_sql(n_buckets: int = 50, width: int = 100) -> str:
+def ks_drift_sql() -> str:
     """Twin of q271: per-source two-sample Kolmogorov-Smirnov statistic
     (source vs rest-of-corpus) over the doc-length histogram. The sup
     |CDF gap| maximizes EXACT cross-multiplied integers
     (|cum_s*n_rest - cum_rest*n_s| in DECIMAL(38,0)) so the argmax is
     order-free on both engines; only the final normalization divides in
     double."""
+    n_buckets = 50
     return f"""
     WITH d AS (
       SELECT source,
-             least(n_chars // {width}, {n_buckets - 1}) AS bucket
+             least(n_chars // 100, {n_buckets - 1}) AS bucket
       FROM documents
     ),
     h AS (
@@ -2629,9 +2625,7 @@ def spearman_quality_length_sql() -> str:
     """
 
 
-def lsh_multiprobe_sweep_sql(
-    n_queries: int = 8, n_planes: int = 6, kk: int = 10, seed: int = 7
-) -> str:
+def lsh_multiprobe_sweep_sql() -> str:
     """Twin of q277: recall@k of hyperplane-LSH retrieval as the probe
     count m rises over a literal grid {1, 2, 4} at a FIXED index
     (6 planes) — the multi-probe mitigation for a failing q265-style
@@ -2640,7 +2634,10 @@ def lsh_multiprobe_sweep_sql(
     code — `with_hyperplane_bucket(multiprobe=m)`'s order. Every margin
     and cosine is the sequential left fold (`_dot`), so probe codes and
     rankings match Spark bit-for-bit."""
-    planes = simhash_planes(EMBEDDING_DIM, n_planes, seed)
+    n_queries = 8
+    n_planes = 6
+    kk = 10
+    planes = simhash_planes(EMBEDDING_DIM, n_planes, 7)
     planes_lit = (
         "["
         + ", ".join(
@@ -2737,13 +2734,10 @@ def lsh_multiprobe_sweep_sql(
     """
 
 
-def dedup_threshold_decision_sql(
-    budget_num: int = 4,
-    budget_den: int = 5,
-) -> str:
+def dedup_threshold_decision_sql() -> str:
     """Twin of q278: the dedup-economics CAPSTONE — pick the most
     aggressive Jaccard cut whose near-dup dedup still keeps at least
-    the token budget (budget_num/budget_den of raw tokens), then emit
+    the token budget (4/5 of raw tokens), then emit
     the post-dedup temperature mixture weights at that cut. Composition
     of verified stages: q272's one-pass banded MinHash sweep (exact
     dyadic estimates), the keep-min-neighbor drop rule (doc dropped iff
@@ -2785,7 +2779,7 @@ def dedup_threshold_decision_sql(
       FROM grid g LEFT JOIN dtok dt ON dt.cut = g.cut CROSS JOIN tot
     ),
     budget AS (
-      SELECT CAST(({budget_num} * t) // {budget_den} AS BIGINT) AS b
+      SELECT CAST((4 * t) // 5 AS BIGINT) AS b
       FROM tot
     ),
     chosen AS (
@@ -2837,7 +2831,7 @@ def dedup_threshold_decision_sql(
     """
 
 
-def crosslingual_neardup_sql(seed: int = 7) -> str:
+def crosslingual_neardup_sql() -> str:
     """Twin of q281: cross-lingual embedding near-dup mining. Docs join
     their embedding row (vec_id == doc_id), bucket by random-hyperplane
     sign bits (sequential-fold dots, identical plane literals; plane
@@ -2847,7 +2841,7 @@ def crosslingual_neardup_sql(seed: int = 7) -> str:
     the cosine_pairs_blocked arithmetic). Per ordered language pair:
     candidate count, counts at the 0.80/0.90/0.95 rounded thresholds,
     and the DECIMAL-staged mean cosine."""
-    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, seed)
+    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, 7)
     return f"""
     WITH e AS (
       SELECT d.doc_id AS id, d.lang, CAST(em.embedding AS DOUBLE[]) AS v
@@ -2892,7 +2886,6 @@ def _cdc_char_ctes(
     tag: str = "",
     pred: str = "",
     materialized: bool = False,
-    src: str = "documents",
 ) -> str:
     """``d{tag}``/``ch{tag}``: whitespace-normalize the text and expand
     it to the per-char BIGINT code array every CDC chunking twin folds
@@ -2901,7 +2894,7 @@ def _cdc_char_ctes(
     where = f" WHERE {pred}" if pred else ""
     mat = " MATERIALIZED" if materialized else ""
     return f"""d{tag} AS (
-      SELECT {cols}, {_NORM_SQL} AS t FROM {src}{where}
+      SELECT {cols}, {_NORM_SQL} AS t FROM documents{where}
     ),
     ch{tag} AS{mat} (
       SELECT {cols}, length(t) AS n,
@@ -2955,11 +2948,11 @@ def _cdc_cut_ctes(
     )"""
 
 
-def cdc_chunk_dedup_sql(w: int = 16, mask: int = 64) -> str:
+def cdc_chunk_dedup_sql() -> str:
     """Twin of q282: content-defined chunking recomputed with list ops.
     Same normalization as winnowing; a cut lands after every position
-    whose trailing w-char Horner window hash (base 31 mod Mersenne-31)
-    is 0 mod ``mask``; each non-empty chunk packs its own Horner fold
+    whose trailing 16-char Horner window hash (base 31 mod Mersenne-31)
+    is 0 mod 64; each non-empty chunk packs its own Horner fold
     with its (capped) length; duplication is counted corpus-wide on the
     packed identity. All integer arithmetic — bit-identical to the
     Arrow kernel (modular equality of the stepwise and exponent-weight
@@ -2968,7 +2961,7 @@ def cdc_chunk_dedup_sql(w: int = 16, mask: int = 64) -> str:
     packed encoding — same on both engines."""
     return f"""
     WITH {_cdc_char_ctes()},
-    {_cdc_cut_ctes(w, mask)},
+    {_cdc_cut_ctes(16, 64)},
     r AS (
       SELECT source,
              k.fp * 2097152 + least(k.ln, 2097151) AS packed,
@@ -2993,7 +2986,7 @@ def cdc_chunk_dedup_sql(w: int = 16, mask: int = 64) -> str:
 CDC_ECON_GRID = ((8, 64), (16, 16), (16, 64), (16, 256))
 
 
-def cdc_chunk_economics_sql(grid=CDC_ECON_GRID) -> str:
+def cdc_chunk_economics_sql() -> str:
     """Twin of q287: the q282 CDC machinery swept over a (w, mask) grid
     off the ONE shared normalized-char array (``ch AS MATERIALIZED``) —
     per setting, corpus-wide chunk counts, duplicate-char mass, and mean
@@ -3002,7 +2995,7 @@ def cdc_chunk_economics_sql(grid=CDC_ECON_GRID) -> str:
     whitespace-normalized characters with the 2^21-1 per-chunk cap."""
     parts = [_cdc_char_ctes(cols="doc_id", materialized=True)]
     sels = []
-    for gi, (w, mask) in enumerate(grid):
+    for gi, (w, mask) in enumerate(CDC_ECON_GRID):
         parts.append(
             _cdc_cut_ctes(w, mask, cols="doc_id", tag=str(gi), src_tag="")
             + f""",
@@ -3036,7 +3029,7 @@ def cdc_chunk_economics_sql(grid=CDC_ECON_GRID) -> str:
     """
 
 
-def cdc_growing_ingest_sql(w: int = 16, mask: int = 64) -> str:
+def cdc_growing_ingest_sql() -> str:
     """Twin of q288: growing-store CDC ingest over the whole corpus.
     Batch semantics = GLOBAL sequential first-occurrence: a chunk
     instance is new iff no instance of the same packed identity occurs
@@ -3048,7 +3041,7 @@ def cdc_growing_ingest_sql(w: int = 16, mask: int = 64) -> str:
     characters, 2^21-1 per-chunk cap."""
     return f"""
     WITH {_cdc_char_ctes()},
-    {_cdc_cut_ctes(w, mask, with_pos=True)},
+    {_cdc_cut_ctes(16, 64, with_pos=True)},
     r AS (
       SELECT doc_id, source, k.pos AS pos,
              k.fp * 2097152 + least(k.ln, 2097151) AS packed,
@@ -3075,17 +3068,16 @@ def cdc_growing_ingest_sql(w: int = 16, mask: int = 64) -> str:
     """
 
 
-def boilerplate_chunks_sql(
-    w: int = 16, mask: int = 64, min_sources: int = 3
-) -> str:
+def boilerplate_chunks_sql() -> str:
     """Twin of q289: a CDC chunk identity present in >= ``min_sources``
     DISTINCT sources is boilerplate (shared headers/footers/disclaimers
     — template mass, not content); per source, the boilerplate chunk
     count and char share. Same CDC integer arithmetic as
     ``cdc_chunk_dedup_sql``; normalized-char units, 2^21-1 cap."""
+    min_sources = 3
     return f"""
     WITH {_cdc_char_ctes()},
-    {_cdc_cut_ctes(w, mask)},
+    {_cdc_cut_ctes(16, 64)},
     r AS (
       SELECT source,
              k.fp * 2097152 + least(k.ln, 2097151) AS packed,
@@ -3110,7 +3102,7 @@ def boilerplate_chunks_sql(
     """
 
 
-def intra_doc_repetition_sql(w: int = 16, mask: int = 64) -> str:
+def intra_doc_repetition_sql() -> str:
     """Twin of q290: within-document chunk repetition — the repeated-
     paragraph/loop signal repetition quality filters key on. Per
     source: docs with any repeated chunk, repeated-char mass/share
@@ -3119,7 +3111,7 @@ def intra_doc_repetition_sql(w: int = 16, mask: int = 64) -> str:
     come from the CDC cut ordinals; windows partition by doc."""
     return f"""
     WITH {_cdc_char_ctes()},
-    {_cdc_cut_ctes(w, mask, with_pos=True)},
+    {_cdc_cut_ctes(16, 64, with_pos=True)},
     r AS (
       SELECT doc_id, source, k.pos AS pos,
              k.fp * 2097152 + least(k.ln, 2097151) AS packed,
@@ -3170,7 +3162,7 @@ def intra_doc_repetition_sql(w: int = 16, mask: int = 64) -> str:
     """
 
 
-def bpe_merge_pairs_sql(topk: int = 20) -> str:
+def bpe_merge_pairs_sql() -> str:
     """Twin of q291: first-iteration BPE merge-pair counts — adjacent
     CHARACTER-pair frequencies weighted by word frequency, counted over
     the DISTINCT-word table (the classic BPE trick: per-word work is
@@ -3196,7 +3188,7 @@ def bpe_merge_pairs_sql(topk: int = 20) -> str:
     SELECT pair, CAST(SUM(freq) AS BIGINT) AS pair_count
     FROM p GROUP BY pair
     ORDER BY pair_count DESC, pair
-    LIMIT {topk}
+    LIMIT 20
     """
 
 
@@ -3269,7 +3261,7 @@ def source_datasheet_sql() -> str:
     """
 
 
-def ivf_cell_stats_sql(n_centroids: int = 16) -> str:
+def ivf_cell_stats_sql() -> str:
     """Twin of q294: whole-corpus IVF cell statistics against the frozen
     even-vec_id centroid seed — per cell: occupancy, share, and the
     DECIMAL-staged mean assigned cosine. Same assignment arithmetic as
@@ -3277,6 +3269,7 @@ def ivf_cell_stats_sql(n_centroids: int = 16) -> str:
     tie-break, centroid-norm zero guard); zero-norm rows are filtered
     at entry exactly like the streaming side; the streaming side's
     partials merge to exactly this."""
+    n_centroids = 16
     return f"""
     WITH e0 AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -3335,7 +3328,7 @@ ADAPTIVE_PLAN_GRID = (
 )
 
 
-def adaptive_plan_report_sql(dim: int = 64) -> str:
+def adaptive_plan_report_sql() -> str:
     """Twin of q295: the adaptive LSH parameterization decision table —
     for a literal corpus-size grid plus THIS corpus's embeddings count,
     the derived plane count (the exact integer CASE ladder of
@@ -3368,7 +3361,7 @@ def adaptive_plan_report_sql(dim: int = 64) -> str:
              AS expected_width,
            (CAST(n_rows AS DOUBLE) / CAST(n_buckets AS DOUBLE))
              * (CAST(n_rows AS DOUBLE) / CAST(n_buckets AS DOUBLE))
-             * CAST({dim} AS DOUBLE) AS gram_flops_per_task
+             * CAST(64 AS DOUBLE) AS gram_flops_per_task
     FROM b ORDER BY n_rows, is_corpus
     """
 
@@ -3414,14 +3407,14 @@ def text_embedding_alignment_sql() -> str:
     """
 
 
-def lsh_collision_calibration_sql(seed: int = 7) -> str:
+def lsh_collision_calibration_sql() -> str:
     """Twin of q298: empirical hyperplane-LSH bucket-collision rate vs
     cosine, on the linear consecutive-vec_id pair sample (q270's
     pattern), under the ADAPTIVE plane count (same COUNT(*) CASE ladder
     + 24-bit-code prefix as q226/q269/q281). Cosines are exact folds so
     the (cos+1)*4 octile floors are bit-identical cross-engine; mean
     cosine is DECIMAL-staged."""
-    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, seed)
+    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, 7)
     return f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -3455,14 +3448,14 @@ def lsh_collision_calibration_sql(seed: int = 7) -> str:
     """
 
 
-def bucket_width_audit_sql(seed: int = 7) -> str:
+def bucket_width_audit_sql() -> str:
     """Twin of q299: realized LSH bucket-width audit under the adaptive
     plane count — the runtime verification that the q295 parameter
     table's EXPECTED width holds on real (skewed) data. One row: corpus
     size, derived planes, buckets used, expected vs max vs mean width,
     and the count/row-share of buckets over the GRAM_TARGET_BUCKET
     budget."""
-    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, seed)
+    planes = simhash_planes(EMBEDDING_DIM, GRAM_MAX_PLANES, 7)
     return f"""
     WITH e AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings
@@ -3542,7 +3535,7 @@ def token_yield_sql() -> str:
     """
 
 
-def ivf_staleness_sql(n_centroids: int = 16) -> str:
+def ivf_staleness_sql() -> str:
     """Twin of q283: index-staleness audit. Centroids are the
     deterministic ivf_centroids seed over the EVEN-vec_id wave (first
     n by vec_id); both waves assign by (cos DESC, cid DESC) — the
@@ -3550,6 +3543,7 @@ def ivf_staleness_sql(n_centroids: int = 16) -> str:
     per (cid, wave) counts and DECIMAL-staged sums of round(cos*1e9)
     become occupancy shares and mean assigned-cosines on a LEFT-joined
     cid grid."""
+    n_centroids = 16
     return f"""
     WITH e AS (
       SELECT vec_id, vec_id % 2 AS half,
@@ -3623,7 +3617,7 @@ def vocab_growth_sql() -> str:
     is one pinned division."""
     return f"""
     WITH n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM documents),
-    tk AS (SELECT doc_id, unnest({_tok_hashes("text")}) AS th
+    tk AS (SELECT doc_id, unnest({_tok_hashes()}) AS th
            FROM documents),
     fo AS (SELECT th, MIN(doc_id) AS fd FROM tk GROUP BY th),
     vr AS (
@@ -3634,7 +3628,7 @@ def vocab_growth_sql() -> str:
         CAST(SUM(CASE WHEN fd < (n.n * 4) // 4 THEN 1 ELSE 0 END) AS BIGINT) AS v4
       FROM fo, n
     ),
-    dc AS (SELECT doc_id, CAST(len({_tok_hashes("text")}) AS BIGINT) AS tc
+    dc AS (SELECT doc_id, CAST(len({_tok_hashes()}) AS BIGINT) AS tc
            FROM documents),
     tr AS (
       SELECT
@@ -3661,7 +3655,7 @@ def vocab_growth_sql() -> str:
     """
 
 
-def split_leakage_audit_sql(k: int = 8, test_mod: int = 10) -> str:
+def split_leakage_audit_sql() -> str:
     """Twin of q285: n-gram contamination of a naive per-document hash
     split. The split is the two-round Mersenne LCG (q239 rule) on
     doc_id; grams are the portable poly k-shingles; per test doc the
@@ -3670,14 +3664,14 @@ def split_leakage_audit_sql(k: int = 8, test_mod: int = 10) -> str:
     (a1, b1), (a2, b2) = _hash_params(2, 31)
     return f"""
     WITH th AS (
-      SELECT doc_id, {_tok_hashes("text")} AS th,
+      SELECT doc_id, {_tok_hashes()} AS th,
              (({a2} * (({a1} * (doc_id % {_MOD}) + {b1}) % {_MOD})
-               + {b2}) % {_MOD}) % {test_mod} AS slot
+               + {b2}) % {_MOD}) % 10 AS slot
       FROM documents
     ),
     g AS (
       SELECT doc_id, slot,
-             unnest(list_distinct({_grams("th", k, False)})) AS gram
+             unnest(list_distinct({_grams(8, False)})) AS gram
       FROM th
     ),
     trn AS (SELECT DISTINCT gram FROM g WHERE slot <> 0),
@@ -3703,9 +3697,7 @@ def split_leakage_audit_sql(k: int = 8, test_mod: int = 10) -> str:
     """
 
 
-def cdc_incremental_sql(
-    w: int = 16, mask: int = 64, new_source: str = "src19"
-) -> str:
+def cdc_incremental_sql() -> str:
     """Twin of q286: per-document ingest dedup of the NEW wave
     (``new_source``) against the STATIC chunk store built from every
     other source — the same CDC machinery as ``cdc_chunk_dedup_sql``,
@@ -3713,12 +3705,13 @@ def cdc_incremental_sql(
     identity. UNITS: ``new_chars``/``dup_chars`` count
     whitespace-normalized CHARACTERS with the 2^21-1 per-chunk length
     cap of the packed encoding — same on both engines."""
+    new_source = "src19"
 
     def chunk_cte(pred: str, tag: str) -> str:
         return (
             _cdc_char_ctes(cols="doc_id", tag=tag, pred=pred)
             + ",\n    "
-            + _cdc_cut_ctes(w, mask, cols="doc_id", tag=tag)
+            + _cdc_cut_ctes(16, 64, cols="doc_id", tag=tag)
             + f""",
     r{tag} AS (
       SELECT doc_id,
@@ -3791,12 +3784,12 @@ def _phash_chain(id_cols: str = "media_id", src_cte: str = "m") -> str:
     )"""
 
 
-def _media_phash_cte(src: str = "documents") -> str:
+def _media_phash_cte() -> str:
     """``m`` + ``mfp(media_id, phash)`` over the synthetic media payloads
     (the documents' UTF-8 text bytes, q36's construction)."""
     return (
-        f"""m AS (
-      SELECT doc_id AS media_id, hex(encode(text)) AS hx FROM {src}
+        """m AS (
+      SELECT doc_id AS media_id, hex(encode(text)) AS hx FROM documents
     ),
     """
         + _phash_chain("media_id", "m")
@@ -3833,17 +3826,17 @@ def _media_hamming_cand_cte(max_hamming: int = 4) -> str:
     )"""
 
 
-def media_near_dup_pairs_sql(max_hamming: int = 4) -> str:
+def media_near_dup_pairs_sql() -> str:
     """Twin of q302: media near-dup pairs within a Hamming radius of the
     dHash fingerprint."""
     return f"""
     WITH {_media_phash_cte()},
-    {_media_hamming_cand_cte(max_hamming)}
+    {_media_hamming_cand_cte(4)}
     SELECT id_a, id_b, hamming FROM mcand ORDER BY id_a, id_b
     """
 
 
-def media_embedding_alignment_sql(max_hamming: int = 8) -> str:
+def media_embedding_alignment_sql() -> str:
     """Twin of q303: cross-modal alignment audit — for every media
     near-dup candidate pair (dHash Hamming <= radius) whose BOTH
     endpoints carry an embedding, the exact fold cosine; per Hamming
@@ -3851,7 +3844,7 @@ def media_embedding_alignment_sql(max_hamming: int = 8) -> str:
     pattern with pixel-space distance replacing token-space Jaccard)."""
     return f"""
     WITH {_media_phash_cte()},
-    {_media_hamming_cand_cte(max_hamming)},
+    {_media_hamming_cand_cte(8)},
     ev AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,
              sqrt({_dot("CAST(embedding AS DOUBLE[])",
@@ -4133,27 +4126,29 @@ def bpe_ledger_sql(
     """
 
 
-def hash_embed_ctes(dim: int) -> str:
+def hash_embed_ctes() -> str:
     """CTE chain deriving the hash-projection document embeddings
     (``inference.encode_documents(encoder="hash")``) bit-for-bit:
     per-DISTINCT-word base-31 Horner hash mod Mersenne-31 (the
-    ``_tok_hashes`` scheme), feature-hashed (bucket = h % dim, sign
-    from (h // dim) % 2), signed counts summed as INTEGERS per (doc,
-    bucket), densified through a map probe, then L2-normalized — the
+    ``_tok_hashes`` scheme), feature-hashed (bucket = h % EMBED_DIM,
+    sign from (h // EMBED_DIM) % 2), signed counts summed as INTEGERS
+    per (doc, bucket), densified through a map probe, then L2-normalized — the
     only float ops are sqrt(int) and x/norm, the same correctly-rounded
     IEEE ops the Arrow kernel runs. Zero-norm (empty or sign-cancelled)
     docs drop on both engines. Ends with ``ev(doc_id, v)``. The oracle
     works at VOCABULARY cost (hash distinct words, join back); the
     Spark kernel is per-document because a real encoder is — identical
     values either way."""
+    from kp_data_pipelines_spark.operators.inference import EMBED_DIM
+
     return f"""tok AS (
       SELECT doc_id, unnest(string_split(norm, ' ')) AS word
       FROM (SELECT doc_id, {_NORM_SQL} AS norm FROM documents)
       WHERE length(norm) > 0
     ),
     wv AS (
-      SELECT word, h % {dim} AS b,
-             CASE WHEN (h // {dim}) % 2 = 0 THEN 1 ELSE -1 END AS sgn
+      SELECT word, h % {EMBED_DIM} AS b,
+             CASE WHEN (h // {EMBED_DIM}) % 2 = 0 THEN 1 ELSE -1 END AS sgn
       FROM (SELECT word, list_reduce(list_prepend(CAST(0 AS BIGINT),
                      list_transform(range(1, length(word) + 1),
                        i -> CAST(ord(substr(word, i, 1)) AS BIGINT))),
@@ -4170,7 +4165,7 @@ def hash_embed_ctes(dim: int) -> str:
     ),
     ivec AS (
       SELECT doc_id,
-             list_transform(range(0, {dim}),
+             list_transform(range(0, {EMBED_DIM}),
                             b -> coalesce(mp[b][1], CAST(0 AS BIGINT)))
                AS iv
       FROM dmap
@@ -4187,12 +4182,7 @@ def hash_embed_ctes(dim: int) -> str:
     )"""
 
 
-def hash_embed_ann_sql(
-    dim: int | None = None,
-    n_planes: int = 6,
-    kk: int = 10,
-    seed: int = 7,
-) -> str:
+def hash_embed_ann_sql() -> str:
     """Twin of q322: embed-at-scale (``hash_embed_ctes``) feeding q40's
     hyperplane-LSH bucket + exact-cosine-top-k consumer. The anchor is
     the smallest surviving doc_id; every dot is the sequential
@@ -4200,10 +4190,9 @@ def hash_embed_ann_sql(
     Spark plan's ``F.aggregate`` / Python-driver query-norm fold."""
     from kp_data_pipelines_spark.operators.inference import EMBED_DIM
 
-    dim = EMBED_DIM if dim is None else dim
-    planes = simhash_planes(dim, n_planes, seed)
+    planes = simhash_planes(EMBED_DIM, 6, 7)
     return f"""
-    WITH {hash_embed_ctes(dim)},
+    WITH {hash_embed_ctes()},
     anchor AS (SELECT min(doc_id) AS qid FROM ev),
     q AS (SELECT v AS qv FROM ev CROSS JOIN anchor WHERE doc_id = qid),
     cand AS (
@@ -4222,13 +4211,11 @@ def hash_embed_ann_sql(
       FROM bc JOIN bq ON bc.bucket = bq.bucket
     )
     ORDER BY cos DESC, doc_id
-    LIMIT {kk}
+    LIMIT 10
     """
 
 
-def derived_embedding_dedup_sql(
-    dim: int | None = None, threshold: float = 0.95
-) -> str:
+def derived_embedding_dedup_sql() -> str:
     """Twin of q326: SemDeDup over DERIVED vectors — the
     ``hash_embed_ctes`` embeddings sign-sketch-blocked (16-bit block =
     sign bits of the integer counts, so the block key is exact), exact
@@ -4239,15 +4226,14 @@ def derived_embedding_dedup_sql(
     (q200 rule)."""
     from kp_data_pipelines_spark.operators.inference import EMBED_DIM
 
-    dim = EMBED_DIM if dim is None else dim
-    thr = f"{threshold:.17e}"
+    thr = f"{0.95:.17e}"
     return f"""
-    WITH {hash_embed_ctes(dim)},
+    WITH {hash_embed_ctes()},
     src AS (SELECT doc_id, source FROM documents),
     blk AS (
       SELECT doc_id, v,
              list_reduce(list_prepend(CAST(0 AS BIGINT),
-               list_transform(range(0, {dim}),
+               list_transform(range(0, {EMBED_DIM}),
                  j -> CASE WHEN v[j + 1] >= 0 THEN CAST(1 << j AS BIGINT)
                       ELSE CAST(0 AS BIGINT) END)),
                (a, x) -> a + x) AS block,
@@ -4372,30 +4358,22 @@ def decoded_roundtrip_dedup_sql() -> str:
     """
 
 
-def media_shared_segments_sql(
-    chunk_bytes: int = 64,
-    min_shared: int | None = None,
-    max_media_freq: int | None = None,
-) -> str:
+def media_shared_segments_sql() -> str:
     """Twin of q305: media pairs sharing content SEGMENTS — fixed-size
     chunk hashes in common. Chunk boundaries are multimodal.chunk_media's
     (ceil(len/cb) chunks, 1-based substring slices); identities are
     sha256 of the chunk. The twin chunks the TEXT where Spark chunks the
     UTF-8 BYTES — identical for the all-ASCII fixture (the q36 oracle's
     standing equivalence); chunk-frequency cap and min-shared floor
-    default from the shared ``multimodal`` knob constants (the
-    winnowing twin's boilerplate guards)."""
+    are the shared ``multimodal`` knob constants (the winnowing twin's
+    boilerplate guards)."""
     from kp_data_pipelines_spark.operators.multimodal import (
         MEDIA_DF_CAP_MAX,
         MEDIA_DF_CAP_MIN,
         SEGMENT_MIN_SHARED,
     )
 
-    min_shared = SEGMENT_MIN_SHARED if min_shared is None else min_shared
-    max_media_freq = (
-        MEDIA_DF_CAP_MAX if max_media_freq is None else max_media_freq
-    )
-    min_media_freq = MEDIA_DF_CAP_MIN
+    chunk_bytes = 64
     return f"""
     WITH c AS (
       SELECT doc_id AS media_id,
@@ -4414,7 +4392,7 @@ def media_shared_segments_sql(
     chdf AS (SELECT ch, COUNT(DISTINCT media_id) AS nm FROM hh GROUP BY ch),
     k AS (
       SELECT media_id, hh.ch FROM hh JOIN chdf ON chdf.ch = hh.ch
-      WHERE nm BETWEEN {min_media_freq} AND {max_media_freq}
+      WHERE nm BETWEEN {MEDIA_DF_CAP_MIN} AND {MEDIA_DF_CAP_MAX}
     ),
     p AS (
       SELECT a.media_id AS id_a, b.media_id AS id_b,
@@ -4423,23 +4401,23 @@ def media_shared_segments_sql(
       GROUP BY 1, 2
     )
     SELECT id_a, id_b, shared_chunks FROM p
-    WHERE shared_chunks >= {min_shared}
+    WHERE shared_chunks >= {SEGMENT_MIN_SHARED}
     ORDER BY id_a, id_b
     """
 
 
-def video_frame_overlap_sql(
-    every: int = 100, max_hamming: int = 1, min_frames: int = 2
-) -> str:
+def video_frame_overlap_sql() -> str:
     """Twin of q306: media pairs whose sampled FRAMES overlap — frame
     timeline from duration metadata (frame_sample_plan's
     greatest(duration div every, 1) formula, duration = payload chars on
     the fixture), per-frame dHash over the frame window, banded
     Hamming-radius frame matching (2 x 32-bit chunks for radius 1 —
-    exact pigeonhole), media-pair rollup with a >= ``min_frames`` floor
+    exact pigeonhole), media-pair rollup with a >= 2-frame floor
     so a single coincidental frame match is not an overlap claim.
     Frame ids pack as media_id * 2^20 + frame_idx (frame counts and doc
     ids are far below 2^20 at every fixture SF)."""
+    every = 100
+    max_hamming = 1
     n_chunks = max_hamming + 1
     cb = 64 // n_chunks
     mask = (1 << cb) - 1
@@ -4478,12 +4456,12 @@ def video_frame_overlap_sql(
       FROM fc GROUP BY 1, 2
     )
     SELECT id_a, id_b, n_frame_matches FROM mp
-    WHERE n_frame_matches >= {min_frames}
+    WHERE n_frame_matches >= 2
     ORDER BY id_a, id_b
     """
 
 
-def dup_span_excision_sql(k: int = 8) -> str:
+def dup_span_excision_sql() -> str:
     """Twin of q307: exact duplicated-SPAN excision ledger (the Lee et
     al. 2021 "Deduplicating Training Data" ExactSubstr transformation,
     token-granular): corpus-wide duplicated k-gram positions (q260's
@@ -4492,13 +4470,14 @@ def dup_span_excision_sql(k: int = 8) -> str:
     adjacency), each span's covered-token count clamped to the doc's
     token count, rolled up per source as an excise-vs-keep ledger.
     Integer arithmetic except the one pinned double division."""
+    k = 8
     return f"""
     WITH th AS (
-      SELECT doc_id, source, {_tok_hashes("text")} AS th FROM documents
+      SELECT doc_id, source, {_tok_hashes()} AS th FROM documents
     ),
     g AS (
       SELECT doc_id, source, len(th) AS n_toks,
-             {_grams("th", k, False)} AS grams
+             {_grams(k, False)} AS grams
       FROM th
     ),
     s AS MATERIALIZED (
@@ -4561,7 +4540,7 @@ def dup_span_excision_sql(k: int = 8) -> str:
     """
 
 
-def dup_span_excision_apply_sql(k: int = 8) -> str:
+def dup_span_excision_apply_sql() -> str:
     """Twin of q316: the APPLY step of q307's excision ledger — the
     scrubbed corpus itself. Spans are q307's gaps-and-islands verbatim
     (duplicated k-gram starts fuse when <= k apart; island covers
@@ -4571,13 +4550,14 @@ def dup_span_excision_apply_sql(k: int = 8) -> str:
     with the kept-text sha256 — the per-doc hash the driver's value
     check pins cross-engine. Islands are pairwise disjoint (a > k gap
     separates them), so covered positions count once."""
+    k = 8
     return f"""
     WITH th AS (
-      SELECT doc_id, source, {_tok_hashes("text")} AS th FROM documents
+      SELECT doc_id, source, {_tok_hashes()} AS th FROM documents
     ),
     g AS (
       SELECT doc_id, source, len(th) AS n_toks,
-             {_grams("th", k, False)} AS grams
+             {_grams(k, False)} AS grams
       FROM th
     ),
     s AS MATERIALIZED (
@@ -4651,9 +4631,7 @@ def dup_span_excision_apply_sql(k: int = 8) -> str:
     """
 
 
-def _constellation_lm_ctes(
-    src: str, id_col: str, w: int = 32, fan: int = 3, prefix: str = ""
-) -> str:
+def _constellation_lm_ctes(src: str, id_col: str, prefix: str = "") -> str:
     """CTE chain ``{prefix}fr / {prefix}pk / {prefix}lm0 / {prefix}lm
     (id_col, t, key)`` over a source CTE providing ``(id_col, text)`` —
     the SQL twin of ``multimodal.constellation_landmarks`` (frame
@@ -4665,6 +4643,8 @@ def _constellation_lm_ctes(
         LANDMARK_MULTIPLICITY_CAP,
     )
 
+    w = 32
+    fan = 3
     p = prefix
     leads = ",\n             ".join(
         f"LEAD(p, {d}) OVER win AS p{d}, LEAD(v, {d}) OVER win AS v{d}"
@@ -4708,38 +4688,29 @@ def _constellation_lm_ctes(
     )"""
 
 
-def audio_constellation_sql(
-    w: int = 32,
-    fan: int = 3,
-    cap: int | None = None,
-    min_votes: int | None = None,
-) -> str:
+def audio_constellation_sql() -> str:
     """Twin of q308: Shazam-style landmark-constellation matching with
-    offset-histogram voting. Payload chars frame into w-char windows;
+    offset-histogram voting. Payload chars frame into 32-char windows;
     each frame's landmark is (argmax char code, code bucket); landmark
-    PAIRS at frame deltas 1..fan become integer hash keys; keys seen in
+    PAIRS at frame deltas 1..3 become integer hash keys; keys seen in
     2..cap media join across media and the per-pair mode of the frame
     OFFSET (t_b - t_a) is the alignment vote. Exact integers end to
-    end; ties broken (votes DESC, offset ASC); caps default from the
-    shared ``multimodal`` knob constants."""
+    end; ties broken (votes DESC, offset ASC); caps are the shared
+    ``multimodal`` knob constants."""
     from kp_data_pipelines_spark.operators.multimodal import (
         CONSTELLATION_MIN_VOTES,
         MEDIA_DF_CAP_MAX,
         MEDIA_DF_CAP_MIN,
     )
-
-    cap = MEDIA_DF_CAP_MAX if cap is None else cap
-    min_votes = CONSTELLATION_MIN_VOTES if min_votes is None else min_votes
-    min_cap = MEDIA_DF_CAP_MIN
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, text FROM documents
       WHERE length(text) > 0
     ),
-    {_constellation_lm_ctes("m", "media_id", w=w, fan=fan)},
+    {_constellation_lm_ctes("m", "media_id")},
     kf AS (
       SELECT key FROM lm GROUP BY key
-      HAVING COUNT(DISTINCT media_id) BETWEEN {min_cap} AND {cap}
+      HAVING COUNT(DISTINCT media_id) BETWEEN {MEDIA_DF_CAP_MIN} AND {MEDIA_DF_CAP_MAX}
     ),
     lmk AS MATERIALIZED (
       SELECT lm.media_id, lm.t, lm.key FROM lm JOIN kf USING (key)
@@ -4760,12 +4731,12 @@ def audio_constellation_sql(
       FROM votes
     )
     SELECT id_a, id_b, best_offset, votes
-    FROM best WHERE rn = 1 AND votes >= {min_votes}
+    FROM best WHERE rn = 1 AND votes >= {CONSTELLATION_MIN_VOTES}
     ORDER BY id_a, id_b
     """
 
 
-def media_dedup_ledger_sql(max_hamming: int = 4) -> str:
+def media_dedup_ledger_sql() -> str:
     """Twin of q309: perceptual media dedup LIFECYCLE ledger — connected
     components over the q302 Hamming-radius pair graph (recursive
     closure over the banded mcand pair core, the q66 shape), canonical
@@ -4773,7 +4744,7 @@ def media_dedup_ledger_sql(max_hamming: int = 4) -> str:
     accounting. Char units named *_chars (the q282 ADVICE lesson)."""
     return f"""
     WITH RECURSIVE {_media_phash_cte()},
-    {_media_hamming_cand_cte(max_hamming)},
+    {_media_hamming_cand_cte(4)},
     sym AS (
       SELECT id_a AS src, id_b AS dst FROM mcand
       UNION SELECT id_b, id_a FROM mcand
@@ -4807,7 +4778,7 @@ def media_dedup_ledger_sql(max_hamming: int = 4) -> str:
     """
 
 
-def media_ingest_ledger_sql(max_hamming: int = 4) -> str:
+def media_ingest_ledger_sql() -> str:
     """Twin of q310: the streaming fingerprint-store admission ledger's
     batch equivalent — per source: payload count, admitted (globally
     first-occurrence) fingerprints, exact-fingerprint duplicate
@@ -4816,6 +4787,7 @@ def media_ingest_ledger_sql(max_hamming: int = 4) -> str:
     radius; candidates via the single-chunk pigeonhole banding, exact
     after bit_count verification). "Earlier" = smaller first media_id,
     matching the stream's ascending-arrival contract."""
+    max_hamming = 4
     n_chunks = max_hamming + 1
     cb = 64 // n_chunks
     mask = (1 << cb) - 1
@@ -4865,48 +4837,37 @@ def media_ingest_ledger_sql(max_hamming: int = 4) -> str:
     """
 
 
-def constellation_retrieval_sql(
-    w: int = 32,
-    fan: int = 3,
-    cap: int | None = None,
-    clip_start: int = 96,
-    clip_len: int = 192,
-    n_probes: int = 4,
-    min_len: int = 300,
-) -> str:
+def constellation_retrieval_sql() -> str:
     """Twin of q312: clip-to-source retrieval over the constellation
     index — probe clips are frame-ALIGNED substrings (start at a
-    multiple of w) of the 4 smallest sufficiently-long documents; their
+    multiple of 32) of the 4 smallest sufficiently-long documents; their
     landmark keys join the df-capped corpus landmark table and the
     per-(probe, media, frame-offset) vote histogram's argmax (votes
     DESC, media ASC, offset ASC) identifies the source and alignment;
-    the df cap defaults from the shared ``multimodal`` knob constant."""
+    the df cap is the shared ``multimodal`` knob constant."""
     from kp_data_pipelines_spark.operators.multimodal import (
         MEDIA_DF_CAP_MAX,
     )
-
-    cap = MEDIA_DF_CAP_MAX if cap is None else cap
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, text FROM documents
       WHERE length(text) > 0
     ),
-    {_constellation_lm_ctes("m", "media_id", w=w, fan=fan)},
+    {_constellation_lm_ctes("m", "media_id")},
     kf AS (
       SELECT key FROM lm GROUP BY key
-      HAVING COUNT(DISTINCT media_id) <= {cap}
+      HAVING COUNT(DISTINCT media_id) <= {MEDIA_DF_CAP_MAX}
     ),
     lmk AS MATERIALIZED (
       SELECT lm.media_id, lm.t, lm.key FROM lm JOIN kf USING (key)
     ),
     probes AS (
       SELECT doc_id AS probe_id,
-             substr(text, {clip_start} + 1, {clip_len}) AS text
-      FROM documents WHERE length(text) >= {min_len}
-      ORDER BY doc_id LIMIT {n_probes}
+             substr(text, 96 + 1, 192) AS text
+      FROM documents WHERE length(text) >= 300
+      ORDER BY doc_id LIMIT 4
     ),
-    {_constellation_lm_ctes("probes", "probe_id", w=w, fan=fan,
-                            prefix="q")},
+    {_constellation_lm_ctes("probes", "probe_id", prefix="q")},
     votes AS (
       SELECT q.probe_id, c.media_id,
              CAST(c.t - q.t AS BIGINT) AS offset_frames,
@@ -4926,23 +4887,17 @@ def constellation_retrieval_sql(
     """
 
 
-def _dense_lm_ctes(
-    src: str,
-    id_col: str,
-    r: int | None = None,
-    fan: int | None = None,
-    prefix: str = "",
-) -> str:
+def _dense_lm_ctes(src: str, id_col: str, prefix: str = "") -> str:
     """CTE chain ``{prefix}pcv / {prefix}pk / {prefix}pe / {prefix}lm0 /
     {prefix}dlm (id_col, t, key)`` over a source CTE providing
     ``(id_col, text)`` — the SQL twin of ``multimodal.dense_landmarks``:
-    radius-r local-max peaks of the char-code stream (two per-doc
-    window maxima; strict-left / tie-right keeps the first of an equal
-    run), each anchor's rolling context hash over the DENSE_CTX_LEN
-    following chars, and peak pairs at peak-deltas 1..fan packed into
-    integer keys of (code, next code, which-next, clamped char gap,
-    anchor context). Defaults import from ``operators.multimodal`` so
-    the engines can never drift."""
+    radius-DENSE_PEAK_RADIUS local-max peaks of the char-code stream
+    (two per-doc window maxima; strict-left / tie-right keeps the first
+    of an equal run), each anchor's rolling context hash over the
+    DENSE_CTX_LEN following chars, and peak pairs at peak-deltas
+    1..DENSE_FAN packed into integer keys of (code, next code,
+    which-next, clamped char gap, anchor context). The constants import from ``operators.multimodal``
+    so the engines can never drift."""
     from kp_data_pipelines_spark.operators.multimodal import (
         DENSE_CTX_LEN,
         DENSE_CTX_MOD,
@@ -4952,20 +4907,18 @@ def _dense_lm_ctes(
         LANDMARK_MULTIPLICITY_CAP,
     )
 
-    r = DENSE_PEAK_RADIUS if r is None else r
-    fan = DENSE_FAN if fan is None else fan
     p = prefix
     leads = ",\n             ".join(
         f"LEAD(t, {d}) OVER win AS t{d}, LEAD(v, {d}) OVER win AS v{d}"
-        for d in range(1, fan + 1)
+        for d in range(1, DENSE_FAN + 1)
     )
     unions = "\n      UNION ALL\n      ".join(
         f"SELECT {id_col}, t,\n"
-        f"             CAST((((v * 1024 + v{d}) * {fan + 1} + {d}) * 512\n"
+        f"             CAST((((v * 1024 + v{d}) * {DENSE_FAN + 1} + {d}) * 512\n"
         f"                  + LEAST(t{d} - t, {DENSE_DELTA_CAP}))"
         f" * {DENSE_CTX_MOD} + cx AS BIGINT) AS key\n"
         f"      FROM {p}lm0 WHERE v{d} IS NOT NULL"
-        for d in range(1, fan + 1)
+        for d in range(1, DENSE_FAN + 1)
     )
     return f"""{p}pcv AS (
       SELECT {id_col}, i AS t, ord(substr(text, CAST(i AS INT), 1)) AS v
@@ -4976,9 +4929,9 @@ def _dense_lm_ctes(
     {p}pk AS (
       SELECT {id_col}, t, v,
              MAX(v) OVER (PARTITION BY {id_col} ORDER BY t
-               ROWS BETWEEN {r} PRECEDING AND 1 PRECEDING) AS lmx,
+               ROWS BETWEEN {DENSE_PEAK_RADIUS} PRECEDING AND 1 PRECEDING) AS lmx,
              MAX(v) OVER (PARTITION BY {id_col} ORDER BY t
-               ROWS BETWEEN 1 FOLLOWING AND {r} FOLLOWING) AS rmx
+               ROWS BETWEEN 1 FOLLOWING AND {DENSE_PEAK_RADIUS} FOLLOWING) AS rmx
       FROM {p}pcv
     ),
     {p}pe AS (
@@ -5011,12 +4964,7 @@ def _dense_lm_ctes(
     )"""
 
 
-def dense_landmark_retrieval_sql(
-    cap: int | None = None,
-    clip_len: int = 192,
-    n_probes: int = 4,
-    min_len: int = 300,
-) -> str:
+def dense_landmark_retrieval_sql() -> str:
     """Twin of q317: clip-to-source retrieval over the DENSE
     (content-defined) landmark index — probe clips cut at offsets
     53/90/127/164 (``53 + (doc_id % 4) * 37`` — none a multiple of the
@@ -5027,8 +4975,6 @@ def dense_landmark_retrieval_sql(
     from kp_data_pipelines_spark.operators.multimodal import (
         MEDIA_DF_CAP_MAX,
     )
-
-    cap = MEDIA_DF_CAP_MAX if cap is None else cap
     return f"""
     WITH m AS (
       SELECT doc_id AS media_id, text FROM documents
@@ -5037,7 +4983,7 @@ def dense_landmark_retrieval_sql(
     {_dense_lm_ctes("m", "media_id")},
     dkf AS (
       SELECT key FROM dlm GROUP BY key
-      HAVING COUNT(DISTINCT media_id) <= {cap}
+      HAVING COUNT(DISTINCT media_id) <= {MEDIA_DF_CAP_MAX}
     ),
     dlmk AS MATERIALIZED (
       SELECT dlm.media_id, dlm.t, dlm.key FROM dlm JOIN dkf USING (key)
@@ -5045,9 +4991,9 @@ def dense_landmark_retrieval_sql(
     dprobes AS (
       SELECT doc_id AS probe_id,
              substr(text, CAST(53 + (doc_id % 4) * 37 + 1 AS INT),
-                    {clip_len}) AS text
-      FROM documents WHERE length(text) >= {min_len}
-      ORDER BY doc_id LIMIT {n_probes}
+                    192) AS text
+      FROM documents WHERE length(text) >= 300
+      ORDER BY doc_id LIMIT 4
     ),
     {_dense_lm_ctes("dprobes", "probe_id", prefix="q")},
     dvotes AS (
@@ -5069,9 +5015,7 @@ def dense_landmark_retrieval_sql(
     """
 
 
-def df_cap_recall_sweep_sql(
-    clip_len: int = 192, n_probes: int = 4, min_len: int = 300
-) -> str:
+def df_cap_recall_sweep_sql() -> str:
     """Twin of q324: the landmark df-cap's recall/volume tradeoff as a
     measured curve. One corpus landmark table and one probe join (at
     the widest cap); each cap in MEDIA_DF_CAP_SWEEP counts kept keys,
@@ -5105,9 +5049,9 @@ def df_cap_recall_sweep_sql(
     dprobes AS (
       SELECT doc_id AS probe_id,
              substr(text, CAST(53 + (doc_id % 4) * 37 + 1 AS INT),
-                    {clip_len}) AS text
-      FROM documents WHERE length(text) >= {min_len}
-      ORDER BY doc_id LIMIT {n_probes}
+                    192) AS text
+      FROM documents WHERE length(text) >= 300
+      ORDER BY doc_id LIMIT 4
     ),
     {_dense_lm_ctes("dprobes", "probe_id", prefix="q")},
     swcand AS MATERIALIZED (
@@ -5186,7 +5130,7 @@ def neardup_edit_distance_sql() -> str:
     """
 
 
-def media_datasheet_sql(max_hamming: int = 4) -> str:
+def media_datasheet_sql() -> str:
     """Twin of q314: the per-source MEDIA datasheet — identity stats at
     the three layers the round-8 surface measures (byte sha, perceptual
     dHash, Hamming-radius neighborhood) composed into one table: payload
@@ -5196,7 +5140,7 @@ def media_datasheet_sql(max_hamming: int = 4) -> str:
     store)."""
     return f"""
     WITH {_media_phash_cte()},
-    {_media_hamming_cand_cte(max_hamming)},
+    {_media_hamming_cand_cte(4)},
     ids AS (
       SELECT doc_id AS media_id, source, sha256(text) AS sha
       FROM documents
@@ -5227,16 +5171,9 @@ def media_datasheet_sql(max_hamming: int = 4) -> str:
     """
 
 
-def ivfpq_adc_sql(
-    n_queries: int = 8,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    n_subspaces: int = 8,
-    kk: int = 10,
-    rerank_m: int = 30,
-) -> str:
+def ivfpq_adc_sql() -> str:
     """Twin of q328: IVF-PQ with an ADC candidate scan. The codebook ==
-    the IVF centroid seed (first ``n_centroids`` candidates by vec_id),
+    the IVF centroid seed (first 16 candidates by vec_id),
     per-subspace PQ codes replay q155's assignment (L2 sequential fold;
     dist ASC, cid ASC ties), the per-anchor ADC lookup table is the same
     sequential sub-distance fold between the RAW query and each codebook
@@ -5244,6 +5181,9 @@ def ivfpq_adc_sql(
     entries — every float op in the same order as the Spark side, so
     rankings (adc ASC, vec_id ASC) match bit-for-bit. Exact/rerank
     cosines are the standard `_dot` fold (== multi_cosine_kernel)."""
+    n_queries = 8
+    n_subspaces = 8
+    kk = 10
     dim = EMBEDDING_DIM
     sub = dim // n_subspaces
 
@@ -5293,7 +5233,7 @@ def ivfpq_adc_sql(
     c AS (
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid,
              v AS cv
-      FROM e ORDER BY vec_id LIMIT {n_centroids}
+      FROM e ORDER BY vec_id LIMIT 16
     ),
     cn AS (
       SELECT cid, cv,
@@ -5318,7 +5258,7 @@ def ivfpq_adc_sql(
                  ORDER BY {_dot("q.qv", "cn.cv")} / cn.ncv DESC, cn.cid)
                  AS prn
         FROM q CROSS JOIN cn
-      ) WHERE prn <= {nprobe}
+      ) WHERE prn <= 4
     ),
     {codes_chain},
     codes AS MATERIALIZED (
@@ -5343,7 +5283,7 @@ def ivfpq_adc_sql(
       FROM adcc
     ),
     adck AS (SELECT qid, vec_id FROM adcrank WHERE rn <= {kk}),
-    surv AS (SELECT qid, vec_id FROM adcrank WHERE rn <= {rerank_m}),
+    surv AS (SELECT qid, vec_id FROM adcrank WHERE rn <= 30),
     rr AS (
       SELECT qid, vec_id FROM (
         SELECT s.qid, s.vec_id,
@@ -5385,9 +5325,7 @@ def ivfpq_adc_sql(
     """
 
 
-def learned_quality_sql(
-    n_buckets: int = 1024, q_min: str = "0.8"
-) -> str:
+def learned_quality_sql() -> str:
     """Twin of q329: a LEARNED linear quality classifier over hashed
     unigrams + hashed STRUCTURAL tokens, trained on the q22 heuristic
     gate as weak labels with a LEARNED decision threshold. Features:
@@ -5405,6 +5343,7 @@ def learned_quality_sql(
     replayable twin). The train/holdout split is a TWO-round LCG hash
     of doc_id mod 2 (the q239 lesson — bare parity is source-aligned
     on this fixture)."""
+    n_buckets = 1024
     (a1, b1) = _hash_params(1, 73)[0]
     (a2, b2) = _hash_params(1, 74)[0]
     m = _MOD
@@ -5447,7 +5386,7 @@ def learned_quality_sql(
     ),
     lab AS MATERIALIZED (
       SELECT doc_id, source,
-             CASE WHEN {_QUALITY_SQL} >= {q_min} THEN 1 ELSE 0 END AS label,
+             CASE WHEN {_QUALITY_SQL} >= 0.8 THEN 1 ELSE 0 END AS label,
              {split} AS split_bit
       FROM documents
     ),
@@ -5520,7 +5459,7 @@ def learned_quality_sql(
     FROM d GROUP BY source ORDER BY source
     """
 
-def wav_decoded_constellation_sql(w: int = 32, fan: int = 3) -> str:
+def wav_decoded_constellation_sql() -> str:
     """Twin of q330: the REAL audio codec round trip + landmarks over
     the DECODED samples. The Spark side encodes each document's bytes
     as TWO byte-different RIFF/WAVE containers of identical 8-bit PCM
@@ -5560,7 +5499,7 @@ def wav_decoded_constellation_sql(w: int = 32, fan: int = 3) -> str:
              t.text
       FROM reps r JOIN tok t ON t.doc_id = r.rep_doc
     ),
-    {_constellation_lm_ctes("m", "media_id", w=w, fan=fan)},
+    {_constellation_lm_ctes("m", "media_id")},
     lstats AS (
       SELECT m.source,
              CAST(COUNT(*) AS BIGINT) AS n_landmarks,
@@ -5583,9 +5522,7 @@ def wav_decoded_constellation_sql(w: int = 32, fan: int = 3) -> str:
     """
 
 
-def pq_refine_sql(
-    n_subspaces: int = 8, n_codes: int = 16, n_iter: int = 2
-) -> str:
+def pq_refine_sql() -> str:
     """Twin of q332: per-subspace Lloyd refinement of the PQ codebook.
     Round r's per-subspace assignments (L2 sequential fold; dist ASC,
     cid ASC ties — the q155 lane) double as the error measurement for
@@ -5595,6 +5532,8 @@ def pq_refine_sql(
     sub-centroid via COALESCE over the full (cid, dim) grid. Total
     reconstruction error per round is the quantized BIGINT-exact sum
     of per-row subspace-ordered error sums."""
+    n_subspaces = 8
+    n_iter = 2
     dim = EMBEDDING_DIM
     sub = dim // n_subspaces
 
@@ -5616,7 +5555,7 @@ def pq_refine_sql(
       SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER)
                AS cid,
              v AS cv
-      FROM e ORDER BY vec_id LIMIT {n_codes}
+      FROM e ORDER BY vec_id LIMIT 16
     ),
     g AS (SELECT unnest(range({dim})) AS pos)"""
     ]

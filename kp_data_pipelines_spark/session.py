@@ -80,7 +80,7 @@ def _has_active_session() -> bool:
     return SparkSession.getActiveSession() is not None
 
 
-def release_pinned_rdds(spark: SparkSession, blocking: bool = False) -> int:
+def release_pinned_rdds(spark: SparkSession, blocking: bool = True) -> int:
     """Unpersist every RDD the SparkContext still pins; returns the count.
 
     Eager ``localCheckpoint`` (the graph/prefix/containment operators use

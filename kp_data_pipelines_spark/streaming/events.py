@@ -134,13 +134,13 @@ def _batch_writer(out_dir: str, batch_fn):
 
 
 def _read_batches(spark: SparkSession, out_dir: str, result_schema) -> DataFrame:
-    """Read every ``batch=N`` result dir back as one batch DataFrame."""
-    cols = spark.createDataFrame([], result_schema).columns
+    """Read every ``batch=N`` result dir back as one batch DataFrame.
+    ``recursiveFileLookup`` also turns off partition discovery, so the
+    columns are exactly ``result_schema``'s (no ``batch`` column)."""
     return (
         spark.read.schema(result_schema)
         .option("recursiveFileLookup", "true")  # flatten batch=N subdirs
         .parquet(out_dir)
-        .select(*cols)
     )
 
 

@@ -270,10 +270,21 @@ def read_state_parquet(
     """Read a persistent parquet state table; missing path = first
     batch (empty frame with the explicit schema — an existing-but-empty
     dir would otherwise raise UNABLE_TO_INFER_SCHEMA, which the explicit
-    schema also prevents). Read errors on an EXISTING path (corrupt
-    footer, permissions, transient IO) raise loudly."""
+    schema also prevents). The empty frame is typed null literals over
+    ``spark.range(0)``, built on the JVM: ``createDataFrame([], schema)``
+    would parallelize a Python RDD and run Python-worker tasks. Read
+    errors on an EXISTING path (corrupt footer, permissions, transient
+    IO) raise loudly."""
     if not path_exists(spark, state_dir):
-        return spark.createDataFrame([], schema)
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructType
+
+        return spark.range(0).select(
+            *(
+                F.lit(None).cast(f.dataType).alias(f.name)
+                for f in StructType.fromDDL(schema).fields
+            )
+        )
     return spark.read.schema(schema).parquet(state_dir)
 
 

@@ -1021,3 +1021,18 @@ def test_ephemeral_growing_stores_leave_no_order_dir(
     ):
         assert QUERIES[name](spark, SF_DIR).count() > 0
     assert not [e for e in os.listdir(tmp_path) if e.endswith("__order")]
+
+
+def test_missing_store_reads_as_jvm_empty_frame(spark, tmp_path):
+    """A growing store's first trigger (no store dir yet) reads an empty
+    frame with the DDL schema, built on the JVM: no ``LogicalRDD``, so
+    the query over it starts no Python-worker tasks."""
+    from pyspark.sql.types import StructType
+
+    from kp_data_pipelines_spark.streaming.state_io import read_state_parquet
+
+    ddl = "packed long, run string, batch long"
+    df = read_state_parquet(spark, str(tmp_path / "no_store"), ddl)
+    assert df.schema == StructType.fromDDL(ddl)
+    assert "LogicalRDD" not in df._jdf.queryExecution().analyzed().toString()
+    assert df.count() == 0

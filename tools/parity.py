@@ -3,6 +3,9 @@
 Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
 DuckDB at the given sf dir, compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, rows sorted).
+A query on which both engines return 0 rows prints ``EMPTY``, not
+``PASS``, and is counted apart in the summary: it is no failure, but
+it proves nothing about the values at that scale.
 
 Usage: python tools/parity.py [--vanilla] [--subset TAG] [sf_dir] [query ...]
 
@@ -103,7 +106,7 @@ def main() -> int:
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
 
-    n_pass = n_fail = n_weak = 0
+    n_pass = n_empty = n_fail = n_weak = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -147,10 +150,16 @@ def main() -> int:
         if problems:
             print(f"FAIL {name}: " + "; ".join(problems))
             n_fail += 1
+        elif len(sdf) == 0:
+            print(f"EMPTY {name} (0 rows on both engines)")
+            n_empty += 1
         else:
             print(f"PASS {name} ({len(sdf)} rows)")
             n_pass += 1
-    print(f"\n{n_pass} pass, {n_fail} fail, {n_weak} weak (no oracle)")
+    print(
+        f"\n{n_pass} pass, {n_empty} empty (0 rows on both engines), "
+        f"{n_fail} fail, {n_weak} weak (no oracle)"
+    )
     return 1 if n_fail else 0
 
 

@@ -51,7 +51,7 @@ def main() -> None:
     next(iter(QUERIES.values()))(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    release_pinned_rdds(spark, blocking=True)
+    release_pinned_rdds(spark)
 
     timings: dict[str, float] = {}
     for name in names:
@@ -62,7 +62,7 @@ def main() -> None:
         )
         with open(os.path.join(out_dir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(plan)
-        release_pinned_rdds(spark, blocking=True)
+        release_pinned_rdds(spark)
         if timed:
             spark.sparkContext.setJobDescription(f"{name} [{suffix}]")
             best = float("inf")
@@ -72,7 +72,7 @@ def main() -> None:
                     "overwrite"
                 ).save()
                 best = min(best, time.perf_counter() - t0)
-                release_pinned_rdds(spark, blocking=True)
+                release_pinned_rdds(spark)
             spark.sparkContext.setJobDescription(None)
             timings[name] = round(best, 4)
     if timed:

@@ -120,7 +120,7 @@ def main() -> None:
             ts.append(time.perf_counter() - t0)
             # keep the session flat (localCheckpoint blocks) so later
             # rows measure their plans, not accumulated storage pressure
-            release_pinned_rdds(spark, blocking=True)
+            release_pinned_rdds(spark)
         slopes = [
             math.log(ts[i + 1] / ts[i])
             / math.log(SFS[i + 1][1] / SFS[i][1])

@@ -61,8 +61,8 @@ def main() -> int:
         "noop"
     ).mode("overwrite").save()
 
-    # BLOCKING release, the CLAUDE.md/SCALE.md §15 rule for ANY timed
-    # loop: the async default returns while executors are still
+    # BLOCKING release (the default), the CLAUDE.md/SCALE.md §15 rule for
+    # ANY timed loop: an async release returns while executors are still
     # unpersisting, and that cleanup lands inside the NEXT query's timed
     # region — it inflated the round-5 bench ~7% overall and, in round
     # 9, showed up here as a phantom 1.6x pass-2 "violation" on
@@ -70,7 +70,7 @@ def main() -> int:
     # scheduler interference; 5 isolated runs with blocking hygiene are
     # flat 6.7 -> 5.1 s).
     def release(s):
-        return release_pinned_rdds(s, blocking=True)
+        return release_pinned_rdds(s)
 
     p1 = run_pass(spark, QUERIES, args.sf_dir, release)
     p2 = run_pass(spark, QUERIES, args.sf_dir, release)
