@@ -17,9 +17,8 @@ Layers
                  and two-phase containment join, dedup family, aggregation
                  helpers, window/dedup-keep-first, reconciliation,
                  text analysis, similarity search, multimodal).
-- ``plans``      declarative pipeline graph + schema guards.
 - ``streaming``  Structured Streaming equivalents of the snapshot-folder
-                 ingestion loop, watermarked windowed aggregation.
+                 ingestion loop, growing-store micro-batch ingest.
 
 Everything is lazy DataFrame composition; nothing collects to the driver in
 a hot path. Designed for a 1000-executor cluster; tested on local[*].

@@ -39,7 +39,6 @@ from kp_data_pipelines_spark.operators.bpe import (
 )
 from kp_data_pipelines_spark.operators.dedup import (
     dedup_keep_first,
-    duplicate_rows,
     row_fingerprint,
     with_duplicate_count,
 )
@@ -55,7 +54,6 @@ from kp_data_pipelines_spark.operators.similarity import (
     ensure_parallelism,
 )
 from kp_data_pipelines_spark.operators.textops import (
-    TOKEN_REGEX,
     avg_token_length,
     distinct_word_count,
     doc_fingerprint,
@@ -1146,8 +1144,8 @@ def q42_embedding_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     """Embedding-cosine near-dup pairs, EXACT within a blocking key (the
     cluster label): keyed equi-join + sequential-fold dot product, so the
     doubles are bit-identical to the DuckDB oracle's list_reduce fold.
-    The LSH-bucketed variant (embedding_near_dup_pairs) is the no-label
-    scale path; blocked-exact is the verification half."""
+    The no-label scale path is LSH bucketing (q40's
+    ``lsh_bucket_cosine_topk``); blocked-exact is the verification half."""
     from kp_data_pipelines_spark.operators.similarity import cosine_pairs_blocked
 
     emb = read_table(spark, sf, "embeddings")
@@ -1537,8 +1535,8 @@ def q53_sessionization(spark: SparkSession, sf: str) -> DataFrame:
     """Sessionization (gaps-and-islands): a 30-minute inactivity gap opens
     a new session. lag -> boundary flag -> running sum = session id ->
     per-session rollup. Two window passes + one aggregate, all partitioned
-    by user — shuffles once on user_id. Streaming twin:
-    streaming/events.sessionize_stateful (applyInPandasWithState)."""
+    by user — shuffles once on user_id. The streaming engine's own
+    session windows (10-minute gap) are q121."""
     ev = read_table(spark, sf, "events").select("user_id", "event_id", "ts", "value")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wrun = (
@@ -5877,8 +5875,8 @@ def q141_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q142_join_skew_report(spark: SparkSession, sf: str) -> DataFrame:
     """Join-key skew profiler — the planning tool that decides between a
-    plain shuffle join, AQE skew split, or salting (joins.salted_join)
-    before running a 100 TB join. One groupBy builds the key histogram;
+    plain shuffle join, AQE skew split, or salting (q177's salted
+    join) before running a 100 TB join. One groupBy builds the key histogram;
     a single-row stats reduce (sum of squares = collision mass) and a
     top-10 hot-key rank join against it. skew_vs_uniform is the hot
     key's multiple of the uniform share; dispersion is the normalized
@@ -17881,10 +17879,7 @@ def q295_adaptive_plan_report(spark: SparkSession, sf: str) -> DataFrame:
     at every SF on real and grid sizes alike. Scale shape: an 8-row
     literal frame unioned with ONE count aggregate; no scans beyond the
     count."""
-    from kp_data_pipelines_spark.operators.similarity import (
-        GRAM_MAX_PLANES,
-        adaptive_n_planes,
-    )
+    from kp_data_pipelines_spark.operators.similarity import GRAM_MAX_PLANES
 
     dim = 64
     grid = spark.createDataFrame(

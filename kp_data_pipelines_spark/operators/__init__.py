@@ -3,13 +3,10 @@
 from kp_data_pipelines_spark.operators.aggregates import (
     collect_set_joined,
     control_sum,
-    grouped_sum,
     pivot_sum,
 )
 from kp_data_pipelines_spark.operators.dedup import (
-    dedup_exact,
     dedup_keep_first,
-    duplicate_rows,
     row_fingerprint,
     with_duplicate_count,
 )
@@ -28,12 +25,9 @@ __all__ = [
     "semi_join",
     "anti_join",
     "containment_join",
-    "dedup_exact",
     "dedup_keep_first",
-    "duplicate_rows",
     "with_duplicate_count",
     "row_fingerprint",
-    "grouped_sum",
     "collect_set_joined",
     "pivot_sum",
     "control_sum",

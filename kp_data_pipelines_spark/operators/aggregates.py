@@ -34,16 +34,6 @@ def exact_sum(col: Column | str, scale: int = 2, precision: int = 18) -> Column:
     return F.sum(c.cast(f"decimal({precision},{scale})")).cast("double")
 
 
-def grouped_sum(
-    df: DataFrame, keys: Sequence[str], amounts: Sequence[str], exact: bool = True
-) -> DataFrame:
-    """A1: ``groupby(keys)[amounts].sum()`` (DOR VP Compare.ipynb:28)."""
-    agg = [
-        (exact_sum(a) if exact else F.sum(a)).alias(f"sum_{a}") for a in amounts
-    ]
-    return df.groupBy(*keys).agg(*agg)
-
-
 def collect_set_joined(col: Column | str, sep: str = "; ") -> Column:
     """A2: sorted-distinct string collect — pandas
     ``lambda s: sep.join(sorted(set(s)))`` (DOP VP Compare.py:125-135) as a
@@ -84,33 +74,3 @@ def control_sum(df: DataFrame, *amounts: str) -> dict[str, float]:
     Driver-side by design — this is a guard, not a pipeline stage."""
     row = df.agg(*[exact_sum(a).alias(a) for a in amounts]).collect()[0]
     return {a: row[a] for a in amounts}
-
-
-def observed_control_sums(df: DataFrame, *amounts: str):
-    """A3 control sums as OBSERVED METRICS: attach the grand-total /
-    row-count / null-count guards to the DataFrame so they are computed
-    DURING the pipeline's own action (the write), not by a second scan.
-
-    The reference prints control sums around every transform
-    (Saoirse Automation.ipynb:563,860; DOP VP Compare.py:199-209) —
-    at 100 TB each printed total is another full pass. ``df.observe``
-    rides the existing job: accumulator-style metrics collected per
-    task, zero extra scans, available from the returned ``Observation``
-    after the first action. Sums aggregate in DECIMAL(18,2) (the
-    ``exact_sum`` rule) so the observed totals are partition-order
-    independent and comparable across runs.
-
-    Returns ``(df_with_observation, observation)``; read
-    ``observation.get`` after an action.
-    """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for a in amounts:
-        metrics.append(exact_sum(a).alias(f"sum_{a}"))
-        metrics.append(
-            F.sum(F.col(a).isNull().cast("long")).alias(f"nulls_{a}")
-        )
-    return df.observe(obs, *metrics), obs

@@ -16,16 +16,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def dedup_exact(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """D1/D2: ``drop_duplicates()`` — full-row or subset-key distinct.
-
-    Subset dedup without an ordering is an arbitrary-pick (same as pandas
-    row-order dependence); use ``dedup_keep_first`` when the surviving row
-    matters.
-    """
-    return df.dropDuplicates(list(subset)) if subset else df.dropDuplicates()
-
-
 def dedup_keep_first(
     df: DataFrame, keys: Sequence[str], order: Sequence[Column | str]
 ) -> DataFrame:
@@ -48,13 +38,6 @@ def with_duplicate_count(df: DataFrame, keys: Sequence[str], out: str = "duplica
     Transaction Duplicates.ipynb:44)."""
     w = Window.partitionBy(*keys)
     return df.withColumn(out, F.count(F.lit(1)).over(w))
-
-
-def duplicate_rows(df: DataFrame, keys: Sequence[str] | None = None) -> DataFrame:
-    """D3: keep ALL copies of duplicated rows (``df[df.duplicated(keep=False)]``,
-    Transaction Duplicates.ipynb:34)."""
-    keys = list(keys) if keys else list(df.columns)
-    return with_duplicate_count(df, keys, "__dc").filter(F.col("__dc") > 1).drop("__dc")
 
 
 def row_fingerprint(df: DataFrame, cols: Sequence[str] | None = None, out: str = "row_hash") -> DataFrame:

@@ -145,43 +145,6 @@ def containment_join(
     return matched.select(*cols).unionByName(fuzzy.select(*cols))
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: salt the (skewed) fact side into
-    ``salt_buckets`` sub-keys and replicate the dim side once per bucket,
-    so one hot key spreads over ``salt_buckets`` reducers instead of
-    melting a single one.
-
-    AQE's skew-join split handles most cases at runtime; explicit salting
-    is for the pathological key (one value = 30% of 100 TB) where even a
-    split partition of a single key exceeds an executor. Only sensible for
-    fact-to-small-dim joins — dim rows are replicated ``salt_buckets``
-    times (a deliberate, bounded blow-up on the small side).
-
-    Only ``inner`` and ``left`` are supported: with the dim side exploded,
-    an outer join would emit every unmatched dim row once per salt bucket.
-    """
-    if how not in ("inner", "left"):
-        raise ValueError(
-            f"salted_join supports how='inner'/'left' (got {how!r}): the dim "
-            "side is replicated per salt bucket, so right/full-outer would "
-            "duplicate unmatched dim rows"
-        )
-    salted_fact = fact.withColumn(
-        "__salt", (F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_buckets))).cast("int")
-    )
-    salted_dim = dim.withColumn(
-        "__salt", F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1)))
-    )
-    out = salted_fact.join(salted_dim, on=[key, "__salt"], how=how)
-    return out.drop("__salt")
-
-
 def asof_join(
     left: DataFrame,
     right: DataFrame,
@@ -352,4 +315,3 @@ def broadcast_scalar(df: DataFrame, max_limit: int = 1024) -> DataFrame:
             + analyzed.toString()[:2000]
         )
     return F.broadcast(df)
-

@@ -9,8 +9,7 @@ codecs until a library is wired in).
 
 Scale notes: media rows are large and skew partition sizes — everything
 here goes through ``mapInPandas`` (Arrow batches, no per-row Python
-dispatch), and ``repartition_for_media`` targets a bytes-per-partition
-budget instead of a row count.
+dispatch), and ``chunk_media`` bounds every row at a fixed chunk size.
 """
 
 from __future__ import annotations
@@ -206,17 +205,6 @@ def extract_media_features(df: DataFrame, decoder: str = "fake") -> DataFrame:
     return df.mapInPandas(batches, schema=FEATURE_SCHEMA)
 
 
-def repartition_for_media(df: DataFrame, target_partition_bytes: int = 128 << 20,
-                          size_col: str | None = None) -> DataFrame:
-    """Partition by a bytes budget, not a row budget: media rows are KB-GB
-    each, so row-count partitioning skews executor memory. Uses the exact
-    per-row payload size (or ``size_col`` if precomputed)."""
-    size = F.length("content").cast("long") if size_col is None else F.col(size_col)
-    total = df.agg(F.sum(size).alias("b")).collect()[0]["b"] or 1
-    n = max(1, int(total // target_partition_bytes) + 1)
-    return df.repartition(n)
-
-
 def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     """Video frame-sampling plumbing: explode a per-row frame timeline from
     duration metadata (decode of each frame is the stubbed step). Output is
@@ -247,14 +235,10 @@ def chunk_media(df: DataFrame, chunk_bytes: int = 1 << 20,
     first exist as ONE row — and a Spark row tops out around 2 GB
     (byte-array / Arrow / parquet-page limits). Use it for payloads that
     already live in a table (the fixture's documents-as-media) and are
-    well under that bound. For file-resident media of ANY size, use
-    ``sources.media_source.chunked_media_ingest`` — it plans chunk
-    offset ranges from file METADATA and reads each range directly, so
-    no row ever exceeds ``chunk_bytes`` (that path, not this one, is the
-    100 TB ingest story; a 4 GB video only ever exists as 4096 1 MB
-    rows). Both paths emit the identical schema and feed the same
-    consumers (``shared_segment_pairs``), pinned by
-    test_chunked_ingest_matches_chunk_media."""
+    well under that bound. File-resident media of any size needs a
+    source that plans chunk offset ranges from file metadata and reads
+    each range directly, so that no row exceeds ``chunk_bytes``; this
+    package has no such source."""
     n_chunks = F.greatest(
         F.ceil(F.length(content_col) / F.lit(chunk_bytes)).cast("int"), F.lit(1)
     )
@@ -345,10 +329,8 @@ DENSE_CTX_MOD = 1024
 
 def shared_segment_pairs(chunks: DataFrame) -> DataFrame:
     """Media pairs sharing >= ``SEGMENT_MIN_SHARED`` distinct content
-    chunks — q305's pair stage as a reusable operator over ANY chunk
-    stream: ``chunk_media`` output (in-table payloads) and
-    ``sources.media_source.chunked_media_ingest`` output (file-resident
-    payloads, chunked at ingest) both feed it unchanged. Chunk identity
+    chunks — q305's pair stage as a reusable operator over any chunk
+    stream with ``chunk_media``'s schema. Chunk identity
     is sha256 of the chunk bytes; identities seen in MEDIA_DF_CAP_MIN..
     MEDIA_DF_CAP_MAX media join pairwise (the boilerplate guard); pairs
     report their shared-chunk count. Input needs (media_id, chunk).

@@ -67,8 +67,8 @@ def snapshot_upsert(
     100 TB than the anti-join + union form, which shuffles each side
     separately. Schemas must align by name. Keys must be unique WITHIN
     each input: ties inside ``updates`` (or inside ``current``) are broken
-    arbitrarily — pre-dedupe with an order column first, as
-    ``streaming.upsert_stream`` does per micro-batch."""
+    arbitrarily — pre-dedupe with an order column first
+    (``dedup.dedup_keep_first``)."""
     from pyspark.sql import Window
 
     tagged = updates.withColumn("__prio", F.lit(0)).unionByName(

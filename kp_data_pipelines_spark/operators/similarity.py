@@ -680,53 +680,6 @@ def with_simhash(
     )
 
 
-def embedding_near_dup_pairs(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    seed: int = 7,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs, LSH-blocked.
-
-    Candidate generation: random-hyperplane bucket equality (vectors with
-    cosine ~1 almost always share all sign bits); verification: exact
-    cosine >= threshold inside the bucket. The only shuffle key is the
-    bucket string — at 100 TB no pairwise work happens across buckets.
-    Recall < 1 by construction (a near-dup pair straddling a hyperplane is
-    missed); raise recall by lowering n_planes or probing bit-flip
-    neighbors. Returns (id_a, id_b, cosine), id_a < id_b.
-    """
-    first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
-    if first is None:  # empty input: no pairs, keep the output schema
-        return df.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine double"
-        )
-    dim = len(first[0])
-    planes = simhash_planes(dim, n_planes, seed)
-    b = with_hyperplane_bucket(
-        ensure_parallelism(df.select(id_col, vec_col)), vec_col, planes, "bucket"
-    )
-    v = F.transform(F.col(f"a.{vec_col}"), lambda x: x.cast("double"))
-    w = F.transform(F.col(f"b.{vec_col}"), lambda x: x.cast("double"))
-    cos = _dot(v, w) / (F.sqrt(_dot(v, v)) * F.sqrt(_dot(w, w)))
-    return (
-        b.alias("a")
-        .join(
-            b.alias("b"),
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .filter(cos >= threshold)  # exact threshold, not the rounded display value
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            F.round(cos, 6).alias("cosine"),
-        )
-    )
-
-
 def cosine_pairs_blocked(
     df: DataFrame,
     id_col: str,

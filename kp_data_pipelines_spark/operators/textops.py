@@ -123,21 +123,6 @@ def rolling_hash(col: Column | str, mod: int = 2147483647, base: int = 31) -> Co
     )
 
 
-def shingles(col: Column | str, k: int = 5) -> Column:
-    """Word k-shingles as an array of STRINGS — readable/debuggable form.
-
-    For hashing pipelines use ``with_hashed_shingles``: building the
-    shingle strings (slice + array_join per gram) costs ~10x more than
-    hashing token-hash slices directly, and MinHash/Jaccard only ever need
-    the hash."""
-    toks = F.split(F.trim(F.lower(_c(col))), r"\s+")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
-    return F.when(n < k, F.array(F.array_join(toks, " "))).otherwise(
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " "))
-    )
-
-
 def chunk_documents(
     df,
     id_col: str = "doc_id",
@@ -361,8 +346,8 @@ def with_hashed_shingles(df, text_col: str, out: str = "gram_hashes", k: int = 5
 
     Two projection stages so the token-hash array computes once per row
     (CollapseProject keeps non-cheap exprs referenced twice apart). Gram
-    identity differs from ``xxhash64(shingles(...))`` but is equally
-    injective — set semantics (Jaccard, MinHash) are unaffected.
+    identity differs from hashing the joined shingle strings but is
+    equally injective — set semantics (Jaccard, MinHash) are unaffected.
     Short docs (< k tokens) produce one gram over all tokens."""
     th = F.transform(
         F.split(F.trim(F.lower(F.col(text_col))), r"\s+"), lambda t: F.xxhash64(t)

@@ -4,7 +4,6 @@ from kp_data_pipelines_spark.sources.readers import (
     read_csv,
     read_json_doc,
     read_ndjson,
-    read_parquet,
     read_table,
     read_table_stream,
 )
@@ -16,7 +15,6 @@ __all__ = [
     "read_csv",
     "read_json_doc",
     "read_ndjson",
-    "read_parquet",
     "read_table",
     "read_table_stream",
     "SchemaRegistry",

@@ -17,25 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def read_parquet(
-    spark: SparkSession,
-    path: str,
-    schema: StructType | None = None,
-    merge_schema: bool = False,
-) -> DataFrame:
-    """Parquet scan. ``merge_schema`` reconciles evolved schemas across
-    files/partitions (columns added over time union in as nulls for old
-    files) — the schema-evolution read for long-lived versioned or
-    snapshot tables; off by default because footer merging costs one
-    extra pass over file metadata."""
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", True)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
-
-
 _NANOS_COLS_CACHE: dict[tuple, list[str]] = {}
 
 
@@ -146,23 +127,6 @@ def read_table_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return _read_table(spark, sf_dir, name, stream=True)
 
 
-TESTDATA_TABLES = (
-    "region nation customer supplier part orders lineitem "
-    "events documents embeddings"
-).split()
-
-
-def register_views(
-    spark: SparkSession, sf_dir: str, tables: list[str] | None = None
-) -> None:
-    """Register every testdata table as a temp view so users can drive the
-    engine with plain ``spark.sql(...)`` — the SQL face of the same
-    nanos-safe readers (each view goes through ``read_table``, so foreign
-    sessions inherit the timestamp handling)."""
-    for name in tables or TESTDATA_TABLES:
-        read_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -189,17 +153,6 @@ def read_ndjson(spark: SparkSession, path: str, schema: StructType | None = None
     if schema is not None:
         reader = reader.schema(schema)
     return reader.json(path)
-
-
-def read_orc(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """ORC scan — Spark-native columnar source with the same predicate
-    pushdown / column pruning / partition discovery as parquet (the
-    interchange format warehouses emit; no reference equivalent, added
-    for source-format parity with the parquet path)."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
 
 
 def read_json_doc(

@@ -33,33 +33,6 @@ def write_versioned(df: DataFrame, base_path: str, version: str) -> str:
     return path
 
 
-def vacuum_versions(base_path: str, keep: int = 3) -> list[str]:
-    """Retention for ``write_versioned``: drop all but the newest ``keep``
-    `version=` partitions (lexicographic order — use sortable version
-    strings, e.g. ISO dates). The lifecycle half the reference's
-    backup-before-overwrite implies but never implements: without
-    retention, immutable versioned writes grow without bound. Returns the
-    removed paths. Refuses keep < 1 (would delete the current version)."""
-    import os
-    import shutil
-
-    if keep < 1:
-        raise ValueError(f"keep must be >= 1 (got {keep})")
-    if not os.path.isdir(base_path):
-        return []
-    versions = sorted(
-        d for d in os.listdir(base_path)
-        if d.startswith("version=")
-        and os.path.isdir(os.path.join(base_path, d))
-    )
-    removed = []
-    for d in versions[:-keep]:
-        p = os.path.join(base_path, d)
-        shutil.rmtree(p)
-        removed.append(p)
-    return removed
-
-
 def write_report_csv(df: DataFrame, path: str, header: bool = True) -> None:
     """K1: single-file CSV contract for report consumers (small outputs)."""
     df.coalesce(1).write.mode("overwrite").option("header", header).csv(path)
@@ -344,50 +317,3 @@ def _write_interactive_stdlib(
         formulas=formulas,
     )
     book.save(path)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: "list[str]",
-    num_buckets: int = 32,
-    sort_cols: "list[str] | None" = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed-table sink: co-locates join/agg keys at WRITE time
-    so repeated joins on ``bucket_cols`` skip the shuffle entirely (both
-    sides bucketed the same way -> SortMergeJoin with zero Exchange).
-    The 100 TB pattern for fact-to-fact joins that broadcast can't cover."""
-    writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table)
-
-
-def compact_table(
-    spark, path: str, target_file_bytes: int = 128 << 20
-) -> int:
-    """Rewrite a parquet directory into ~target-size files (the
-    small-files remedy: a streaming sink or over-parallel write leaves
-    thousands of KB-scale files whose per-file open/footer cost dominates
-    scans at 100 TB). Sizes from the actual on-disk bytes, rewrites via a
-    temp dir then atomic-ish swap. Returns the new file count."""
-    import math
-    import os
-    import shutil
-
-    total = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(path)
-        for f in fs
-        if f.endswith(".parquet")
-    )
-    n = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + "__compacting"
-    df.repartition(n).write.mode("overwrite").parquet(tmp)
-    old = path.rstrip("/") + "__old"
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    return n

@@ -159,20 +159,9 @@ def cdc_ingest_stream(
     w: int = 16,
     mask: int = 64,
     checkpoint_dir: str | None = None,
-    runner=None,
 ) -> DataFrame:
     """Run the growing-store CDC ingest over the current backlog
     (AvailableNow) and return the merged per-source ledger.
-
-    ``runner`` is the ADAPTER SEAM for non-file sources: it defaults to
-    ``events.run_available_now_foreach_batch`` (file backlog,
-    AvailableNow), and an UNBOUNDED source — rate, Kafka — passes a
-    bounded driver instead (``events.run_bounded_foreach_batch``; see
-    ``events.rate_mapped_doc_stream`` and
-    test_cdc_ingest_from_rate_source_equals_batch). The per-batch
-    ingest logic is identical either way; only the stop condition
-    differs, which is the point: the growing-store contract does not
-    depend on the source terminating.
 
     ``state_dir`` hosts the persistent chunk-identity store; it
     survives across invocations, so successive calls resume dedup
@@ -192,9 +181,7 @@ def cdc_ingest_stream(
         "cdc_ingest_stream",
         lambda batch, seen: _cdc_ingest_partial(batch, seen, w, mask),
     )
-    if runner is None:
-        runner = run_available_now_foreach_batch
-    partials = runner(
+    partials = run_available_now_foreach_batch(
         stream_df,
         step,
         CDC_INGEST_PARTIAL_SCHEMA,

@@ -19,7 +19,7 @@ from pyspark.sql.types import (
 )
 
 from kp_data_pipelines_spark.functions.cleaning import sentinel_to_null
-from kp_data_pipelines_spark.operators.aggregates import control_sum, grouped_sum
+from kp_data_pipelines_spark.operators.aggregates import control_sum, exact_sum
 from kp_data_pipelines_spark.operators.joins import anti_join, lookup_join
 from kp_data_pipelines_spark.operators.reconcile import reconcile, reconcile_summary
 from kp_data_pipelines_spark.sources.readers import read_table
@@ -95,9 +95,11 @@ def test_reconciliation_balance_golden(spark):
     li = read_table(spark, SF_DIR, "lineitem")
     orders = read_table(spark, SF_DIR, "orders")
 
-    dor = grouped_sum(
-        li.filter(F.col("l_linenumber") <= 4), ["l_orderkey"], ["l_extendedprice"]
-    ).withColumnsRenamed({"l_orderkey": "key", "sum_l_extendedprice": "dor_amount"})
+    dor = (
+        li.filter(F.col("l_linenumber") <= 4)
+        .groupBy(F.col("l_orderkey").alias("key"))
+        .agg(exact_sum("l_extendedprice").alias("dor_amount"))
+    )
     vp = (
         orders.select(F.col("o_orderkey").alias("key"), F.col("o_totalprice").alias("vp_amount"))
     )

@@ -10,7 +10,6 @@ from kp_data_pipelines_spark.operators.multimodal import (
     MEDIA_SCHEMA,
     extract_media_features,
     frame_sample_plan,
-    repartition_for_media,
 )
 
 
@@ -52,12 +51,6 @@ def test_extract_media_features_fake_decoder(media):
 def test_real_decoder_is_explicit_stub(media):
     with pytest.raises(Exception, match="NotImplementedError|codecs|PIL"):
         extract_media_features(media, decoder="real").collect()
-
-
-def test_repartition_for_media(media):
-    out = repartition_for_media(media, target_partition_bytes=16)
-    assert out.rdd.getNumPartitions() >= 2
-    assert out.count() == 4
 
 
 def test_frame_sample_plan(media):
@@ -611,101 +604,6 @@ def test_dense_retrieval_hits_exact_offsets(spark):
         assert r["matched_media"] == r["probe_id"]
         assert r["offset_chars"] == 53 + (r["probe_id"] % 4) * 37
         assert r["votes"] >= 4
-
-
-def test_chunked_ingest_matches_chunk_media(spark, tmp_path):
-    """The chunk-at-INGEST source (no full payload ever a row) and the
-    chunk-a-loaded-column operator must emit IDENTICAL chunk rows for
-    the same payloads — the two paths are interchangeable for every
-    downstream consumer. Covers: multi-chunk files, a sub-chunk file,
-    an empty file, a file spanning multiple task ranges."""
-    from kp_data_pipelines_spark.operators.multimodal import chunk_media
-    from kp_data_pipelines_spark.sources.media_source import (
-        chunked_media_ingest,
-    )
-
-    payloads = {
-        1: bytes(range(256)) * 40,   # 10240 B -> 11 chunks of 1000
-        2: b"tiny",
-        3: b"",
-        4: b"z" * 3001,
-    }
-    d = tmp_path / "media"
-    d.mkdir()
-    for mid, content in payloads.items():
-        (d / f"{mid}.bin").write_bytes(content)
-
-    ing = chunked_media_ingest(
-        spark, str(d), chunk_bytes=1000, id_from_name=True
-    )
-    # task_bytes small enough that file 1 spans multiple InputPartitions
-    ing_small_tasks = (
-        spark.read.format("chunked_media")
-        .option("path", str(d))
-        .option("chunk_bytes", 1000)
-        .option("id_from_name", "true")
-        .option("task_bytes", 3000)
-        .load()
-    )
-    tbl = spark.createDataFrame(
-        [(m, bytearray(c)) for m, c in payloads.items()],
-        "media_id long, content binary",
-    )
-    col_rows = {
-        (r["media_id"], r["chunk_idx"]): r
-        for r in chunk_media(tbl, chunk_bytes=1000).collect()
-    }
-    for ing_df in (ing, ing_small_tasks):
-        rows = {
-            (r["media_id"], r["chunk_idx"]): r for r in ing_df.collect()
-        }
-        assert set(rows) == set(col_rows)
-        for k, r in rows.items():
-            c = col_rows[k]
-            assert bytes(r["chunk"] or b"") == bytes(c["chunk"] or b"")
-            for f in ("total_bytes", "offset", "chunk_len"):
-                assert r[f] == c[f], (k, f, r[f], c[f])
-
-
-def test_shared_segment_pairs_on_chunked_ingest(spark, tmp_path):
-    """q305's pair operator over the chunk-at-ingest path: files that
-    share 64-byte blocks pair up exactly as the in-table path reports
-    them — the 100 TB ingest story drives the same dedup."""
-    from kp_data_pipelines_spark.operators.multimodal import (
-        chunk_media,
-        shared_segment_pairs,
-    )
-    from kp_data_pipelines_spark.sources.media_source import (
-        chunked_media_ingest,
-    )
-
-    # 3 DISTINCT shared 64-byte chunks (identical chunks would collapse
-    # to one identity under the per-media dedup)
-    shared = bytes(range(64)) + bytes(range(64, 128)) + bytes(range(128, 192))
-    payloads = {
-        1: shared + b"a" * 64,
-        2: shared + b"b" * 64,
-        3: b"c" * 256,
-    }
-    d = tmp_path / "media"
-    d.mkdir()
-    for mid, content in payloads.items():
-        (d / f"{mid}.bin").write_bytes(content)
-    ing = chunked_media_ingest(spark, str(d), chunk_bytes=64,
-                               id_from_name=True)
-    got = sorted(
-        (r["id_a"], r["id_b"], r["shared_chunks"])
-        for r in shared_segment_pairs(ing).collect()
-    )
-    tbl = spark.createDataFrame(
-        [(m, bytearray(c)) for m, c in payloads.items()],
-        "media_id long, content binary",
-    )
-    want = sorted(
-        (r["id_a"], r["id_b"], r["shared_chunks"])
-        for r in shared_segment_pairs(chunk_media(tbl, 64)).collect()
-    )
-    assert got == want == [(1, 2, 3)]
 
 
 def test_decode_to_hamming_seam(spark):

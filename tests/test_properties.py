@@ -19,7 +19,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from kp_data_pipelines_spark.operators.aggregates import pivot_sum
-from kp_data_pipelines_spark.operators.dedup import dedup_exact
+from kp_data_pipelines_spark.operators.dedup import dedup_keep_first
 from kp_data_pipelines_spark.operators.joins import MERGE_COL, merge_indicator
 
 _settings = settings(
@@ -55,10 +55,13 @@ def test_outer_join_partition_property(spark, lk, rk):
 @given(vals=st.lists(st.tuples(st.integers(0, 5), st.integers(0, 3)), max_size=20))
 @_settings
 def test_dedup_idempotent(spark, vals):
-    df = spark.createDataFrame(vals or [(0, 0)], "a long, b long")
-    once = dedup_exact(df)
-    twice = dedup_exact(once)
-    assert once.count() == twice.count() == len(set(vals or [(0, 0)]))
+    vals = vals or [(0, 0)]
+    df = spark.createDataFrame(vals, "a long, b long")
+    once = dedup_keep_first(df, ["a"], ["b"])
+    twice = dedup_keep_first(once, ["a"], ["b"])
+    want = {(a, min(b for k, b in vals if k == a)) for a, _ in vals}
+    assert sorted(map(tuple, once.collect())) == sorted(want)
+    assert sorted(map(tuple, twice.collect())) == sorted(want)
 
 
 @given(vals=amounts)

@@ -1,5 +1,5 @@
-"""Tests for sources (registry/conform/drift, resolver, readers) and the
-pipeline graph."""
+"""Tests for sources (registry/conform/drift, resolver, readers) and
+sinks."""
 
 from __future__ import annotations
 
@@ -15,7 +15,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from kp_data_pipelines_spark.plans import Pipeline
 from kp_data_pipelines_spark.sources import (
     SchemaRegistry,
     latest_snapshot,
@@ -117,19 +116,6 @@ def test_read_binary_dir(spark, tmp_path):
     assert got == {name: (data, len(data)) for name, data in files.items()}
 
 
-def test_pipeline_graph(spark):
-    p = Pipeline(spark)
-    p.source("orders", lambda s: read_table(s, SF_DIR, "orders"))
-    p.stage("big", lambda o: o.filter(F.col("o_totalprice") > 100000), "orders")
-    p.stage(
-        "by_status",
-        lambda big: big.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n")),
-        "big",
-    )
-    out = p.resolve("by_status")
-    assert out.count() > 0
-
-
 def test_csv_roundtrip(spark, tmp_path):
     from kp_data_pipelines_spark.sources import read_csv, write_report_csv
 
@@ -140,6 +126,25 @@ def test_csv_roundtrip(spark, tmp_path):
     assert len(files) == 1  # single-file contract
     back = read_csv(spark, path)
     assert back.count() == 2
+
+
+def test_json_readers(spark, tmp_path):
+    """S5-S7: a whole-document UTF-16 JSON array keeps its nested struct
+    native (flattened with ``select("a.*")``), and NDJSON reads one row
+    per line."""
+    import json
+
+    from kp_data_pipelines_spark.sources import read_json_doc, read_ndjson
+
+    recs = [{"id": 1, "a": {"x": 1.5, "y": "p"}}, {"id": 2, "a": {"x": 2.5, "y": "q"}}]
+    doc = tmp_path / "doc.json"
+    doc.write_text(json.dumps(recs, indent=2), encoding="utf-16")
+    flat = read_json_doc(spark, str(doc), encoding="UTF-16").select("id", "a.*")
+    assert sorted(map(tuple, flat.collect())) == [(1, 1.5, "p"), (2, 2.5, "q")]
+
+    nd = tmp_path / "rows.ndjson"
+    nd.write_text("\n".join(json.dumps(r) for r in recs) + "\n")
+    assert sorted(r["id"] for r in read_ndjson(spark, str(nd)).collect()) == [1, 2]
 
 
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
@@ -167,17 +172,6 @@ def test_orc_roundtrip(spark, tmp_path):
     df.write.orc(path)
     back = spark.read.orc(path)
     assert sorted(map(tuple, back.collect())) == [(1, "a", 1.5), (2, "b", 2.5)]
-
-
-def test_register_views_sql_interface(spark):
-    from kp_data_pipelines_spark.sources.readers import register_views
-
-    register_views(spark, "/root/testdata/sf0.001", ["nation", "events"])
-    n = spark.sql("SELECT count(*) AS c FROM nation").collect()[0]["c"]
-    assert n == 25
-    # events goes through the nanos-safe reader: ts must be a timestamp
-    dt = dict(spark.sql("SELECT * FROM events").dtypes)
-    assert dt["ts"] == "timestamp"
 
 
 def test_synthetic_corpus_datasource(spark):
@@ -212,24 +206,6 @@ def test_synthetic_corpus_datasource(spark):
         {"n": "min"}
     ).head()[0]
     assert toks >= 20
-
-
-def test_compact_table(spark, tmp_path):
-    """Compaction reduces file count without changing data."""
-    from kp_data_pipelines_spark.sources.sinks import compact_table
-
-    p = str(tmp_path / "frag")
-    df = spark.range(10_000).withColumnRenamed("id", "k")
-    df.repartition(64).write.parquet(p)
-    import glob
-    before = len(glob.glob(p + "/*.parquet"))
-    assert before >= 32
-    compact_table(spark, p, target_file_bytes=1 << 30)
-    after = len(glob.glob(p + "/*.parquet"))
-    got = spark.read.parquet(p)
-    assert after < before
-    assert got.count() == 10_000
-    assert got.agg({"k": "sum"}).head()[0] == sum(range(10_000))
 
 
 def test_flatten_multiindex_columns(spark):
@@ -323,50 +299,31 @@ def test_interactive_report_writes_validation(spark, tmp_path):
     assert any("FILTER(" in f and "DOR_Detail" in f for f in formulas)
 
 
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC source parity: roundtrip plus filter pushdown visible in the
-    scan (same contract the parquet path is held to)."""
-    from kp_data_pipelines_spark.sources.readers import read_orc
+def test_write_versioned(spark, tmp_path):
+    """K4 backup-before-overwrite: each version is an immutable
+    ``version=`` directory, rewriting a version raises, and a
+    schema-merging read unions columns added in newer versions (old
+    rows null-filled)."""
+    from pyspark.errors import AnalysisException
 
-    p = str(tmp_path / "orc_tbl")
-    src = spark.range(1000).withColumn("k", (F.col("id") % 10).cast("int"))
-    src.write.mode("overwrite").orc(p)
-    got = read_orc(spark, p)
-    assert got.count() == 1000
-    flt = got.filter(F.col("k") == 3)
-    assert flt.count() == 100
-    plan = flt._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "k" in plan
-
-
-def test_vacuum_versions_and_merge_schema(spark, tmp_path):
-    """K4 lifecycle: versioned writes + retention; schema-evolution read
-    unions columns added in newer versions (old rows null-filled)."""
-    from kp_data_pipelines_spark.sources.readers import read_parquet
-    from kp_data_pipelines_spark.sources.sinks import (
-        vacuum_versions,
-        write_versioned,
-    )
+    from kp_data_pipelines_spark.sources.sinks import write_versioned
 
     base = str(tmp_path / "tbl")
     v1 = spark.createDataFrame([(1, "a")], "id long, name string")
     v2 = spark.createDataFrame(
         [(2, "b", 9.5)], "id long, name string, score double"
     )
-    write_versioned(v1, base, "20240101T000000")
-    write_versioned(v1, base, "20240201T000000")
+    assert write_versioned(v1, base, "20240201T000000").endswith(
+        "/version=20240201T000000"
+    )
     write_versioned(v2, base, "20240301T000000")
-    removed = vacuum_versions(base, keep=2)
-    assert len(removed) == 1 and "20240101T000000" in removed[0]
-    got = read_parquet(spark, base, merge_schema=True)
+    with pytest.raises(AnalysisException):
+        write_versioned(v2, base, "20240301T000000")
+    got = spark.read.option("mergeSchema", True).parquet(base)
     assert set(got.columns) == {"id", "name", "score", "version"}
     rows = {r["version"]: r for r in got.collect()}
     assert rows["20240301T000000"]["score"] == 9.5
     assert rows["20240201T000000"]["score"] is None
-    import pytest
-
-    with pytest.raises(ValueError):
-        vacuum_versions(base, keep=0)
 
 
 def test_jdbc_read_from_derby(spark):

@@ -21,7 +21,6 @@ from kp_data_pipelines_spark.operators.textops import (
     lang_id,
     quality_score,
     regex_token_count,
-    shingles,
     whitespace_token_count,
 )
 
@@ -57,14 +56,6 @@ def test_doc_fingerprint_normalizes_whitespace(spark):
     df = spark.createDataFrame([("a  b\tc",), ("A b C",)], ["text"])
     vals = [r[0] for r in df.select(doc_fingerprint("text")).collect()]
     assert vals[0] == vals[1]
-
-
-def test_shingles(spark):
-    df = spark.createDataFrame([("a b c d",)], ["text"])
-    out = df.select(shingles("text", 2).alias("s")).collect()[0]["s"]
-    assert out == ["a b", "b c", "c d"]
-    short = spark.createDataFrame([("a",)], ["text"])
-    assert short.select(shingles("text", 3).alias("s")).collect()[0]["s"] == ["a"]
 
 
 def _vecs(spark):
@@ -175,21 +166,6 @@ def test_simhash_similar_texts_close(spark):
 # ---------------------------------------------------------------------------
 # Round-1 batch 3: embedding near-dups, hamming pairs, rolling hash, IVF
 # ---------------------------------------------------------------------------
-
-
-def test_embedding_near_dup_pairs_lsh(spark):
-    from kp_data_pipelines_spark.operators.similarity import embedding_near_dup_pairs
-
-    base = [1.0, 0.2, -0.5, 0.8]
-    near = [1.01, 0.19, -0.52, 0.81]
-    far = [-1.0, 0.9, 0.5, -0.7]
-    df = spark.createDataFrame(
-        [(1, base), (2, near), (3, far)], ["vec_id", "embedding"]
-    )
-    pairs = embedding_near_dup_pairs(df, "vec_id", "embedding", threshold=0.99).collect()
-    found = {(r["id_a"], r["id_b"]) for r in pairs}
-    assert (1, 2) in found
-    assert all(p == (1, 2) for p in found)
 
 
 def test_cosine_pairs_blocked_exact(spark):
