@@ -18306,9 +18306,9 @@ def q301_media_phash(spark: SparkSession, sf: str) -> DataFrame:
     text: pool the payload bytes into an 8x9 grid of integer cell sums
     ("resize"), emit one bit per horizontally-adjacent cell comparison
     (the gradient signature real dHash takes over pixel luma; the byte
-    array stands in for the decoded frame until a codec is wired into
-    multimodal.DECODERS — the kernel's (bytes -> int64) contract is
-    decoder-agnostic). Unlike a sha256 (q36), a one-byte edit flips at
+    array stands in for the decoded frame — the kernel's (bytes ->
+    int64) contract is decoder-agnostic, and q323 runs it over decoded
+    pixels). Unlike a sha256 (q36), a one-byte edit flips at
     most a few gradient bits, so the fingerprint SURVIVES re-encoding-
     style local perturbations — that is what makes Hamming-radius dedup
     (q302) possible. Scale shape: ONE Arrow-batched numpy pass per
@@ -18504,8 +18504,8 @@ def q306_video_frame_overlap(spark: SparkSession, sf: str) -> DataFrame:
     sequence-aware dedup signal that whole-payload fingerprints (q302)
     and unordered chunk identity (q305) both under-report. On the
     fixture a frame is a 100-char payload window and duration = payload
-    chars (the decode stand-in, like q36); with a real codec wired into
-    DECODERS the same plan runs on actual frame rasters. Scale shape:
+    chars (the decode stand-in, like q36; there is no video decoder, so
+    frames are never rasters here). Scale shape:
     frame explode is linear in total duration; fingerprints are one
     Arrow pass; candidates are the hashed-combination-key equi-join;
     the media rollup is one keyed agg. Frame ids pack as media_id *
@@ -18664,8 +18664,8 @@ def q308_audio_constellation(spark: SparkSession, sf: str) -> DataFrame:
     q302 (whole-payload distance) and q305 (unordered chunk identity)
     cannot give: WHERE two streams line up. The payload frames into
     32-char windows; each frame's landmark is its peak (argmax char
-    code — the spectral-peak stand-in until a real decoder is wired
-    into multimodal.DECODERS; first-occurrence ties both engines);
+    code — the spectral-peak stand-in over raw bytes, q330 runs the
+    decoded-PCM form; first-occurrence ties both engines);
     landmarks pair with the next 1..3 frames' landmarks into integer
     constellation KEYS (peak position x peak position x delta x coarse
     code buckets — the production key packs quantized frequencies, same
@@ -19406,16 +19406,16 @@ def q319_bpe_encode_holdout(spark: SparkSession, sf: str) -> DataFrame:
 def q320_decoded_media_dedup(spark: SparkSession, sf: str) -> DataFrame:
     """The decode -> fingerprint SEAM as an oracle-gated query (the
     round-9 review's ask — ``decoded_media_dhash`` was test-only):
-    every payload runs the registered decoder (Arrow mapInPandas, the
-    deterministic fake here, a real codec when wired into DECODERS)
-    and the dHash fingerprints the DECODED feature bytes, then the
+    every payload runs the ``fake`` decoder (Arrow mapInPandas, a
+    deterministic digest token; q323 runs the real ``stdlib`` PNG codec
+    through the same seam) and the dHash fingerprints the DECODED
+    feature bytes, then the
     per-(source, kind) ledger counts media, distinct decoded
     identities, and distinct decoded fingerprints. Reading it:
     n_fps <= n_features always (the fingerprint is a lossy pool of the
     feature bytes), and on the fake decoder's 18-byte digest tokens the
     gap is LARGE — the degenerate-input collision pressure
-    test_decode_to_hamming_seam documents, which a real decoder's full
-    pixel array removes. Scale shape: one Arrow decode pass + one Arrow
+    test_decode_to_hamming_seam documents. Scale shape: one Arrow decode pass + one Arrow
     fingerprint pass + one keyed rollup; nothing shuffles but the
     |sources x kinds| group keys. Kinds derive deterministically from
     doc_id so the DuckDB twin replays them."""
@@ -19510,14 +19510,12 @@ def q322_hash_embed_ann(spark: SparkSession, sf: str) -> DataFrame:
     ``documents.text`` in-engine and hands them to q40's consumer
     unchanged. Encoder: ``inference.encode_documents`` — an
     iterator-of-series Pandas UDF (one encoder init per Python worker,
-    Arrow batches, the X4 ``llm_generate`` pattern) over the
-    fake/real ``ENCODERS`` registry. The deterministic fallback is
-    feature hashing (Weinberger et al.): portable base-31 token hashes
-    (textops.poly_token_hashes' scheme) -> signed bucket counts (exact
-    INTEGER accumulation) -> L2 normalize, so the DuckDB twin replays
-    every vector bit-for-bit at vocabulary cost; the real backend
-    (sentence-transformers, env-gated like X4's torch path) satisfies
-    the same contract (test_encoder_contract_fake_and_real). Consumer:
+    Arrow batches, the X4 ``llm_generate`` pattern) over the one
+    encoder, ``inference._hash_encoder``: feature hashing (Weinberger
+    et al.) — portable base-31 token hashes (textops.poly_token_hashes'
+    scheme) -> signed bucket counts (exact INTEGER accumulation) -> L2
+    normalize, so the DuckDB twin replays every vector bit-for-bit at
+    vocabulary cost (test_hash_encoder_contract). Consumer:
     hyperplane-LSH bucket match against the smallest surviving
     doc_id's vector, exact cosine top-10 inside the bucket
     (``lsh_bucket_cosine_topk`` — q40's operator, unchanged). Scale
@@ -19578,10 +19576,9 @@ def q323_decoded_roundtrip_dedup(spark: SparkSession, sf: str) -> DataFrame:
     pure function of the source pixels — legitimate ONLY because the
     codec is lossless and deterministic, which is exactly what parity
     certifies: a decoder that dropped or altered one pixel would shift
-    every sha and fail the value hash. PIL and ffmpeg decoders remain
-    registry-pluggable for formats beyond the stdlib profile
-    (env-gated tests); audio has its own executed stdlib path (RIFF/
-    WAVE via ``wave``, test_stdlib_wav_decode_through_dhash_seam).
+    every sha and fail the value hash. Formats beyond the stdlib
+    profile (grayscale-8 PNG, PCM WAV) have no decoder; audio runs the
+    same ``stdlib`` decoder (RIFF/WAVE via ``wave``, q330).
     Scale shape: encode and decode are one Arrow pass each,
     embarrassingly parallel; the ledger shuffles only |sources| keys."""
     from kp_data_pipelines_spark.operators.multimodal import (

@@ -1,9 +1,6 @@
-"""Pure-stdlib media codecs for the decode seam (round-10: run a REAL
-codec through ``multimodal.DECODERS``, executed in-sandbox).
-
-This environment has no PIL/ffmpeg, but two real codecs ship in the
-Python stdlib and are enough to make the decode layer genuinely
-executable instead of env-gated-only:
+"""Pure-stdlib media codecs behind the ``stdlib`` entry of
+``multimodal.DECODERS`` (q323, q330): real codecs that need no
+dependency outside the Python standard library.
 
 - PNG (public spec, RFC 2083 / W3C): a grayscale-8 encoder/decoder over
   ``zlib`` — signature, IHDR/IDAT/IEND chunk framing with CRC32, and the
@@ -14,9 +11,8 @@ executable instead of env-gated-only:
   containers.
 
 The scope is deliberately narrow (grayscale-8, non-interlaced; PCM WAV)
-— these are seam-certification codecs, not a media library: the
-``multimodal.DECODERS`` registry is where PIL/ffmpeg plug in for full
-coverage (see ``_real_decode`` / ``_ffmpeg_probe_decode``).
+— these are seam-certification codecs, not a media library. Other
+formats and video have no decoder here.
 
 Reference basis: the reference has no media surface at all; this is
 north-star 100 TB multimodal plumbing (SURVEY.md §6).

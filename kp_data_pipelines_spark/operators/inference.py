@@ -11,9 +11,10 @@ shape is an **iterator-of-batches Pandas UDF pipeline**:
 - answer-channel parsing is NOT Python — it's ``regexp_extract`` back on
   the JVM side.
 
-The model call itself is pluggable; this environment has no torch/HF, so
-``MODELS`` ships a deterministic fake scorer (tested) and a loader stub
-that raises until a real backend is registered.
+The model is one engine, ``_fake_model``: a deterministic scorer that
+emits the reference's two-channel output format, so the pipeline shape
+and the JVM-side parse run for real. A real model lands together with
+the catalog query that runs it.
 """
 
 from __future__ import annotations
@@ -42,62 +43,12 @@ def _fake_model() -> Callable[[pd.Series], pd.Series]:
     return generate
 
 
-def _real_model() -> Callable[[pd.Series], pd.Series]:
-    """Real HF causal-LM backend (the reference's model at LLM
-    Testing.ipynb:315-371), active when torch+transformers are
-    installed; raises NotImplementedError otherwise (this sandbox has
-    neither). Model name comes from ``KP_INFERENCE_MODEL`` (default a
-    tiny public test model so CI-with-deps stays fast). Satisfies the
-    same contract as the fake: ``pd.Series[str] -> pd.Series[str]``,
-    same length, one output per input — pinned by the shared contract
-    test in tests/test_multimodal_inference.py."""
-    try:
-        import torch
-        from transformers import AutoModelForCausalLM, AutoTokenizer
-    except ImportError as e:
-        raise NotImplementedError(
-            "no inference backend in this environment (torch/transformers "
-            "missing); install them or register a loader in MODELS"
-        ) from e
-    import os
-
-    name = os.environ.get("KP_INFERENCE_MODEL", "sshleifer/tiny-gpt2")
-    tok = AutoTokenizer.from_pretrained(name)
-    if tok.pad_token is None:
-        tok.pad_token = tok.eos_token
-    model = AutoModelForCausalLM.from_pretrained(name)
-    model.eval()
-
-    def generate(texts: pd.Series) -> pd.Series:
-        vals = ["" if t is None else str(t) for t in texts]
-        enc = tok(
-            vals, return_tensors="pt", padding=True, truncation=True,
-            max_length=256,
-        )
-        with torch.no_grad():
-            out = model.generate(
-                **enc, max_new_tokens=32, do_sample=False,
-                pad_token_id=tok.pad_token_id,
-            )
-        dec = tok.batch_decode(out, skip_special_tokens=True)
-        return pd.Series(dec, index=texts.index)
-
-    return generate
-
-
-MODELS: dict[str, Callable[[], Callable[[pd.Series], pd.Series]]] = {
-    "fake": _fake_model,
-    "real": _real_model,
-}
-
-
-def llm_generate(text_col: str, model: str = "fake") -> Column:
+def llm_generate(text_col: str) -> Column:
     """Iterator-of-series Pandas UDF: per-worker model init, Arrow batches."""
-    loader = MODELS[model]
 
     @F.pandas_udf(StringType())
     def generate(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        model_fn = loader()  # once per worker process
+        model_fn = _fake_model()  # once per worker process
         for batch in batches:
             yield model_fn(batch)
 
@@ -115,26 +66,25 @@ def parse_channels(df: DataFrame, raw_col: str = "raw_output") -> DataFrame:
     )
 
 
-def batch_inference(df: DataFrame, text_col: str, model: str = "fake") -> DataFrame:
+def batch_inference(df: DataFrame, text_col: str) -> DataFrame:
     """Full X4 pipeline: generate (pandas_udf) -> parse channels (JVM)."""
-    return parse_channels(df.withColumn("raw_output", llm_generate(text_col, model)))
+    return parse_channels(df.withColumn("raw_output", llm_generate(text_col)))
 
 
 # ---------------------------------------------------------------------------
 # Embed-at-scale (the round-9 verdict's #2 ask): every similarity/ANN
 # operator CONSUMES the fixture `embeddings` table; a real 100 TB
-# pipeline's first step is producing vectors from text. Same fake/real
-# registry shape as MODELS above: the deterministic hash-projection
-# encoder is the oracle-replayable fallback, the sentence-transformers
-# backend activates when the library is installed (not in this sandbox).
+# pipeline's first step is producing vectors from text. The encoder is
+# one engine, the deterministic hash projection below, whose every value
+# the DuckDB twin replays.
 # ---------------------------------------------------------------------------
 
 # Hash-projection constants — the PORTABLE token-hash scheme shared with
 # textops.poly_token_hashes / oracles._tok_hashes (base-31 char Horner
 # fold mod Mersenne-31, exact int64 arithmetic on every engine), then
-# feature hashing (Weinberger et al.): bucket = h % dim, sign from the
-# next hash bit ((h // dim) % 2). Signed counts stay INTEGERS until the
-# final normalize, so the only float ops are sqrt(int) and x/norm —
+# feature hashing (Weinberger et al.): bucket = h % EMBED_DIM, sign from
+# the next hash bit ((h // EMBED_DIM) % 2). Signed counts stay INTEGERS
+# until the final normalize, so the only float ops are sqrt(int) and x/norm —
 # identical correctly-rounded IEEE ops on Spark, numpy (elementwise,
 # never pairwise-summed), and DuckDB.
 EMBED_DIM = 16
@@ -142,12 +92,12 @@ _EMBED_BASE = 31
 _EMBED_MOD = 2147483647
 
 
-def _hash_encoder(dim: int = EMBED_DIM) -> Callable[[pd.Series], pd.Series]:
+def _hash_encoder() -> Callable[[pd.Series], pd.Series]:
     """Deterministic hash-projection encoder (feature hashing): input is
     NORMALIZED text (``textops.normalize_ws`` output — the operator
     wrapper applies it JVM-side), tokens split on single spaces, each
-    token Horner-hashed (base 31 mod M31), signed-count bucketed into a
-    ``dim``-vector, L2-normalized to unit length. None in -> None out;
+    token Horner-hashed (base 31 mod M31), signed-count bucketed into an
+    ``EMBED_DIM``-vector, L2-normalized to unit length. None in -> None out;
     empty or sign-cancelled (zero-norm) input -> None (callers filter).
     The DuckDB twin re-derives every value bit-for-bit
     (``oracles.hash_embed_ctes``)."""
@@ -158,14 +108,14 @@ def _hash_encoder(dim: int = EMBED_DIM) -> Callable[[pd.Series], pd.Series]:
         def _one(t):
             if t is None:
                 return None
-            vec = [0] * dim
+            vec = [0] * EMBED_DIM
             for tok in t.split(" "):
                 if not tok:
                     continue
                 h = 0
                 for ch in tok:
                     h = (h * _EMBED_BASE + ord(ch)) % _EMBED_MOD
-                vec[h % dim] += 1 if (h // dim) % 2 == 0 else -1
+                vec[h % EMBED_DIM] += 1 if (h // EMBED_DIM) % 2 == 0 else -1
             ss = sum(x * x for x in vec)  # exact: int arithmetic
             if ss == 0:
                 return None
@@ -177,79 +127,26 @@ def _hash_encoder(dim: int = EMBED_DIM) -> Callable[[pd.Series], pd.Series]:
     return encode
 
 
-def _real_encoder(dim: int = EMBED_DIM) -> Callable[[pd.Series], pd.Series]:
-    """Real sentence-transformers backend, active when the library is
-    installed; raises NotImplementedError otherwise (this sandbox has
-    no torch). Model from ``KP_EMBED_MODEL`` (default a small public
-    model). Same contract as the hash encoder — one unit-norm
-    list[float] per non-null input, None for None — EXCEPT the output
-    dim is the model's, not ``dim`` (a learned encoder's width is not a
-    knob); the shared contract test pins everything else."""
-    try:
-        from sentence_transformers import SentenceTransformer
-    except ImportError as e:
-        raise NotImplementedError(
-            "no embedding backend in this environment "
-            "(sentence-transformers missing); install it or register an "
-            "encoder in ENCODERS"
-        ) from e
-    import os
-
-    model = SentenceTransformer(
-        os.environ.get("KP_EMBED_MODEL", "all-MiniLM-L6-v2")
-    )
-
-    def encode(texts: pd.Series) -> pd.Series:
-        idx = [i for i, t in enumerate(texts) if t is not None]
-        out: list = [None] * len(texts)
-        if idx:
-            em = model.encode(
-                [str(texts.iloc[i]) for i in idx],
-                normalize_embeddings=True,
-            )
-            for i, v in zip(idx, em):
-                out[i] = [float(x) for x in v]
-        return pd.Series(out, index=texts.index)
-
-    return encode
-
-
-ENCODERS: dict[str, Callable[[int], Callable[[pd.Series], pd.Series]]] = {
-    "hash": _hash_encoder,
-    "real": _real_encoder,
-}
-
-
-def text_embedding(
-    text_col: str, encoder: str = "hash", dim: int = EMBED_DIM
-) -> Column:
+def text_embedding(text_col: str) -> Column:
     """Iterator-of-series Pandas UDF embedding column over ``text_col``:
-    per-worker encoder init (one model load per Python worker, the
-    llm_generate pattern), Arrow-batched transfer. The hash encoder
-    expects NORMALIZED text (``encode_documents`` applies
-    ``normalize_ws`` first and points this at the normalized column)."""
+    per-worker encoder init (once per Python worker, the llm_generate
+    pattern), Arrow-batched transfer. The hash encoder expects
+    NORMALIZED text (``encode_documents`` applies ``normalize_ws`` first
+    and points this at the normalized column)."""
     from pyspark.sql.types import ArrayType, DoubleType
-
-    loader = ENCODERS[encoder]
 
     @F.pandas_udf(ArrayType(DoubleType()))
     def encode(batches: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        encode_fn = loader(dim)  # once per worker process
+        encode_fn = _hash_encoder()  # once per worker process
         for batch in batches:
             yield encode_fn(batch)
 
     return encode(F.col(text_col))
 
 
-def encode_documents(
-    df: DataFrame,
-    text_col: str = "text",
-    encoder: str = "hash",
-    dim: int = EMBED_DIM,
-    out: str = "embedding",
-) -> DataFrame:
-    """EMBED AT SCALE: derive a unit-norm vector column from a text
-    column — normalization JVM-side (``normalize_ws``, the shared
+def encode_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
+    """EMBED AT SCALE: derive a unit-norm ``embedding`` column from a
+    text column — normalization JVM-side (``normalize_ws``, the shared
     parity-critical twin), encoding in one Arrow pass, rows whose text
     is empty/whitespace (or whose signed counts cancel to a zero
     vector) dropped on BOTH engines. Scale shape: embarrassingly
@@ -264,7 +161,7 @@ def encode_documents(
         ensure_parallelism(df)
         .withColumn("__embed_norm", normalize_ws(text_col))
         .filter(F.length("__embed_norm") > 0)
-        .withColumn(out, text_embedding("__embed_norm", encoder, dim))
+        .withColumn("embedding", text_embedding("__embed_norm"))
         .drop("__embed_norm")
-        .filter(F.col(out).isNotNull())
+        .filter(F.col("embedding").isNotNull())
     )

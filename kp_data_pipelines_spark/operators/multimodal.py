@@ -2,10 +2,10 @@
 
 Images/audio/video are opaque ``binary`` columns with typed metadata
 structs. The Spark-side contract — schema, partitioning, Arrow batch shape,
-UDF signatures — is real and tested; the actual codec calls are stubbed
-behind ``DECODERS`` because media libraries aren't in this environment
-(deterministic fake decode for tests, ``NotImplementedError`` for real
-codecs until a library is wired in).
+UDF signatures — is real and tested. ``DECODERS`` holds the two decoders
+the catalog runs: ``fake`` (a deterministic digest token for every kind,
+q36/q320) and ``stdlib`` (real PNG and WAV decode with the pure-stdlib
+codecs of ``codecs.py``, q323/q330). Video has no decoder.
 
 Scale notes: media rows are large and skew partition sizes — everything
 here goes through ``mapInPandas`` (Arrow batches, no per-row Python
@@ -52,36 +52,10 @@ FEATURE_SCHEMA = StructType(
 
 
 def _fake_decode(content: bytes, kind: str) -> str:
-    """Deterministic stand-in for a codec: stable digest-derived token.
-    Replace with a real decoder (PIL/ffmpeg/...) when available."""
+    """Deterministic stand-in for a codec: stable digest-derived token."""
     import hashlib
 
     return f"{kind}:{hashlib.sha256(content or b'').hexdigest()[:12]}"
-
-
-def _real_decode(content: bytes, kind: str) -> str:
-    """Real image decode via PIL when installed (this sandbox has no
-    media libraries); raises NotImplementedError otherwise. Same
-    contract as the fake — ``(bytes, kind) -> str feature token`` —
-    pinned by the shared contract test. Audio/video stay stubbed even
-    with PIL present (ffmpeg-class deps); the plumbing (schema,
-    mapInPandas batching, partitioning) is identical for all kinds."""
-    if kind == "image":
-        try:
-            import io
-
-            from PIL import Image
-        except ImportError as e:
-            raise NotImplementedError(
-                "PIL not installed; install pillow or register a decoder "
-                "in DECODERS to enable real image decode"
-            ) from e
-        with Image.open(io.BytesIO(content)) as im:
-            return f"image:{im.width}x{im.height}:{im.mode}"
-    raise NotImplementedError(
-        f"no real {kind} codec wired; register one in DECODERS "
-        "(e.g. an ffmpeg probe for audio/video)"
-    )
 
 
 def _stdlib_decode(content: bytes, kind: str) -> str:
@@ -93,8 +67,7 @@ def _stdlib_decode(content: bytes, kind: str) -> str:
     samples' digest, so byte-different re-encodes of the same content
     (a PNG re-filtered, a WAV re-containered) collapse to ONE decoded
     identity — the decode-layer dedup story q323 certifies against its
-    oracle. Video has no stdlib codec: registry-pluggable
-    (``_ffmpeg_probe_decode``)."""
+    oracle. Video has no stdlib codec and raises."""
     import hashlib
 
     from kp_data_pipelines_spark.operators.codecs import (
@@ -111,63 +84,16 @@ def _stdlib_decode(content: bytes, kind: str) -> str:
             f"audio:{ch}x{rate}x{nf}:"
             f"{hashlib.sha256(pcm).hexdigest()[:16]}"
         )
-    raise NotImplementedError(
-        f"no stdlib {kind} codec; register one in DECODERS "
-        "(e.g. 'ffmpeg' for video)"
-    )
-
-
-def _ffmpeg_probe_decode(content: bytes, kind: str) -> str:
-    """ffprobe-backed audio/video decode example (the registry's
-    external-binary slot): writes the payload to a temp file, probes
-    the first stream's codec/dimensions/duration, returns the same
-    ``kind:...`` token contract. Raises NotImplementedError when the
-    ffprobe binary is absent (this sandbox); the env-gated test
-    exercises it where media tooling exists."""
-    import json
-    import shutil
-    import subprocess
-    import tempfile
-
-    if shutil.which("ffprobe") is None:
-        raise NotImplementedError(
-            "ffprobe not installed; install ffmpeg or use another "
-            "DECODERS entry"
-        )
-    with tempfile.NamedTemporaryFile(suffix=f".{kind}") as f:
-        f.write(content or b"")
-        f.flush()
-        out = subprocess.run(
-            [
-                "ffprobe", "-v", "error", "-show_streams",
-                "-show_format", "-of", "json", f.name,
-            ],
-            capture_output=True,
-            check=True,
-        )
-    info = json.loads(out.stdout)
-    s = (info.get("streams") or [{}])[0]
-    return (
-        f"{kind}:{s.get('codec_name', '?')}:"
-        f"{s.get('width', -1)}x{s.get('height', -1)}:"
-        f"{info.get('format', {}).get('duration', '?')}"
-    )
+    raise NotImplementedError(f"no stdlib {kind} codec")
 
 
 # Decode registry — which kinds are REAL per entry:
-#   fake    deterministic digest token, every kind (the oracle-replay
-#           default for plumbing tests)
+#   fake    deterministic digest token, every kind (q36, q320)
 #   stdlib  REAL image (pure-stdlib PNG: grayscale-8 profile) and REAL
-#           audio (RIFF/WAVE via `wave`); video raises — executed
-#           in-sandbox, no deps (q323)
-#   real    REAL image via PIL (any format PIL reads), env-gated;
-#           audio/video raise — plug ffmpeg below
-#   ffmpeg  audio/video via the ffprobe binary, env-gated
+#           audio (RIFF/WAVE via `wave`); video raises (q323, q330)
 DECODERS = {
     "fake": _fake_decode,
-    "real": _real_decode,
     "stdlib": _stdlib_decode,
-    "ffmpeg": _ffmpeg_probe_decode,
 }
 
 
@@ -468,18 +394,15 @@ def with_media_dhash(df: DataFrame, content_col: str = "content",
 
 
 def decoded_media_dhash(df: DataFrame, decoder: str = "fake") -> DataFrame:
-    """The decode -> fingerprint SEAM as one executed path: run the
-    registered decoder (``extract_media_features`` — Arrow mapInPandas,
-    fake or real) and dHash the DECODED feature bytes instead of the
-    raw container bytes. This is where a real codec plugs in: q301
-    fingerprints raw payload bytes (fine for byte-identical dedup, blind
-    to re-encodes), while this path fingerprints what the decoder SAW —
-    with a real decoder in ``DECODERS`` the feature token becomes the
-    pixel/spectral array and the same two stages catch re-encoded
-    duplicates — EXECUTED with the stdlib PNG/WAV codecs in q323
-    (byte-different re-encodes of the same pixels collapse to one
-    ``feature``), and with PIL via the env-gated
-    test_real_image_decode_through_dhash_seam. Returns (media_id,
+    """The decode -> fingerprint SEAM as one executed path: run a
+    ``DECODERS`` entry (``extract_media_features`` — Arrow mapInPandas,
+    ``fake`` or ``stdlib``) and dHash the DECODED feature bytes instead
+    of the raw container bytes. q301 fingerprints raw payload bytes
+    (fine for byte-identical dedup, blind to re-encodes), while this
+    path fingerprints what the decoder SAW: with the ``stdlib`` PNG/WAV
+    codecs (q323, q330) the feature token carries the decoded samples'
+    digest, so byte-different re-encodes of the same pixels or PCM
+    collapse to one ``feature``. Returns (media_id,
     kind, content_sha, feature, phash); feeds
     ``similarity.hamming_pairs`` unchanged
     (test_decode_to_hamming_seam pins the end-to-end path on the fake

@@ -4128,7 +4128,7 @@ def bpe_ledger_sql(
 
 def hash_embed_ctes() -> str:
     """CTE chain deriving the hash-projection document embeddings
-    (``inference.encode_documents(encoder="hash")``) bit-for-bit:
+    (``inference.encode_documents``) bit-for-bit:
     per-DISTINCT-word base-31 Horner hash mod Mersenne-31 (the
     ``_tok_hashes`` scheme), feature-hashed (bucket = h % EMBED_DIM,
     sign from (h // EMBED_DIM) % 2), signed counts summed as INTEGERS

@@ -5,10 +5,11 @@ read with explicit schemas from the registry — inference is a full extra
 pass and nondeterministic under drift. Encoding variants (UTF-16 CSV S2,
 BOM S3, UTF-16 JSON S5, NDJSON S6) map to reader options.
 
-Excel (S4) has no native Spark source: ``read_excel_via_pandas`` does the
-driver-side pandas read (reference files are small report workbooks) and
-ships rows through Arrow into a distributed DataFrame; at scale the ingest
-layer converts workbooks to parquet on landing instead.
+Excel (S4) has no native Spark source: ``read_excel_via_pandas`` reads the
+workbook on the driver with the stdlib xlsx engine (``xlsx_to_pandas``;
+reference files are small report workbooks) and ships rows through Arrow
+into a distributed DataFrame; at scale the ingest layer converts workbooks
+to parquet on landing instead.
 """
 
 from __future__ import annotations
@@ -218,7 +219,7 @@ def _xlsx_is_date_format(code: str) -> bool:
     """True when an OOXML number-format code renders as a date/time:
     contains y/m/d/h/s tokens OUTSIDE quoted literals, [..] sections
     (colors, conditions — but [h]/[mm]/[ss] elapsed forms ARE dates),
-    and backslash escapes. The same heuristic xlrd/openpyxl use; a
+    and backslash escapes. The usual xlsx-reader heuristic; a
     format like ``0.00"m"`` must NOT classify as a date."""
     import re
 
@@ -263,7 +264,7 @@ def _xlsx_serial_to_datetime(serial, date1904: bool = False):
     """Excel date serial -> naive datetime, reproducing the 1900-epoch
     lotus leap-year bug: serial 60 is the phantom 1900-02-29, so
     serials < 60 anchor at 1899-12-31 and serials >= 60 at 1899-12-30
-    (the phantom maps to 1900-02-28, like openpyxl). 1904 workbooks
+    (the phantom maps to 1900-02-28). 1904 workbooks
     (``workbookPr date1904``) anchor at 1904-01-01 with no bug. Time
     fraction is rounded to whole milliseconds — serials store time as a
     binary day-fraction, so second-level values are not exactly
@@ -485,22 +486,16 @@ def xlsx_to_pandas(path: str, sheet_name=0, skiprows: int = 0, header=0):
     return pdf
 
 
-def read_excel_via_pandas(spark: SparkSession, path: str, **pandas_kwargs) -> DataFrame:
+def read_excel_via_pandas(
+    spark: SparkSession, path: str, sheet_name=0, skiprows: int = 0, header=0
+) -> DataFrame:
     """S4: Excel ingest. Driver-side read + Arrow createDataFrame.
 
-    Supports the reference's sheet_name / skiprows / multi-row header
-    patterns via ``pandas_kwargs``; multi-row headers go through
-    ``flatten_multiindex_columns``. Uses ``pd.read_excel`` when an xlsx
-    engine (openpyxl) is installed; otherwise falls back to the stdlib
-    zip/XML engine (``xlsx_to_pandas``) so S4 executes on real .xlsx
-    files in any environment — same fallback pattern as the K3 sink's
-    ``_MiniXlsxBook``."""
-    import pandas as pd
-
-    try:
-        pdf = pd.read_excel(path, **pandas_kwargs)
-    except ImportError:
-        pdf = xlsx_to_pandas(path, **pandas_kwargs)
+    Reads with the stdlib zip/XML engine (``xlsx_to_pandas``), which
+    takes the reference's sheet_name / skiprows / multi-row header
+    patterns with ``pd.read_excel``'s semantics; multi-row headers go
+    through ``flatten_multiindex_columns``."""
+    pdf = xlsx_to_pandas(path, sheet_name, skiprows, header)
     return spark.createDataFrame(flatten_multiindex_columns(pdf))
 
 

@@ -77,11 +77,10 @@ class _MiniXlsxBook:
 
     xlsx is a zip of XML parts; this emits just the parts a workbook
     needs (content types, rels, workbook, worksheets) with inline-string
-    cells, ``dataValidation`` elements, and formula cells. It exists so
-    the K3 interactive-report contract is producible AND verifiable in
-    environments without an xlsx engine; when xlsxwriter is installed
-    the full-fidelity path is used instead. Not a general Excel writer:
-    no styles/sharedStrings/dates, plain (non-array) formula storage."""
+    cells, ``dataValidation`` elements, and formula cells: the one
+    engine of the K3 interactive report, and the writer of the Excel
+    reader's test workbooks. Not a general Excel writer: no
+    styles/sharedStrings/dates, plain (non-array) formula storage."""
 
     def __init__(self) -> None:
         self._sheets: list[tuple[str, str]] = []  # (name, sheet xml)
@@ -232,64 +231,28 @@ def write_report_excel_interactive(
     (a) a dropdown (list data-validation) over ``key_sheet``'s key column
     and (b) one spill FILTER block per detail sheet showing the rows
     matching the selection — the reference's interactive
-    reconciliation workbook re-expressed. Uses xlsxwriter when available
-    (full fidelity); falls back to the stdlib ``_MiniXlsxBook`` engine
-    otherwise, so the workbook contract stays producible and testable in
-    any environment.
+    reconciliation workbook re-expressed, written with ``_MiniXlsxBook``.
+
+    Sheet names are cut to Excel's 31 characters; two names (the
+    selector sheet included) that are equal after the cut, ignoring
+    case, raise ValueError, since Excel rejects such a workbook.
 
     Sheet data is collected to pandas — report outputs only, never the
     100 TB path (the heavy reconciliation math runs in Spark upstream)."""
-    import pandas as pd
-
+    names = [*sheets, selector_sheet]
+    cut = [name[:31].lower() for name in names]
+    clash = sorted({n for n, c in zip(names, cut) if cut.count(c) > 1})
+    if clash:
+        raise ValueError(
+            f"sheet names collide in Excel (equal in their first 31 "
+            f"characters, ignoring case): {clash}"
+        )
     detail_sheets = detail_sheets or [s for s in sheets if s != key_sheet]
     pdfs = {name[:31]: df.toPandas() for name, df in sheets.items()}
     dropdown_src = dropdown_source_range(
         key_sheet[:31], key_col_idx, len(pdfs[key_sheet[:31]])
     )
 
-    try:
-        import xlsxwriter  # noqa: F401
-    except ImportError:
-        _write_interactive_stdlib(
-            pdfs, path, dropdown_src, detail_sheets, selector_sheet,
-            key_col_idx,
-        )
-        return
-
-    with pd.ExcelWriter(path, engine="xlsxwriter") as writer:
-        for name, pdf in pdfs.items():
-            pdf.to_excel(writer, sheet_name=name, index=False)
-        book = writer.book
-        sel = book.add_worksheet(selector_sheet)
-        writer.sheets[selector_sheet] = sel
-        sel.write("A1", "Select key:")
-        sel.write("B1", "")
-        sel.data_validation(
-            "B1", {"validate": "list", "source": dropdown_src}
-        )
-        row = 3
-        for name in detail_sheets:
-            name = name[:31]
-            pdf = pdfs[name]
-            sel.write(row, 0, f"{name} rows for selected key")
-            for c, col_name in enumerate(pdf.columns):
-                sel.write(row + 1, c, str(col_name))
-            sel.write_formula(
-                row + 2, 0, filter_formula(name, len(pdf.columns), key_col_idx)
-            )
-            row += 4 + len(pdf.columns)
-
-
-def _write_interactive_stdlib(
-    pdfs,
-    path: str,
-    dropdown_src: str,
-    detail_sheets: "list[str]",
-    selector_sheet: str,
-    key_col_idx: int,
-) -> None:
-    """stdlib-engine body of ``write_report_excel_interactive``: same
-    sheets, dropdown, and FILTER blocks via ``_MiniXlsxBook``."""
     book = _MiniXlsxBook()
     for name, pdf in pdfs.items():
         rows = [list(pdf.columns)] + [
@@ -311,7 +274,7 @@ def _write_interactive_stdlib(
         )
         row += 4 + len(pdf.columns)
     book.add_sheet(
-        selector_sheet,
+        selector_sheet[:31],
         sel_rows,
         validations=[("B1", dropdown_src)],
         formulas=formulas,

@@ -86,6 +86,7 @@ def test_oracle_parity(spark, oracle_con, name):
     qs, oracles = entry_mod.queries(), entry_mod.oracle_sql()
     sdf = qs[name](spark, SF_DIR).toPandas()
     odf = oracle_con.sql(oracles[name]).df()
+    assert len(odf) > 0, f"{name}: empty at {SF_DIR}, the hash check proves nothing"
     assert len(sdf) == len(odf)
     assert sorted(sdf.columns) == sorted(odf.columns)
     assert _canon_hash(sdf) == _canon_hash(odf)
@@ -183,7 +184,12 @@ def test_every_package_definition_has_a_caller():
     ``tools/`` and ``perfbench/``, followed through names transitively,
     or it is listed in REACHABILITY_KEEP with its reason. Tests do not
     count as callers. Import statements are not uses: an unused import
-    does not keep its target alive."""
+    does not keep its target alive.
+
+    A registry (a module-level dict literal whose values are package
+    definitions) reaches every value it holds, so each of its keys must
+    also be selected: appear as a string constant in that production
+    code outside the registry itself."""
     import ast
     from pathlib import Path
 
@@ -246,11 +252,25 @@ def test_every_package_definition_has_a_caller():
                     found.add(resolve(target[0], n.attr))
         return found - {None}
 
-    roots = set()
+    def registry_keys(node, mod):
+        value = getattr(node, "value", None)
+        if isinstance(value, ast.Dict) and value.values and all(
+            isinstance(v, (ast.Name, ast.Attribute)) and uses(v, mod, imports[mod])
+            for v in value.values
+        ):
+            return [k.value for k in value.keys]
+        return None
+
+    roots, registries, root_nodes = set(), {}, []
     for mod, tree in trees.items():
         for node in tree.body:
             if not isinstance(node, def_types):
                 roots |= uses(node, mod, imports[mod])
+                keys = registry_keys(node, mod)
+                if keys is None:
+                    root_nodes.append(node)
+                else:
+                    registries[f"{mod}:{node.lineno}"] = keys
                 continue
             # decorators, bases and defaults run at import time
             at_import = [*node.decorator_list]
@@ -260,13 +280,17 @@ def test_every_package_definition_has_a_caller():
                 at_import += node.args.defaults + node.args.kw_defaults
             for expr in filter(None, at_import):
                 roots |= uses(expr, mod, imports[mod])
-    roots |= {key for key in defs if key[0] == f"{pkg}.oracles"}
-    roots |= {(fn.__module__, fn.__qualname__.split(".")[0]) for fn in QUERIES.values()}
+                root_nodes.append(expr)
+    code_roots = {key for key in defs if key[0] == f"{pkg}.oracles"}
+    code_roots |= {(fn.__module__, fn.__qualname__.split(".")[0]) for fn in QUERIES.values()}
+    roots |= code_roots
+    root_nodes += [defs[key] for key in code_roots]
     scripts = [root / "__spark_entry__.py", root / "bench.py"]
     scripts += sorted(root.glob("tools/*.py")) + sorted(root.glob("perfbench/*.py"))
     for path in scripts:
         tree = ast.parse(path.read_text())
         roots |= uses(tree, "__main__", import_map(tree))
+        root_nodes.append(tree)
     keep = {tuple(f"{pkg}.{k}".rsplit(".", 1)) for k in REACHABILITY_KEEP}
     stale = sorted(".".join(k) for k in keep - set(defs))
     assert not stale, f"REACHABILITY_KEEP names missing definitions: {stale}"
@@ -282,6 +306,23 @@ def test_every_package_definition_has_a_caller():
         f"{len(dead)} package definitions have no production caller "
         f"(delete them, or add them to REACHABILITY_KEEP with the reason): "
         + ", ".join(dead)
+    )
+
+    selected = {
+        n.value
+        for node in root_nodes
+        for n in ast.walk(node)
+        if isinstance(n, ast.Constant) and isinstance(n.value, str)
+    }
+    unselected = sorted(
+        f"{where}[{key!r}]"
+        for where, keys in registries.items()
+        for key in keys
+        if key not in selected
+    )
+    assert not unselected, (
+        "registry entries no production code selects (delete them): "
+        + ", ".join(unselected)
     )
 
 

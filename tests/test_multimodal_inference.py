@@ -13,16 +13,6 @@ from kp_data_pipelines_spark.operators.multimodal import (
 )
 
 
-def _has(mod):
-    import importlib.util
-
-    return importlib.util.find_spec(mod) is not None
-
-
-_HAS_PIL = _has("PIL")
-_HAS_TRANSFORMERS = _has("transformers") and _has("torch")
-
-
 @pytest.fixture()
 def media(spark):
     rows = [
@@ -47,12 +37,6 @@ def test_extract_media_features_fake_decoder(media):
     assert again == {k: v["feature"] for k, v in rows.items()}
 
 
-@pytest.mark.skipif(_HAS_PIL, reason="PIL installed: real image decode is live")
-def test_real_decoder_is_explicit_stub(media):
-    with pytest.raises(Exception, match="NotImplementedError|codecs|PIL"):
-        extract_media_features(media, decoder="real").collect()
-
-
 def test_frame_sample_plan(media):
     out = frame_sample_plan(media, every_ms=1000)
     rows = out.collect()
@@ -71,15 +55,6 @@ def test_batch_inference_pipeline(spark):
     assert rows[2]["final"] == "long"
     assert rows[1]["analysis"] == "tokens=2 uniq=2"
     assert rows[2]["analysis"] == "tokens=50 uniq=1"
-
-
-@pytest.mark.skipif(
-    _HAS_TRANSFORMERS, reason="transformers installed: real backend is live"
-)
-def test_inference_real_backend_is_explicit_stub(spark):
-    df = spark.createDataFrame([(1, "x")], ["id", "text"])
-    with pytest.raises(Exception):
-        batch_inference(df, "text", model="real").collect()
 
 
 def test_chunk_media_roundtrip(spark):
@@ -111,9 +86,8 @@ def test_chunk_media_roundtrip(spark):
 
 
 def _assert_generate_contract(generate):
-    """The fake/real seam: any MODELS loader must return a callable
-    satisfying pd.Series[str] -> pd.Series[str], same length, one
-    non-null string per input, deterministic for do_sample=False."""
+    """The model contract: pd.Series[str] -> pd.Series[str], same
+    length, one non-null string per input, deterministic."""
     import pandas as pd
 
     texts = pd.Series(["hello world", "", "a b c"])
@@ -126,33 +100,13 @@ def _assert_generate_contract(generate):
 
 
 def test_fake_model_contract():
-    from kp_data_pipelines_spark.operators.inference import MODELS
+    from kp_data_pipelines_spark.operators.inference import _fake_model
 
-    _assert_generate_contract(MODELS["fake"]())
-
-
-@pytest.mark.skipif(
-    not _HAS_TRANSFORMERS,
-    reason="torch/transformers not installed (sandbox default)",
-)
-def test_real_model_contract_and_pipeline(spark):
-    """Env-gated real-backend integration (round-4 verdict ask): when
-    torch+transformers exist, the 'real' loader must satisfy the same
-    contract as the fake AND run end-to-end through the iterator
-    pandas_udf pipeline. Uses KP_INFERENCE_MODEL (default tiny-gpt2)."""
-    from kp_data_pipelines_spark.operators.inference import MODELS
-
-    _assert_generate_contract(MODELS["real"]())
-    df = spark.createDataFrame([(1, "the quick brown"), (2, "fox")],
-                               ["id", "text"])
-    out = batch_inference(df, "text", model="real").collect()
-    assert len(out) == 2
-    assert all(r["raw_output"] for r in out)
+    _assert_generate_contract(_fake_model())
 
 
 def _assert_encoder_contract(encode):
-    """The fake/real embedding seam: any ENCODERS loader must return a
-    callable satisfying pd.Series[str|None] -> pd.Series[list|None]:
+    """The encoder contract: pd.Series[str|None] -> pd.Series[list|None],
     same length, None stays None, every non-null output a unit-norm
     float list of one consistent width, deterministic."""
     import math
@@ -174,41 +128,9 @@ def _assert_encoder_contract(encode):
 
 
 def test_hash_encoder_contract():
-    from kp_data_pipelines_spark.operators.inference import ENCODERS
+    from kp_data_pipelines_spark.operators.inference import _hash_encoder
 
-    _assert_encoder_contract(ENCODERS["hash"]())
-
-
-def test_real_encoder_is_explicit_stub():
-    """Without sentence-transformers the real encoder must raise
-    NotImplementedError with an actionable message, not fail weirdly."""
-    if _has("sentence_transformers"):
-        pytest.skip("sentence-transformers installed; stub not active")
-    from kp_data_pipelines_spark.operators.inference import ENCODERS
-
-    with pytest.raises(NotImplementedError, match="sentence-transformers"):
-        ENCODERS["real"]()
-
-
-@pytest.mark.skipif(
-    not _has("sentence_transformers"),
-    reason="sentence-transformers not installed (sandbox default)",
-)
-def test_real_encoder_contract_and_pipeline(spark):
-    """Env-gated: when sentence-transformers exists, the 'real' encoder
-    must satisfy the same contract as the hash fallback AND run
-    end-to-end through encode_documents."""
-    from kp_data_pipelines_spark.operators.inference import (
-        ENCODERS,
-        encode_documents,
-    )
-
-    _assert_encoder_contract(ENCODERS["real"]())
-    df = spark.createDataFrame(
-        [(1, "the quick brown fox"), (2, "jumps over")], ["doc_id", "text"]
-    )
-    rows = encode_documents(df, "text", encoder="real").collect()
-    assert len(rows) == 2 and all(r["embedding"] for r in rows)
+    _assert_encoder_contract(_hash_encoder())
 
 
 def test_encode_documents_drops_empty_and_normalizes(spark):
@@ -327,91 +249,12 @@ def test_png_reencode_collapses_at_decoded_layer(spark):
     assert len({r["feature"] for r in lib}) == 1
 
 
-def test_stdlib_video_and_ffmpeg_are_explicit_stubs():
-    """Video has no stdlib codec; the ffmpeg registry entry raises
-    actionably when the binary is absent."""
-    import shutil
-
+def test_stdlib_video_is_explicit_stub():
+    """Video has no stdlib codec: the decoder raises, naming it."""
     from kp_data_pipelines_spark.operators.multimodal import DECODERS
 
     with pytest.raises(NotImplementedError, match="stdlib"):
         DECODERS["stdlib"](b"\x00\x00ftyp", "video")
-    if shutil.which("ffprobe") is None:
-        with pytest.raises(NotImplementedError, match="ffprobe"):
-            DECODERS["ffmpeg"](b"\x00\x00ftyp", "video")
-
-
-@pytest.mark.skipif(
-    __import__("shutil").which("ffprobe") is None,
-    reason="ffprobe not installed (sandbox default)",
-)
-def test_ffmpeg_probe_decoder(spark):
-    """Env-gated: where ffmpeg exists, the probe decoder returns the
-    kind:codec:WxH:duration token through the mapInPandas seam."""
-    from kp_data_pipelines_spark.operators.codecs import wav_encode_pcm16
-    from kp_data_pipelines_spark.operators.multimodal import (
-        extract_media_features,
-    )
-
-    wav = wav_encode_pcm16(bytes(4000), 1, 8000)
-    df = spark.createDataFrame(
-        [(1, "audio", wav)], "media_id long, kind string, content binary"
-    )
-    rows = extract_media_features(df, decoder="ffmpeg").collect()
-    assert rows[0]["feature"].startswith("audio:pcm_s16le:")
-
-
-@pytest.mark.skipif(not _HAS_PIL, reason="PIL not installed (sandbox default)")
-def test_real_image_decode_through_dhash_seam(spark):
-    """Env-gated (round-9 verdict #3): REAL images through
-    decoded_media_dhash via PIL — two byte-different encodings of the
-    same pixels (PNG vs BMP) collapse to one decoded identity when the
-    PIL decoder's token carries the pixel digest... PIL's _real_decode
-    token is dimensions+mode, so here the pin is: both decode without
-    error and agree on the token for identical pixel content."""
-    import io
-
-    from PIL import Image
-
-    from kp_data_pipelines_spark.operators.multimodal import (
-        decoded_media_dhash,
-    )
-
-    img = Image.new("RGB", (5, 3))
-    a, b = io.BytesIO(), io.BytesIO()
-    img.save(a, format="PNG")
-    img.save(b, format="BMP")
-    df = spark.createDataFrame(
-        [(1, "image", a.getvalue()), (2, "image", b.getvalue())],
-        "media_id long, kind string, content binary",
-    )
-    rows = {
-        r["media_id"]: r
-        for r in decoded_media_dhash(df, decoder="real").collect()
-    }
-    assert rows[1]["content_sha"] != rows[2]["content_sha"]
-    assert rows[1]["feature"] == rows[2]["feature"] == "image:5x3:RGB"
-    assert rows[1]["phash"] == rows[2]["phash"]
-
-
-@pytest.mark.skipif(not _HAS_PIL, reason="PIL not installed (sandbox default)")
-def test_real_image_decode(spark):
-    """Env-gated real image decode: a genuine PNG round-trips through
-    the mapInPandas pipeline and the feature token carries the true
-    dimensions/mode (same contract as the fake's digest token)."""
-    import io
-
-    from PIL import Image
-
-    buf = io.BytesIO()
-    Image.new("RGB", (3, 2)).save(buf, format="PNG")
-    png = buf.getvalue()
-    df = spark.createDataFrame(
-        [(1, "image", png, "image/png", 3, 2, -1)], MEDIA_SCHEMA
-    )
-    rows = extract_media_features(df, decoder="real").collect()
-    assert rows[0]["feature"] == "image:3x2:RGB"
-    assert rows[0]["n_bytes"] == len(png)
 
 
 def test_media_dhash_kernel_matches_jvm(spark):
@@ -611,12 +454,10 @@ def test_decode_to_hamming_seam(spark):
     (deterministic fake) decoder: byte-identical payloads decode to the
     same feature token, fingerprint identically, and surface as a
     Hamming-0 pair. (The fake token is a 12-hex digest — a degenerate
-    18-byte dHash input on which DISTINCT tokens may also collide; a
-    real decoder feeds the full pixel/spectral array. The pinned
-    contract here is the executed plumbing, not toy-input precision.)
-    With a real codec registered in DECODERS the identical plan catches
-    re-encoded duplicates — the swap point is this executed path, not a
-    docstring promise."""
+    18-byte dHash input on which DISTINCT tokens may also collide. The
+    pinned contract here is the executed plumbing, not toy-input
+    precision.) With the ``stdlib`` decoder the identical plan catches
+    re-encoded duplicates (q323, test_png_reencode_collapses_at_decoded_layer)."""
     from kp_data_pipelines_spark.operators.multimodal import (
         decoded_media_dhash,
     )

@@ -254,11 +254,9 @@ def test_interactive_report_formula_helpers():
 
 
 def test_interactive_report_writes_validation(spark, tmp_path):
-    """Full workbook assertion, engine-agnostic: the xlsx is a zip of
-    SpreadsheetML XML, so the dropdown dataValidation element and the
-    spill FILTER formula are verified with stdlib zipfile/ElementTree —
-    runs with xlsxwriter (full-fidelity engine) or without (stdlib
-    ``_MiniXlsxBook`` fallback)."""
+    """Full workbook assertion: the xlsx is a zip of SpreadsheetML XML,
+    so the dropdown dataValidation element and the spill FILTER formula
+    are verified with stdlib zipfile/ElementTree."""
     import zipfile
     import xml.etree.ElementTree as ET
 
@@ -376,13 +374,67 @@ def test_jdbc_read_from_derby(spark):
     assert part.count() == 3
 
 
+@pytest.mark.parametrize(
+    "names, selector",
+    [
+        # the reference report's own sheets: the selector sheet's
+        # default name repeats the detail sheet's
+        (["Summary", "Matched", "Detail"], "Detail"),
+        # equal in Excel's first 31 characters
+        (["Matched", "Reconciliation_Detail_2024_Q1_Sites",
+          "Reconciliation_Detail_2024_Q1_Sponsors"], "Select"),
+        # equal ignoring case
+        (["Matched", "Notes"], "NOTES"),
+    ],
+    ids=["selector", "prefix31", "case"],
+)
+def test_interactive_report_rejects_colliding_sheet_names(
+    spark, tmp_path, names, selector
+):
+    """Excel rejects a workbook with two sheets of one name, so the
+    report raises instead of writing one (or dropping a sheet)."""
+    from kp_data_pipelines_spark.sources.sinks import (
+        write_report_excel_interactive,
+    )
+
+    df = spark.createDataFrame([(1, "a")], "project_id int, title string")
+    path = tmp_path / "report.xlsx"
+    with pytest.raises(ValueError, match="collide"):
+        write_report_excel_interactive(
+            {n: df for n in names}, str(path), key_sheet="Matched",
+            selector_sheet=selector,
+        )
+    assert not path.exists()
+
+
+def test_interactive_report_cuts_selector_sheet_name(spark, tmp_path):
+    """The selector sheet's name is cut to Excel's 31 characters, like
+    the data sheets' names."""
+    import re
+    import zipfile
+
+    from kp_data_pipelines_spark.sources.sinks import (
+        write_report_excel_interactive,
+    )
+
+    df = spark.createDataFrame([(1, "a")], "project_id int, title string")
+    path = str(tmp_path / "report.xlsx")
+    selector = "Select a project to see every matching row"
+    write_report_excel_interactive(
+        {"Matched": df, "Detail": df}, path, key_sheet="Matched",
+        selector_sheet=selector,
+    )
+    with zipfile.ZipFile(path) as z:
+        names = re.findall(r'name="([^"]*)"', z.read("xl/workbook.xml").decode())
+    assert names == ["Matched", "Detail", selector[:31]]
+
+
 def test_xlsx_stdlib_reader_roundtrip(spark, tmp_path):
     """S4 read path executed on a REAL .xlsx with no optional deps: the
     stdlib zip/XML reader round-trips the stdlib ``_MiniXlsxBook``
     writer's output — mixed int/float/str/bool/None cells, sheet select
     by index and by name — and lands in a Spark DataFrame via
-    ``read_excel_via_pandas`` (which falls back to the stdlib engine
-    when pandas has no xlsx engine installed)."""
+    ``read_excel_via_pandas``."""
     from kp_data_pipelines_spark.sources.readers import (
         read_excel_via_pandas,
         xlsx_to_pandas,
