@@ -10,7 +10,9 @@ at any catalog size; the COMPLETE per-query map is written to BENCH.json
 next to this script.
 
 Each query is forced with a noop write (full execution, no driver-side
-result transfer) — what a cluster deployment would measure.
+result transfer) — what a cluster deployment would measure — through
+``session.time_noop_run``, the one timed-run step bench.py and the tools
+share.
 
 Each query is timed SPARK_GRAFT_BENCH_RUNS times (default 2) and the BEST
 run is reported: first executions pay one-off costs (file listing,
@@ -34,7 +36,6 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -44,7 +45,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else None
 
-    from kp_data_pipelines_spark.session import get_spark, release_pinned_rdds
+    from kp_data_pipelines_spark.session import get_spark, time_noop_run, warm_up
     from kp_data_pipelines_spark.catalog import QUERIES
 
     spark = get_spark("bench")
@@ -71,9 +72,7 @@ def main() -> None:
         else:
             only = {n.strip() for n in only_spec.split(",") if n.strip()}
 
-    # Warm the JVM + parquet footers once so per-query timings measure the
-    # plans, not session startup.
-    next(iter(QUERIES.values()))(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     jvm_codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     compiles = jvm_codegen.METRIC_COMPILATION_TIME()
@@ -88,21 +87,16 @@ def main() -> None:
         run_times[name] = []
         codegen_compiles[name] = []
         for _ in range(runs):
+            # the run releases its eager localCheckpoint blocks outside
+            # the timed region, so storage doesn't accumulate across the
+            # session — the round-4 q180 9.0s-in-bench vs 4.8s-isolated
+            # regression
             c0 = compiles.getCount()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            run_times[name].append(round(time.perf_counter() - t0, 4))
+            run_times[name].append(round(time_noop_run(spark, fn, sf_dir), 4))
             codegen_compiles[name].append(compiles.getCount() - c0)
         timings[name] = min(run_times[name])
-        # Session hygiene at the query boundary: release eager
-        # localCheckpoint blocks (outside the timed region) so storage
-        # doesn't accumulate across the 250x2-run session — the round-4
-        # q180 9.0s-in-bench vs 4.8s-isolated regression. Periodic JVM GC
-        # lets the ContextCleaner also reap dead broadcasts/shuffles.
-        # The release blocks: an async unpersist would overlap the
-        # NEXT query's timed region and inflate it — measured +7% across
-        # the shared-250 subset (round-6 bisect, SCALE.md §15).
-        release_pinned_rdds(spark)
+        # Periodic JVM GC lets the ContextCleaner also reap dead
+        # broadcasts/shuffles.
         if (i + 1) % 50 == 0:
             spark.sparkContext._jvm.System.gc()
 

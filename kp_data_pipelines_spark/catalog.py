@@ -668,7 +668,7 @@ def q24_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
     dependent; the ranking is the contract."""
     emb = read_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
-    out = cosine_topk(emb.filter(F.col("vec_id") != 0), "embedding", "vec_id", list(query), 10)
+    out = cosine_topk(emb.filter(F.col("vec_id") != 0), "embedding", "vec_id", list(query))
     return out.select("vec_id", "label")
 
 
@@ -1071,7 +1071,7 @@ def q40_lsh_ann(spark: SparkSession, sf: str) -> DataFrame:
     emb = read_table(spark, sf, "embeddings")
     query = emb.filter(F.col("vec_id") == 0).select("embedding").head()[0]
     out = lsh_bucket_cosine_topk(
-        emb.filter(F.col("vec_id") != 0), "embedding", "vec_id", list(query), 10, n_planes=6
+        emb.filter(F.col("vec_id") != 0), "embedding", "vec_id", list(query)
     )
     return out.select("vec_id", "label")
 
@@ -1113,7 +1113,7 @@ def q41_ngram_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.similarity import ngram_jaccard_pairs
 
     docs = read_table(spark, sf, "documents")
-    return ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.35)
+    return ngram_jaccard_pairs(docs, "doc_id", "text")
 
 
 @register(
@@ -1212,9 +1212,6 @@ def q45_ivf_ann(spark: SparkSession, sf: str) -> DataFrame:
         "embedding",
         "vec_id",
         [float(x) for x in query],
-        k=10,
-        n_centroids=16,
-        nprobe=4,
     )
     return out.select("vec_id", "label")
 
@@ -2117,9 +2114,9 @@ def q68_decontamination(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.textops import with_hashed_shingles
 
     docs = read_table(spark, sf, "documents").select("doc_id", "text")
-    grams = with_hashed_shingles(
-        ensure_parallelism(docs), "text", "__g", 4
-    ).select("doc_id", F.explode(F.array_distinct("__g")).alias("gram"))
+    grams = with_hashed_shingles(ensure_parallelism(docs), "text", 4).select(
+        "doc_id", F.explode(F.array_distinct("__g")).alias("gram")
+    )
     ev = grams.filter(F.col("doc_id") % 50 == 0).select(
         F.col("doc_id").alias("eval_id"), "gram"
     )
@@ -5951,9 +5948,6 @@ def q143_ivf_refined_ann(spark: SparkSession, sf: str) -> DataFrame:
         "embedding",
         "vec_id",
         [float(x) for x in query],
-        k=10,
-        n_centroids=16,
-        nprobe=4,
         refine_iters=3,
     )
     return out.select("vec_id", "label")
@@ -5969,7 +5963,7 @@ def q144_document_chunks(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.textops import chunk_documents
 
     docs = read_table(spark, sf, "documents")
-    return chunk_documents(docs, "doc_id", "text", chunk_size=32, overlap=8)
+    return chunk_documents(docs)
 
 
 @register("q145_bloom_decontamination", oracles.bloom_contamination_sql())
@@ -5987,12 +5981,6 @@ def q145_bloom_decontamination(spark: SparkSession, sf: str) -> DataFrame:
     return bloom_contamination(
         docs.filter(F.col("source") != "src0"),
         docs.filter(F.col("source") == "src0"),
-        "doc_id",
-        "text",
-        shingle_k=3,
-        n_bits=4096,
-        n_hashes=3,
-        seed=29,
     )
 
 
@@ -6096,7 +6084,7 @@ def q149_top_principal_component(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     emb = read_table(spark, sf, "embeddings")
-    vec = power_iteration_top_pc(emb, "embedding", n_iter=3)
+    vec = power_iteration_top_pc(emb, "embedding")
     return spark.createDataFrame(
         [(i, v) for i, v in enumerate(vec)], "dim int, component double"
     )
@@ -6287,9 +6275,7 @@ def q155_product_quantization(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.similarity import product_quantize
 
     emb = read_table(spark, sf, "embeddings")
-    return product_quantize(
-        emb, "embedding", "vec_id", n_subspaces=8, n_codes=16
-    )
+    return product_quantize(emb, "embedding", "vec_id")
 
 
 @register("q156_winnowing_pairs", oracles.winnow_pairs_sql())
@@ -6306,9 +6292,7 @@ def q156_winnowing_pairs(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf, "documents")
-    return winnow_fingerprint_pairs(
-        docs, "doc_id", "text", k=20, w=8, max_doc_freq=20, min_shared=3
-    )
+    return winnow_fingerprint_pairs(docs, "doc_id", "text")
 
 
 @register("q157_portable_hll", oracles.portable_hll_sql())
@@ -11997,7 +11981,7 @@ def q226_knn_label_noise(spark: SparkSession, sf: str) -> DataFrame:
         with_hyperplane_bucket,
     )
 
-    seed, k = 7, 5
+    seed = 7
     emb = read_table(spark, sf, "embeddings")
     n_planes = adaptive_n_planes(emb.count())  # 1-row scalar action
     v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
@@ -12005,7 +11989,7 @@ def q226_knn_label_noise(spark: SparkSession, sf: str) -> DataFrame:
     dim = len(emb.select("embedding").head()[0])  # from data, not hardcoded
     planes = simhash_planes(dim, n_planes, seed)
     be = with_hyperplane_bucket(e, "v", planes)
-    agg = bucket_knn_agreement(be, "vec_id", "label", "v", k=k)
+    agg = bucket_knn_agreement(be, "vec_id", "label", "v")
     return (
         agg.filter(F.col("n_same_label") * 2 < F.col("n_neighbors"))
         .select("vec_id", "label", "n_neighbors", "n_same_label")
@@ -15395,7 +15379,7 @@ def q265_ann_recall_audit(spark: SparkSession, sf: str) -> DataFrame:
         (int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in anchors
     ]
     cand = ensure_parallelism(emb.filter(F.col("vec_id") >= n_queries))
-    centroids = ivf_centroids(cand, "embedding", n_centroids, id_col="vec_id")
+    centroids = ivf_centroids(cand, "embedding", n_centroids)
 
     # Probe cells per anchor: driver-side over k tiny centroids, the
     # ivf_topk scoring (dot / centroid norm, stable sort -> cid ASC ties).
@@ -15512,7 +15496,7 @@ def q266_silhouette_score(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     emb = ensure_parallelism(read_table(spark, sf, "embeddings"))
-    centroids = ivf_centroids(emb, "embedding", 16, id_col="vec_id")
+    centroids = ivf_centroids(emb, "embedding", 16)
     cosarr = multi_cosine_kernel(
         [cvec for _, cvec in centroids], guard_norms=True
     )(F.col("embedding"))
@@ -15664,7 +15648,7 @@ def q268_ivf_nprobe_sweep(spark: SparkSession, sf: str) -> DataFrame:
         (int(r["vec_id"]), [float(x) for x in r["embedding"]]) for r in anchors
     ]
     cand = ensure_parallelism(emb.filter(F.col("vec_id") >= n_queries))
-    centroids = ivf_centroids(cand, "embedding", n_centroids, id_col="vec_id")
+    centroids = ivf_centroids(cand, "embedding", n_centroids)
 
     # Full probe RANKING per anchor (not a fixed cut): ivf_topk's scoring
     # (dot / centroid norm, stable sort -> cid ASC ties), all 16 cells.
@@ -15800,7 +15784,7 @@ def q269_hard_negative_mining(spark: SparkSession, sf: str) -> DataFrame:
     e = emb.select("vec_id", "label", v.alias("v"))
     dim = len(emb.select("embedding").head()[0])  # from data, not hardcoded
     be = with_hyperplane_bucket(e, "v", simhash_planes(dim, n_planes, 7))
-    out = bucket_hard_negatives(be, "vec_id", "label", "v", k=3)
+    out = bucket_hard_negatives(be, "vec_id", "label", "v")
     return out.orderBy("vec_id", "neg_rank")
 
 
@@ -17011,7 +16995,6 @@ def q282_cdc_chunk_dedup(spark: SparkSession, sf: str) -> DataFrame:
     rows = with_cdc_chunks(
         ensure_parallelism(docs.select("doc_id", "source", "text")),
         "text",
-        out="packed",
     ).select(
         "source",
         "packed",
@@ -17081,10 +17064,7 @@ def q283_ivf_staleness_audit(spark: SparkSession, sf: str) -> DataFrame:
         F.pmod("vec_id", F.lit(2)).cast("bigint").alias("half"),
         "embedding",
     )
-    cents = ivf_centroids(
-        e.filter(F.col("half") == 0), "embedding", n_centroids,
-        id_col="vec_id",
-    )
+    cents = ivf_centroids(e.filter(F.col("half") == 0), "embedding", n_centroids)
     # Assignment via the Arrow kernel (pinned bit-identical to the
     # reverse(array_sort) expression twin by test); the cosine is then
     # ONE fold against only the ASSIGNED centroid (element_at into a
@@ -17341,7 +17321,6 @@ def q286_streaming_cdc_ingest(spark: SparkSession, sf: str) -> DataFrame:
                 .select("doc_id", "text")
             ),
             "text",
-            out="packed",
         )
         .select("packed")
         .distinct()
@@ -17354,7 +17333,6 @@ def q286_streaming_cdc_ingest(spark: SparkSession, sf: str) -> DataFrame:
         rows = with_cdc_chunks(
             ensure_parallelism(batch.select("doc_id", "text")),
             "text",
-            out="packed",
         ).select(
             "doc_id",
             "packed",
@@ -17525,7 +17503,6 @@ def q289_boilerplate_chunks(spark: SparkSession, sf: str) -> DataFrame:
     rows = with_cdc_chunks(
         ensure_parallelism(docs.select("doc_id", "source", "text")),
         "text",
-        out="packed",
     ).select(
         "source",
         "packed",
@@ -17579,7 +17556,7 @@ def q290_intra_doc_repetition(spark: SparkSession, sf: str) -> DataFrame:
     docs = read_table(spark, sf, "documents").select(
         "doc_id", "source", "text"
     )
-    rows = _chunk_rows(docs, 16, 64)
+    rows = _chunk_rows(docs)
     w_pos = Window.partitionBy("doc_id").orderBy("pos")
     w_dup = Window.partitionBy("doc_id", "packed").orderBy("pos")
     chg = F.when(
@@ -17723,7 +17700,7 @@ def q292_warm_start_components(spark: SparkSession, sf: str) -> DataFrame:
         "id_b",
     )
     pairs = minhash_pairs_from_banded(banded, "doc_id", 0.3)
-    labels, _rounds = warm_start_components(pairs, prior, "id_a", "id_b")
+    labels, _rounds = warm_start_components(pairs, prior)
     return labels.orderBy("node")
 
 
@@ -17854,8 +17831,7 @@ def q294_streaming_ivf_cell_stats(spark: SparkSession, sf: str) -> DataFrame:
     n_centroids = 16
     emb = read_table(spark, sf, "embeddings")
     cents = ivf_centroids(
-        emb.filter(F.pmod("vec_id", F.lit(2)) == 0), "embedding",
-        n_centroids, id_col="vec_id",
+        emb.filter(F.pmod("vec_id", F.lit(2)) == 0), "embedding", n_centroids
     )
     stream = read_table_stream(spark, sf, "embeddings").select(
         "vec_id", "embedding"
@@ -18293,7 +18269,7 @@ def _media_fp(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     return (
-        with_media_dhash(_media_table(spark, sf), "content", "phash")
+        with_media_dhash(_media_table(spark, sf), "content")
         .select("media_id", "phash")
         .localCheckpoint(eager=False)
     )
@@ -18319,7 +18295,7 @@ def q301_media_phash(spark: SparkSession, sf: str) -> DataFrame:
         with_media_dhash,
     )
 
-    return with_media_dhash(_media_table(spark, sf), "content", "phash").select(
+    return with_media_dhash(_media_table(spark, sf), "content").select(
         "media_id", "phash"
     )
 
@@ -18452,7 +18428,7 @@ def q304_bpe_trainer(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = read_table(spark, sf, "documents").select("text")
     return train_bpe_batched(
-        spark, docs, "text", rounds=6, batch_cap=1, topk=1
+        spark, docs, rounds=6, batch_cap=1, topk=1
     ).drop("batch_rank")
 
 
@@ -18485,7 +18461,7 @@ def q305_media_shared_segments(spark: SparkSession, sf: str) -> DataFrame:
 
     media = _media_table(spark, sf).filter(F.length("content") > 0)
     return shared_segment_pairs(
-        chunk_media(media, chunk_bytes=64)
+        chunk_media(media)
     ).orderBy("id_a", "id_b")
 
 
@@ -18537,7 +18513,7 @@ def q306_video_frame_overlap(spark: SparkSession, sf: str) -> DataFrame:
     # candidate self-join — pin so the per-frame dHash Arrow kernel
     # runs once
     fp = (
-        with_media_dhash(fr, "frame", "phash")
+        with_media_dhash(fr, "frame")
         .select("media_fid", "phash")
         .localCheckpoint(eager=False)
     )
@@ -18697,7 +18673,7 @@ def q308_audio_constellation(spark: SparkSession, sf: str) -> DataFrame:
     # the candidate self-join — without it the corpus landmark build
     # (explode + LEAD windows) re-executes per consumer (q324's pattern)
     lm = constellation_landmarks(
-        media, "media_id", "text", w=32, fan=3
+        media, "media_id", "text"
     ).localCheckpoint(eager=False)
     kf = (
         lm.groupBy("key")
@@ -18867,7 +18843,7 @@ def q311_bpe_tokenize_corpus(spark: SparkSession, sf: str) -> DataFrame:
 
     docs = read_table(spark, sf, "documents").select("source", "text")
     return tokenize_corpus_batched(
-        spark, docs, "text", "source", rounds=6, batch_cap=1, topk=1
+        spark, docs, rounds=6, batch_cap=1, topk=1
     )
 
 
@@ -18910,7 +18886,7 @@ def q312_constellation_retrieval(spark: SparkSession, sf: str) -> DataFrame:
     # lazy checkpoint: lm feeds the key-frequency gate AND the probe
     # join — pin so the corpus landmark build executes once
     lm = constellation_landmarks(
-        corpus, "media_id", "text", w=32, fan=3
+        corpus, "media_id", "text"
     ).localCheckpoint(eager=False)
     kf = (
         lm.groupBy("key")
@@ -18930,7 +18906,7 @@ def q312_constellation_retrieval(spark: SparkSession, sf: str) -> DataFrame:
             ).alias("text"),
         )
     )
-    qlm = constellation_landmarks(probes, "probe_id", "text", w=32, fan=3)
+    qlm = constellation_landmarks(probes, "probe_id", "text")
     votes = (
         qlm.alias("q")
         .join(lmk.alias("c"), F.col("q.key") == F.col("c.key"))
@@ -19116,7 +19092,7 @@ def q315_bpe_batched_trainer(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.bpe import train_bpe_batched
 
     docs = read_table(spark, sf, "documents").select("text")
-    return train_bpe_batched(spark, docs, "text")
+    return train_bpe_batched(spark, docs)
 
 
 @register("q316_span_excision_apply", oracles.dup_span_excision_apply_sql())
@@ -19353,7 +19329,7 @@ def q318_bpe_tokenize_batched(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf, "documents").select("source", "text")
-    return tokenize_corpus_batched(spark, docs, "text", "source")
+    return tokenize_corpus_batched(spark, docs)
 
 
 @register(
@@ -19387,7 +19363,7 @@ def q319_bpe_encode_holdout(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", "source", "text"
     )
     batches = train_merge_batches(
-        spark, docs.filter(F.col("doc_id") % 2 == 0), "text"
+        spark, docs.filter(F.col("doc_id") % 2 == 0)
     )
     return _tokenize_ledger(
         docs.filter(F.col("doc_id") % 2 == 1),
@@ -19499,7 +19475,7 @@ def q321_bpe_adaptive_trainer(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.bpe import train_bpe_adaptive
 
     docs = read_table(spark, sf, "documents").select("text")
-    return train_bpe_adaptive(spark, docs, "text")
+    return train_bpe_adaptive(spark, docs)
 
 
 @register("q322_hash_embed_ann", oracles.hash_embed_ann_sql())
@@ -19536,7 +19512,7 @@ def q322_hash_embed_ann(spark: SparkSession, sf: str) -> DataFrame:
     # and the returned plan reuses it — without this the full-corpus
     # Arrow encode (the query's dominant kernel) would run twice
     vecs = (
-        encode_documents(docs, "text")
+        encode_documents(docs)
         .select("doc_id", "embedding")
         .localCheckpoint(eager=False)
     )
@@ -19550,8 +19526,6 @@ def q322_hash_embed_ann(spark: SparkSession, sf: str) -> DataFrame:
         "embedding",
         "doc_id",
         list(q["embedding"]),
-        10,
-        n_planes=6,
     )
     return out.select("doc_id", F.col("cosine").alias("cos"))
 
@@ -19775,7 +19749,7 @@ def q325_bpe_adaptive_tokenize(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     docs = read_table(spark, sf, "documents").select("source", "text")
-    return tokenize_corpus_adaptive(spark, docs, "text", "source")
+    return tokenize_corpus_adaptive(spark, docs)
 
 
 @register(
@@ -19812,7 +19786,7 @@ def q326_derived_embedding_dedup(spark: SparkSession, sf: str) -> DataFrame:
     # lazy checkpoint: vecs feeds the block self-join AND two ledger
     # rollups — without it the Arrow encode would execute three times
     vecs = (
-        encode_documents(docs, "text")
+        encode_documents(docs)
         .select("doc_id", "source", "embedding")
         .localCheckpoint(eager=False)
     )
@@ -19902,7 +19876,7 @@ def q327_bpe_artifact_deploy(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", "source", "text"
     )
     trained = train_merge_batches(
-        spark, docs.filter(F.col("doc_id") % 2 == 0), "text"
+        spark, docs.filter(F.col("doc_id") % 2 == 0)
     )
     art_dir = _ephemeral_dir("kp_bpe_artifact_")
     try:
@@ -20461,7 +20435,7 @@ def q331_bpe_deep_trainer(spark: SparkSession, sf: str) -> DataFrame:
     from kp_data_pipelines_spark.operators.bpe import train_bpe_adaptive
 
     docs = read_table(spark, sf, "documents").select("text")
-    return train_bpe_adaptive(spark, docs, "text", rounds=35)
+    return train_bpe_adaptive(spark, docs, rounds=35)
 
 
 @register("q332_pq_codebook_training", oracles.pq_refine_sql())
@@ -20492,14 +20466,13 @@ def q332_pq_codebook_training(spark: SparkSession, sf: str) -> DataFrame:
 
     n_subspaces, n_codes, n_iter = 8, 16, 2
     emb = ensure_parallelism(read_table(spark, sf, "embeddings"))
-    # return_errors rides each round's error total on the assignment
+    # pq_refine_codebooks rides each round's error total on the assignment
     # pass the refinement already pays (pinned kernel frame), so only
     # the FINAL codebook — which refinement never assigns against —
     # costs an extra kernel pass here: 3 Arrow passes total instead of
     # the before-shape's 5 (2 refine + 3 per-round error re-runs).
     cbs, errs = pq_refine_codebooks(
-        emb, "embedding", "vec_id", n_subspaces, n_codes, n_iter,
-        return_errors=True,
+        emb, "embedding", "vec_id", n_subspaces, n_codes, n_iter
     )
     dim = len(cbs[0][0])
     sub_dim = dim // n_subspaces

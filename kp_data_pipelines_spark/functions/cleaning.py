@@ -37,8 +37,8 @@ def coerce_long(col: Column | str) -> Column:
     return F.coalesce(c.try_cast("long"), c.try_cast("double").try_cast("long"))
 
 
-def sentinel_to_null(col: Column | str, sentinels: Sequence = ("", "0", 0)) -> Column:
-    """C7: map sentinel values (empty string, "0", 0, ...) to NULL.
+def sentinel_to_null(col: Column | str, sentinels: Sequence) -> Column:
+    """C7: map sentinel values (the reference's empty string, "0", 0) to NULL.
 
     String sentinels compare in string domain (ANSI-safe for mixed-type
     lists); NUMERIC sentinels additionally compare numerically, because a

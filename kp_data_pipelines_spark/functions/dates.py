@@ -16,20 +16,7 @@ from collections.abc import Sequence
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# The formats the reference tries in order (CTP Data Compare.ipynb:82-87):
-# ISO with fractional seconds, ISO without, then permissive inference.
-DEFAULT_FORMATS: tuple[str, ...] = (
-    "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
-    "yyyy-MM-dd'T'HH:mm:ss",
-    "yyyy-MM-dd HH:mm:ss",
-    "yyyy-MM-dd",
-    "M/d/yyyy",
-)
-
-
-def cascading_to_timestamp(
-    col: Column | str, formats: Sequence[str] = DEFAULT_FORMATS
-) -> Column:
+def cascading_to_timestamp(col: Column | str, formats: Sequence[str]) -> Column:
     """C2/C3: try each format in order; first success wins; all-fail -> NULL.
 
     ``coalesce(try_to_timestamp(c, f1), try_to_timestamp(c, f2), ...,

@@ -345,12 +345,11 @@ def _final_syms(
 def train_bpe_batched(
     spark: SparkSession,
     docs: DataFrame,
-    text_col: str = "text",
     rounds: int = BPE_ROUNDS,
     batch_cap: int = BPE_BATCH_CAP,
     topk: int = BPE_TOPK,
 ) -> DataFrame:
-    """Train ``rounds`` batched-BPE rounds over a document column and
+    """Train ``rounds`` batched-BPE rounds over the ``text`` column and
     return the merge table: one row per merge (round, batch_rank,
     merge_a, merge_b, pair_count) with the post-round corpus symbol
     total and fertility, plus the round-0 one-symbol-per-char baseline.
@@ -364,7 +363,7 @@ def train_bpe_batched(
     """
     return _train_table(
         spark,
-        _unit_syms(_unit_rows(docs, text_col, 1)),
+        _unit_syms(_unit_rows(docs, "text", 1)),
         rounds,
         topk,
         partial(select_merge_batch, batch_cap=batch_cap),
@@ -372,13 +371,7 @@ def train_bpe_batched(
 
 
 def train_bpe_adaptive(
-    spark: SparkSession,
-    docs: DataFrame,
-    text_col: str = "text",
-    rounds: int = BPE_ADAPTIVE_ROUNDS,
-    topk: int = BPE_ADAPTIVE_TOPK,
-    alpha_den: int = BPE_ADAPTIVE_ALPHA_DEN,
-    chunk_words: int = BPE_CHUNK_WORDS,
+    spark: SparkSession, docs: DataFrame, rounds: int = BPE_ADAPTIVE_ROUNDS
 ) -> DataFrame:
     """ADAPTIVE batched-BPE training over W-word CHUNK units — the
     production-merge-count regime (>= 512 merges on the fixture; see
@@ -392,10 +385,10 @@ def train_bpe_adaptive(
     symbols-per-CHUNK."""
     return _train_table(
         spark,
-        _unit_syms(_unit_rows(docs, text_col, chunk_words)),
+        _unit_syms(_unit_rows(docs, "text", BPE_CHUNK_WORDS)),
         rounds,
-        topk,
-        partial(select_merge_batch_adaptive, alpha_den=alpha_den),
+        BPE_ADAPTIVE_TOPK,
+        partial(select_merge_batch_adaptive, alpha_den=BPE_ADAPTIVE_ALPHA_DEN),
     )
 
 
@@ -462,22 +455,18 @@ def _train_table(
 
 
 def train_merge_batches(
-    spark: SparkSession,
-    docs: DataFrame,
-    text_col: str = "text",
-    rounds: int = BPE_ROUNDS,
-    batch_cap: int = BPE_BATCH_CAP,
-    topk: int = BPE_TOPK,
+    spark: SparkSession, docs: DataFrame
 ) -> list[list[tuple[str, str, int]]]:
-    """Train and return the per-round merge BATCHES (the tokenizer
-    artifact an encoder ships with) without materializing per-round
-    totals — R ranked-pool jobs, R-1 materialized applies (the last
-    round's apply is never needed once its batch is selected)."""
-    syms = _unit_syms(_unit_rows(docs, text_col, 1))
-    select_fn = partial(select_merge_batch, batch_cap=batch_cap)
+    """Train and return the per-round merge BATCHES of the ``text``
+    column (the tokenizer artifact an encoder ships with) without
+    materializing per-round totals — BPE_ROUNDS ranked-pool jobs, one
+    fewer materialized applies (the last round's apply is never needed
+    once its batch is selected)."""
+    syms = _unit_syms(_unit_rows(docs, "text", 1))
+    select_fn = partial(select_merge_batch, batch_cap=BPE_BATCH_CAP)
     return [
         batch
-        for batch, _, _ in _merge_rounds(syms, rounds, topk, select_fn)
+        for batch, _, _ in _merge_rounds(syms, BPE_ROUNDS, BPE_TOPK, select_fn)
         if batch
     ]
 
@@ -634,30 +623,23 @@ def _tokenize_ledger(
     )
 
 
-def tokenize_corpus_adaptive(
-    spark: SparkSession,
-    docs: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
-    rounds: int = BPE_ADAPTIVE_ROUNDS,
-    topk: int = BPE_ADAPTIVE_TOPK,
-    alpha_den: int = BPE_ADAPTIVE_ALPHA_DEN,
-    chunk_words: int = BPE_CHUNK_WORDS,
-) -> DataFrame:
+def tokenize_corpus_adaptive(spark: SparkSession, docs: DataFrame) -> DataFrame:
     """The ADAPTIVE trainer's >=512 merges APPLIED at corpus scale —
     q318's ledger under q321's tokenizer: re-run the identical adaptive
     rounds over the global distinct-CHUNK vocabulary (identical
     frequencies -> identical ranked pools -> identical count-band
-    batches) with the chunk carried through, then emit the per-group
+    batches) with the chunk carried through, then emit the per-source
     ledger (n_chunks / n_tokens / tokens_per_chunk / chars_per_token).
     Rounds cost one ranked job each."""
-    select_fn = partial(select_merge_batch_adaptive, alpha_den=alpha_den)
+    select_fn = partial(select_merge_batch_adaptive, alpha_den=BPE_ADAPTIVE_ALPHA_DEN)
     return _tokenize_ledger(
         docs,
-        text_col,
-        group_col,
-        chunk_words,
-        lambda syms: _final_syms(syms, rounds, topk, select_fn),
+        "text",
+        "source",
+        BPE_CHUNK_WORDS,
+        lambda syms: _final_syms(
+            syms, BPE_ADAPTIVE_ROUNDS, BPE_ADAPTIVE_TOPK, select_fn
+        ),
         "n_chunks",
         "tokens_per_chunk",
     )
@@ -666,8 +648,6 @@ def tokenize_corpus_adaptive(
 def tokenize_corpus_batched(
     spark: SparkSession,
     docs: DataFrame,
-    text_col: str = "text",
-    group_col: str = "source",
     rounds: int = BPE_ROUNDS,
     batch_cap: int = BPE_BATCH_CAP,
     topk: int = BPE_TOPK,
@@ -676,7 +656,7 @@ def tokenize_corpus_batched(
     identical batched rounds over the global distinct-word vocab
     (identical frequencies -> identical ranked pools -> identical
     disjoint batches) with the word carried through, then emit the
-    per-group ledger (n_words / n_tokens / fertility /
+    per-source ledger (n_words / n_tokens / fertility /
     chars_per_token). Without per-round totals a round costs ONE job
     (the ranked pool — the lazy checkpoint materializes under the next
     round's job). ``batch_cap=1, topk=1`` is q311's one-merge-per-round
@@ -684,8 +664,8 @@ def tokenize_corpus_batched(
     select_fn = partial(select_merge_batch, batch_cap=batch_cap)
     return _tokenize_ledger(
         docs,
-        text_col,
-        group_col,
+        "text",
+        "source",
         1,
         lambda syms: _final_syms(syms, rounds, topk, select_fn),
         "n_words",

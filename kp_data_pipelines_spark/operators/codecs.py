@@ -212,10 +212,8 @@ def wav_decode(data: bytes) -> tuple[int, int, int, bytes]:
         )
 
 
-def wav_encode_pcm8(
-    samples: bytes, n_channels: int = 1, framerate: int = 8000
-) -> bytes:
-    """Write a real RIFF/WAVE container (stdlib ``wave``) around an
+def wav_encode_pcm8(samples: bytes, framerate: int) -> bytes:
+    """Write a real mono RIFF/WAVE container (stdlib ``wave``) around an
     8-bit PCM sample-byte stream — one byte per sample, so an ASCII
     byte stream round-trips as its own sample values (the
     VARCHAR-replayable profile q330's oracle needs; 16-bit PCM would
@@ -226,16 +224,14 @@ def wav_encode_pcm8(
 
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
-        w.setnchannels(n_channels)
+        w.setnchannels(1)
         w.setsampwidth(1)
         w.setframerate(framerate)
         w.writeframes(samples)
     return buf.getvalue()
 
 
-def wav_add_junk_chunk(
-    data: bytes, payload: bytes = b"kp-roundtrip-meta"
-) -> bytes:
+def wav_add_junk_chunk(data: bytes) -> bytes:
     """Insert a RIFF ``JUNK`` padding chunk (the standard alignment /
     reserved-space chunk of the RIFF spec) before the ``data`` chunk
     and patch the RIFF size — a byte-DIFFERENT container of IDENTICAL
@@ -246,8 +242,7 @@ def wav_add_junk_chunk(
     cannot (q330; the PNG analog is re-filtering, q323)."""
     if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE container")
-    if len(payload) % 2:
-        payload += b" "  # RIFF chunks are word-aligned
+    payload = b"kp-roundtrip-meta "  # RIFF chunks are word-aligned
     chunk = b"JUNK" + len(payload).to_bytes(4, "little") + payload
     pos = 12
     while pos + 8 <= len(data):

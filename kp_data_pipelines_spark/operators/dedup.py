@@ -40,8 +40,8 @@ def with_duplicate_count(df: DataFrame, keys: Sequence[str], out: str = "duplica
     return df.withColumn(out, F.count(F.lit(1)).over(w))
 
 
-def row_fingerprint(df: DataFrame, cols: Sequence[str] | None = None, out: str = "row_hash") -> DataFrame:
-    """D4: stable row fingerprint — ``sha2(concat_ws("|", *cols), 256)``.
+def row_fingerprint(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
+    """D4: stable row fingerprint ``row_hash`` — ``sha2(concat_ws("|", *cols), 256)``.
 
     The scalable seed of exact-dup detection: the reference builds
     ``astype(str).agg("|".join)`` keys (Transaction Duplicates.ipynb:36-38);
@@ -64,4 +64,4 @@ def row_fingerprint(df: DataFrame, cols: Sequence[str] | None = None, out: str =
         )
         for c in cols
     ]
-    return df.withColumn(out, F.sha2(F.concat_ws("|", *parts), 256))
+    return df.withColumn("row_hash", F.sha2(F.concat_ws("|", *parts), 256))

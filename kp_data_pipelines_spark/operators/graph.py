@@ -38,10 +38,7 @@ def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Return ``(node, component)`` for every node in ``edges``, where
     ``component`` is the minimum node id reachable via undirected edges.
@@ -56,21 +53,22 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    labels, _ = _propagate(e, labels, max_iter)
+    labels, _ = _propagate(e, labels)
     return labels
 
 
 def _propagate(
-    e: DataFrame, labels: DataFrame, max_iter: int
+    e: DataFrame, labels: DataFrame
 ) -> tuple[DataFrame, int]:
     """Min-label propagation + pointer jumping from an arbitrary valid
     initial labeling (every label value must be a node present in
     ``labels`` and reachable from its node). Returns the converged
-    ``(node, component)`` table and the number of rounds executed —
+    ``(node, component)`` table and the number of rounds executed (at
+    most 50) —
     warm starts (labels already near the fixpoint) converge in O(1)
     rounds, which is the whole point of ``warm_start_components``."""
     rounds = 0
-    for _ in range(max_iter):
+    for _ in range(50):
         rounds += 1
         neighbor_min = (
             e.join(labels, e.b == labels.node)
@@ -116,17 +114,12 @@ def _propagate(
 
 
 def warm_start_components(
-    edges: DataFrame,
-    prior: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
-    comp_col: str = "component",
-    max_iter: int = 50,
+    edges: DataFrame, prior: DataFrame
 ) -> tuple[DataFrame, int]:
-    """Incremental connected components: re-close the near-dup graph
-    after new documents arrive, WARM-STARTED from the previous build's
-    ``prior`` ``(node, component)`` table instead of from singletons —
+    """Incremental connected components: re-close the near-dup graph of
+    ``(id_a, id_b)`` pairs after new documents arrive, WARM-STARTED from
+    the previous build's ``prior`` ``(node, component)`` table instead of
+    from singletons —
     the index-lifecycle answer to "a wave landed; which dedup clusters
     changed?" without paying the cold O(log diameter) rounds again.
 
@@ -147,16 +140,14 @@ def warm_start_components(
     answer. Returns ``(labels, rounds)``; rounds is the convergence
     telemetry a scheduler would use to decide when incremental stops
     paying and a full rebuild is due."""
-    raw = prior.select(
-        F.col(node_col).alias("node"), F.col(comp_col).alias("p_comp")
-    )
+    raw = prior.select("node", F.col("component").alias("p_comp"))
     # prior equivalences become edges: the contract must hold even when
     # the pair that produced a prior link is not re-derivable from the
     # current edge set (new-wave-only candidates). Built from RAW prior
     # rows so that conflicting duplicates (node -> c1, node -> c2) keep
     # BOTH equivalences...
     prior_edges = raw.filter(F.col("node") != F.col("p_comp")).select(
-        F.col("node").alias(src), F.col("p_comp").alias(dst)
+        F.col("node").alias("id_a"), F.col("p_comp").alias("id_b")
     )
     # ...while label seeding takes ONE deterministic row per node (min
     # component) — without this, duplicate prior rows survive every
@@ -164,9 +155,7 @@ def warm_start_components(
     # carries duplicate node rows
     p = raw.groupBy("node").agg(F.min("p_comp").alias("p_comp"))
     e = _symmetrize(
-        edges.select(F.col(src), F.col(dst)).unionByName(prior_edges),
-        src,
-        dst,
+        edges.select("id_a", "id_b").unionByName(prior_edges), "id_a", "id_b"
     )
     edge_nodes = e.select(F.col("a").alias("node")).distinct()
     seeded = (
@@ -181,4 +170,4 @@ def warm_start_components(
         )
         .localCheckpoint(eager=True)
     )
-    return _propagate(e, seeded, max_iter)
+    return _propagate(e, seeded)

@@ -55,13 +55,14 @@ def llm_generate(text_col: str) -> Column:
     return generate(F.col(text_col))
 
 
-def parse_channels(df: DataFrame, raw_col: str = "raw_output") -> DataFrame:
-    """The reference's regex answer-split, JVM-side: extract
-    ``<analysis>``/``<final>`` channels with regexp_extract."""
+def parse_channels(df: DataFrame) -> DataFrame:
+    """The reference's regex answer-split, JVM-side: extract the
+    ``<analysis>``/``<final>`` channels of ``raw_output`` with
+    regexp_extract."""
     return df.withColumns(
         {
-            "analysis": F.regexp_extract(raw_col, r"<analysis>(.*?)</analysis>", 1),
-            "final": F.regexp_extract(raw_col, r"<final>(.*?)</final>", 1),
+            "analysis": F.regexp_extract("raw_output", r"<analysis>(.*?)</analysis>", 1),
+            "final": F.regexp_extract("raw_output", r"<final>(.*?)</final>", 1),
         }
     )
 
@@ -144,9 +145,9 @@ def text_embedding(text_col: str) -> Column:
     return encode(F.col(text_col))
 
 
-def encode_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """EMBED AT SCALE: derive a unit-norm ``embedding`` column from a
-    text column — normalization JVM-side (``normalize_ws``, the shared
+def encode_documents(df: DataFrame) -> DataFrame:
+    """EMBED AT SCALE: derive a unit-norm ``embedding`` column from the
+    ``text`` column — normalization JVM-side (``normalize_ws``, the shared
     parity-critical twin), encoding in one Arrow pass, rows whose text
     is empty/whitespace (or whose signed counts cancel to a zero
     vector) dropped on BOTH engines. Scale shape: embarrassingly
@@ -159,7 +160,7 @@ def encode_documents(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     return (
         ensure_parallelism(df)
-        .withColumn("__embed_norm", normalize_ws(text_col))
+        .withColumn("__embed_norm", normalize_ws("text"))
         .filter(F.length("__embed_norm") > 0)
         .withColumn("embedding", text_embedding("__embed_norm"))
         .drop("__embed_norm")

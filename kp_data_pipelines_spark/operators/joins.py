@@ -25,23 +25,17 @@ MERGE_COL = "_merge"
 
 
 def lookup_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str] | Column,
-    how: str = "left",
-    broadcast_dim: bool = True,
+    fact: DataFrame, dim: DataFrame, on: str | Sequence[str] | Column
 ) -> DataFrame:
-    """J1: enrich a fact table from a small dimension (pandas ``merge(how="left")``,
-    Saoirse Automation.ipynb:701-707)."""
-    d = F.broadcast(dim) if broadcast_dim else dim
-    return fact.join(d, on=on, how=how)
+    """J1: enrich a fact table from a small broadcast dimension (pandas
+    ``merge(how="left")``, Saoirse Automation.ipynb:701-707)."""
+    return fact.join(F.broadcast(dim), on=on, how="left")
 
 
 def merge_indicator(
     left: DataFrame,
     right: DataFrame,
     on: Sequence[str],
-    suffixes: tuple[str, str] = ("_left", "_right"),
 ) -> DataFrame:
     """J2: full-outer equi-join with a pandas-style ``_merge`` indicator
     column (``both`` / ``left_only`` / ``right_only``).
@@ -50,7 +44,7 @@ def merge_indicator(
     core (DOP VP Compare.py:141-149, DOR VP Compare.ipynb:348-356).
 
     Join keys are coalesced into single output columns; colliding non-key
-    column names get ``suffixes``.
+    column names get ``_left`` / ``_right``.
     """
     lkeys = [f"__lk_{k}" for k in on]
     rkeys = [f"__rk_{k}" for k in on]
@@ -63,8 +57,8 @@ def merge_indicator(
 
     overlap = (set(left.columns) & set(right.columns)) - set(on)
     for c in overlap:
-        lren = lren.withColumnRenamed(c, c + suffixes[0])
-        rren = rren.withColumnRenamed(c, c + suffixes[1])
+        lren = lren.withColumnRenamed(c, c + "_left")
+        rren = rren.withColumnRenamed(c, c + "_right")
 
     cond = None
     for lk, rk in zip(lkeys, rkeys):
@@ -152,7 +146,6 @@ def asof_join(
     left_ts: str,
     right_ts: str,
     payload: Sequence[str],
-    suffix: str = "_asof",
 ) -> DataFrame:
     """Backward as-of join: each left row picks the LATEST right row with
     ``right_ts <= left_ts`` for the same key (point-in-time lookup).
@@ -171,7 +164,7 @@ def asof_join(
 
     Cost: ONE shuffle on the key + a sort within partitions — same cost
     class as a group-by, no matter how wide the time ranges are. Payload
-    columns come back as ``<name><suffix>``, NULL when no prior right row.
+    columns come back as ``<name>_asof``, NULL when no prior right row.
     """
     from pyspark.sql import Window
 
@@ -192,7 +185,7 @@ def asof_join(
     )
     out = carried.filter(F.col("__side") == 1)
     for p in payload:
-        out = out.withColumn(f"{p}{suffix}", F.col("__asof")[p])
+        out = out.withColumn(f"{p}_asof", F.col("__asof")[p])
     return out.drop("__side", "__r_payload", "__asof")
 
 
@@ -202,54 +195,38 @@ def interval_join(
     point_ts: str,
     start_ts: str,
     end_ts: str,
-    keys: Sequence[str] = (),
-    bucket_seconds: int = 3600,
-    how: str = "inner",
+    keys: Sequence[str],
 ) -> DataFrame:
-    """Range (interval-containment) join: point rows match interval rows
-    with ``start_ts <= point_ts <= end_ts`` (plus optional equi-keys).
+    """Range (interval-containment) inner join: point rows match interval
+    rows with ``start_ts <= point_ts <= end_ts`` and equal ``keys``.
 
     A raw BETWEEN theta-join plans as a nested loop; here both sides are
-    bucketed on a time grain, so the planner gets an EQUI-join on
+    bucketed on an hour grain, so the planner gets an EQUI-join on
     (keys, bucket) with the BETWEEN as a residual filter:
 
     - each point lands in exactly ONE bucket;
-    - each interval explodes into the buckets it covers (bound the blow-up
-      by choosing ``bucket_seconds`` near the typical interval length).
+    - each interval explodes into the hours it covers (the blow-up stays
+      small while intervals run near an hour).
 
     Because a point has a single bucket, every (point, interval) pair is
     produced at most once — no dedup needed. One shuffle on (keys, bucket).
-
-    ``how``: 'inner', or 'left' (points with no containing interval survive
-    null-padded). The residual can't simply be a post-join filter for
-    'left' — null-extended rows would evaluate NULL and be dropped — so the
-    left variant anti-joins the matched point set back in.
     """
-    if how not in ("inner", "left"):
-        raise ValueError(f"interval_join supports how='inner'/'left' (got {how!r})")
-    keys = list(keys)
     pb = points.withColumn(
-        "__bucket", F.floor(F.unix_timestamp(F.col(point_ts)) / bucket_seconds)
+        "__bucket", F.floor(F.unix_timestamp(F.col(point_ts)) / 3600)
     )
     ib = intervals.withColumn(
         "__bucket",
         F.explode(
             F.sequence(
-                F.floor(F.unix_timestamp(F.col(start_ts)) / bucket_seconds),
-                F.floor(F.unix_timestamp(F.col(end_ts)) / bucket_seconds),
+                F.floor(F.unix_timestamp(F.col(start_ts)) / 3600),
+                F.floor(F.unix_timestamp(F.col(end_ts)) / 3600),
             )
         ),
     )
     residual = (F.col(point_ts) >= F.col(start_ts)) & (
         F.col(point_ts) <= F.col(end_ts)
     )
-    inner = pb.join(ib, on=keys + ["__bucket"], how="inner").filter(residual).drop("__bucket")
-    if how == "inner":
-        return inner
-    unmatched = points.join(
-        inner.select(*points.columns), on=list(points.columns), how="left_anti"
-    )
-    return inner.unionByName(unmatched, allowMissingColumns=True)
+    return pb.join(ib, on=[*keys, "__bucket"], how="inner").filter(residual).drop("__bucket")
 
 
 class UnboundedBroadcastError(ValueError):
@@ -269,7 +246,7 @@ _BOUNDED_LOGICAL_PASS = (
 )
 
 
-def _logical_bounded(node, max_limit: int) -> bool:
+def _logical_bounded(node) -> bool:
     cls = node.getClass().getSimpleName()
     if cls == "Aggregate":
         try:
@@ -280,7 +257,7 @@ def _logical_bounded(node, max_limit: int) -> bool:
     if cls in ("GlobalLimit", "Limit"):
         try:
             v = int(node.limitExpr().eval(None))
-            if v <= max_limit:
+            if v <= 1024:
                 return True
         except Exception:  # noqa: BLE001
             return False
@@ -292,14 +269,14 @@ def _logical_bounded(node, max_limit: int) -> bool:
     except Exception:  # noqa: BLE001
         return False
     if cls == "Aggregate" or any(cls.startswith(p) for p in _BOUNDED_LOGICAL_PASS):
-        return bool(kids) and all(_logical_bounded(k, max_limit) for k in kids)
+        return bool(kids) and all(_logical_bounded(k) for k in kids)
     return False
 
 
-def broadcast_scalar(df: DataFrame, max_limit: int = 1024) -> DataFrame:
+def broadcast_scalar(df: DataFrame) -> DataFrame:
     """Broadcast hint that ASSERTS the frame is bounded by construction:
     its analyzed logical plan must bottom out in an ungrouped aggregate
-    (<= 1 row) or a limit(k <= max_limit) reached through row-preserving
+    (<= 1 row) or a limit(k <= 1024) reached through row-preserving
     nodes. Use this instead of a bare ``F.broadcast`` when crossJoining a
     corpus-level scalar (total rows, cap, KS statistic) onto a summary —
     the resulting BroadcastNestedLoopJoin is then *provably* k x n, and
@@ -308,10 +285,10 @@ def broadcast_scalar(df: DataFrame, max_limit: int = 1024) -> DataFrame:
     ``UnboundedBroadcastError`` for anything else (e.g. a filtered fact
     table someone *believes* is small)."""
     analyzed = df._jdf.queryExecution().analyzed()
-    if not _logical_bounded(analyzed, max_limit):
+    if not _logical_bounded(analyzed):
         raise UnboundedBroadcastError(
             "broadcast_scalar requires an ungrouped aggregate or "
-            f"limit(k<={max_limit}) lineage; got:\n"
+            "limit(k<=1024) lineage; got:\n"
             + analyzed.toString()[:2000]
         )
     return F.broadcast(df)

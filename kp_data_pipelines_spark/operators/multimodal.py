@@ -149,9 +149,8 @@ def frame_sample_plan(df: DataFrame, every_ms: int = 1000) -> DataFrame:
     )
 
 
-def chunk_media(df: DataFrame, chunk_bytes: int = 1 << 20,
-                content_col: str = "content") -> DataFrame:
-    """Split opaque media blobs into fixed-size chunks ENTIRELY JVM-side:
+def chunk_media(df: DataFrame) -> DataFrame:
+    """Split opaque ``content`` blobs into 64-byte chunks ENTIRELY JVM-side:
     chunk boundaries come from a generated index sequence and the slice is
     ``substring`` on the binary column — no Python boundary, no UDF. One
     row per (media_id, chunk_idx) with the chunk payload + offset/length
@@ -163,17 +162,15 @@ def chunk_media(df: DataFrame, chunk_bytes: int = 1 << 20,
     already live in a table (the fixture's documents-as-media) and are
     well under that bound. File-resident media of any size needs a
     source that plans chunk offset ranges from file metadata and reads
-    each range directly, so that no row exceeds ``chunk_bytes``; this
-    package has no such source."""
-    n_chunks = F.greatest(
-        F.ceil(F.length(content_col) / F.lit(chunk_bytes)).cast("int"), F.lit(1)
-    )
-    offset = F.col("chunk_idx") * chunk_bytes + 1  # substring is 1-based
+    each range directly, so that no row exceeds a chunk; this package has
+    no such source."""
+    n_chunks = F.greatest(F.ceil(F.length("content") / F.lit(64)).cast("int"), F.lit(1))
+    offset = F.col("chunk_idx") * 64 + 1  # substring is 1-based
     return (
         df.select(
             "media_id",
-            F.length(content_col).cast("long").alias("total_bytes"),
-            F.col(content_col),
+            F.length("content").cast("long").alias("total_bytes"),
+            F.col("content"),
             F.explode(F.sequence(F.lit(0), n_chunks - 1)).alias("chunk_idx"),
         )
         .select(
@@ -181,10 +178,7 @@ def chunk_media(df: DataFrame, chunk_bytes: int = 1 << 20,
             "chunk_idx",
             "total_bytes",
             (offset - 1).cast("long").alias("offset"),
-            F.expr(
-                f"substring({content_col}, chunk_idx * {chunk_bytes} + 1, "
-                f"{chunk_bytes})"
-            ).alias("chunk"),
+            F.expr("substring(content, chunk_idx * 64 + 1, 64)").alias("chunk"),
         )
         .withColumn("chunk_len", F.length("chunk").cast("long"))
     )
@@ -348,17 +342,15 @@ def media_dhash_kernel():
     return _dhash
 
 
-def with_media_dhash(df: DataFrame, content_col: str = "content",
-                     out: str = "phash", impl: str = "kernel") -> DataFrame:
-    """Attach the dHash perceptual fingerprint of a binary media column.
+def with_media_dhash(df: DataFrame, content_col: str) -> DataFrame:
+    """Attach ``phash``, the dHash perceptual fingerprint of a binary
+    media column, with the Arrow numpy kernel."""
+    return df.withColumn("phash", media_dhash_kernel()(F.col(content_col)))
 
-    ``impl='kernel'`` (default, the hot path) is the Arrow numpy kernel;
-    ``impl='expr'`` is the interpreted JVM expression twin — same value,
-    used by the pin test and as the zero-Python fallback."""
-    if impl == "kernel":
-        return df.withColumn(out, media_dhash_kernel()(F.col(content_col)))
-    if impl != "expr":
-        raise ValueError(f"unknown impl {impl!r}")
+
+def with_media_dhash_expr(df: DataFrame, content_col: str) -> DataFrame:
+    """The interpreted JVM expression twin of ``with_media_dhash`` — the
+    same ``phash``, the reference the kernel is pinned against."""
     hx = f"hex({content_col})"
     # sequence(1, 0) DESCENDS in Spark — guard the empty-payload case
     byts = (
@@ -389,7 +381,7 @@ def with_media_dhash(df: DataFrame, content_col: str = "content",
         "0L, (acc, x) -> acc + x)"
     )
     return df.withColumn(
-        out, F.expr(f"case when __mm_cells is null then null else {fp} end")
+        "phash", F.expr(f"case when __mm_cells is null then null else {fp} end")
     ).drop("__mm_bytes", "__mm_cells")
 
 
@@ -409,9 +401,7 @@ def decoded_media_dhash(df: DataFrame, decoder: str = "fake") -> DataFrame:
     decoder)."""
     feats = extract_media_features(df, decoder=decoder)
     return with_media_dhash(
-        feats.withColumn("__fb", F.encode("feature", "UTF-8")),
-        "__fb",
-        "phash",
+        feats.withColumn("__fb", F.encode("feature", "UTF-8")), "__fb"
     ).select("media_id", "kind", "content_sha", "feature", "phash")
 
 
@@ -424,15 +414,11 @@ PNG_ROUNDTRIP_FILTERS = (0, 4)
 
 
 def png_roundtrip_media(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    text_col: str = "text",
-    width: int = PNG_ROUNDTRIP_WIDTH,
-    filters: tuple[int, ...] = PNG_ROUNDTRIP_FILTERS,
+    df: DataFrame, filters: tuple[int, ...] = PNG_ROUNDTRIP_FILTERS
 ) -> DataFrame:
-    """Emit ``len(filters)`` REAL PNG containers per document — the
-    text's UTF-8 bytes as an 8-bit grayscale pixel stream (width-column
+    """Emit ``len(filters)`` REAL PNG containers per document (``doc_id``,
+    ``source``, ``text``) — the text's UTF-8 bytes as an 8-bit grayscale
+    pixel stream (PNG_ROUNDTRIP_WIDTH-column
     rows, space-padded to fill the last row), each encoded with a
     different scanline filter (``codecs.png_encode_gray``). The
     variants are byte-DIFFERENT containers of IDENTICAL pixels: the
@@ -447,10 +433,9 @@ def png_roundtrip_media(
     )
 
     nv = len(filters)
+    width = PNG_ROUNDTRIP_WIDTH
     src = ensure_parallelism(
-        df.select(id_col, source_col, text_col).filter(
-            F.length(text_col) > 0
-        )
+        df.select("doc_id", "source", "text").filter(F.length("text") > 0)
     )
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -458,9 +443,7 @@ def png_roundtrip_media(
             rows: dict[str, list] = {
                 "media_id": [], "source": [], "kind": [], "content": [],
             }
-            for did, source, txt in zip(
-                pdf[id_col], pdf[source_col], pdf[text_col]
-            ):
+            for did, source, txt in zip(pdf["doc_id"], pdf["source"], pdf["text"]):
                 b = txt.encode("utf-8")
                 h = (len(b) + width - 1) // width
                 pix = b + b" " * (width * h - len(b))
@@ -486,14 +469,9 @@ WAV_ROUNDTRIP_RATE = 8000
 WAV_ROUNDTRIP_VARIANTS = 2
 
 
-def wav_roundtrip_media(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    text_col: str = "text",
-    framerate: int = WAV_ROUNDTRIP_RATE,
-) -> DataFrame:
-    """Emit TWO real RIFF/WAVE containers per document — the text's
+def wav_roundtrip_media(df: DataFrame) -> DataFrame:
+    """Emit TWO real RIFF/WAVE containers per document (``doc_id``,
+    ``source``, ``text``) — the text's
     bytes as an 8-bit PCM sample stream (``codecs.wav_encode_pcm8``),
     variant 0 the plain stdlib ``wave`` encode and variant 1 the same
     encode re-containered with an inserted RIFF ``JUNK`` metadata chunk
@@ -513,9 +491,7 @@ def wav_roundtrip_media(
 
     nv = WAV_ROUNDTRIP_VARIANTS
     src = ensure_parallelism(
-        df.select(id_col, source_col, text_col).filter(
-            F.length(text_col) > 0
-        )
+        df.select("doc_id", "source", "text").filter(F.length("text") > 0)
     )
 
     def gen(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -523,12 +499,8 @@ def wav_roundtrip_media(
             rows: dict[str, list] = {
                 "media_id": [], "source": [], "kind": [], "content": [],
             }
-            for did, source, txt in zip(
-                pdf[id_col], pdf[source_col], pdf[text_col]
-            ):
-                plain = wav_encode_pcm8(
-                    txt.encode("utf-8"), framerate=framerate
-                )
+            for did, source, txt in zip(pdf["doc_id"], pdf["source"], pdf["text"]):
+                plain = wav_encode_pcm8(txt.encode("utf-8"), WAV_ROUNDTRIP_RATE)
                 for v, payload in enumerate(
                     (plain, wav_add_junk_chunk(plain))
                 ):
@@ -571,13 +543,11 @@ def constellation_landmarks(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    w: int = 32,
-    fan: int = 3,
 ) -> DataFrame:
     """Shazam-style landmark constellation keys over a char-stream
-    payload (Wang 2003): frame the payload into ``w``-char windows,
+    payload (Wang 2003): frame the payload into 32-char windows,
     take each frame's peak (argmax char code, first-occurrence ties),
-    and pair it with the next 1..``fan`` frames' peaks into integer
+    and pair it with the next 1..3 frames' peaks into integer
     constellation keys (peak position x peak position x delta x coarse
     code buckets). Returns ``(id_col, t, key)`` — one row per landmark,
     ``t`` the anchor frame index. Shared by q308 (cross-media matching)
@@ -601,6 +571,7 @@ def constellation_landmarks(
     frames the DuckDB twin's range() never produces."""
     from pyspark.sql import Window
 
+    w, fan = 32, 3
     df = df.filter(F.length(text_col) > 0)
     nfr = F.expr(
         f"CAST((length({text_col}) + {w - 1}) div {w} AS INT)"
@@ -687,9 +658,9 @@ def constellation_landmarks(
 # (none a multiple of the old frame width or its halves).
 
 
-def dense_peaks_kernel(r: int = DENSE_PEAK_RADIUS):
+def dense_peaks_kernel():
     """Arrow-batched numpy peak finder: text -> (pos[], val[], ctx[])
-    struct of the radius-``r`` local maxima (1-based positions, Unicode
+    struct of the radius-DENSE_PEAK_RADIUS local maxima (1-based positions, Unicode
     code points, and the 10-bit content-defined context hash that
     entropy-widens the landmark key space — the q317 starvation fix).
     Pure integer comparisons — pinned bit-identical to the
@@ -713,7 +684,7 @@ def dense_peaks_kernel(r: int = DENSE_PEAK_RADIUS):
             n = c.size
             lm = np.full(n, -1, dtype=np.int64)
             rm = np.full(n, -1, dtype=np.int64)
-            for j in range(1, r + 1):
+            for j in range(1, DENSE_PEAK_RADIUS + 1):
                 if j < n:
                     np.maximum(lm[j:], c[:-j], out=lm[j:])
                     np.maximum(rm[:-j], c[j:], out=rm[:-j])
@@ -735,18 +706,14 @@ def dense_peaks_kernel(r: int = DENSE_PEAK_RADIUS):
     return _peaks
 
 
-def with_dense_peaks_expr(
-    df: DataFrame,
-    text_col: str,
-    out: str = "pk",
-    r: int = DENSE_PEAK_RADIUS,
-) -> DataFrame:
+def with_dense_peaks_expr(df: DataFrame, text_col: str) -> DataFrame:
     """The interpreted JVM expression twin of ``dense_peaks_kernel``:
     per-position slice maxima over the char-code array, materialized
-    stepwise (the with_media_dhash pattern) so the code array folds
+    stepwise (the with_media_dhash_expr pattern) so the code array folds
     once per row. O(len * 2r) interpreted HOF work — the pin-test
-    reference and zero-Python fallback, never the hot path. Adds a
-    struct column ``out`` (pos/val/ctx: array<int>)."""
+    reference, never the hot path. Adds a struct column ``pk``
+    (pos/val/ctx: array<int>)."""
+    r = DENSE_PEAK_RADIUS
     codes = (
         f"transform(filter(split({text_col}, ''), c -> c != ''), "
         f"c -> ascii(c))"
@@ -777,7 +744,7 @@ def with_dense_peaks_expr(
         f"0L, (acc, c) -> (acc * 31 + c) % {DENSE_CTX_MOD}) as int)"
     )
     return df.withColumn(
-        out,
+        "pk",
         F.expr(
             # NULL text -> struct of NULL arrays (a pandas_udf struct
             # return can't emit a NULL struct row, so the kernel yields
@@ -802,11 +769,10 @@ def dense_landmarks(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    r: int = DENSE_PEAK_RADIUS,
-    fan: int = DENSE_FAN,
 ) -> DataFrame:
-    """Content-defined landmark keys: radius-``r`` local-max peaks of
-    the char-code stream, each paired with its next 1..``fan`` peaks
+    """Content-defined landmark keys: radius-DENSE_PEAK_RADIUS local-max
+    peaks of the char-code stream, each paired with its next
+    1..DENSE_FAN peaks
     into BIGINT keys ``(((v * 1024 + v_d) * 4 + d) * 512 +
     min(gap, DENSE_DELTA_CAP)) * DENSE_CTX_MOD + ctx`` where ``ctx``
     is the rolling hash of the DENSE_CTX_LEN chars after the anchor —
@@ -818,7 +784,7 @@ def dense_landmarks(
     (earliest anchors kept) exactly like constellation_landmarks.
 
     Scale shape: ONE Arrow pass per payload emits only its peaks
-    (~len/(r+1) rows, content-bounded); the pairing is a per-payload
+    (~len/(DENSE_PEAK_RADIUS+1) rows, content-bounded); the pairing is a per-payload
     LEAD window over peak rows; no per-char row ever shuffles. The
     DuckDB twin computes the same peaks with two per-doc window maxima
     over the char stream (``oracles._dense_lm_ctes``)."""
@@ -827,7 +793,7 @@ def dense_landmarks(
     df = df.filter(F.length(text_col) > 0)
     pk = (
         df.select(
-            id_col, dense_peaks_kernel(r)(F.col(text_col)).alias("pk")
+            id_col, dense_peaks_kernel()(F.col(text_col)).alias("pk")
         )
         .select(
             id_col,
@@ -848,7 +814,7 @@ def dense_landmarks(
         "cx",
         *[
             c
-            for d in range(1, fan + 1)
+            for d in range(1, DENSE_FAN + 1)
             for c in (
                 F.lead("t", d).over(win).alias(f"t{d}"),
                 F.lead("v", d).over(win).alias(f"v{d}"),
@@ -867,11 +833,11 @@ def dense_landmarks(
     keys = F.array(
         *[
             F.expr(
-                f"CAST((((v * 1024 + v{d}) * {fan + 1} + {d}) * 512"
+                f"CAST((((v * 1024 + v{d}) * {DENSE_FAN + 1} + {d}) * 512"
                 f" + least(t{d} - t, {DENSE_DELTA_CAP}))"
                 f" * {DENSE_CTX_MOD} + cx AS BIGINT)"
             )
-            for d in range(1, fan + 1)
+            for d in range(1, DENSE_FAN + 1)
         ]
     )
     lm = lm0.select(

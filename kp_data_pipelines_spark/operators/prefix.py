@@ -15,7 +15,7 @@ non-starter at 100 TB. The classic two-phase scan fixes it:
 
 The result is identical to the single-partition window for any unique
 ordering key, but every stage is bounded by one partition's data. The
-driver-side step handles ``num_partitions`` rows — hundreds, not billions.
+driver-side step handles one row per range partition (32), not billions.
 
 No reference equivalent (pandas ``cumsum`` is single-process —
 e.g. running balances in `Accruals Report.ipynb`); this is the
@@ -33,18 +33,17 @@ def prefix_sum(
     order_key: str | list[str],
     value: Column | str,
     out_col: str = "cum_sum",
-    num_partitions: int = 32,
 ) -> DataFrame:
     """Inclusive distributed cumulative sum of ``value`` in ``order_key``
-    order. ``order_key`` (one column name or a list for a composite
-    order) must define a total order — unique key(s); ``value`` should
+    order, scanned over 32 range partitions. ``order_key`` (one column
+    name or a list for a composite order) must define a total order — unique key(s); ``value`` should
     be integral or decimal for exact reassembly. With ``value=lit(1)``
     this is a distributed global row_number — the scale-safe rank."""
     keys = [order_key] if isinstance(order_key, str) else list(order_key)
     val = F.col(value) if isinstance(value, str) else value
-    rp = df.repartitionByRange(
-        num_partitions, *[F.col(k) for k in keys]
-    ).withColumn("__pid", F.spark_partition_id())
+    rp = df.repartitionByRange(32, *[F.col(k) for k in keys]).withColumn(
+        "__pid", F.spark_partition_id()
+    )
     # Local scan within each range partition.
     w = Window.partitionBy("__pid").orderBy(*keys).rowsBetween(
         Window.unboundedPreceding, Window.currentRow

@@ -94,7 +94,7 @@ def _complex(field) -> bool:
 
 
 def profile_table(
-    df: DataFrame, numeric_cols: list[str], other_cols: list[str] = []
+    df: DataFrame, numeric_cols: list[str], other_cols: list[str]
 ) -> DataFrame:
     """One-row-per-column profiling summary (n_rows, nulls, distincts,
     numeric min/max) — the data-quality report the reference prints by

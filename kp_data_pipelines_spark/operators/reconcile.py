@@ -27,18 +27,17 @@ def reconcile(
     on: Sequence[str],
     left_amount: str,
     right_amount: str,
-    diff_col: str = "difference",
 ) -> DataFrame:
     """Full reconciliation frame: one row per key with amounts from both
-    sides (0-filled, as DOP VP Compare.py:145-147), the difference, and the
-    ``_merge`` classification."""
+    sides (0-filled, as DOP VP Compare.py:145-147), the ``difference``,
+    and the ``_merge`` classification."""
     merged = merge_indicator(left, right, on)
     la = F.coalesce(F.col(left_amount), F.lit(0.0))
     ra = F.coalesce(F.col(right_amount), F.lit(0.0))
     return (
         merged.withColumn(left_amount, la)
         .withColumn(right_amount, ra)
-        .withColumn(diff_col, F.round(la - ra, 2))
+        .withColumn("difference", F.round(la - ra, 2))
     )
 
 

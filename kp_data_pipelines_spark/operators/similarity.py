@@ -74,23 +74,23 @@ def ensure_parallelism(df: DataFrame, min_partitions: int = 8) -> DataFrame:
     return df
 
 
-def with_cosine(df: DataFrame, vec_col: str, query: list[float], out: str = "cosine") -> DataFrame:
-    """Attach cosine similarity vs a constant query vector (double math)."""
+def with_cosine(df: DataFrame, vec_col: str, query: list[float]) -> DataFrame:
+    """Attach ``cosine``, the similarity vs a constant query vector (double math)."""
     q = F.array(*[F.lit(float(x)) for x in query])
     qn = math.sqrt(sum(float(x) * float(x) for x in query))
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     dot = _dot(v, q)
     vn = F.sqrt(_dot(v, v))
-    return df.withColumn(out, dot / (vn * F.lit(qn)))
+    return df.withColumn("cosine", dot / (vn * F.lit(qn)))
 
 
 def cosine_topk(
-    df: DataFrame, vec_col: str, id_col: str, query: list[float], k: int = 10
+    df: DataFrame, vec_col: str, id_col: str, query: list[float]
 ) -> DataFrame:
-    """Brute-force cosine top-k: one scan, TakeOrdered(k) — the baseline ANN
-    oracle. Deterministic tie-break on id."""
-    scored = with_cosine(df, vec_col, query, "cosine")
-    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
+    """Brute-force cosine top-10: one scan, TakeOrdered(10) — the baseline
+    ANN oracle. Deterministic tie-break on id."""
+    scored = with_cosine(df, vec_col, query)
+    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(10)
 
 
 def simhash_planes(dim: int, n_planes: int = 16, seed: int = 7) -> list[list[float]]:
@@ -175,20 +175,19 @@ def with_hyperplane_bucket(
 
 
 def lsh_bucket_cosine_topk(
-    df: DataFrame, vec_col: str, id_col: str, query: list[float], k: int = 10, n_planes: int = 8
+    df: DataFrame, vec_col: str, id_col: str, query: list[float]
 ) -> DataFrame:
-    """Scale-path ANN: score only vectors whose hyperplane bucket matches the
-    query's bucket (expected candidate reduction 2^n_planes), then exact
-    cosine top-k within candidates. Recall < 1 by construction; n_planes
-    trades recall vs cost."""
+    """Scale-path ANN: score only vectors whose 6-plane hyperplane bucket
+    matches the query's bucket (expected candidate reduction 2^6), then
+    exact cosine top-10 within candidates. Recall < 1 by construction."""
     dim = len(query)
-    planes = simhash_planes(dim, n_planes)
+    planes = simhash_planes(dim, 6)
     bucketed = with_hyperplane_bucket(df, vec_col, planes)
     qbits = "".join(
         "1" if sum(a * b for a, b in zip(plane, query)) >= 0 else "0" for plane in planes
     )
     candidates = bucketed.filter(F.col("bucket") == qbits).drop("bucket")
-    return cosine_topk(candidates, vec_col, id_col, query, k)
+    return cosine_topk(candidates, vec_col, id_col, query)
 
 
 # Anchor-block width for the per-bucket gram kernels below: per-task peak
@@ -210,43 +209,29 @@ GRAM_MIN_PLANES = 4
 GRAM_MAX_PLANES = 24
 
 
-def adaptive_n_planes(
-    n_rows: int,
-    target_bucket: int = GRAM_TARGET_BUCKET,
-    min_planes: int = GRAM_MIN_PLANES,
-    max_planes: int = GRAM_MAX_PLANES,
-) -> int:
-    """Smallest plane count p in [min_planes, max_planes] with
-    n_rows <= target_bucket * 2^p — i.e. expected LSH bucket width stays
+def adaptive_n_planes(n_rows: int) -> int:
+    """Smallest plane count p in [GRAM_MIN_PLANES, GRAM_MAX_PLANES] with
+    n_rows <= GRAM_TARGET_BUCKET * 2^p — i.e. expected LSH bucket width stays
     within the gram-kernel budget. Pure integer comparisons so the SQL
     ladder twin (``adaptive_n_planes_case_sql``) is exactly equivalent;
     ``simhash_planes`` is prefix-stable (the first p planes of a longer
     generation are identical), so both engines can derive p independently
     and land on identical bucket codes."""
-    p = min_planes
-    while p < max_planes and n_rows > (target_bucket << p):
+    p = GRAM_MIN_PLANES
+    while p < GRAM_MAX_PLANES and n_rows > (GRAM_TARGET_BUCKET << p):
         p += 1
     return p
 
 
-def adaptive_n_planes_case_sql(
-    count_expr: str,
-    target_bucket: int = GRAM_TARGET_BUCKET,
-    min_planes: int = GRAM_MIN_PLANES,
-    max_planes: int = GRAM_MAX_PLANES,
-) -> str:
+def adaptive_n_planes_case_sql(count_expr: str) -> str:
     """SQL CASE-ladder twin of ``adaptive_n_planes`` over an integer
     count expression — same integer thresholds, so DuckDB computes the
-    identical plane count from COUNT(*) at any scale factor. When
-    min_planes == max_planes there is no ladder to walk: emit the
-    constant (a zero-WHEN CASE is a parse error)."""
-    if min_planes >= max_planes:
-        return f"({max_planes})"
+    identical plane count from COUNT(*) at any scale factor."""
     whens = " ".join(
-        f"WHEN {count_expr} <= {target_bucket << p} THEN {p}"
-        for p in range(min_planes, max_planes)
+        f"WHEN {count_expr} <= {GRAM_TARGET_BUCKET << p} THEN {p}"
+        for p in range(GRAM_MIN_PLANES, GRAM_MAX_PLANES)
     )
-    return f"(CASE {whens} ELSE {max_planes} END)"
+    return f"(CASE {whens} ELSE {GRAM_MAX_PLANES} END)"
 
 
 def bucket_knn_agreement(
@@ -254,10 +239,8 @@ def bucket_knn_agreement(
     id_col: str,
     label_col: str,
     vec_col: str,
-    k: int = 5,
-    bucket_col: str = "bucket",
 ) -> DataFrame:
-    """Per-anchor k-NN label agreement WITHIN each LSH bucket, as one
+    """Per-anchor 5-NN label agreement WITHIN each LSH ``bucket``, as one
     ``applyInPandas`` over bucket groups: each bucket's gram matrix is
     accumulated DIM-SEQUENTIALLY (``dots += c_i * c_j`` per dim — the
     exact left fold of ``F.aggregate``/``zip_with``, vectorized across
@@ -315,7 +298,7 @@ def bucket_knn_agreement(
             for bi, i in enumerate(range(lo, hi)):
                 # (desc cos, asc id), self excluded — the window twin
                 order = np.lexsort((ids, -cos[bi]))
-                top = [j for j in order if ids[j] != ids[i]][:k]
+                top = [j for j in order if ids[j] != ids[i]][:5]
                 n_nb[i] = len(top)
                 n_same[i] = int(np.sum(labels[top] == labels[i]))
         return pd.DataFrame(
@@ -327,7 +310,7 @@ def bucket_knn_agreement(
             }
         )
 
-    return bucketed.groupBy(bucket_col).applyInPandas(_per_bucket, out_schema)
+    return bucketed.groupBy("bucket").applyInPandas(_per_bucket, out_schema)
 
 
 def bucket_hard_negatives(
@@ -335,11 +318,9 @@ def bucket_hard_negatives(
     id_col: str,
     label_col: str,
     vec_col: str,
-    k: int = 3,
-    bucket_col: str = "bucket",
 ) -> DataFrame:
-    """Per-anchor top-k nearest DIFFERENT-label neighbors within each
-    LSH bucket — contrastive-training hard negatives, emitted directly
+    """Per-anchor top-3 nearest DIFFERENT-label neighbors within each
+    LSH ``bucket`` — contrastive-training hard negatives, emitted directly
     as (anchor, negative, rank) rows. Same gram-matrix kernel as
     ``bucket_knn_agreement``: the bucket's cosine matrix accumulates
     DIM-SEQUENTIALLY (the exact F.aggregate fold order, so every cosine
@@ -384,7 +365,7 @@ def bucket_hard_negatives(
             for bi, i in enumerate(range(lo, hi)):
                 # (desc cos, asc id) — the window twin's order
                 order = np.lexsort((ids, -cos[bi]))
-                negs = [j for j in order if labels[j] != labels[i]][:k]
+                negs = [j for j in order if labels[j] != labels[i]][:3]
                 for r, j in enumerate(negs, start=1):
                     rows.append(
                         (int(ids[i]), int(labels[i]), int(ids[j]),
@@ -392,7 +373,7 @@ def bucket_hard_negatives(
                     )
         return pd.DataFrame(rows, columns=cols)
 
-    return bucketed.groupBy(bucket_col).applyInPandas(_per_bucket, out_schema)
+    return bucketed.groupBy("bucket").applyInPandas(_per_bucket, out_schema)
 
 
 # ---------------------------------------------------------------------------
@@ -515,8 +496,6 @@ def minhash_incremental(
     corpus_df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_k: int = MINHASH_SHINGLE_K,
-    jaccard_threshold: float = MINHASH_THRESHOLD,
 ) -> DataFrame:
     """Incremental corpus dedup: score each NEW document against the
     EXISTING corpus only (bipartite banding join — no new×new or old×old
@@ -525,10 +504,10 @@ def minhash_incremental(
     corpus), each incoming shard joins against them by band bucket.
 
     Returns one row per new document: (id, n_matches, dup_of = smallest
-    matching corpus id or NULL, keep = no match >= threshold). The same
-    banding guarantees as ``minhash_near_dups``."""
-    nb = _minhash_banded(new_df, id_col, text_col, shingle_k)
-    cb = _minhash_banded(corpus_df, id_col, text_col, shingle_k)
+    matching corpus id or NULL, keep = no match >= MINHASH_THRESHOLD). The
+    same banding guarantees as ``minhash_near_dups``."""
+    nb = _minhash_banded(new_df, id_col, text_col)
+    cb = _minhash_banded(corpus_df, id_col, text_col)
     cand = (
         nb.alias("n")
         .join(
@@ -546,7 +525,7 @@ def minhash_incremental(
     )
     matches = (
         cand.withColumn("est_jaccard", _est_jaccard("sig_n", "sig_c"))
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
+        .filter(F.col("est_jaccard") >= MINHASH_THRESHOLD)
         .groupBy("new_id")
         .agg(
             F.count(F.lit(1)).alias("n_matches"),
@@ -662,10 +641,8 @@ def simhash64_from_hashes(hashed_col) -> "F.Column":
     return _simhash(hashed_col)
 
 
-def with_simhash(
-    df: DataFrame, text_col: str, out: str = "simhash", k: int = 2
-) -> DataFrame:
-    """Attach a 64-bit SimHash fingerprint over word k-shingles.
+def with_simhash(df: DataFrame, text_col: str, out: str = "simhash") -> DataFrame:
+    """Attach a 64-bit SimHash fingerprint over word 2-shingles.
 
     Two projection stages (gram hashes once, then the vectorized bit vote)
     so the expensive array work runs once per row. The gram hash is the
@@ -674,7 +651,7 @@ def with_simhash(
     still a valid SimHash)."""
     from kp_data_pipelines_spark.operators.textops import with_poly_shingles
 
-    hashed = with_poly_shingles(df, text_col, "__sh_hashes", k, bits64=True)
+    hashed = with_poly_shingles(df, text_col, "__sh_hashes", 2, bits64=True)
     return hashed.withColumn(out, simhash64_from_hashes(F.col("__sh_hashes"))).drop(
         "__sh_hashes"
     )
@@ -830,20 +807,14 @@ def hamming_pairs(
     )
 
 
-def simhash_hamming_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_hamming: int = 3,
-    k: int = 2,
-) -> DataFrame:
-    """SimHash near-dup pairs within a Hamming radius: fingerprint the
+def simhash_hamming_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """SimHash near-dup pairs within Hamming radius 3: fingerprint the
     text, then the generic pigeonhole chunk-banding join
     (``hamming_pairs``)."""
     fp = with_simhash(
-        ensure_parallelism(df.select(id_col, text_col)), text_col, "fp", k
+        ensure_parallelism(df.select(id_col, text_col)), text_col, "fp"
     ).select(id_col, "fp")
-    return hamming_pairs(fp, id_col, "fp", max_hamming)
+    return hamming_pairs(fp, id_col, "fp", 3)
 
 
 def _winnow_kernel(k: int, w: int):
@@ -906,27 +877,23 @@ def winnow_fingerprint_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 20,
-    w: int = 8,
-    max_doc_freq: int = 20,
-    min_shared: int = 3,
 ) -> DataFrame:
-    """Substring-level near-dup pairs via winnowing fingerprints: docs
-    sharing >= ``min_shared`` selected k-gram hashes. Fingerprints seen
-    in more than ``max_doc_freq`` documents are dropped before pairing
-    (the standard 'common code' filter) — that bound caps per-fingerprint
-    join fan-out at max_doc_freq^2, so the equi-join on the hash value
-    stays skew-safe at corpus scale. Text is whitespace-normalized and
-    lowercased first. Returns (id_a, id_b, n_shared)."""
+    """Substring-level near-dup pairs via winnowing fingerprints (20-gram
+    hashes, window 8): docs sharing >= 3 selected k-gram hashes.
+    Fingerprints seen in more than 20 documents are dropped before
+    pairing (the standard 'common code' filter) — that bound caps
+    per-fingerprint join fan-out at 20^2, so the equi-join on the hash
+    value stays skew-safe at corpus scale. Text is whitespace-normalized
+    and lowercased first. Returns (id_a, id_b, n_shared)."""
     norm = F.lower(F.trim(F.regexp_replace(F.col(text_col), r"\s+", " ")))
     fps = (
         ensure_parallelism(df.select(id_col, norm.alias("__t")))
-        .select(id_col, F.explode(_winnow_kernel(k, w)(F.col("__t"))).alias("fp"))
+        .select(id_col, F.explode(_winnow_kernel(20, 8)(F.col("__t"))).alias("fp"))
     )
     rare = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__df"))
-        .filter(F.col("__df") <= max_doc_freq)
+        .filter(F.col("__df") <= 20)
         .select("fp")
     )
     kept = fps.join(rare, "fp")
@@ -942,7 +909,7 @@ def winnow_fingerprint_pairs(
             F.col(f"b.{id_col}").alias("id_b"),
         )
         .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 3)
     )
 
 
@@ -982,41 +949,49 @@ def _pq_kernel(seed_vecs, n_subspaces: int, sub_dim: int):
     return _pq
 
 
-def product_quantize(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    n_subspaces: int = 8,
-    n_codes: int = 16,
-    impl: str = "kernel",
-) -> DataFrame:
-    """Product quantization (the FAISS-style ANN compressor): split each
-    vector into ``n_subspaces`` contiguous sub-vectors, snap each to its
-    nearest codebook entry (L2), emit the code word and the exact
-    reconstruction error. Codebooks here are the deterministic seed (the
-    first ``n_codes`` vectors' sub-vectors, by id) — at scale they'd pass
-    through kmeans_refine per subspace; the assignment/storage shape is
-    identical either way. Memory win: dim doubles -> n_subspaces bytes
-    per vector. All distance folds are sequential (oracle-exact); the
-    per-row error is a fixed-order sum over subspaces, not a cross-row
-    aggregate. Returns (id, codes 'c0-c1-...', recon_err)."""
+def _pq_seed(df: DataFrame, vec_col: str, id_col: str):
+    """The deterministic PQ codebook seed: the sub-vector width for 8
+    subspaces and the first 16 vectors by id; None when no vector is
+    set."""
     first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
     if first is None:
+        return None
+    return len(first[0]) // 8, df.orderBy(id_col).limit(16).select(vec_col).collect()
+
+
+def product_quantize(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """Product quantization (the FAISS-style ANN compressor): split each
+    vector into 8 contiguous sub-vectors, snap each to its nearest
+    codebook entry (L2), emit the code word and the exact reconstruction
+    error. Codebooks here are the deterministic seed (the first 16
+    vectors' sub-vectors, by id) — at scale they'd pass through
+    kmeans_refine per subspace; the assignment/storage shape is identical
+    either way. Memory win: dim doubles -> 8 bytes per vector. All
+    distance folds are sequential (oracle-exact); the per-row error is a
+    fixed-order sum over subspaces, not a cross-row aggregate. Runs the
+    Arrow kernel. Returns (id, codes 'c0-c1-...', recon_err)."""
+    seed = _pq_seed(df, vec_col, id_col)
+    if seed is None:
         return df.sparkSession.createDataFrame(
             [], f"{id_col} long, codes string, recon_err double"
         )
-    dim = len(first[0])
-    sub_dim = dim // n_subspaces
-    seed_rows = df.orderBy(id_col).limit(n_codes).select(vec_col).collect()
-    if impl == "kernel":
-        q = _pq_kernel(
-            [[float(x) for x in r[0]] for r in seed_rows], n_subspaces, sub_dim
-        )(F.col(vec_col)).alias("__q")
-        return df.select(F.col(id_col), q).select(
-            id_col,
-            F.col("__q.codes").alias("codes"),
-            F.col("__q.recon_err").alias("recon_err"),
-        )
+    sub_dim, seed_rows = seed
+    q = _pq_kernel(
+        [[float(x) for x in r[0]] for r in seed_rows], 8, sub_dim
+    )(F.col(vec_col)).alias("__q")
+    return df.select(F.col(id_col), q).select(
+        id_col,
+        F.col("__q.codes").alias("codes"),
+        F.col("__q.recon_err").alias("recon_err"),
+    )
+
+
+def product_quantize_expr(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """The interpreted JVM expression twin of ``product_quantize``: the
+    same codes and errors from F.aggregate distance folds, the reference
+    the kernel is pinned against."""
+    n_subspaces = 8
+    sub_dim, seed_rows = _pq_seed(df, vec_col, id_col)
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     code_cols, err_cols = [], []
     for s in range(n_subspaces):
@@ -1060,13 +1035,10 @@ def product_quantize(
     )
 
 
-def power_iteration_top_pc(
-    df: DataFrame,
-    vec_col: str,
-    n_iter: int = 3,
-) -> list[float]:
+def power_iteration_top_pc(df: DataFrame, vec_col: str) -> list[float]:
     """Top principal direction of the (uncentered) embedding Gram matrix
-    via distributed power iteration — PCA's workhorse at corpus scale.
+    via three rounds of distributed power iteration — PCA's workhorse at
+    corpus scale.
 
     Each round applies y = sum_rows v * (v . x) WITHOUT materializing the
     dim x dim covariance: one scan computes the per-row scalar v . x
@@ -1089,7 +1061,7 @@ def power_iteration_top_pc(
         return []
     dim = len(first[0])
     x = [1.0 / 8.0] * dim
-    for _ in range(n_iter):
+    for _ in range(3):
         xlit = F.array(*[F.lit(v) for v in x])
         v = F.transform(F.col(vec_col), lambda e: e.cast("double"))
         s = _dot(v, xlit)
@@ -1117,22 +1089,13 @@ def power_iteration_top_pc(
     return x
 
 
-def bloom_contamination(
-    docs: DataFrame,
-    bench: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_k: int = 3,
-    n_bits: int = 4096,
-    n_hashes: int = 3,
-    seed: int = 29,
-) -> DataFrame:
-    """Bloom-style benchmark decontamination: score each probe document by
-    the fraction of its k-gram shingles whose ``n_hashes`` Bloom buckets
-    ALL appear in the benchmark set's bucket table.
+def bloom_contamination(docs: DataFrame, bench: DataFrame) -> DataFrame:
+    """Bloom-style benchmark decontamination: score each probe document
+    (``doc_id``, ``text``) by the fraction of its 3-gram shingles whose 3
+    Bloom buckets (of 4096) ALL appear in the benchmark set's bucket table.
 
     Scale shape: the 'filter' is materialized as a distinct bucket TABLE
-    (at most ``n_bits`` rows — broadcastable at any corpus size), so the
+    (at most 4096 rows — broadcastable at any corpus size), so the
     probe is a keyed broadcast join per hash function, never a driver-side
     bitset. False positives behave exactly like a real Bloom filter
     (bucket collisions), with rate ~ (1 - e^{-kn/m})^k; exact-overlap
@@ -1142,23 +1105,18 @@ def bloom_contamination(
     (id, n_grams, n_hits, contamination)."""
     from kp_data_pipelines_spark.operators.textops import with_poly_shingles
 
-    params = _hash_params(n_hashes, seed)
+    n_hashes = 3
+    params = _hash_params(n_hashes, 29)
 
     def buckets(gram_col):
         return F.array(
-            *[
-                ((F.lit(a) * gram_col + F.lit(b)) % _MERSENNE) % n_bits
-                for a, b in params
-            ]
+            *[((F.lit(a) * gram_col + F.lit(b)) % _MERSENNE) % 4096 for a, b in params]
         )
 
     def grams_of(df):
         return with_poly_shingles(
-            ensure_parallelism(df.select(id_col, text_col)),
-            text_col,
-            "__g",
-            shingle_k,
-        ).select(id_col, F.explode(F.array_distinct("__g")).alias("gram"))
+            ensure_parallelism(df.select("doc_id", "text")), "text", "__g", 3
+        ).select("doc_id", F.explode(F.array_distinct("__g")).alias("gram"))
 
     bench_buckets = (
         grams_of(bench)
@@ -1166,25 +1124,25 @@ def bloom_contamination(
         .distinct()
     )
     probe = grams_of(docs).select(
-        id_col,
+        "doc_id",
         "gram",
         F.posexplode(buckets(F.col("gram"))).alias("hash_idx", "bucket"),
     )
     matched = (
         probe.join(F.broadcast(bench_buckets), "bucket")
-        .groupBy(id_col, "gram")
+        .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).alias("n_set"))
         .filter(F.col("n_set") == n_hashes)
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_hits"))
     )
-    totals = grams_of(docs).groupBy(id_col).agg(
+    totals = grams_of(docs).groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams")
     )
     return (
-        totals.join(matched, id_col, "left")
+        totals.join(matched, "doc_id", "left")
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             F.coalesce("n_hits", F.lit(0)).alias("n_hits"),
             (
@@ -1195,17 +1153,13 @@ def bloom_contamination(
     )
 
 
-def ivf_centroids(
-    df: DataFrame, vec_col: str, n_centroids: int = 16, id_col: str | None = None
-):
+def ivf_centroids(df: DataFrame, vec_col: str, n_centroids: int = 16):
     """Deterministic IVF 'training': take the first ``n_centroids`` vectors
-    ordered by ``id_col`` (default: the DataFrame's first column) as
-    centroids. Pass the result through ``kmeans_refine`` for true Lloyd
-    rounds when cell balance matters; the assignment and probe machinery
-    below is identical either way. Returns a driver-side list of
-    (centroid_id, vector)."""
-    order_col = id_col if id_col is not None else df.columns[0]
-    rows = df.orderBy(order_col).limit(n_centroids).select(vec_col).collect()
+    ordered by ``vec_id`` as centroids. Pass the result through
+    ``kmeans_refine`` for true Lloyd rounds when cell balance matters; the
+    assignment and probe machinery below is identical either way. Returns
+    a driver-side list of (centroid_id, vector)."""
+    rows = df.orderBy("vec_id").limit(n_centroids).select(vec_col).collect()
     return [(i, [float(x) for x in r[0]]) for i, r in enumerate(rows)]
 
 
@@ -1393,19 +1347,19 @@ def ivf_topk(
     vec_col: str,
     id_col: str,
     query: list[float],
-    k: int = 10,
     n_centroids: int = 16,
     nprobe: int = 4,
     refine_iters: int = 0,
 ) -> DataFrame:
-    """IVF-Flat ANN: assign every vector to its nearest centroid (one scan),
-    probe the query's ``nprobe`` nearest centroid cells, exact cosine top-k
-    within the probed cells. At scale the assignment is written once as a
-    partition column, so a query prunes to nprobe/n_centroids of the data.
+    """IVF-Flat ANN over ``vec_id``-keyed vectors: assign every vector to
+    its nearest centroid (one scan), probe the query's ``nprobe`` nearest
+    centroid cells, exact cosine top-10 within the probed cells. At scale
+    the assignment is written once as a partition column, so a query
+    prunes to nprobe/n_centroids of the data.
     ``refine_iters`` > 0 runs that many distributed Lloyd rounds
     (``kmeans_refine``) over the deterministic seed before assigning —
     better-balanced cells at the cost of refine_iters extra scans."""
-    centroids = ivf_centroids(df, vec_col, n_centroids, id_col=id_col)
+    centroids = ivf_centroids(df, vec_col, n_centroids)
     if refine_iters:
         centroids = kmeans_refine(df, vec_col, centroids, n_iter=refine_iters)
     assigned = df.withColumn(
@@ -1422,13 +1376,12 @@ def ivf_topk(
         )[:nprobe]
     ]
     candidates = assigned.filter(F.col("__cell").isin(probe_cells)).drop("__cell")
-    return cosine_topk(candidates, vec_col, id_col, query, k)
+    return cosine_topk(candidates, vec_col, id_col, query)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, threshold: float = 0.5
-) -> DataFrame:
-    """EXACT n-gram Jaccard near-dup pairs via prefix filtering (PPJoin-style).
+def ngram_jaccard_pairs(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """EXACT 3-gram Jaccard near-dup pairs (Jaccard >= t = 0.35) via prefix
+    filtering (PPJoin-style).
 
     Scale shape (no cross join, no nested-loop):
     1. grams -> xxhash64 -> array_sort = a canonical total order over the
@@ -1455,8 +1408,9 @@ def ngram_jaccard_pairs(
 
     from kp_data_pipelines_spark.operators.textops import with_hashed_shingles
 
+    threshold = 0.35
     g = with_hashed_shingles(
-        ensure_parallelism(df.select(id_col, text_col)), text_col, "__g", n
+        ensure_parallelism(df.select(id_col, text_col)), text_col, 3
     ).select(
         F.col(id_col),
         F.array_sort(F.array_distinct("__g")).alias("grams"),
@@ -1522,12 +1476,11 @@ def pq_refine_codebooks(
     n_subspaces: int = 8,
     n_codes: int = 16,
     n_iter: int = 2,
-    return_errors: bool = False,
-) -> list:
+) -> tuple[list, list[float]]:
     """Per-subspace Lloyd refinement of a PQ codebook — the TRAINING
     step ``product_quantize``'s docstring defers ("at scale they'd pass
     through kmeans_refine per subspace"; reference seam: the q155/q328
-    compression story). Returns the codebook TRAJECTORY
+    compression story). Returns ``(codebooks, errs)``: the codebook TRAJECTORY
     ``[cb_0, cb_1, …, cb_n_iter]`` (each ``n_codes`` full-dim vectors;
     sub-parts refined independently), cb_0 being the deterministic seed
     (first ``n_codes`` rows by ``id_col``).
@@ -1545,10 +1498,9 @@ def pq_refine_codebooks(
     cross-engine sum bound as ``kmeans_refine``: exact while no
     (subspace, code) cell exceeds ~2^53/1e6 assigned rows.
 
-    ``return_errors=True`` additionally returns the per-round total
-    quantized reconstruction error measured by each round's assignment
-    pass — i.e. ``errs[r]`` is the corpus error under ``cb_r`` (the
-    codebook the pass assigns against), as ``(codebooks, errs)``. The
+    and the per-round total quantized reconstruction error measured by
+    each round's assignment pass — i.e. ``errs[r]`` is the corpus error
+    under ``cb_r`` (the codebook the pass assigns against). The
     error total rides in the SAME aggregate job as the cell means via
     ``GROUPING SETS ((s, code, pos), ())`` — no extra kernel pass and
     no checkpoint (pinning the wide assignment frame was measured
@@ -1560,7 +1512,7 @@ def pq_refine_codebooks(
     the seed collect above would misbehave on such rows anyway."""
     first = df.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
     if first is None:
-        return ([], []) if return_errors else []
+        return [], []
     dim = len(first[0])
     sub_dim = dim // n_subspaces
     seed_rows = (
@@ -1615,46 +1567,39 @@ def pq_refine_codebooks(
             / F.count(F.lit(1)).cast("double")
             / F.lit(1000000.0)
         ).alias("m")
-        if return_errors:
-            # GROUPING SETS ((s, code, pos), ()) fuses the round's
-            # total reconstruction error into the SAME aggregate job as
-            # the cell means — one kernel pass, no extra job, and no
-            # checkpoint of the wide (vector, codes) frame (pinning it
-            # was measured SLOWER: materializing full vectors costs
-            # more than the saved pass). Each vector's __e repeats once
-            # per dimension in the exploded stream, so the grand total
-            # counts it only at pos == 0 — identical value set (and
-            # identical quantized-decimal sum) to a per-row pass.
-            rows = (
-                exploded.groupingSets(
-                    [["s", "code", "pos"], []], "s", "code", "pos"
-                )
-                .agg(
-                    mean_expr,
-                    (
-                        F.sum(
-                            F.when(
-                                F.col("pos") == 0,
-                                F.round(
-                                    F.col("__e") * F.lit(1000000.0)
-                                ).cast("decimal(38,0)"),
-                            )
-                        ).cast("double")
-                        / F.lit(1000000.0)
-                    ).alias("terr"),
-                    F.grouping_id().alias("gid"),
-                )
-                .collect()
+        # GROUPING SETS ((s, code, pos), ()) fuses the round's
+        # total reconstruction error into the SAME aggregate job as
+        # the cell means — one kernel pass, no extra job, and no
+        # checkpoint of the wide (vector, codes) frame (pinning it
+        # was measured SLOWER: materializing full vectors costs
+        # more than the saved pass). Each vector's __e repeats once
+        # per dimension in the exploded stream, so the grand total
+        # counts it only at pos == 0 — identical value set (and
+        # identical quantized-decimal sum) to a per-row pass.
+        rows = (
+            exploded.groupingSets(
+                [["s", "code", "pos"], []], "s", "code", "pos"
             )
-            means = [r for r in rows if not r["gid"]]
-            tot = next((r["terr"] for r in rows if r["gid"]), None)
-            errs.append(float(tot) if tot is not None else 0.0)
-        else:
-            means = (
-                exploded.groupBy("s", "code", "pos")
-                .agg(mean_expr)
-                .collect()
+            .agg(
+                mean_expr,
+                (
+                    F.sum(
+                        F.when(
+                            F.col("pos") == 0,
+                            F.round(
+                                F.col("__e") * F.lit(1000000.0)
+                            ).cast("decimal(38,0)"),
+                        )
+                    ).cast("double")
+                    / F.lit(1000000.0)
+                ).alias("terr"),
+                F.grouping_id().alias("gid"),
             )
+            .collect()
+        )
+        means = [r for r in rows if not r["gid"]]
+        tot = next((r["terr"] for r in rows if r["gid"]), None)
+        errs.append(float(tot) if tot is not None else 0.0)
         by_cell: dict = {}
         for r in means:
             by_cell[(int(r["code"]), int(r["pos"]))] = r["m"]
@@ -1666,4 +1611,4 @@ def pq_refine_codebooks(
             for cid, vec in enumerate(cb)
         ]
         out.append(cb)
-    return (out, errs) if return_errors else out
+    return out, errs

@@ -62,9 +62,9 @@ def ln_table(m: int) -> list[float]:
     return [math.log(v) for v in range(1, m + 1)]
 
 
-def pow2_table(bits: int = _HASH_BITS + 2) -> list[float]:
-    """Exact 2^-i doubles for the harmonic fold."""
-    return [2.0**-i for i in range(bits)]
+def pow2_table() -> list[float]:
+    """Exact 2^-i doubles for the harmonic fold, i < _HASH_BITS + 2."""
+    return [2.0**-i for i in range(_HASH_BITS + 2)]
 
 
 def hll_hash62(x1: Column, x2: Column | None = None, seed: int = 23) -> Column:

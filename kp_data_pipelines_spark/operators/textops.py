@@ -42,9 +42,9 @@ def whitespace_token_count(col: Column | str) -> Column:
     )
 
 
-def regex_token_count(col: Column | str, pattern: str = TOKEN_REGEX) -> Column:
-    """BPE-ish token count via regexp_count (JVM-side, vectorized)."""
-    return F.regexp_count(_c(col), F.lit(pattern))
+def regex_token_count(col: Column | str) -> Column:
+    """BPE-ish token count of TOKEN_REGEX via regexp_count (JVM-side, vectorized)."""
+    return F.regexp_count(_c(col), F.lit(TOKEN_REGEX))
 
 
 def distinct_word_count(col: Column | str) -> Column:
@@ -74,12 +74,12 @@ def stopword_hits(col: Column | str, words: Sequence[str]) -> Column:
     return out
 
 
-def lang_id(col: Column | str, markers: dict[str, Sequence[str]] | None = None) -> Column:
-    """Language-ID heuristic: argmax of stopword-marker hits; 'und' when no
-    marker hits at all. Deterministic tie-break = language-code order."""
-    markers = markers or LANG_MARKERS
+def lang_id(col: Column | str) -> Column:
+    """Language-ID heuristic: argmax of LANG_MARKERS stopword hits; 'und'
+    when no marker hits at all. Deterministic tie-break = language-code
+    order."""
     c = _c(col)
-    scores = {lang: stopword_hits(c, ws) for lang, ws in markers.items()}
+    scores = {lang: stopword_hits(c, ws) for lang, ws in LANG_MARKERS.items()}
     langs = sorted(scores)  # deterministic tie-break
     best = F.greatest(*[scores[lang] for lang in langs])
     expr = F.lit("und")
@@ -110,30 +110,24 @@ def doc_fingerprint(col: Column | str) -> Column:
     return F.sha2(F.lower(F.regexp_replace(F.trim(c), r"\s+", " ")), 256)
 
 
-def rolling_hash(col: Column | str, mod: int = 2147483647, base: int = 31) -> Column:
-    """Polynomial rolling hash over characters: fold ``acc*base + ord(c)``
-    mod a Mersenne prime. Oracle-reproducible (same fold in ANSI SQL via
+def rolling_hash(col: Column | str) -> Column:
+    """Polynomial rolling hash over characters: fold ``acc*31 + ord(c)``
+    mod the Mersenne prime 2^31-1. Oracle-reproducible (same fold in ANSI SQL via
     list_reduce) unlike xxhash64; the classic content-fingerprint for
     incremental / chunked dedup. Empty string hashes to 0."""
     chars = F.filter(F.split(_c(col), ""), lambda c: c != "")
     return F.aggregate(
         chars,
         F.lit(0).cast("long"),
-        lambda acc, c: (acc * base + F.ascii(c)) % mod,
+        lambda acc, c: (acc * 31 + F.ascii(c)) % 2147483647,
     )
 
 
-def chunk_documents(
-    df,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_size: int = 32,
-    overlap: int = 8,
-):
-    """Split each document into overlapping fixed-size token chunks — the
-    context-window preparation step of a pretraining pipeline (every chunk
-    carries ``overlap`` tokens of left context; the last chunk may be
-    short). Pure JVM array ops: split once, then posexplode over the
+def chunk_documents(df):
+    """Split each document (``doc_id``, ``text``) into overlapping 32-token
+    chunks — the context-window preparation step of a pretraining
+    pipeline (every chunk carries 8 tokens of left context; the last
+    chunk may be short). Pure JVM array ops: split once, then posexplode over the
     chunk-start sequence; no Python in the loop, so this runs inside
     whole-stage codegen over the corpus.
 
@@ -142,15 +136,10 @@ def chunk_documents(
     overlap, computed as ((n - size + stride - 1) div stride) + 1 in
     true integer division on both engines (Spark ``div`` / DuckDB
     ``//``) — exact by construction, no float involved.
-    Returns (id, chunk_id, chunk_tokens, chunk_text)."""
-    if overlap >= chunk_size:
-        raise ValueError(
-            f"overlap ({overlap}) must be < chunk_size ({chunk_size}): "
-            "stride would be <= 0 and chunking would never advance"
-        )
-    stride = chunk_size - overlap
-    toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    pre = df.select(F.col(id_col), toks.alias("__toks"))
+    Returns (doc_id, chunk_id, chunk_tokens, chunk_text)."""
+    chunk_size, stride = 32, 24
+    toks = F.split(F.trim(F.col("text")), r"\s+")
+    pre = df.select("doc_id", toks.alias("__toks"))
     n = F.size(F.col("__toks"))
     n_chunks = F.when(n <= chunk_size, F.lit(1).cast("long")).otherwise(
         F.expr(
@@ -158,20 +147,20 @@ def chunk_documents(
         ).cast("long")
         + 1
     )
-    step = pre.select(F.col(id_col), F.col("__toks"), n_chunks.alias("__nc"))
+    step = pre.select("doc_id", "__toks", n_chunks.alias("__nc"))
     chunk = F.slice(
         "__toks", F.col("chunk_id").cast("int") * stride + 1, chunk_size
     )
     return (
         step.select(
-            id_col,
+            "doc_id",
             "__toks",
             F.explode(F.sequence(F.lit(0).cast("long"), F.col("__nc") - 1)).alias(
                 "chunk_id"
             ),
         )
         .select(
-            id_col,
+            "doc_id",
             "chunk_id",
             F.size(chunk).alias("chunk_tokens"),
             F.array_join(chunk, " ").alias("chunk_text"),
@@ -205,7 +194,7 @@ def poly_token_hashes(col: Column | str) -> Column:
 
 def _poly_shingles_kernel(k: int, bits64: bool):
     """Arrow-batched numpy twin of the interpreted JVM folds in
-    ``with_poly_shingles(impl="jvm")``: the identical integer mod
+    ``with_poly_shingles_expr``: the identical integer mod
     arithmetic (token Horner base 31, gram Horner base 1000003 /
     998244353, all mod Mersenne-31), vectorized over the whole batch —
     ~4x the interpreted higher-order functions at 1M docs
@@ -296,7 +285,6 @@ def with_poly_shingles(
     out: str = "gram_hashes",
     k: int = 5,
     bits64: bool = False,
-    impl: str = "kernel",
 ):
     """Portable word-k-shingle hashes: ``with_hashed_shingles`` with the
     xxhash64 swapped for nested polynomial folds so a DuckDB oracle can
@@ -306,15 +294,18 @@ def with_poly_shingles(
     (base 998244353) fills the low bits — ``g1 * 2^31 + g2`` < 2^62 —
     for SimHash-style per-bit votes.
 
-    ``impl="kernel"`` (default) runs both fold levels as one vectorized
-    Arrow/numpy pass (~4x the interpreted JVM HOFs — tools/stress.py);
-    ``impl="jvm"`` is the pure-expression fold, bit-identical by test —
-    the no-Python reference and the shape the DuckDB twins mirror.
+    Both fold levels run as one vectorized Arrow/numpy pass (~4x the
+    interpreted JVM HOFs of ``with_poly_shingles_expr`` — tools/stress.py).
     MinHash and SimHash always hash grams here; ``with_hashed_shingles``
     is faster only on short documents (q41/q68, SCALE.md §11)."""
-    if impl == "kernel":
-        toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
-        return df.withColumn(out, _poly_shingles_kernel(k, bits64)(toks))
+    toks = F.split(F.trim(F.lower(F.col(text_col))), r"\s+")
+    return df.withColumn(out, _poly_shingles_kernel(k, bits64)(toks))
+
+
+def with_poly_shingles_expr(df, text_col: str, out: str, k: int, bits64: bool):
+    """The pure-expression twin of ``with_poly_shingles``: the same gram
+    hashes from interpreted JVM folds, the shape the DuckDB twins mirror
+    and the reference the kernel is pinned against."""
     step = df.withColumn("__tok_hashes", poly_token_hashes(text_col))
     idx = F.sequence(
         F.lit(1), F.greatest(F.size("__tok_hashes") - (k - 1), F.lit(1))
@@ -338,9 +329,9 @@ def with_poly_shingles(
     return step.withColumn(out, grams).drop("__tok_hashes")
 
 
-def with_hashed_shingles(df, text_col: str, out: str = "gram_hashes", k: int = 5):
-    """Attach word k-shingle HASHES (array<long>) without materializing the
-    shingle strings: hash each token once, then each gram hash is
+def with_hashed_shingles(df, text_col: str, k: int):
+    """Attach ``__g``, the word k-shingle HASHES (array<long>), without
+    materializing the shingle strings: hash each token once, then each gram hash is
     ``xxhash64`` of a k-slice of the token-hash array — pure long-array
     work, ~10x cheaper than slice+array_join+hash per gram.
 
@@ -357,7 +348,7 @@ def with_hashed_shingles(df, text_col: str, out: str = "gram_hashes", k: int = 5
         F.lit(1), F.greatest(F.size("__tok_hashes") - (k - 1), F.lit(1))
     )
     grams = F.transform(idx, lambda i: F.xxhash64(F.slice("__tok_hashes", i, k)))
-    return step.withColumn(out, grams).drop("__tok_hashes")
+    return step.withColumn("__g", grams).drop("__tok_hashes")
 
 
 def char_fold_hashes(col: Column | str, bases: "tuple[int, ...]" = (31, 1000003)):
@@ -497,15 +488,13 @@ def _cdc_kernel(w: int, mask: int):
     return _chunks
 
 
-def with_cdc_chunks(
-    df, text_col: str, out: str = "chunk", w: int = 16, mask: int = 64
-):
-    """Explode each document into content-defined chunks (packed
-    ``fp * 2^21 + len`` BIGINTs, see ``_cdc_kernel``). Text is
-    whitespace-normalized + lowercased first (the winnowing convention).
-    Rows with NULL text produce no chunks."""
+def with_cdc_chunks(df, text_col: str):
+    """Explode each document into ``packed`` content-defined chunks
+    (``fp * 2^21 + len`` BIGINTs, see ``_cdc_kernel``; window 16, mask 64).
+    Text is whitespace-normalized + lowercased first (the winnowing
+    convention). Rows with NULL text produce no chunks."""
     return df.withColumn(
-        out, F.explode(_cdc_kernel(w, mask)(normalize_ws(text_col)))
+        "packed", F.explode(_cdc_kernel(16, 64)(normalize_ws(text_col)))
     )
 
 

@@ -17,6 +17,7 @@ pipelines survive a 1000-executor / 100 TB deployment:
 from __future__ import annotations
 
 import os
+import time
 
 from pyspark.sql import SparkSession
 
@@ -106,3 +107,24 @@ def release_pinned_rdds(spark: SparkSession, blocking: bool = True) -> int:
         jrdd.unpersist(blocking)
         n += 1
     return n
+
+
+def time_noop_run(spark: SparkSession, query, sf_dir: str) -> float:
+    """Run one catalog query to the ``noop`` sink (full execution, no
+    result transfer) and return its wall seconds. The query's pinned RDDs
+    are released, blocking, after the clock stops: an async release
+    overlaps the next timed region (+7% over a bench run, SCALE.md §15).
+    Every timed loop (bench.py and the tools) runs queries through here."""
+    t0 = time.perf_counter()
+    query(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    seconds = time.perf_counter() - t0
+    release_pinned_rdds(spark)
+    return seconds
+
+
+def warm_up(spark: SparkSession, sf_dir: str) -> None:
+    """Run the catalog's first query once, untimed, so later timings
+    measure plans rather than JVM start-up, file listing and codegen."""
+    from kp_data_pipelines_spark.catalog import QUERIES
+
+    time_noop_run(spark, next(iter(QUERIES.values())), sf_dir)

@@ -18,11 +18,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-_NANOS_COLS_CACHE: dict[tuple, list[str]] = {}
+# Per-table metadata, keyed by (path, freshness token): the parquet
+# TIMESTAMP(NANOS) columns ("nanos") and, once a read has inferred it,
+# the Spark schema ("schema").
+_TABLE_META: dict[tuple, dict] = {}
 
 
 def _freshness_token(path: str):
-    """Cheap cache-invalidation token for the per-path metadata caches:
+    """Cheap cache-invalidation token for the per-path metadata cache:
     (mtime, size) of the local file/dir. A table regenerated in-place
     within one process gets a new token, so the stale-schema hazard the
     round-11 advisor flagged can't silently apply an old explicit
@@ -37,27 +40,24 @@ def _freshness_token(path: str):
         return None
 
 
-def _nanos_timestamp_cols(path: str, token=None) -> list[str]:
-    """Parquet TIMESTAMP(NANOS) columns (footer-only metadata read).
+def _nanos_timestamp_cols(path: str, token) -> list[str]:
+    """Parquet TIMESTAMP(NANOS) columns (footer-only metadata read), kept
+    in the table's ``_TABLE_META`` entry, which this first read creates.
 
     Spark's parquet reader rejects nano-precision timestamps; we read them
     as longs (legacy conf) and rebuild TimestampType at micro precision —
     a distributed per-row expression, never a driver collect."""
-    key = (path, token if token is not None else _freshness_token(path))
-    if key not in _NANOS_COLS_CACHE:
+    key = (path, token)
+    if key not in _TABLE_META:
         try:
             import pyarrow.parquet as pq
 
             schema = pq.read_schema(path)
-            _NANOS_COLS_CACHE[key] = [
-                f.name for f in schema if str(f.type) == "timestamp[ns]"
-            ]
+            cols = [f.name for f in schema if str(f.type) == "timestamp[ns]"]
         except Exception:
-            _NANOS_COLS_CACHE[key] = []
-    return _NANOS_COLS_CACHE[key]
-
-
-_TABLE_SCHEMA_CACHE: dict[tuple, StructType] = {}
+            cols = []
+        _TABLE_META[key] = {"nanos": cols, "schema": None}
+    return _TABLE_META[key]["nanos"]
 
 
 def _read_table(
@@ -68,7 +68,7 @@ def _read_table(
     from pyspark.sql import functions as F
 
     path = f"{sf_dir}/{name}.parquet"
-    # One freshness token per call keys BOTH metadata caches: a table
+    # One freshness token per call keys the metadata cache: a table
     # regenerated at the same path (new mtime/size) re-infers instead of
     # applying a stale schema (round-11 advisor note).
     token = _freshness_token(path)
@@ -81,7 +81,7 @@ def _read_table(
     ns_cols = _nanos_timestamp_cols(path, token)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Schema METADATA cache (same class as _NANOS_COLS_CACHE above): the
+    # Schema METADATA cache (the same _TABLE_META entry): the
     # first read of a path pays Spark's footer schema inference (one Spark
     # job); repeats pass the identical inferred schema explicitly, which
     # skips the inference pass (~100 ms/call on the driver — a fixed
@@ -90,11 +90,11 @@ def _read_table(
     # the cache key is (path, freshness token), and the nanos conf above
     # is set per-path BEFORE the first read so the cached schema always
     # matches what inference would produce.
-    key = (path, token)
-    schema = _TABLE_SCHEMA_CACHE.get(key)
+    meta = _TABLE_META[path, token]
+    schema = meta["schema"]
     if stream:
         if schema is None:
-            schema = _TABLE_SCHEMA_CACHE[key] = spark.read.parquet(path).schema
+            schema = meta["schema"] = spark.read.parquet(path).schema
         # the streaming file source wants a directory: watch sf_dir with
         # a glob filter selecting just this table
         df = (
@@ -104,7 +104,7 @@ def _read_table(
         )
     elif schema is None:
         df = spark.read.parquet(path)
-        _TABLE_SCHEMA_CACHE[key] = df.schema
+        meta["schema"] = df.schema
     else:
         df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:

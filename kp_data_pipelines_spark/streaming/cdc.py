@@ -24,8 +24,8 @@ the q251 fingerprint-ledger pattern at CHUNK granularity. Per trigger:
 The store, its replay-safe layout, the order guard and the
 pin-then-write are ``state_io.growing_store_step`` (layout and
 contracts in its module docstring). At scale the store is one 8-byte
-BIGINT per distinct chunk — ~1/64 of the normalized corpus mass at the
-default mask. Every per-trigger stage is a keyed agg or keyed
+BIGINT per distinct chunk — ~1/64 of the normalized corpus mass at
+mask 64. Every per-trigger stage is a keyed agg or keyed
 equi-join on the packed identity; nothing driver-side.
 
 UNITS: ``new_chars``/``dup_chars`` count whitespace-normalized
@@ -48,8 +48,9 @@ CDC_INGEST_PARTIAL_SCHEMA = (
 )
 
 
-def _chunk_rows(batch: DataFrame, w: int, mask: int) -> DataFrame:
-    """(doc_id, source, pos, packed, ln) chunk instances for a batch —
+def _chunk_rows(batch: DataFrame) -> DataFrame:
+    """(doc_id, source, pos, packed, ln) chunk instances for a batch
+    (window 16, mask 64 — ``textops.with_cdc_chunks``'s cut) —
     posexplode keeps the within-document chunk ordinal that the
     first-occurrence tie-break needs."""
     from kp_data_pipelines_spark.operators.similarity import (
@@ -67,7 +68,7 @@ def _chunk_rows(batch: DataFrame, w: int, mask: int) -> DataFrame:
         .select(
             "doc_id",
             "source",
-            F.posexplode(_cdc_kernel(w, mask)(F.col("t"))).alias(
+            F.posexplode(_cdc_kernel(16, 64)(F.col("t"))).alias(
                 "pos", "packed"
             ),
         )
@@ -78,12 +79,12 @@ def _chunk_rows(batch: DataFrame, w: int, mask: int) -> DataFrame:
 
 
 def _cdc_ingest_partial(
-    batch: DataFrame, seen: DataFrame, w: int, mask: int
+    batch: DataFrame, seen: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """One trigger: dedup the batch's chunk instances against the
     pre-batch store view ``seen`` + within-batch keeper; returns the
     mergeable per-source counters and the batch's new identities."""
-    rows = _chunk_rows(batch, w, mask).localCheckpoint(
+    rows = _chunk_rows(batch).localCheckpoint(
         eager=True
     )  # two consumers: partial + store write
     # checkpointed: the keeper aggregate feeds BOTH the partial and the
@@ -156,8 +157,6 @@ def finalize_cdc_ledger(partials: DataFrame) -> DataFrame:
 def cdc_ingest_stream(
     stream_df: DataFrame,
     state_dir: str,
-    w: int = 16,
-    mask: int = 64,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run the growing-store CDC ingest over the current backlog
@@ -179,7 +178,7 @@ def cdc_ingest_stream(
         "packed long",
         checkpoint_dir,
         "cdc_ingest_stream",
-        lambda batch, seen: _cdc_ingest_partial(batch, seen, w, mask),
+        _cdc_ingest_partial,
     )
     partials = run_available_now_foreach_batch(
         stream_df,

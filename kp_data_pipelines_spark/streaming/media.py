@@ -19,11 +19,10 @@ repeats). Per trigger:
    (store hit or non-keeper);
 4. near-store audit for each admitted fingerprint: distinct EARLIER
    fingerprints (store members + admitted fingerprints with a smaller
-   first media_id in this batch) within Hamming distance
-   ``max_hamming`` — candidates via the same pigeonhole block keys as
-   ``hamming_pairs`` (``similarity.hamming_block_keys``), probed
-   batch-vs-store as a plain equi-join, verified with one
-   bit_count(xor);
+   first media_id in this batch) within Hamming distance 4 — candidates
+   via the same pigeonhole block keys as ``hamming_pairs``
+   (``similarity.hamming_block_keys``), probed batch-vs-store as a plain
+   equi-join, verified with one bit_count(xor);
 5. mergeable per-source counters are the trigger's partial; the
    batch's admitted fingerprints extend the store.
 
@@ -56,7 +55,7 @@ MEDIA_INGEST_PARTIAL_SCHEMA = (
 
 
 def _media_ingest_partial(
-    batch: DataFrame, seen: DataFrame, max_hamming: int, agree_blocks: int
+    batch: DataFrame, seen: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """One trigger: admit the batch's new fingerprints against the
     pre-batch store view ``seen``; returns the mergeable per-source
@@ -70,6 +69,7 @@ def _media_ingest_partial(
         hamming_pairs,
     )
 
+    max_hamming, agree_blocks = 4, 2
     media = ensure_parallelism(
         batch.select(
             F.col("doc_id").alias("media_id"),
@@ -78,7 +78,7 @@ def _media_ingest_partial(
         )
     )
     mfp = (
-        with_media_dhash(media, "content", "phash")
+        with_media_dhash(media, "content")
         .select("media_id", "source", "phash")
         .localCheckpoint(eager=True)  # consumers: keeper, tagging, src map
     )
@@ -192,8 +192,6 @@ def finalize_media_ledger(partials: DataFrame) -> DataFrame:
 def media_ingest_stream(
     stream_df: DataFrame,
     state_dir: str,
-    max_hamming: int = 4,
-    agree_blocks: int = 2,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run the growing-store fingerprint ingest over the current backlog
@@ -212,9 +210,7 @@ def media_ingest_stream(
         "phash long",
         checkpoint_dir,
         "media_ingest_stream",
-        lambda batch, seen: _media_ingest_partial(
-            batch, seen, max_hamming, agree_blocks
-        ),
+        _media_ingest_partial,
     )
     partials = run_available_now_foreach_batch(
         stream_df,

@@ -38,7 +38,7 @@ LEDGER_PARTIAL_SCHEMA = (
 )
 
 
-def doc_flags(docs: DataFrame, seed: int = 67) -> DataFrame:
+def doc_flags(docs: DataFrame) -> DataFrame:
     """Per-doc stateless stages of the q250 build, batch-shaped so they
     run unchanged inside a ``foreachBatch`` trigger: deterministic LCG
     split (q237), token/bigram Gopher repetition gate (q235), sha256
@@ -49,7 +49,7 @@ def doc_flags(docs: DataFrame, seed: int = 67) -> DataFrame:
         _hash_params,
     )
 
-    (a, b) = _hash_params(1, seed)[0]
+    (a, b) = _hash_params(1, 67)[0]
     bucket = (
         (F.lit(a) * F.pmod(F.col("doc_id"), F.lit(_MERSENNE)) + F.lit(b))
         % _MERSENNE
@@ -158,11 +158,12 @@ def _ledger_partial(
     return partial, reps.join(seen, "f", "left_anti")
 
 
-def finalize_ledger(partials: DataFrame, budget: int = 4096) -> DataFrame:
+def finalize_ledger(partials: DataFrame) -> DataFrame:
     """Merge per-batch partials into the q250 ledger: sum the mergeable
-    counters, then derive bins/pad from merged totals (ceil-division is
-    not mergeable, so it happens exactly once, here — same arithmetic as
-    q250's final aggregate)."""
+    counters, then derive 4096-token bins/pad from merged totals
+    (ceil-division is not mergeable, so it happens exactly once, here —
+    same arithmetic as q250's final aggregate)."""
+    budget = 4096
     merged = partials.groupBy("lang", "split").agg(
         F.sum("n_candidates").cast("bigint").alias("n_candidates"),
         F.sum("n_failed_quality").cast("bigint").alias("n_failed_quality"),
@@ -189,8 +190,6 @@ def finalize_ledger(partials: DataFrame, budget: int = 4096) -> DataFrame:
 def training_build_stream(
     stream_df: DataFrame,
     state_dir: str,
-    budget: int = 4096,
-    seed: int = 67,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Run the full streaming training-data build over the current
@@ -213,7 +212,7 @@ def training_build_stream(
         "f string",
         checkpoint_dir,
         "training_build_stream",
-        lambda batch, seen: _ledger_partial(doc_flags(batch, seed), seen),
+        lambda batch, seen: _ledger_partial(doc_flags(batch), seen),
     )
     partials = run_available_now_foreach_batch(
         stream_df,
@@ -221,4 +220,4 @@ def training_build_stream(
         LEDGER_PARTIAL_SCHEMA,
         checkpoint_dir=checkpoint_dir,
     )
-    return finalize_ledger(partials, budget)
+    return finalize_ledger(partials)

@@ -102,16 +102,6 @@ def test_sf01_exercises_adaptive_region():
     assert adaptive_n_planes(n) > GRAM_MIN_PLANES
 
 
-def test_sql_ladder_degenerate_bounds():
-    """min_planes == max_planes emits the constant, not a zero-WHEN
-    CASE (which DuckDB rejects) — mirroring adaptive_n_planes' fixed
-    return at the same bounds."""
-    con = duckdb.connect()
-    expr = adaptive_n_planes_case_sql("n", min_planes=24, max_planes=24)
-    assert con.execute(f"SELECT {expr} FROM (SELECT 5 AS n)").fetchone()[0] == 24
-    assert adaptive_n_planes(5, min_planes=24, max_planes=24) == 24
-
-
 def test_lsh_plane_dim_read_from_data():
     """The q226/q269/q298/q299 bucket sites read the embedding dim from
     the data (round-8 verdict ask; previously hardcoded 64, which would

@@ -173,25 +173,22 @@ REACHABILITY_KEEP = {
     "functions.strings.strip_total_suffix": "F9 total-row scrape (§2.9); test_functions",
     "operators.similarity._nearest_centroids_expr": "JVM twin of the Arrow centroid kernel",
     "operators.multimodal.with_dense_peaks_expr": "JVM twin of the Arrow dense-peaks kernel",
+    "operators.textops.with_poly_shingles_expr": "JVM twin of the Arrow poly-shingle kernel",
+    "operators.multimodal.with_media_dhash_expr": "JVM twin of the Arrow dHash kernel",
+    "operators.similarity.product_quantize_expr": "JVM twin of the Arrow PQ-encode kernel",
     "operators.codecs.wav_encode_pcm16": "builds inputs for the WAV decoder tests",
 }
 
 
-def test_every_package_definition_has_a_caller():
-    """Every top-level function or class in the package is reached from
-    production code: module-level code, the catalog query bodies, the
-    DuckDB twins in ``oracles.py``, ``__spark_entry__.py``, ``bench.py``,
-    ``tools/`` and ``perfbench/``, followed through names transitively,
-    or it is listed in REACHABILITY_KEEP with its reason. Tests do not
-    count as callers. Import statements are not uses: an unused import
-    does not keep its target alive.
-
-    A registry (a module-level dict literal whose values are package
-    definitions) reaches every value it holds, so each of its keys must
-    also be selected: appear as a string constant in that production
-    code outside the registry itself."""
+def _package_index():
+    """AST index of the package and its production callers, shared by the
+    caller and parameter guards. ``reached`` holds the definitions that
+    production code reaches, ``kept`` those reached only through
+    REACHABILITY_KEEP; ``scopes`` is every production tree (module-level
+    code, reached definitions, the scripts) keyed by its module."""
     import ast
     from pathlib import Path
+    from types import SimpleNamespace
 
     from kp_data_pipelines_spark.catalog import QUERIES
 
@@ -238,34 +235,38 @@ def test_every_package_definition_has_a_caller():
             mod, name = target
         return (mod, name)
 
-    def uses(node, mod, imap):
-        found = set()
-        for n in ast.walk(node):
-            if isinstance(n, ast.Name):
-                if (mod, n.id) in defs:
-                    found.add((mod, n.id))
-                elif imap.get(n.id, (None, None))[1]:
-                    found.add(resolve(*imap[n.id]))
-            elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
-                target = imap.get(n.value.id)
-                if target and target[1] is None:
-                    found.add(resolve(target[0], n.attr))
-        return found - {None}
+    def target_of(n, mod):
+        """The package definition a Name or ``module.attr`` node names."""
+        imap = imports[mod]
+        if isinstance(n, ast.Name):
+            if (mod, n.id) in defs:
+                return (mod, n.id)
+            if imap.get(n.id, (None, None))[1]:
+                return resolve(*imap[n.id])
+        elif isinstance(n, ast.Attribute) and isinstance(n.value, ast.Name):
+            target = imap.get(n.value.id)
+            if target and target[1] is None:
+                return resolve(target[0], n.attr)
+        return None
+
+    def uses(node, mod):
+        return {target_of(n, mod) for n in ast.walk(node)} - {None}
 
     def registry_keys(node, mod):
         value = getattr(node, "value", None)
         if isinstance(value, ast.Dict) and value.values and all(
-            isinstance(v, (ast.Name, ast.Attribute)) and uses(v, mod, imports[mod])
+            isinstance(v, (ast.Name, ast.Attribute)) and uses(v, mod)
             for v in value.values
         ):
             return [k.value for k in value.keys]
         return None
 
-    roots, registries, root_nodes = set(), {}, []
+    roots, registries, root_nodes, scopes = set(), {}, [], []
     for mod, tree in trees.items():
         for node in tree.body:
             if not isinstance(node, def_types):
-                roots |= uses(node, mod, imports[mod])
+                roots |= uses(node, mod)
+                scopes.append((mod, node))
                 keys = registry_keys(node, mod)
                 if keys is None:
                     root_nodes.append(node)
@@ -279,7 +280,7 @@ def test_every_package_definition_has_a_caller():
             else:
                 at_import += node.args.defaults + node.args.kw_defaults
             for expr in filter(None, at_import):
-                roots |= uses(expr, mod, imports[mod])
+                roots |= uses(expr, mod)
                 root_nodes.append(expr)
     code_roots = {key for key in defs if key[0] == f"{pkg}.oracles"}
     code_roots |= {(fn.__module__, fn.__qualname__.split(".")[0]) for fn in QUERIES.values()}
@@ -288,20 +289,54 @@ def test_every_package_definition_has_a_caller():
     scripts = [root / "__spark_entry__.py", root / "bench.py"]
     scripts += sorted(root.glob("tools/*.py")) + sorted(root.glob("perfbench/*.py"))
     for path in scripts:
-        tree = ast.parse(path.read_text())
-        roots |= uses(tree, "__main__", import_map(tree))
+        mod = f"{path.relative_to(root)}"
+        trees[mod] = tree = ast.parse(path.read_text())
+        imports[mod] = import_map(tree)
+        roots |= uses(tree, mod)
         root_nodes.append(tree)
+        scopes.append((mod, tree))
     keep = {tuple(f"{pkg}.{k}".rsplit(".", 1)) for k in REACHABILITY_KEEP}
     stale = sorted(".".join(k) for k in keep - set(defs))
     assert not stale, f"REACHABILITY_KEEP names missing definitions: {stale}"
 
-    reached, todo = set(), list(roots | keep)
-    while todo:
-        key = todo.pop()
-        if key not in reached:
-            reached.add(key)
-            todo.extend(uses(defs[key], key[0], imports[key[0]]))
-    dead = sorted(f"{mod}.{name}:{defs[mod, name].lineno}" for mod, name in set(defs) - reached)
+    def closure(start):
+        reached, todo = set(), list(start)
+        while todo:
+            key = todo.pop()
+            if key not in reached:
+                reached.add(key)
+                todo.extend(uses(defs[key], key[0]))
+        return reached
+
+    reached = closure(roots)
+    scopes += [(key[0], defs[key]) for key in reached]
+    return SimpleNamespace(
+        pkg=pkg, defs=defs, imports=imports, target_of=target_of,
+        reached=reached, kept=closure(keep) - reached, registries=registries,
+        root_nodes=root_nodes, scopes=scopes,
+    )
+
+
+def test_every_package_definition_has_a_caller():
+    """Every top-level function or class in the package is reached from
+    production code: module-level code, the catalog query bodies, the
+    DuckDB twins in ``oracles.py``, ``__spark_entry__.py``, ``bench.py``,
+    ``tools/`` and ``perfbench/``, followed through names transitively,
+    or it is listed in REACHABILITY_KEEP with its reason. Tests do not
+    count as callers. Import statements are not uses: an unused import
+    does not keep its target alive.
+
+    A registry (a module-level dict literal whose values are package
+    definitions) reaches every value it holds, so each of its keys must
+    also be selected: appear as a string constant in that production
+    code outside the registry itself."""
+    import ast
+
+    ix = _package_index()
+    dead = sorted(
+        f"{mod}.{name}:{ix.defs[mod, name].lineno}"
+        for mod, name in set(ix.defs) - ix.reached - ix.kept
+    )
     assert not dead, (
         f"{len(dead)} package definitions have no production caller "
         f"(delete them, or add them to REACHABILITY_KEEP with the reason): "
@@ -310,19 +345,175 @@ def test_every_package_definition_has_a_caller():
 
     selected = {
         n.value
-        for node in root_nodes
+        for node in ix.root_nodes
         for n in ast.walk(node)
         if isinstance(n, ast.Constant) and isinstance(n.value, str)
     }
     unselected = sorted(
         f"{where}[{key!r}]"
-        for where, keys in registries.items()
+        for where, keys in ix.registries.items()
         for key in keys
         if key not in selected
     )
     assert not unselected, (
         "registry entries no production code selects (delete them): "
         + ", ".join(unselected)
+    )
+
+
+# Defaulted operator parameters that production calls leave at one value,
+# kept on purpose, each with its reason. Parameters of definitions only
+# REACHABILITY_KEEP reaches need no entry: tests are their only callers.
+PARAMETER_KEEP = {
+    "streaming.cdc.cdc_ingest_stream(checkpoint_dir)": "path",
+    "streaming.drift.ivf_cell_stats_stream(checkpoint_dir)": "path",
+    "streaming.drift.length_drift_stream(checkpoint_dir)": "path",
+    "streaming.drift.vocab_growth_stream(checkpoint_dir)": "path",
+    "streaming.events.run_available_now(checkpoint_dir)": "path",
+    "streaming.events.run_available_now_foreach_batch(checkpoint_dir)": "path",
+    "streaming.media.media_ingest_stream(checkpoint_dir)": "path",
+    "streaming.training.training_build_stream(checkpoint_dir)": "path",
+    "session.release_pinned_rdds(blocking)": (
+        "benchmark contract: perfbench/run.py passes blocking=True through an alias"
+    ),
+    "streaming.events.run_available_now(output_mode)": (
+        "append mode: test_dedup_within_watermark_is_streaming_safe, "
+        "test_stream_static_enrich_matches_batch, "
+        "test_stream_stream_interval_join_matches_batch"
+    ),
+    "operators.similarity.ivf_topk(n_centroids)": (
+        "probing every cell equals exact top-k: test_ivf_topk_finds_exact_neighbors"
+    ),
+    "operators.similarity.ivf_topk(nprobe)": (
+        "probing every cell equals exact top-k: test_ivf_topk_finds_exact_neighbors"
+    ),
+}
+
+
+def test_every_operator_parameter_is_varied():
+    """Every defaulted parameter of a top-level package function (the
+    twin builders of ``catalog.py`` and ``oracles.py`` aside) gets two or
+    more values from production calls, or has a PARAMETER_KEEP entry. A
+    fixed value belongs in the body. A call that omits the parameter gives
+    it the default; an argument that is one of the caller's own parameters
+    is followed to that parameter's values across the caller's calls. An
+    argument built from the caller's local state (a loop variable, a local
+    the caller also uses), like a function production code references
+    other than by calling it (a callback, a ``partial``), has values no
+    scan can list: such a parameter is not checked."""
+    import ast
+    from collections import defaultdict
+
+    ix = _package_index()
+    skip = {f"{ix.pkg}.catalog", f"{ix.pkg}.oracles"}
+    fns = {
+        key: node
+        for key, node in ix.defs.items()
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+
+    def defaulted(fn):
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        out = dict(zip([p.arg for p in pos[len(pos) - len(a.defaults):]], a.defaults))
+        out.update({p.arg: d for p, d in zip(a.kwonlyargs, a.kw_defaults) if d})
+        return out
+
+    def names(fn):
+        a = fn.args
+        return {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg] if p}
+
+    def stores(fn):
+        body = fn.body if isinstance(fn, ast.Lambda) else ast.Module(fn.body, [])
+        return {
+            n.id for n in ast.walk(body) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+        }
+
+    # every production call and non-call reference, with the functions
+    # that enclose it, outermost first
+    calls, referenced = defaultdict(list), set()
+
+    def scan(node, mod, stack):
+        if isinstance(node, ast.Call) and ix.target_of(node.func, mod) in fns:
+            calls[ix.target_of(node.func, mod)].append((mod, stack, node))
+            children = [*node.args, *node.keywords]
+        elif isinstance(node, (ast.Name, ast.Attribute)) and ix.target_of(node, mod) in fns:
+            referenced.add(ix.target_of(node, mod))
+            children = []
+        else:
+            children = list(ast.iter_child_nodes(node))
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            stack = [*stack, node]
+        for child in children:
+            scan(child, mod, stack)
+
+    for mod, scope in ix.scopes:
+        scan(scope, mod, [])
+
+    def norm(expr, mod, stack, site):
+        """Value of an argument: a set of canonical strings."""
+        local = {name for fn in stack for name in names(fn) | stores(fn)}
+        if (
+            isinstance(expr, ast.Name)
+            and stack
+            and fns.get((mod, getattr(stack[0], "name", None))) is stack[0]
+            and expr.id in names(stack[0]) - stores(stack[0])
+            and not any(expr.id in names(fn) | stores(fn) for fn in stack[1:])
+        ):
+            return values((mod, stack[0].name), expr.id)
+        if any(isinstance(n, ast.Name) and n.id in local for n in ast.walk(expr)):
+            return {f"<{site}>"}
+        if isinstance(expr, ast.Name):
+            origin = ix.imports[mod].get(expr.id, (mod, expr.id))
+            return {".".join(filter(None, origin))}
+        return {ast.unparse(expr)}
+
+    memo = {}
+
+    def values(key, param):
+        if (key, param) not in memo:
+            memo[key, param] = set()
+            fn = fns[key]
+            pos = [p.arg for p in fn.args.posonlyargs + fn.args.args]
+            default = defaulted(fn).get(param)
+            out = set()
+            for mod, stack, call in calls[key]:
+                site = f"{mod}:{call.lineno}"
+                given = {kw.arg: kw.value for kw in call.keywords}
+                for i, a in enumerate(call.args):
+                    if isinstance(a, ast.Starred):
+                        break
+                    if i < len(pos):
+                        given[pos[i]] = a
+                if param in given:
+                    out |= norm(given[param], mod, stack, site)
+                elif None in given or any(isinstance(a, ast.Starred) for a in call.args):
+                    out.add(f"<{site}>")
+                elif default is not None:
+                    out |= norm(default, key[0], [], site)
+            memo[key, param] = out
+        return memo[key, param]
+
+    checked = {
+        f"{mod.removeprefix(ix.pkg + '.')}.{name}({param})": (mod, name, param)
+        for (mod, name), fn in fns.items()
+        if mod not in skip and (mod, name) in ix.reached
+        for param in defaulted(fn)
+    }
+    stale = sorted(set(PARAMETER_KEEP) - set(checked))
+    assert not stale, f"PARAMETER_KEEP names missing parameters: {stale}"
+    fixed = sorted(
+        f"{label} = {' | '.join(sorted(values(key[:2], key[2])))}"
+        for label, key in checked.items()
+        if label not in PARAMETER_KEEP
+        and key[:2] not in referenced
+        and len(values(key[:2], key[2])) <= 1
+        and not any(v.startswith("<") for v in values(key[:2], key[2]))
+    )
+    assert not fixed, (
+        f"{len(fixed)} defaulted parameters get one value from production "
+        f"calls (make each a constant in the body, or add it to "
+        f"PARAMETER_KEEP with the reason): " + ", ".join(fixed)
     )
 
 

@@ -37,7 +37,7 @@ def test_coerce_long_float_formatted(spark):
 
 def test_sentinel_to_null(spark):
     df = spark.createDataFrame([("",), ("0",), ("ok",)], ["x"])
-    vals = [r[0] for r in df.select(sentinel_to_null("x")).collect()]
+    vals = [r[0] for r in df.select(sentinel_to_null("x", ("", "0", 0))).collect()]
     assert vals == [None, None, "ok"]
 
 
@@ -65,7 +65,9 @@ def test_cascading_to_timestamp_formats(spark):
         [("2024-03-01T10:20:30",), ("2024-03-01 10:20:30",), ("03/01/2024",), ("garbage",)],
         ["d"],
     )
-    out = [r[0] for r in df.select(cascading_to_timestamp("d").alias("t")).collect()]
+    # the formats the reference tries in order (CTP Data Compare.ipynb:82-87)
+    formats = ["yyyy-MM-dd'T'HH:mm:ss", "yyyy-MM-dd HH:mm:ss", "M/d/yyyy"]
+    out = [r[0] for r in df.select(cascading_to_timestamp("d", formats).alias("t")).collect()]
     assert out[0] is not None and out[0].hour == 10
     assert out[1] is not None
     assert out[3] is None
@@ -123,7 +125,7 @@ def test_sentinel_to_null_numeric_zero(spark):
     from kp_data_pipelines_spark.functions.cleaning import sentinel_to_null
 
     df = spark.createDataFrame([(0.0,), (1.5,)], ["v"])
-    vals = [r["o"] for r in df.select(sentinel_to_null("v").alias("o")).collect()]
+    vals = [r["o"] for r in df.select(sentinel_to_null("v", ("", "0", 0)).alias("o")).collect()]
     assert vals == [None, 1.5]  # double 0.0 (string "0.0") still nulls
 
 
@@ -170,6 +172,6 @@ def test_pivot_sum_null_pivot_value(spark):
     df = spark.createDataFrame(
         [("g1", "x", 1.0), ("g1", None, 2.0)], "k string, p string, v double"
     )
-    out = pivot_sum(df, "k", "p", "v")
+    out = pivot_sum(df, "k", "p", "v", ["x", None])
     row = out.collect()[0]
     assert row["x"] == 1.0 and row["null"] == 2.0

@@ -63,26 +63,26 @@ def test_chunk_media_roundtrip(spark):
     from kp_data_pipelines_spark.operators.multimodal import chunk_media
 
     rows = [
-        (1, b"a" * 2500),
+        (1, b"a" * 160),
         (2, b"xyz"),
         (3, b""),
         (4, bytes(range(256)) * 10),
     ]
     df = spark.createDataFrame(rows, "media_id long, content binary")
-    out = chunk_media(df, chunk_bytes=1000).collect()
+    out = chunk_media(df).collect()
     by_id = {}
     for r in sorted(out, key=lambda r: (r["media_id"], r["chunk_idx"])):
         by_id.setdefault(r["media_id"], bytearray()).extend(r["chunk"] or b"")
-        assert r["offset"] == r["chunk_idx"] * 1000
+        assert r["offset"] == r["chunk_idx"] * 64
     for mid, content in rows:
         assert bytes(by_id[mid]) == content, mid
-    # each blob yields ceil(len/1000) chunks (min 1)
+    # each blob yields ceil(len/64) chunks (min 1)
     import math
     counts = {}
     for r in out:
         counts[r["media_id"]] = counts.get(r["media_id"], 0) + 1
     for mid, content in rows:
-        assert counts[mid] == max(1, math.ceil(len(content) / 1000))
+        assert counts[mid] == max(1, math.ceil(len(content) / 64))
 
 
 def _assert_generate_contract(generate):
@@ -156,7 +156,7 @@ def test_encode_documents_drops_empty_and_normalizes(spark):
     )
     rows = {
         r["doc_id"]: r["embedding"]
-        for r in encode_documents(df, "text").collect()
+        for r in encode_documents(df).collect()
     }
     assert set(rows) == {1, 2, 5}
     assert rows[1] == rows[2]
@@ -265,6 +265,7 @@ def test_media_dhash_kernel_matches_jvm(spark):
     payloads, and constant bytes (no gradient -> fingerprint 0)."""
     from kp_data_pipelines_spark.operators.multimodal import (
         with_media_dhash,
+        with_media_dhash_expr,
     )
     from kp_data_pipelines_spark.sources.readers import read_table
 
@@ -286,18 +287,18 @@ def test_media_dhash_kernel_matches_jvm(spark):
     )
     for df in (edge, docs):
         kern = {
-            r["media_id"]: r["p"]
-            for r in with_media_dhash(df, "content", "p", "kernel").collect()
+            r["media_id"]: r["phash"]
+            for r in with_media_dhash(df, "content").collect()
         }
         expr = {
-            r["media_id"]: r["p"]
-            for r in with_media_dhash(df, "content", "p", "expr").collect()
+            r["media_id"]: r["phash"]
+            for r in with_media_dhash_expr(df, "content").collect()
         }
         assert kern == expr
     # pinned edge semantics
     kern = {
-        r["media_id"]: r["p"]
-        for r in with_media_dhash(edge, "content", "p", "kernel").collect()
+        r["media_id"]: r["phash"]
+        for r in with_media_dhash(edge, "content").collect()
     }
     assert kern[3] == 0 and kern[5] == 0  # no gradient -> 0
     assert kern[4] is None                # null stays null
@@ -498,7 +499,7 @@ def test_wav_junk_chunk_roundtrip():
     )
 
     samples = b"the quick brown fox jumps over the lazy dog 0123456789"
-    plain = wav_encode_pcm8(samples)
+    plain = wav_encode_pcm8(samples, 8000)
     junked = wav_add_junk_chunk(plain)
     assert plain != junked and len(junked) > len(plain)
     assert wav_decode(plain) == wav_decode(junked)

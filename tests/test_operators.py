@@ -178,7 +178,7 @@ def test_interval_join_containment(spark):
         [(10, "u", 50, 150), (11, "u", 4000, 8000), (12, "v", 200, 300)],
         "iid long, k string, s long, e long",
     ).withColumns({"s": F.timestamp_seconds("s"), "e": F.timestamp_seconds("e")})
-    out = interval_join(points, ivals, "t", "s", "e", keys=["k"], bucket_seconds=60)
+    out = interval_join(points, ivals, "t", "s", "e", keys=["k"])
     pairs = {(r["pid"], r["iid"]) for r in out.collect()}
     assert pairs == {(1, 10), (2, 11)}  # (3,12): point before interval
 
@@ -228,20 +228,6 @@ def test_containment_join_duplicate_facts_and_null_payload(spark):
     assert len(out2) == 1 and out2[0]["p2"] == "exact-hit"
 
 
-def test_interval_join_left_keeps_unmatched_points(spark):
-    from kp_data_pipelines_spark.operators.joins import interval_join
-
-    points = spark.createDataFrame(
-        [(1, "u", 100), (2, "u", 9999)], "pid long, k string, t long"
-    ).withColumn("t", F.timestamp_seconds("t"))
-    ivals = spark.createDataFrame(
-        [(10, "u", 50, 150)], "iid long, k string, s long, e long"
-    ).withColumns({"s": F.timestamp_seconds("s"), "e": F.timestamp_seconds("e")})
-    out = interval_join(points, ivals, "t", "s", "e", keys=["k"], how="left").collect()
-    got = {r["pid"]: r["iid"] for r in out}
-    assert got == {1: 10, 2: None}  # unmatched point survives null-padded
-
-
 def test_connected_components_chain_and_clique(spark):
     from kp_data_pipelines_spark.operators.graph import connected_components
 
@@ -258,13 +244,18 @@ def test_connected_components_chain_and_clique(spark):
 def test_connected_components_long_chain_converges_fast(spark):
     from kp_data_pipelines_spark.operators.graph import connected_components
 
+    from kp_data_pipelines_spark.operators.graph import _propagate, _symmetrize
+
     # 64-node path: O(diameter) propagation would need ~63 rounds; pointer
-    # jumping must finish well inside max_iter=10
+    # jumping must finish well inside 10
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "src long, dst long"
     )
-    got = connected_components(edges, max_iter=10).collect()
+    got = connected_components(edges).collect()
     assert {r["component"] for r in got} == {0} and len(got) == 64
+    nodes = spark.range(64).select(F.col("id").alias("node"), F.col("id").alias("component"))
+    _, rounds = _propagate(_symmetrize(edges, "src", "dst"), nodes)
+    assert rounds <= 10
 
 
 def test_connected_components_empty(spark):
@@ -387,7 +378,7 @@ def test_prefix_sum_matches_global_window(spark):
     )
     got = {
         r["doc_id"]: r["cum"]
-        for r in prefix_sum(docs, "doc_id", "n_chars", out_col="cum", num_partitions=7).collect()
+        for r in prefix_sum(docs, "doc_id", "n_chars", out_col="cum").collect()
     }
     w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
     want = {
@@ -408,13 +399,13 @@ def test_prefix_sum_null_partitions_and_decimal(spark):
 
     from kp_data_pipelines_spark.operators.prefix import prefix_sum
 
-    # keys 0..59; values NULL for the low third (>= one whole range
-    # partition at num_partitions=6), decimal(10,2) elsewhere
+    # keys 0..59; values NULL for the low third (whole range partitions
+    # of the 32), decimal(10,2) elsewhere
     rows = [
         (k, None if k < 20 else Decimal(f"{k}.25")) for k in range(60)
     ]
     df = spark.createDataFrame(rows, "k int, v decimal(10,2)")
-    out = prefix_sum(df, "k", "v", out_col="cum", num_partitions=6)
+    out = prefix_sum(df, "k", "v", out_col="cum")
     got = {r["k"]: r["cum"] for r in out.collect()}
     w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)
     want = {
@@ -486,7 +477,7 @@ def test_prefix_rownum_matches_window_rownum(spark):
         r["doc_id"]: r["rn"]
         for r in prefix_sum(
             docs, ["n_chars", "doc_id"], F.lit(1).cast("long"),
-            out_col="rn", num_partitions=7,
+            out_col="rn",
         ).collect()
     }
     assert prefix_rn == window_rn
@@ -613,31 +604,31 @@ def test_warm_start_components_matches_cold_with_fewer_rounds(spark):
 
     # prior build: a 32-node path (0-...-31), already closed
     old_edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(31)], "src long, dst long"
+        [(i, i + 1) for i in range(31)], "id_a long, id_b long"
     )
-    prior = connected_components(old_edges)
+    prior = connected_components(old_edges, "id_a", "id_b")
     # new wave: two fresh docs — one attaches to the chain's tail, one
     # starts its own pair; full edge set = old + new
     new_edges = spark.createDataFrame(
-        [(31, 100), (200, 201)], "src long, dst long"
+        [(31, 100), (200, 201)], "id_a long, id_b long"
     )
     full = old_edges.union(new_edges)
 
-    cold = connected_components(full)
+    cold = connected_components(full, "id_a", "id_b")
     warm, warm_rounds = warm_start_components(full, prior)
     as_map = lambda df: {r["node"]: r["component"] for r in df.collect()}
     assert as_map(warm) == as_map(cold)
     assert as_map(warm)[100] == 0 and as_map(warm)[201] == 200
 
     # cold rounds on the same graph, measured through the same loop
-    e = _symmetrize(full, "src", "dst")
+    e = _symmetrize(full, "id_a", "id_b")
     singletons = (
         e.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    _, cold_rounds = _propagate(e, singletons, 50)
+    _, cold_rounds = _propagate(e, singletons)
     assert warm_rounds < cold_rounds
     assert warm_rounds <= 3  # near-fixpoint start: O(1) rounds
 
@@ -652,7 +643,7 @@ def test_warm_start_components_untouched_prior_passes_through(spark):
     prior = spark.createDataFrame(
         [(7, 7), (8, 7), (9, 9)], "node long, component long"
     )
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
+    edges = spark.createDataFrame([(1, 2)], "id_a long, id_b long")
     labels, _ = warm_start_components(edges, prior)
     got = {r["node"]: r["component"] for r in labels.collect()}
     assert got == {1: 1, 2: 1, 7: 7, 8: 7, 9: 9}
@@ -672,7 +663,7 @@ def test_warm_start_components_incremental_only_edges(spark):
     prior = spark.createDataFrame(
         [(5, 5), (10, 5)], "node long, component long"
     )
-    new_edges = spark.createDataFrame([(1, 10)], "src long, dst long")
+    new_edges = spark.createDataFrame([(1, 10)], "id_a long, id_b long")
     labels, _ = warm_start_components(new_edges, prior)
     got = {r["node"]: r["component"] for r in labels.collect()}
     assert got == {1: 1, 5: 1, 10: 1}
@@ -693,7 +684,7 @@ def test_warm_start_components_duplicate_conflicting_prior(spark):
         [(7, 2), (7, 5), (2, 2), (5, 5), (2, 2)],  # dup row + conflict
         "node long, component long",
     )
-    edges = spark.createDataFrame([(9, 7)], "src long, dst long")
+    edges = spark.createDataFrame([(9, 7)], "id_a long, id_b long")
     labels, _ = warm_start_components(edges, prior)
     rows = labels.collect()
     nodes = [r["node"] for r in rows]

@@ -95,7 +95,7 @@ def test_sum_preserved_under_projection_rename_union(spark, vals):
 @_settings
 def test_pivot_row_totals_match_group_sums(spark, cells):
     df = spark.createDataFrame([(g, c, float(v)) for g, c, v in cells], "g long, c string, v double")
-    pivoted = pivot_sum(df, "g", "c", "v")
+    pivoted = pivot_sum(df, "g", "c", "v", ["x", "y", "z"])
     val_cols = [c for c in pivoted.columns if c != "g"]
     row_totals = {
         r["g"]: sum(r[c] for c in val_cols if r[c] is not None) for r in pivoted.collect()

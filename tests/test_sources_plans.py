@@ -718,7 +718,7 @@ def test_xlsx_stdlib_reader_date_serials(spark, tmp_path):
 
     sdf = spark.createDataFrame(pdf[["d"]])
     out = sdf.select(
-        cascading_to_timestamp(F.col("d").cast("string")).alias("ts")
+        cascading_to_timestamp(F.col("d").cast("string"), ["yyyy-MM-dd HH:mm:ss"]).alias("ts")
     ).collect()
     assert out[0]["ts"] == pdf["d"].iloc[0].to_pydatetime()
 

@@ -412,7 +412,6 @@ def test_ivf_cell_stats_stream_equals_batch_any_wave_order(spark, tmp_path):
     emb = spark.read.parquet(src_parquet)
     cents = ivf_centroids(
         emb.filter(F.pmod("vec_id", F.lit(2)) == 0), "embedding", 16,
-        id_col="vec_id",
     )
 
     con = duckdb.connect()
@@ -482,18 +481,12 @@ def test_vocab_growth_stream_equals_batch_any_wave_order(spark, tmp_path):
 
 def _store_steps():
     """Each growing store's key DDL and partial function
-    ``fn(batch, seen)``, at its stream function's default knobs."""
+    ``fn(batch, seen)``."""
     from kp_data_pipelines_spark.streaming import cdc, media, training
 
     return {
-        "cdc": (
-            "packed long",
-            lambda b, seen: cdc._cdc_ingest_partial(b, seen, 16, 64),
-        ),
-        "media": (
-            "phash long",
-            lambda b, seen: media._media_ingest_partial(b, seen, 4, 2),
-        ),
+        "cdc": ("packed long", cdc._cdc_ingest_partial),
+        "media": ("phash long", media._media_ingest_partial),
         "training": (
             "f string",
             lambda b, seen: training._ledger_partial(

@@ -71,9 +71,9 @@ def _vecs(spark):
 
 def test_cosine_topk_ordering(spark):
     df = _vecs(spark)
-    out = cosine_topk(df.filter(F.col("vec_id") != 0), "embedding", "vec_id", [1.0, 0.0, 0.0], 3)
+    out = cosine_topk(df.filter(F.col("vec_id") != 0), "embedding", "vec_id", [1.0, 0.0, 0.0])
     ids = [r["vec_id"] for r in out.collect()]
-    assert ids == [1, 4, 2]
+    assert ids == [1, 4, 2, 3]
     cos = [r["cosine"] for r in out.collect()]
     assert math.isclose(cos[0], 0.9 / math.sqrt(0.81 + 0.01), rel_tol=1e-9)
 
@@ -81,12 +81,13 @@ def test_cosine_topk_ordering(spark):
 def test_lsh_topk_subset_of_brute_force(spark):
     df = _vecs(spark)
     out = lsh_bucket_cosine_topk(
-        df.filter(F.col("vec_id") != 0), "embedding", "vec_id", [1.0, 0.0, 0.0], 3, n_planes=4
+        df.filter(F.col("vec_id") != 0), "embedding", "vec_id", [1.0, 0.0, 0.0]
     )
-    ids = {r["vec_id"] for r in out.collect()}
+    ids = [r["vec_id"] for r in out.collect()]
     # candidates are a bucket-pruned subset; whatever returns must be ranked
-    # consistently with brute force (no false entries above true top)
-    assert ids <= {1, 2, 4}
+    # consistently with brute force
+    brute = [1, 4, 2, 3]
+    assert ids == [i for i in brute if i in ids]
 
 
 def test_minhash_finds_near_duplicate(spark):
@@ -144,7 +145,7 @@ def test_ngram_jaccard_exact(spark):
     df = spark.createDataFrame(
         [(1, "a b c d e"), (2, "a b c d e"), (3, "x y z w v")], ["doc_id", "text"]
     )
-    pairs = ngram_jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.9)
+    pairs = ngram_jaccard_pairs(df, "doc_id", "text")
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
     assert got == {(1, 2): 1.0}
 
@@ -154,7 +155,7 @@ def test_simhash_similar_texts_close(spark):
     near = base.replace("home", "now")
     other = "entirely unrelated content about database engines and shuffle partitions"
     df = spark.createDataFrame([(1, base), (2, near), (3, other)], ["doc_id", "text"])
-    out = with_simhash(df, "text", out="sh", k=2).select("doc_id", "sh").collect()
+    out = with_simhash(df, "text", out="sh").select("doc_id", "sh").collect()
     sh = {r["doc_id"]: r["sh"] for r in out}
 
     def hamming(a, b):
@@ -188,13 +189,16 @@ def test_cosine_pairs_blocked_exact(spark):
 def test_simhash_hamming_pairs(spark):
     from kp_data_pipelines_spark.operators.similarity import simhash_hamming_pairs
 
-    base = "the quick brown fox jumps over the lazy dog and runs far away home"
-    near = base.replace("home", "now")
+    # a 100-word doc and the same doc with its last word changed: their
+    # fingerprints differ in exactly 3 bits, the edge of the radius
+    words = [f"w{i}" for i in range(100)]
+    base = " ".join(words)
+    near = " ".join(words[:-1] + ["cottage"])
     other = "entirely unrelated content about database engines and shuffle partitions"
     df = spark.createDataFrame(
         [(1, base), (2, near), (3, other)], ["doc_id", "text"]
     )
-    rows = simhash_hamming_pairs(df, "doc_id", "text", max_hamming=8, k=2).collect()
+    rows = simhash_hamming_pairs(df, "doc_id", "text").collect()
     found = {(r["id_a"], r["id_b"]) for r in rows}
     assert (1, 2) in found
     assert (1, 3) not in found and (2, 3) not in found
@@ -221,11 +225,11 @@ def test_ivf_topk_finds_exact_neighbors(spark):
     ]
     df = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
     query = rows[0][1]
-    exact = [r["vec_id"] for r in cosine_topk(df, "embedding", "vec_id", query, 5).collect()]
+    exact = [r["vec_id"] for r in cosine_topk(df, "embedding", "vec_id", query).collect()]
     approx = [
         r["vec_id"]
         for r in ivf_topk(
-            df, "embedding", "vec_id", query, k=5, n_centroids=8, nprobe=8
+            df, "embedding", "vec_id", query, n_centroids=8, nprobe=8
         ).collect()
     ]
     # nprobe == n_centroids probes every cell -> must equal exact top-k
@@ -244,14 +248,14 @@ def test_kmeans_refine_separates_blobs(spark):
     rows = [(i, [10.0 + (i % 3) * 0.1, 0.0]) for i in range(20)] + [
         (100 + i, [0.0, 5.0 + (i % 3) * 0.1]) for i in range(20)
     ]
-    df = spark.createDataFrame(rows, "vid long, vec array<double>")
-    seed = ivf_centroids(df, "vec", 2, id_col="vid")
+    df = spark.createDataFrame(rows, "vec_id long, vec array<double>")
+    seed = ivf_centroids(df, "vec", 2)
     refined = kmeans_refine(df, "vec", seed, n_iter=4)
     assigned = df.select(
-        "vid", _nearest_centroids_expr("vec", refined, 1)[0].alias("cell")
+        "vec_id", _nearest_centroids_expr("vec", refined, 1)[0].alias("cell")
     ).collect()
-    cells_a = {r["cell"] for r in assigned if r["vid"] < 100}
-    cells_b = {r["cell"] for r in assigned if r["vid"] >= 100}
+    cells_a = {r["cell"] for r in assigned if r["vec_id"] < 100}
+    cells_b = {r["cell"] for r in assigned if r["vec_id"] >= 100}
     assert len(cells_a) == 1 and len(cells_b) == 1 and cells_a != cells_b
     # deterministic across reruns/partitionings (decimal means)
     again = kmeans_refine(df.repartition(7), "vec", seed, n_iter=4)
@@ -261,30 +265,24 @@ def test_kmeans_refine_separates_blobs(spark):
 def test_chunk_documents_overlap_and_tail(spark):
     from kp_data_pipelines_spark.operators.textops import chunk_documents
 
-    toks = " ".join(f"t{i}" for i in range(10))
+    t = [f"t{i}" for i in range(60)]
     df = spark.createDataFrame(
-        [(1, toks), (2, "a b"), (3, "only")], "doc_id long, text string"
+        [(1, " ".join(t)), (2, "a b"), (3, "only")], "doc_id long, text string"
     )
     rows = {
         (r["doc_id"], r["chunk_id"]): (r["chunk_tokens"], r["chunk_text"])
-        for r in chunk_documents(
-            df, "doc_id", "text", chunk_size=4, overlap=1
-        ).collect()
+        for r in chunk_documents(df).collect()
     }
-    # doc 1: 10 tokens, size 4, stride 3 -> chunks at 0,3,6,9 -> 1+ceil(6/3)=3? no:
-    # 1 + ceil((10-4)/3) = 1 + 2 = 3 chunks (starts 0,3,6) covers t0..t9
+    # doc 1: 60 tokens, size 32, stride 24 -> 1 + ceil((60-32)/24) = 3
+    # chunks (starts 0, 24, 48) covering t0..t59; consecutive chunks
+    # share 8 tokens
     assert {k for k in rows if k[0] == 1} == {(1, 0), (1, 1), (1, 2)}
-    assert rows[(1, 0)] == (4, "t0 t1 t2 t3")
-    assert rows[(1, 1)] == (4, "t3 t4 t5 t6")
-    assert rows[(1, 2)] == (4, "t6 t7 t8 t9")
+    assert rows[(1, 0)] == (32, " ".join(t[0:32]))
+    assert rows[(1, 1)] == (32, " ".join(t[24:56]))
+    assert rows[(1, 2)] == (12, " ".join(t[48:60]))
     # short docs: one chunk, possibly shorter than chunk_size
     assert rows[(2, 0)] == (2, "a b")
     assert rows[(3, 0)] == (1, "only")
-    # every consecutive pair shares exactly `overlap` tokens
-    import pytest
-
-    with pytest.raises(ValueError):
-        chunk_documents(df, "doc_id", "text", chunk_size=4, overlap=4)
 
 
 def test_bloom_contamination_scores(spark):
@@ -303,7 +301,7 @@ def test_bloom_contamination_scores(spark):
     )
     out = {
         r["doc_id"]: r
-        for r in bloom_contamination(probe, bench, "doc_id", "text").collect()
+        for r in bloom_contamination(probe, bench).collect()
     }
     assert out[1]["contamination"] == 1.0  # every gram is in the filter
     assert out[2]["contamination"] < 0.5  # only chance collisions
@@ -315,7 +313,10 @@ def test_poly_shingles_kernel_matches_jvm(spark):
     produce IDENTICAL arrays (integer mod arithmetic — also what the
     DuckDB twins recompute), including non-ASCII, repeated whitespace,
     short docs, empty and NULL text."""
-    from kp_data_pipelines_spark.operators.textops import with_poly_shingles
+    from kp_data_pipelines_spark.operators.textops import (
+        with_poly_shingles,
+        with_poly_shingles_expr,
+    )
     from kp_data_pipelines_spark.sources.readers import read_table
 
     edge = spark.createDataFrame(
@@ -339,13 +340,13 @@ def test_poly_shingles_kernel_matches_jvm(spark):
             kern = {
                 r["doc_id"]: r["g"]
                 for r in with_poly_shingles(
-                    df, "text", "g", k, bits64=bits64, impl="kernel"
+                    df, "text", "g", k, bits64=bits64
                 ).collect()
             }
             jvm = {
                 r["doc_id"]: r["g"]
-                for r in with_poly_shingles(
-                    df, "text", "g", k, bits64=bits64, impl="jvm"
+                for r in with_poly_shingles_expr(
+                    df, "text", "g", k, bits64=bits64
                 ).collect()
             }
             assert kern == jvm, (k, bits64)
@@ -371,8 +372,7 @@ def test_minhash_incremental_flags_known_dup(spark):
     out = {
         r["doc_id"]: r
         for r in minhash_incremental(
-            new, corpus, "doc_id", "text", shingle_k=2,
-            jaccard_threshold=0.5,
+            new, corpus, "doc_id", "text"
         ).collect()
     }
     assert out[10]["dup_of"] == 1 and out[10]["keep"] is False
@@ -390,11 +390,11 @@ def test_power_iteration_finds_dominant_direction(spark):
     # vectors overwhelmingly along axis 1 -> PC must align with axis 1
     rows = [([0.1, 5.0, 0.05],) for _ in range(50)] + [([0.2, 4.0, 0.1],)] * 30
     df = spark.createDataFrame(rows, "vec array<float>")
-    pc = power_iteration_top_pc(df, "vec", n_iter=4)
+    pc = power_iteration_top_pc(df, "vec")
     assert abs(pc[1]) > 0.99
     assert abs(math.sqrt(sum(x * x for x in pc)) - 1.0) < 1e-12
     # deterministic across partitionings (quantized integer aggregation)
-    assert power_iteration_top_pc(df.repartition(7), "vec", n_iter=4) == pc
+    assert power_iteration_top_pc(df.repartition(7), "vec") == pc
 
 
 def test_nearest_centroid_kernel_matches_expr(spark):
@@ -411,7 +411,7 @@ def test_nearest_centroid_kernel_matches_expr(spark):
     from kp_data_pipelines_spark.sources.readers import read_table
 
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
-    cents = ivf_centroids(emb, "embedding", 8, id_col="vec_id")
+    cents = ivf_centroids(emb, "embedding", 8)
     kern = {
         r["vec_id"]: r["c"]
         for r in emb.select(
@@ -430,7 +430,7 @@ def test_nearest_centroid_kernel_matches_expr(spark):
 def test_winnowing_catches_embedded_passage(spark):
     """A passage copied into different surrounding text must share
     fingerprints (guarantee: any shared run >= k+w-1 chars); unrelated
-    docs must not reach min_shared."""
+    docs must not reach the 3 shared fingerprints a pair needs."""
     from kp_data_pipelines_spark.operators.similarity import (
         winnow_fingerprint_pairs,
     )
@@ -446,16 +446,17 @@ def test_winnowing_catches_embedded_passage(spark):
     )
     pairs = {
         (r["id_a"], r["id_b"]): r["n_shared"]
-        for r in winnow_fingerprint_pairs(
-            df, "doc_id", "text", k=20, w=4, max_doc_freq=10, min_shared=2
-        ).collect()
+        for r in winnow_fingerprint_pairs(df, "doc_id", "text").collect()
     }
-    assert (1, 2) in pairs and pairs[(1, 2)] >= 2
+    assert (1, 2) in pairs and pairs[(1, 2)] >= 3
     assert not any(3 in p for p in pairs)
 
 
 def test_product_quantize_kernel_matches_expr(spark):
-    from kp_data_pipelines_spark.operators.similarity import product_quantize
+    from kp_data_pipelines_spark.operators.similarity import (
+        product_quantize,
+        product_quantize_expr,
+    )
     from kp_data_pipelines_spark.sources.readers import read_table
 
     emb = read_table(spark, "/root/testdata/sf0.001", "embeddings")
@@ -465,9 +466,7 @@ def test_product_quantize_kernel_matches_expr(spark):
     }
     expr = {
         r["vec_id"]: (r["codes"], r["recon_err"])
-        for r in product_quantize(
-            emb, "embedding", "vec_id", impl="expr"
-        ).collect()
+        for r in product_quantize_expr(emb, "embedding", "vec_id").collect()
     }
     assert kern == expr
 
@@ -510,15 +509,22 @@ def test_char_fold_kernel_matches_expression(spark):
     df = docs.unionByName(edge)
     rows = df.select(
         char_fold_hashes("text", (31, 1000003)).alias("k"),
-        rolling_hash("text", base=31).alias("e1"),
-        rolling_hash("text", base=1000003).alias("e2"),
+        rolling_hash("text").alias("e1"),
+        "text",
     ).collect()
     assert rows
+
+    def fold(text, base):  # the JVM fold of rolling_hash, at any base
+        acc = 0
+        for ch in text:
+            acc = (acc * base + ord(ch)) % 2147483647
+        return acc
+
     for r in rows:
         if r["k"] is None:
-            assert r["e1"] is None and r["e2"] is None
+            assert r["e1"] is None and r["text"] is None
         else:
-            assert r["k"][0] == r["e1"] and r["k"][1] == r["e2"]
+            assert r["k"][0] == r["e1"] and r["k"][1] == fold(r["text"], 1000003)
 
 
 def test_bucket_knn_kernel_matches_jvm(spark):
@@ -552,7 +558,7 @@ def test_bucket_knn_kernel_matches_jvm(spark):
     k = 5
     kern = {
         r["vec_id"]: (r["n_neighbors"], r["n_same_label"])
-        for r in bucket_knn_agreement(be, "vec_id", "label", "v", k=k).collect()
+        for r in bucket_knn_agreement(be, "vec_id", "label", "v").collect()
     }
 
     # interpreted twin: bucket self-join, fold cosines, per-anchor window
@@ -631,7 +637,7 @@ def test_hard_negative_kernel_matches_jvm(spark):
     k = 3
     kern = {
         (r["vec_id"], r["neg_rank"]): (r["neg_id"], r["neg_label"])
-        for r in bucket_hard_negatives(be, "vec_id", "label", "v", k=k).collect()
+        for r in bucket_hard_negatives(be, "vec_id", "label", "v").collect()
     }
 
     # interpreted twin: bucket self-join on different labels, fold
@@ -960,7 +966,7 @@ def test_bpe_batched_trainer_reaches_64_merges(spark):
     docs = read_table(spark, "/root/testdata/sf0.001", "documents").select(
         "text"
     )
-    out = train_bpe_batched(spark, docs, "text").collect()
+    out = train_bpe_batched(spark, docs).collect()
     merges = [r for r in out if r["round"] > 0]
     assert len(merges) >= 64, len(merges)
     # fertility after each round never rises
@@ -1054,7 +1060,7 @@ def test_bpe_adaptive_trainer_reaches_512_merges(spark):
     docs = read_table(spark, "/root/testdata/sf0.001", "documents").select(
         "text"
     )
-    out = train_bpe_adaptive(spark, docs, "text").collect()
+    out = train_bpe_adaptive(spark, docs).collect()
     merges = [r for r in out if r["round"] > 0]
     assert len(merges) >= 512, len(merges)
     by_round = {}
@@ -1071,7 +1077,7 @@ def test_bpe_adaptive_trainer_empty_corpus(spark):
 
     for rows in ([], [("",), ("   ",)]):
         docs = spark.createDataFrame(rows, "text string")
-        out = train_bpe_adaptive(spark, docs, "text").collect()
+        out = train_bpe_adaptive(spark, docs).collect()
         assert len(out) == 1
         r = out[0]
         assert (r["round"], r["batch_rank"], r["merge_a"]) == (0, 0, "")
@@ -1096,7 +1102,7 @@ def test_merge_table_artifact_roundtrip(spark, tmp_path):
     docs = read_table(spark, "/root/testdata/sf0.001", "documents").select(
         "text"
     )
-    batches = train_merge_batches(spark, docs, "text", rounds=3)
+    batches = train_merge_batches(spark, docs)
     path = str(tmp_path / "tokenizer.json")
     save_merge_table(spark, batches, path)
     loaded = load_merge_table(spark, path)
@@ -1170,7 +1176,7 @@ def test_bpe_trainer_empty_corpus_matches_oracle_shape(spark):
 
     for rows in ([], [("",), ("   ",)]):
         docs = spark.createDataFrame(rows, "text string")
-        out = train_bpe_batched(spark, docs, "text").collect()
+        out = train_bpe_batched(spark, docs).collect()
         assert len(out) == 1
         r = out[0]
         assert (r["round"], r["batch_rank"], r["merge_a"]) == (0, 0, "")

@@ -20,7 +20,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -34,7 +33,12 @@ def main() -> None:
     suffix, names = args[0], args[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from kp_data_pipelines_spark.session import get_spark, release_pinned_rdds
+    from kp_data_pipelines_spark.session import (
+        get_spark,
+        release_pinned_rdds,
+        time_noop_run,
+        warm_up,
+    )
     from kp_data_pipelines_spark.catalog import QUERIES
 
     spark = get_spark("plan_capture")
@@ -47,11 +51,7 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    # Warm the session the way bench.py does.
-    next(iter(QUERIES.values()))(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    release_pinned_rdds(spark)
+    warm_up(spark, sf_dir)
 
     timings: dict[str, float] = {}
     for name in names:
@@ -65,14 +65,7 @@ def main() -> None:
         release_pinned_rdds(spark)
         if timed:
             spark.sparkContext.setJobDescription(f"{name} [{suffix}]")
-            best = float("inf")
-            for _ in range(runs):
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-                release_pinned_rdds(spark)
+            best = min(time_noop_run(spark, fn, sf_dir) for _ in range(runs))
             spark.sparkContext.setJobDescription(None)
             timings[name] = round(best, 4)
     if timed:

@@ -13,7 +13,6 @@ from __future__ import annotations
 import math
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -94,18 +93,14 @@ def main() -> None:
     names = sys.argv[1:] or DEFAULT
 
     from kp_data_pipelines_spark.catalog import QUERIES
-    from kp_data_pipelines_spark.session import get_spark
+    from kp_data_pipelines_spark.session import get_spark, time_noop_run, warm_up
 
     spark = get_spark("scaling")
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM/codegen/file-listing machinery once per sf dir
     for sf_dir, _ in SFS:
-        next(iter(QUERIES.values()))(spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-
-    from kp_data_pipelines_spark.session import release_pinned_rdds
+        warm_up(spark, sf_dir)
 
     rows = []
     for name in names:
@@ -114,13 +109,8 @@ def main() -> None:
         for sf_dir, _ in SFS:
             # first run pays plan codegen + broadcast warmup; measure the
             # second (warm) run so slopes reflect data volume, not JIT
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            ts.append(time.perf_counter() - t0)
-            # keep the session flat (localCheckpoint blocks) so later
-            # rows measure their plans, not accumulated storage pressure
-            release_pinned_rdds(spark)
+            time_noop_run(spark, fn, sf_dir)
+            ts.append(time_noop_run(spark, fn, sf_dir))
         slopes = [
             math.log(ts[i + 1] / ts[i])
             / math.log(SFS[i + 1][1] / SFS[i][1])

@@ -23,18 +23,16 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def run_pass(spark, queries, sf_dir, release):
+def run_pass(spark, queries, sf_dir):
+    from kp_data_pipelines_spark.session import time_noop_run
+
     times = {}
     for i, (name, fn) in enumerate(queries.items()):
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        times[name] = time.perf_counter() - t0
-        release(spark)
+        times[name] = time_noop_run(spark, fn, sf_dir)
         if (i + 1) % 50 == 0:
             spark.sparkContext._jvm.System.gc()
     return times
@@ -51,29 +49,19 @@ def main() -> int:
     args = ap.parse_args()
 
     from kp_data_pipelines_spark.catalog import QUERIES
-    from kp_data_pipelines_spark.session import get_spark, release_pinned_rdds
+    from kp_data_pipelines_spark.session import get_spark, time_noop_run, warm_up
 
     spark = get_spark("session_probe")
     spark.sparkContext.setLogLevel("ERROR")
+    warm_up(spark, args.sf_dir)
 
-    # Warm file listing/codegen once, same as bench.py.
-    next(iter(QUERIES.values()))(spark, args.sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    # BLOCKING release (the default), the CLAUDE.md/SCALE.md §15 rule for
-    # ANY timed loop: an async release returns while executors are still
-    # unpersisting, and that cleanup lands inside the NEXT query's timed
-    # region — it inflated the round-5 bench ~7% overall and, in round
-    # 9, showed up here as a phantom 1.6x pass-2 "violation" on
+    # Every run releases its pins BLOCKING (time_noop_run): in round 9 an
+    # async release here produced a phantom 1.6x pass-2 "violation" on
     # q315 (a driver-bound many-small-jobs loop, maximally sensitive to
     # scheduler interference; 5 isolated runs with blocking hygiene are
     # flat 6.7 -> 5.1 s).
-    def release(s):
-        return release_pinned_rdds(s)
-
-    p1 = run_pass(spark, QUERIES, args.sf_dir, release)
-    p2 = run_pass(spark, QUERIES, args.sf_dir, release)
+    p1 = run_pass(spark, QUERIES, args.sf_dir)
+    p2 = run_pass(spark, QUERIES, args.sf_dir)
 
     heavies = sorted(p1.items(), key=lambda kv: -kv[1])[: args.k]
     rows, bad, retried = [], [], {}
@@ -81,7 +69,7 @@ def main() -> int:
         t2 = p2[name]
         ok = t2 <= args.threshold * t1 or t2 - t1 <= args.abs_slack
         if not ok:
-            # One adjudicating re-time (the bench.py outlier rule): a
+            # One adjudicating re-time: a
             # REAL leak reproduces on a third pass; a scheduler-noise
             # phantom on a driver-bound many-small-jobs loop does not
             # (round 9: q315 1.6x -> flat; round 10: q321 1.37x in one
@@ -89,12 +77,7 @@ def main() -> int:
             # between runs while 4-pass isolated loops stay flat is the
             # noise signature). min(t2, retry) is reported; a genuine
             # regression survives because BOTH late passes stay slow.
-            t0 = time.perf_counter()
-            QUERIES[name](spark, args.sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            tr = time.perf_counter() - t0
-            release(spark)
+            tr = time_noop_run(spark, QUERIES[name], args.sf_dir)
             retried[name] = round(tr, 3)
             t2 = min(t2, tr)
             ok = t2 <= args.threshold * t1 or t2 - t1 <= args.abs_slack

@@ -75,9 +75,7 @@ def main() -> int:
 
     stage(
         "shingles_xxhash64",
-        with_hashed_shingles(
-            docs.select("doc_id", "text"), "text", "__g", 3
-        ).filter(F.size("__g") > 0),
+        with_hashed_shingles(docs.select("doc_id", "text"), "text", 3).filter(F.size("__g") > 0),
     )
     stage(
         "shingles_portable_poly",
@@ -128,7 +126,7 @@ def main() -> int:
 
     t = time.time()
     n_chunks = with_cdc_chunks(
-        docs.select("doc_id", "text"), "text", out="packed"
+        docs.select("doc_id", "text"), "text"
     ).count()
     dt = time.time() - t
     out["cdc_kernel"] = round(n / dt)
@@ -142,7 +140,6 @@ def main() -> int:
         with_media_dhash(
             docs.select("doc_id", F.encode("text", "UTF-8").alias("content")),
             "content",
-            "phash",
         )
         .filter(F.col("phash").isNotNull())
         .count()
@@ -287,7 +284,7 @@ def main() -> int:
     )
 
     t = time.time()
-    n_emb = encode_documents(docs.select("doc_id", "text"), "text").count()
+    n_emb = encode_documents(docs.select("doc_id", "text")).count()
     dt = time.time() - t
     # rate is per PRODUCED vector (empty-text docs drop), so the
     # printed row count and the throughput share a denominator

@@ -4,8 +4,9 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
-echo "=== 1/6 pytest ==="
-python -m pytest tests/ -q
+echo "=== 1/6 pytest (the ROADMAP tier-1 command) ==="
+SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 echo "=== 2/6 plan audit (cartesian/BNLJ) ==="
 python tools/plan_audit.py /root/testdata/sf0.01
 echo "=== 3/6 window audit (global windows) ==="
